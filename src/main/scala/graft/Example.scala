@@ -20,9 +20,9 @@ object Example {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val v1 = SyntheticDrift.version(spark, 1).cache()
-    val v2 = SyntheticDrift.version(spark, 2).cache()
-    val v3 = SyntheticDrift.version(spark, 3).cache()
+    val v1 = SyntheticDrift.version(spark, 1)
+    val v2 = SyntheticDrift.version(spark, 2)
+    val v3 = SyntheticDrift.version(spark, 3)
     val detector = new DriftDetector(spark)
 
     for ((name, curr) <- Seq("v1 -> v2 (mild drift)" -> v2, "v1 -> v3 (significant drift)" -> v3)) {

@@ -37,11 +37,10 @@ object GroupDrift {
 
   /** Eligibility tail over an already-aggregated (category, ref_n, curr_n)
     * frame: ≥20 rows in BOTH frames, top-20 by combined count
-    * (deterministic tie-break on category). The counts frame is DERIVED
-    * from the same aggregation that computes the metrics (numPivot's n /
-    * the categorical value-count frame), so each group query costs one
-    * scan of the table, not two — at 100 TB the second full scan the
-    * round-6 verdict flagged is the whole cost of this family. */
+    * (deterministic tie-break on category). The counts frame is derived
+    * from the aggregation that computes the metrics (numPivot's n / the
+    * categorical value-count frame), never from a second groupBy of the
+    * raw rows. */
   private def eligibleFromCounts(counts: DataFrame): DataFrame =
     counts
       .filter(col("ref_n") >= MinGroupRows && col("curr_n") >= MinGroupRows)
@@ -49,6 +48,18 @@ object GroupDrift {
       // single-partition rank window over every category
       .orderBy((col("ref_n") + col("curr_n")).desc, col("category").asc)
       .limit(TopCategories)
+
+  /** [[eligibleFromCounts]] as a rank window over aggregated rows that
+    * carry (ref_n, curr_n): a self-join would plan a second, differently
+    * pruned scan that exchange reuse cannot merge. A category's rows share
+    * a dense rank; a NULL category holds its slot but is dropped, as the
+    * join on category drops it. */
+  private def keepEligible(rows: DataFrame): DataFrame =
+    rows.filter(col("ref_n") >= MinGroupRows && col("curr_n") >= MinGroupRows)
+      .withColumn("__rk", dense_rank().over(
+        Window.orderBy((col("ref_n") + col("curr_n")).desc, col("category").asc)))
+      .filter(col("__rk") <= TopCategories && col("category").isNotNull)
+      .drop("__rk")
 
   private def eligibleSql(sp: GroupSpec): String =
     "SELECT category, ref_n, curr_n FROM (SELECT *, ROW_NUMBER() OVER " +
@@ -137,13 +148,8 @@ object GroupDrift {
     * `quantile_cont` reproduces values. */
   def groupNumericMetrics(spark: SparkSession, dir: String, approx: Boolean = false): DataFrame = {
     val per = specs.map { sp =>
-      // UNCACHED (r17): the frame feeds both the metric rows and the
-      // eligibility derivation, but a fresh registered-cold cache gets
-      // stampeded by concurrent consumers while the shared subtree's
-      // exchange dedupes uncached (ReusedExchange) — see
-      // NumericDrift.driftScoreFrame
-      val np = numPivot(spark, dir, sp, approx)
-      np.join(eligibleFromCounts(countsFromNumPivot(np)).select("category"), "category")
+      // every metric row of a category carries the category's side counts
+      keepEligible(numPivot(spark, dir, sp, approx))
         .select(lit(sp.tableName).as("table_name"), lit(sp.dim).as("dimension"), col("*"))
         .selectExpr(numFinal: _*)
     }
@@ -180,15 +186,19 @@ object GroupDrift {
       coalesce(sum(when(col("side") === "ref", col("cnt"))), lit(0L)).as("ref_n"),
       coalesce(sum(when(col("side") === "curr", col("cnt"))), lit(0L)).as("curr_n"))
 
+  /** Top-10 value frequencies per (category, v), plus each side's row count. */
   private def catPivot(vc: DataFrame): DataFrame = {
     val w = Window.partitionBy("side", "category")
     val top = vc
-      .withColumn("freq", col("cnt") / sum("cnt").over(w))
+      .withColumn("n", sum("cnt").over(w))
+      .withColumn("freq", col("cnt") / col("n"))
       .withColumn("rk", row_number().over(w.orderBy(col("cnt").desc, col("v").asc)))
       .filter(col("rk") <= 10)
     top.groupBy("category", "v").agg(
       max(when(col("side") === "ref", col("freq"))).as("p"),
-      max(when(col("side") === "curr", col("freq"))).as("q"))
+      max(when(col("side") === "curr", col("freq"))).as("q"),
+      max(when(col("side") === "ref", col("n"))).as("ref_n"),
+      max(when(col("side") === "curr", col("n"))).as("curr_n"))
   }
 
   private def catPivotSql(sp: GroupSpec, m: String): String =
@@ -220,11 +230,8 @@ object GroupDrift {
 
   def groupCatMetrics(spark: SparkSession, dir: String): DataFrame = {
     val per = for (sp <- specs; m <- sp.catMetrics) yield {
-      // UNCACHED (r17) — same rationale as groupNumericMetrics above
-      val vc = vcFrame(spark, dir, sp, m)
-      catPivot(vc)
-        .groupBy("category").agg(catAggs.map(expr).head, catAggs.map(expr).tail: _*)
-        .join(eligibleFromCounts(countsFromVc(vc)).select("category"), "category")
+      keepEligible(catPivot(vcFrame(spark, dir, sp, m)).groupBy("category")
+          .agg(max("ref_n").as("ref_n"), (max("curr_n").as("curr_n") +: catAggs.map(expr)): _*))
         .select(lit(sp.tableName).as("table_name"), lit(sp.dim).as("dimension"),
           lit(m).as("metric"), col("*"))
         .selectExpr(catFinal: _*)

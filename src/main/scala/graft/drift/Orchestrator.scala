@@ -94,7 +94,9 @@ case class DriftConfig(
 /** Versioned-snapshot abstraction (O1/O2). The reference reads Delta with
   * `versionAsOf` time travel (data_loader.py:24); this environment has no
   * Delta jars, so the provided impls are parquet-based. A Delta impl is the
-  * same trait with `format("delta").option("versionAsOf", v)`. */
+  * same trait with `format("delta").option("versionAsOf", v)`. `load` is
+  * lazy: unlike the reference (data_loader.py:30-33) it neither reads nor
+  * caches; [[DriftDetector.detectDrift]] owns and releases the pair's cache. */
 trait SnapshotSource {
   def load(spark: SparkSession, version: Long): DataFrame
   def latestVersion(spark: SparkSession): Long
@@ -119,17 +121,13 @@ class DeltaSource(path: String) extends SnapshotSource {
 
 /** One parquet directory per version: `<root>/v<N>/`. */
 class ParquetDirSource(root: String) extends SnapshotSource {
-  def load(spark: SparkSession, version: Long): DataFrame = {
-    // cache + eager count, as the reference does (data_loader.py:30-33):
-    // both snapshots are re-read by every analyzer
-    val df = spark.read.parquet(s"$root/v$version").cache()
-    df.count()
-    df
-  }
+  def load(spark: SparkSession, version: Long): DataFrame =
+    spark.read.parquet(s"$root/v$version")
   def latestVersion(spark: SparkSession): Long = {
-    val dirs = new java.io.File(root).listFiles()
-    if (dirs == null) -1L
-    else dirs.map(_.getName).filter(_.matches("v\\d+")).map(_.drop(1).toLong).max
+    val versions = Option(new java.io.File(root).listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.matches("v\\d+")).map(_.drop(1).toLong)
+    require(versions.nonEmpty, s"no v<N> version directories in $root")
+    versions.max
   }
 }
 
@@ -164,9 +162,7 @@ class VersionedParquetTable(root: String) extends SnapshotSource {
   def load(spark: SparkSession, version: Long): DataFrame = {
     require(history().exists(_._1 == version),
       s"version $version is not committed in $root (manifest has ${history().map(_._1).mkString(",")})")
-    val df = spark.read.parquet(s"$root/v$version").cache()
-    df.count() // eager materialization, as the reference does (data_loader.py:30-33)
-    df
+    spark.read.parquet(s"$root/v$version")
   }
 
   def latestVersion(spark: SparkSession): Long = {
@@ -303,15 +299,22 @@ class DriftDetector(spark: SparkSession) {
     report
   }
 
+  /** Every analyzer family over the pair. The caches it creates are released
+    * on return; the report's frames are local copies that hold no blocks. */
   def detectDrift(refIn: DataFrame, currIn: DataFrame,
-      configIn: DriftConfig = DriftConfig()): DriftReport = {
+      configIn: DriftConfig = DriftConfig()): DriftReport =
+    CacheScope.using(spark)(detect(refIn, currIn, configIn, _))
+
+  private def detect(refIn: DataFrame, currIn: DataFrame, configIn: DriftConfig,
+      scope: CacheScope): DriftReport = {
     val t0 = System.nanoTime()
-    // one count job per frame, each consumed twice: it sizes that frame's
-    // sampling fraction, and ref's also drives the O38 threshold factor
-    val (ref, refTotal) = if (configIn.sampleSize > 0)
-      Sampling.sampleWithTotal(refIn, configIn.sampleSize) else (refIn, 0L)
-    val (curr, _) = if (configIn.sampleSize > 0)
-      Sampling.sampleWithTotal(currIn, configIn.sampleSize) else (currIn, 0L)
+    // every family re-reads the pair, so it is cached once; the sampling
+    // count (which also drives the O38 factor) is what fills each cache
+    def sampled(df: DataFrame): (DataFrame, Long) =
+      if (configIn.sampleSize > 0) Sampling.sampleWithTotal(scope.cached(df), configIn.sampleSize)
+      else (scope.cached(df), 0L)
+    val (ref, refTotal) = sampled(refIn)
+    val (curr, _) = sampled(currIn)
     // O38 sample-size adjustment: when sampling truncated the reference
     // frame, loosen the drift thresholds by the 1/√ratio-shaped factor
     // (adaptive_threshold.py:523-556 — defined there, wired here)
@@ -375,15 +378,12 @@ class DriftDetector(spark: SparkSession) {
     // policy (never fail the whole run; SURVEY.md §4.1)
     val empty = spark.emptyDataFrame
     val errors = scala.collection.mutable.Buffer[String]()
-    // cache+count forces the (per-column/category-sized, tiny) family result
-    // HERE: Spark plans are lazy, so without it a runtime failure would
-    // surface at the caller's first action and abort the whole report,
-    // violating the never-fail-the-run policy below
+    // collecting the tiny family result forces it HERE, where a runtime
+    // failure is caught (plans are lazy), into a copy that outlives the scope
     def safe(family: String)(body: => DataFrame): DataFrame =
       try {
-        val df = body.cache()
-        df.count()
-        df
+        val df = body
+        spark.createDataFrame(df.collectAsList(), df.schema)
       } catch {
         case scala.util.control.NonFatal(e) =>
           errors += s"$family: ${e.getMessage}"; empty
@@ -424,7 +424,7 @@ class DriftDetector(spark: SparkSession) {
        else catCols.take(3))
     val groups = if (config.analyzeGroups && groupDims.nonEmpty)
       safe("group_drift")(groupDims.map(d => GroupDrift.forPair(ref, curr, d, numericCols,
-        catCols.filterNot(_ == d))).reduce(_ union _))
+        catCols.filterNot(_ == d), scope = Some(scope))).reduce(_ union _))
     else empty
 
     // O26: per-category correlations over the first ≤3 group dimensions,

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.drift.table
+import graft.drift.{CacheScope, table}
 
 /** Production composition of the corpus-curation operators — the
   * training-data analogue of [[graft.drift.DriftDetector]]: one call runs
@@ -16,10 +16,6 @@ import graft.drift.table
   * At 100 TB the artifact is a (2 longs)-per-doc parquet that any number
   * of downstream audits join by doc_id.
   */
-// CacheScope moved to graft.drift (see drift/CacheScope.scala) so the core
-// drift pair APIs can take one without a core→pipeline dependency; the
-// `graft.pipeline.CacheScope` name stays valid via the package-object alias.
-
 object CorpusPipeline {
 
   case class CorpusReport(
@@ -31,34 +27,13 @@ object CorpusPipeline {
       nContainmentPairs: Long = 0L)
 
   /** Run the full curation sweep over `dir`'s documents corpus, persisting
-    * the near-dup artifact under `workDir`.
-    *
-    * Cache hygiene: the stages cache intermediate frames (gated docs, LM
-    * scores) whose lifetime is this sweep — every output below is
-    * materialized into the report, so the sweep releases its OWN cache
-    * entries on exit via a [[CacheScope]] (Dataset-level unpersist keeps
-    * the CacheManager consistent; pre-existing user caches are untouched)
-    * and RDD-unpersists the localCheckpoint blocks the component rounds
-    * leave behind. Library calls must not leak corpus-sized frames into a
-    * long-lived session. */
-  def run(spark: SparkSession, dir: String, workDir: String): CorpusReport = {
-    val checkpointsBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val scope = new CacheScope
-    try runStages(spark, dir, workDir, scope)
-    finally try {
-      scope.release()
-      // what remains new in getPersistentRDDs is localCheckpoint storage
-      // (propagateMinLabels rounds), which is NOT CacheManager-managed —
-      // RDD-level unpersist is the correct release there
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => checkpointsBefore(id) }
-        .values.foreach(_.unpersist(blocking = false))
-    } catch {
-      // cleanup best-effort: a dying SparkContext must not mask the
-      // original runStages failure
-      case _: Throwable => ()
-    }
-  }
+    * the near-dup artifact under `workDir`. Every output is materialized
+    * into the report, so the stages' cached frames (gated docs, LM scores)
+    * and the component rounds' localCheckpoint blocks live only for this
+    * call: one [[CacheScope.using]] releases them, and leaves caches the
+    * caller made untouched. */
+  def run(spark: SparkSession, dir: String, workDir: String): CorpusReport =
+    CacheScope.using(spark)(runStages(spark, dir, workDir, _))
 
   private def runStages(spark: SparkSession, dir: String, workDir: String,
       scope: CacheScope): CorpusReport = {

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.drift.{r6, table}
+import graft.drift.{CacheScope, r6, table}
 
 /** Document deduplication for training-data pipelines: exact (hash groups),
   * n-gram Jaccard (df-capped), MinHash+LSH banding, SimHash, per-doc

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.drift.{r6, table}
+import graft.drift.{CacheScope, r6, table}
 
 /** N-gram language-model quality scoring — the CCNet/KenLM curation signal
   * (Wenzek et al. 2020: docs are ranked by the perplexity of a small LM

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.drift.table
+import graft.drift.{CacheScope, table}
 
 /** Text analysis for training-data curation: language ID (stopword-marker
   * scoring), quality scoring (length / punctuation / stopword-ratio bands),

@@ -121,4 +121,19 @@ class DeltaSourceSpec extends SparkSpec {
     assert(tbl.load(spark, tbl.versionAsOfTimestamp(5000L))
       .select(col("x")).collect().head.getInt(0) == 2)
   }
+
+  test("ParquetDirSource.latestVersion fails naming the root when it has no version") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-pds")
+    java.nio.file.Files.createDirectories(root.resolve("not_a_version"))
+    // an existing root without v<N> directories and a missing root fail alike
+    Seq(root.toString, root.resolve("missing").toString).foreach { r =>
+      val e = intercept[IllegalArgumentException](new ParquetDirSource(r).latestVersion(spark))
+      assert(e.getMessage.contains(r), e.getMessage)
+    }
+    Seq(0, 3).foreach(v => Seq(v).toDF("x").write.parquet(s"$root/v$v"))
+    val src = new ParquetDirSource(root.toString)
+    assert(src.latestVersion(spark) == 3L)
+    assert(src.load(spark, 3L).collect().map(_.getInt(0)).toSeq == Seq(3))
+  }
 }
