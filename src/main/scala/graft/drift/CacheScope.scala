@@ -14,12 +14,12 @@ import org.apache.spark.storage.StorageLevel
 final class CacheScope {
   private val frames = scala.collection.mutable.ArrayBuffer[DataFrame]()
   /** Cache `df` and remember the handle for [[release]], unless its plan is
-    * already cached. */
-  private[graft] def cached(df: DataFrame): DataFrame = {
+    * already cached. Safe to call from concurrent analyzer families. */
+  private[graft] def cached(df: DataFrame): DataFrame = synchronized {
     if (df.storageLevel == StorageLevel.NONE) { frames += df; df.cache() }
     df
   }
-  def release(): Unit = frames.foreach(_.unpersist(blocking = false))
+  def release(): Unit = synchronized(frames.foreach(_.unpersist(blocking = false)))
 }
 
 object CacheScope {

@@ -1,7 +1,11 @@
 package graft.drift
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
 
 /** User-facing drift-detection API — reference O1–O3, O40, O42
   * (/root/reference/data_loader.py, data_drift_detector.py,
@@ -295,26 +299,46 @@ class DriftDetector(spark: SparkSession) {
     val ref = source.load(spark, refVersion)
     val curr = source.load(spark, currV)
     val report = detectDrift(ref, curr, run.config)
-    run.outputTable.foreach(out => Results.writeResults(spark, report, out))
+    run.outputTable.foreach(out => CallPool.described(spark.sparkContext, "drift:write_results")(
+      Results.writeResults(spark, report, out)))
     report
   }
 
   /** Every analyzer family over the pair. The caches it creates are released
-    * on return; the report's frames are local copies that hold no blocks. */
+    * on return; the report's frames are local copies that hold no blocks.
+    *
+    * Once both sides of the pair are cached and filled, the numeric and
+    * categorical verdict passes and the eleven analyzer families run
+    * concurrently on a thread pool made for this call, as wide as the
+    * context's `defaultParallelism` (at most one thread per task). The report
+    * equals the one a sequential run gives: frames, verdicts, and `errors` in
+    * family order, whatever order the families finish in. Every job the call
+    * submits carries a `drift:<family>` job description (`drift:sampling`,
+    * `drift:type_inference`, `drift:numeric`, `drift:shapes`, …). A family
+    * that fails is reported in `errors`; a verdict pass that throws cancels
+    * the jobs of the other tasks and waits for them to end, and then its own
+    * exception propagates. */
   def detectDrift(refIn: DataFrame, currIn: DataFrame,
       configIn: DriftConfig = DriftConfig()): DriftReport =
     CacheScope.using(spark)(detect(refIn, currIn, configIn, _))
 
+  /** The two verdict passes and the eleven families: the pool width bound. */
+  private val FanOut = 13
+
   private def detect(refIn: DataFrame, currIn: DataFrame, configIn: DriftConfig,
       scope: CacheScope): DriftReport = {
     val t0 = System.nanoTime()
-    // every family re-reads the pair, so it is cached once; the sampling
-    // count (which also drives the O38 factor) is what fills each cache
-    def sampled(df: DataFrame): (DataFrame, Long) =
-      if (configIn.sampleSize > 0) Sampling.sampleWithTotal(scope.cached(df), configIn.sampleSize)
-      else (scope.cached(df), 0L)
-    val (ref, refTotal) = sampled(refIn)
-    val (curr, _) = sampled(currIn)
+    val sc = spark.sparkContext
+    // every family re-reads the pair, so it is cached once and filled here,
+    // before the families fan out; with sampling on, the sampling count
+    // (which also drives the O38 factor) is what fills each cache
+    def sampled(df: DataFrame): (DataFrame, Long) = {
+      val cached = scope.cached(df)
+      if (configIn.sampleSize > 0) Sampling.sampleWithTotal(cached, configIn.sampleSize)
+      else (cached, cached.count())
+    }
+    val ((ref, refTotal), (curr, _)) =
+      CallPool.described(sc, "drift:sampling")((sampled(refIn), sampled(currIn)))
     // O38 sample-size adjustment: when sampling truncated the reference
     // frame, loosen the drift thresholds by the 1/√ratio-shaped factor
     // (adaptive_threshold.py:523-556 — defined there, wired here)
@@ -337,133 +361,139 @@ class DriftDetector(spark: SparkSession) {
     // gate row's shape — skips the inference job entirely)
     val toInfer = common.filterNot(config.customColumnTypes.contains)
     val inferred = if (toInfer.isEmpty) Map.empty[String, String]
-      else TypeInference.infer(ref.select(toInfer.map(col): _*))
+      else CallPool.described(sc, "drift:type_inference")(
+        TypeInference.infer(ref.select(toInfer.map(col): _*)))
     val types = inferred ++ config.customColumnTypes.filter { case (k, _) => common.contains(k) }
     val numericCols = common.filter(c => types(c) == "numerical")
     val catCols = common.filter(c => types(c) == "categorical")
 
-    // 3. numeric drift (O12 metrics + verdicts)
-    val numeric =
-      if (numericCols.isEmpty) Seq.empty
-      else NumericDrift.driftForPair(ref, curr, numericCols,
-        approx = config.approx).collect().toSeq.map { r =>
-        NumericColumnDrift(
-          r.getAs[String]("column_name"),
-          r.getAs[Double]("ref_mean"), r.getAs[Double]("curr_mean"),
-          r.getAs[Double]("mean_rel_diff"), r.getAs[Double]("median_rel_diff"),
-          r.getAs[Double]("std_dev_rel_diff"), r.getAs[Double]("iqr_rel_diff"),
-          r.getAs[Double]("range_rel_diff"), r.getAs[Double]("null_diff"),
-          r.getAs[Double]("drift_score"), r.getAs[Boolean]("drift_detected"),
-          Option(r.getAs[String]("drift_causes")).filter(_.nonEmpty)
-            .map(_.split(",").toSeq).getOrElse(Seq.empty))
+    // 3.–5. the verdict passes and the families only read the filled pair,
+    // so they run concurrently on a pool made for this call
+    val width = math.min(FanOut, sc.defaultParallelism)
+    val (numeric, categorical, results) = CallPool.using(sc, width) { pool =>
+      // 3. numeric drift (O12 metrics + verdicts)
+      val numericF = pool.submit("drift:numeric") {
+        if (numericCols.isEmpty) Seq.empty
+        else NumericDrift.driftForPair(ref, curr, numericCols,
+          approx = config.approx).collect().toSeq.map { r =>
+          NumericColumnDrift(
+            r.getAs[String]("column_name"),
+            r.getAs[Double]("ref_mean"), r.getAs[Double]("curr_mean"),
+            r.getAs[Double]("mean_rel_diff"), r.getAs[Double]("median_rel_diff"),
+            r.getAs[Double]("std_dev_rel_diff"), r.getAs[Double]("iqr_rel_diff"),
+            r.getAs[Double]("range_rel_diff"), r.getAs[Double]("null_diff"),
+            r.getAs[Double]("drift_score"), r.getAs[Boolean]("drift_detected"),
+            Option(r.getAs[String]("drift_causes")).filter(_.nonEmpty)
+              .map(_.split(",").toSeq).getOrElse(Seq.empty))
+        }
       }
 
-    // 4. categorical drift (O19)
-    val categorical =
-      if (catCols.isEmpty) Seq.empty
-      else CategoricalDrift.categoricalDriftForPair(ref, curr, catCols,
-        exactPValue = config.exactChiPValue).collect().toSeq.map { r =>
-        CategoricalColumnDrift(
-          r.getAs[String]("column_name"),
-          r.getAs[Double]("js_divergence"), r.getAs[Double]("chi_p_value"),
-          r.getAs[Double]("null_proportion_diff"),
-          r.getAs[Double]("new_categories_ratio"), r.getAs[Double]("missing_categories_ratio"),
-          r.getAs[Double]("drift_score"), r.getAs[Boolean]("drift_detected"),
-          Option(r.getAs[String]("drift_causes")).filter(_.nonEmpty)
-            .map(_.split(",").toSeq).getOrElse(Seq.empty))
+      // 4. categorical drift (O19)
+      val categoricalF = pool.submit("drift:categorical") {
+        if (catCols.isEmpty) Seq.empty
+        else CategoricalDrift.categoricalDriftForPair(ref, curr, catCols,
+          exactPValue = config.exactChiPValue).collect().toSeq.map { r =>
+          CategoricalColumnDrift(
+            r.getAs[String]("column_name"),
+            r.getAs[Double]("js_divergence"), r.getAs[Double]("chi_p_value"),
+            r.getAs[Double]("null_proportion_diff"),
+            r.getAs[Double]("new_categories_ratio"), r.getAs[Double]("missing_categories_ratio"),
+            r.getAs[Double]("drift_score"), r.getAs[Boolean]("drift_detected"),
+            Option(r.getAs[String]("drift_causes")).filter(_.nonEmpty)
+              .map(_.split(",").toSeq).getOrElse(Seq.empty))
+        }
       }
 
-    // 5. distribution module (O20/O21), correlations (O25/O26), rare events
-    // (O35/O36) — each family isolated per the reference's graceful-error
-    // policy (never fail the whole run; SURVEY.md §4.1)
-    val empty = spark.emptyDataFrame
-    val errors = scala.collection.mutable.Buffer[String]()
-    // collecting the tiny family result forces it HERE, where a runtime
-    // failure is caught (plans are lazy), into a copy that outlives the scope
-    def safe(family: String)(body: => DataFrame): DataFrame =
-      try {
-        val df = body
-        spark.createDataFrame(df.collectAsList(), df.schema)
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          errors += s"$family: ${e.getMessage}"; empty
-      }
-    val quantiles = if (config.analyzeDistributions && numericCols.nonEmpty)
-      safe("quantile_shifts")(NumericDrift.quantileShiftsForPair(ref, curr, numericCols,
-        approx = config.approx)) else empty
-    val shapes = if (config.analyzeDistributions && numericCols.nonEmpty)
-      safe("shapes")(NumericDrift.shapesForPair(ref, curr, numericCols)) else empty
-    // categorical half of the distribution module
-    // (data_drift_detector.py:117-143 → distribution_analyzer.py:10-81):
-    // full-support JS per categorical column, rare-value census, and the
-    // opt-in histogram summaries
-    val jsFull = if (config.analyzeDistributions && catCols.nonEmpty)
-      safe("js_full")(CategoricalDrift.jsFullForPair(ref, curr, catCols,
-        threshold = config.jsDistanceThreshold)) else empty
-    val rareValues = if (config.analyzeDistributions && config.detectRareEvents && catCols.nonEmpty)
-      safe("rare_value_changes")(CategoricalDrift.rareValueChangesForPair(ref, curr, catCols,
-        thr = config.rareValueThreshold)) else empty
-    val histograms = if (config.analyzeDistributions && config.genDistributionSummaries &&
-        numericCols.nonEmpty)
-      safe("histograms")(NumericDrift.histogramForPair(ref, curr, numericCols)) else empty
-    val zOut = if (config.detectRareEvents && numericCols.nonEmpty)
-      safe("z_outliers")(NumericDrift.zOutliersForPair(ref, curr, numericCols)) else empty
-    // O29 screen: drop columns with non-null ratio < 0.7 in either frame
-    val corrCols = if (config.analyzeCorrelations && numericCols.size >= 2)
-      CorrelationDrift.validColumns(ref, curr, numericCols) else Seq.empty
-    val corr = if (corrCols.size >= 2)
-      safe("correlations")(CorrelationDrift.forPair(ref, curr, corrCols, config)) else empty
-    val rare = if (config.detectRareEvents && catCols.nonEmpty)
-      safe("rare_categories")(CategoricalDrift.rareCategoriesForPair(ref, curr, catCols,
-        maxFreq = config.rareValueThreshold)) else empty
+      // 5. distribution module (O20/O21), correlations (O25/O26), rare events
+      // (O35/O36) — each family isolated per the reference's graceful-error
+      // policy (never fail the whole run; SURVEY.md §4.1)
+      val empty = spark.emptyDataFrame
+      // collecting the tiny family result forces it on the pool thread, where a
+      // runtime failure is caught (plans are lazy), into a copy that outlives
+      // the scope
+      def safe(family: String, enabled: Boolean)(body: => DataFrame): Future[FamilyResult] =
+        if (!enabled) Future.successful(FamilyResult(empty, Seq.empty, None))
+        else pool.submit(s"drift:$family") {
+          try {
+            val df = body
+            val rows = df.collectAsList()
+            FamilyResult(spark.createDataFrame(rows, df.schema), rows.asScala.toSeq, None)
+          } catch {
+            case scala.util.control.NonFatal(e) =>
+              FamilyResult(empty, Seq.empty, Some(s"$family: ${e.getMessage}"))
+          }
+        }
+      // O29 screen: drop columns with non-null ratio < 0.7 in either frame;
+      // run once, by whichever correlation family reads it first
+      lazy val corrCols = CorrelationDrift.validColumns(ref, curr, numericCols)
+      val correlationsOn = config.analyzeCorrelations && numericCols.size >= 2
+      // group analysis (O32/O33): configured dims, else first ≤3 categorical
+      // columns as the reference defaults (data_drift_detector.py:168-175)
+      val groupDims =
+        (if (config.groupColumns.nonEmpty) config.groupColumns.filter(catCols.contains)
+         else catCols.take(3))
+      // feature-importance drift (O27) when a numeric target is configured
+      val target = config.targetColumn.filter(t => numericCols.contains(t) && numericCols.size >= 2)
 
-    // group analysis (O32/O33): configured dims, else first ≤3 categorical
-    // columns as the reference defaults (data_drift_detector.py:168-175)
-    val groupDims =
-      (if (config.groupColumns.nonEmpty) config.groupColumns.filter(catCols.contains)
-       else catCols.take(3))
-    val groups = if (config.analyzeGroups && groupDims.nonEmpty)
-      safe("group_drift")(groupDims.map(d => GroupDrift.forPair(ref, curr, d, numericCols,
-        catCols.filterNot(_ == d), scope = Some(scope))).reduce(_ union _))
-    else empty
+      val families = Seq(
+        safe("quantile_shifts", config.analyzeDistributions && numericCols.nonEmpty)(
+          NumericDrift.quantileShiftsForPair(ref, curr, numericCols, approx = config.approx)),
+        safe("shapes", config.analyzeDistributions && numericCols.nonEmpty)(
+          NumericDrift.shapesForPair(ref, curr, numericCols)),
+        // categorical half of the distribution module
+        // (data_drift_detector.py:117-143 → distribution_analyzer.py:10-81):
+        // full-support JS per categorical column, rare-value census, and the
+        // opt-in histogram summaries
+        safe("js_full", config.analyzeDistributions && catCols.nonEmpty)(
+          CategoricalDrift.jsFullForPair(ref, curr, catCols,
+            threshold = config.jsDistanceThreshold)),
+        safe("rare_value_changes",
+          config.analyzeDistributions && config.detectRareEvents && catCols.nonEmpty)(
+          CategoricalDrift.rareValueChangesForPair(ref, curr, catCols,
+            thr = config.rareValueThreshold)),
+        safe("histograms",
+          config.analyzeDistributions && config.genDistributionSummaries && numericCols.nonEmpty)(
+          NumericDrift.histogramForPair(ref, curr, numericCols)),
+        safe("z_outliers", config.detectRareEvents && numericCols.nonEmpty)(
+          NumericDrift.zOutliersForPair(ref, curr, numericCols)),
+        safe("correlations", correlationsOn)(
+          if (corrCols.size >= 2) CorrelationDrift.forPair(ref, curr, corrCols, config) else empty),
+        safe("rare_categories", config.detectRareEvents && catCols.nonEmpty)(
+          CategoricalDrift.rareCategoriesForPair(ref, curr, catCols,
+            maxFreq = config.rareValueThreshold)),
+        safe("group_drift", config.analyzeGroups && groupDims.nonEmpty)(
+          groupDims.map(d => GroupDrift.forPair(ref, curr, d, numericCols,
+            catCols.filterNot(_ == d), scope = Some(scope))).reduce(_ union _)),
+        // O26: per-category correlations over the first ≤3 group dimensions,
+        // matching the reference's group_columns[:3] loop
+        // (correlation_analyzer.py:163-171) — one groupBy(side, dim) pass each
+        safe("group_correlations", config.analyzeGroups && groupDims.nonEmpty && correlationsOn)(
+          if (corrCols.size >= 2) groupDims.take(3).map(d =>
+            CorrelationDrift.groupCorrelationsForPair(ref, curr, d, corrCols))
+            .reduce(_ unionByName _)
+          else empty),
+        safe("feature_importance", target.isDefined)(
+          CorrelationDrift.featureImportanceForPair(ref, curr, target.get,
+            numericCols.filterNot(target.contains))))
 
-    // O26: per-category correlations over the first ≤3 group dimensions,
-    // matching the reference's group_columns[:3] loop
-    // (correlation_analyzer.py:163-171) — one groupBy(side, dim) pass each
-    val groupCorr = if (config.analyzeGroups && config.analyzeCorrelations &&
-        groupDims.nonEmpty && corrCols.size >= 2)
-      safe("group_correlations")(groupDims.take(3).map(d =>
-        CorrelationDrift.groupCorrelationsForPair(ref, curr, d, corrCols))
-        .reduce(_ unionByName _)) else empty
-
-    // feature-importance drift (O27) when a numeric target is configured
-    val featureImportance = config.targetColumn
-      .filter(t => numericCols.contains(t) && numericCols.size >= 2)
-      .map { t =>
-        val predictors = numericCols.filterNot(_ == t)
-        safe("feature_importance")(
-          CorrelationDrift.featureImportanceForPair(ref, curr, t, predictors))
-      }.getOrElse(empty)
+      // a verdict pass that throws ends the call here: CallPool.using cancels
+      // and drains the other tasks before the exception reaches the scope
+      def await[T](f: Future[T]): T = Await.result(f, Duration.Inf)
+      (await(numericF), await(categoricalF), families.map(await))
+    }
+    val Seq(quantiles, shapes, jsFull, rareValues, histograms, zOut, corr, rare, groups,
+      groupCorr, featureImportance) = results
 
     // 6. assessment + recommendations (data_drift_detector.py:286-421)
     val numDriftCols = numeric.filter(_.driftDetected).map(_.column)
     val catDriftCols = categorical.filter(_.driftDetected).map(_.column)
-    val corrShifts = if (corr.columns.contains("significant_shift"))
-      try corr.filter(col("significant_shift")).count().toInt
-      catch { case scala.util.control.NonFatal(e) =>
-        errors += s"corr_shift_count: ${e.getMessage}"; 0 }
-    else 0
+    // the three counts read the rows each family already collected
+    val corrShifts = corr.rows.count(_.getAs[Any]("significant_shift") == true)
     // distribution drift flips the overall verdict but not the severity
     // count, matching data_drift_detector.py:125-142
-    def safeCount(family: String)(df: DataFrame, pred: Column): Int =
-      try df.filter(pred).count().toInt
-      catch { case scala.util.control.NonFatal(e) =>
-        errors += s"$family: ${e.getMessage}"; 0 }
-    val numDistDrift = if (shapes.columns.contains("skew_change"))
-      safeCount("shape_drift_count")(shapes,
-        col("skew_change") =!= "none" || col("kurt_change") =!= "none") else 0
-    val catDistDrift = if (jsFull.columns.contains("significant_change"))
-      safeCount("js_full_count")(jsFull, col("significant_change")) else 0
+    val numDistDrift = shapes.rows.count(r => Seq("skew_change", "kurt_change")
+      .exists { c => val v = r.getAs[String](c); v != null && v != "none" })
+    val catDistDrift = jsFull.rows.count(_.getAs[Any]("significant_change") == true)
 
     val driftCount = numDriftCols.size + catDriftCols.size + corrShifts
     val severity = if (driftCount > 10) "high" else if (driftCount > 5) "medium" else "low"
@@ -495,12 +525,16 @@ class DriftDetector(spark: SparkSession) {
       else None,
     ).flatten
 
-    DriftReport(schemaChanges, types, numeric, categorical, quantiles, shapes,
-      jsFull, rareValues, histograms,
-      zOut, corr, rare, groups, groupCorr, featureImportance, errors.toSeq,
+    DriftReport(schemaChanges, types, numeric, categorical, quantiles.frame, shapes.frame,
+      jsFull.frame, rareValues.frame, histograms.frame, zOut.frame, corr.frame, rare.frame,
+      groups.frame, groupCorr.frame, featureImportance.frame, results.flatMap(_.error),
       driftDetected, assessment, recommendations, (System.nanoTime() - t0) / 1e9)
   }
 }
+
+/** One analyzer family's outcome: its collected rows, also as a local frame
+  * that holds no cache blocks, or the failure `DriftReport.errors` lists. */
+private final case class FamilyResult(frame: DataFrame, rows: Seq[Row], error: Option[String])
 
 /** O40 end-to-end GATE surface: one oracle-checked query that runs the
   * full [[DriftDetector]] orchestration (sample → infer/override types →

@@ -82,31 +82,29 @@ object TypeInference {
     // concurrently they overlap in the scheduler instead of serializing
     // their job latencies on the driver (10 tables ran 2.9 s sequential vs
     // ~1 s concurrent at sf0.1 — same jobs, same results, less idle wall).
-    // blocking{}: a Spark collect parks its thread, and unmarked blocking
-    // calls on the shared fork-join pool starve other users of the global
-    // EC in this JVM; the marker lets the pool grow a compensation thread.
     // The await is FINITE (round-12 verdict item 6): a wedged probe job
     // fails the query naming the still-pending tables instead of hanging
     // the gate forever with no cause.
-    import scala.concurrent.{Await, Future, blocking}
-    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.Await
     val pending = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     tables.foreach(pending.add)
-    val rows = try Await.result(
-      Future.sequence(tables.map(t => Future {
-        val r = blocking {
-          infer(table(spark, dir, t), approxDistinct)
-            .toSeq.map { case (c, st) => (t, c, st) }
-        }
+    val sc = spark.sparkContext
+    val rows = CallPool.using(sc, math.min(tables.size, sc.defaultParallelism)) { pool =>
+      val probes = tables.map(t => pool.submit(s"type_inference:$t") {
+        val r = infer(table(spark, dir, t), approxDistinct)
+          .toSeq.map { case (c, st) => (t, c, st) }
         pending.remove(t)
         r
-      })), ProbeTimeout)
-    catch {
-      case e: java.util.concurrent.TimeoutException =>
-        import scala.jdk.CollectionConverters._
-        throw new IllegalStateException(
-          s"type_inference probe aggs still running after $ProbeTimeout " +
-            s"(pending tables: ${pending.asScala.toSeq.sorted.mkString(", ")})", e)
+      })
+      val deadline = ProbeTimeout.fromNow
+      try probes.map(p => Await.result(p, deadline.timeLeft))
+      catch {
+        case e: java.util.concurrent.TimeoutException =>
+          import scala.jdk.CollectionConverters._
+          throw new IllegalStateException(
+            s"type_inference probe aggs still running after $ProbeTimeout " +
+              s"(pending tables: ${pending.asScala.toSeq.sorted.mkString(", ")})", e)
+      }
     }
     val flat = rows.flatten
     flat.toDF("table_name", "column_name", "semantic_type")

@@ -72,4 +72,25 @@ class CacheScopeSpec extends SparkSpec {
     assert(!isCached(df))
     assert(persistentIds == before, s"leaked RDDs: ${persistentIds -- before}")
   }
+  test("concurrent cached calls inside one scope are all registered and all released") {
+    val before = persistentIds
+    val dfs = (0 until 64).map(i => spark.range(100).selectExpr(s"id * $i AS concurrent_$i"))
+    CacheScope.using(spark) { scope =>
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+      val start = new java.util.concurrent.CountDownLatch(1)
+      try {
+        val tasks = dfs.grouped(8).toSeq.map(group => pool.submit[Unit] { () =>
+          start.await()
+          group.foreach(scope.cached)
+          group.foreach(_.count())
+        })
+        start.countDown()
+        tasks.foreach(_.get())
+      } finally pool.shutdown()
+      assert(dfs.forall(isCached))
+      assert(persistentIds.size == before.size + dfs.size)
+    }
+    assert(!dfs.exists(isCached))
+    assert(persistentIds == before, s"leaked RDDs: ${persistentIds -- before}")
+  }
 }

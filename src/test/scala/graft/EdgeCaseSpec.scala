@@ -81,6 +81,36 @@ class EdgeCaseSpec extends SparkSpec {
     assert(rep.numeric.isEmpty || rep.numeric.forall(n => !n.driftScore.isNaN))
   }
 
+  test("a throwing verdict pass surfaces its own exception, cancels its siblings, leaks nothing") {
+    // a string column pinned numerical fails the numeric pass under ANSI
+    // while the categorical pass and the families are still running
+    def frame(shift: Int) = Seq.tabulate(4000)(i =>
+      ((i + shift).toDouble, s"code-$i", "c" + (i % 3))).toDF("x", "code", "c")
+    val (ref, curr) = (frame(0), frame(7))
+    val direct = intercept[Exception](
+      NumericDrift.driftForPair(ref, curr, Seq("x", "code")).collect())
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val (e, log) = jobsOf(intercept[Exception](new DriftDetector(spark).detectDrift(ref, curr,
+      DriftConfig(sampleSize = 0, customColumnTypes = Map("code" -> "numerical")))))
+    // which malformed row a task hits first varies, so compare the condition
+    def condition(t: Throwable) = t match {
+      case st: org.apache.spark.SparkThrowable => st.getCondition
+      case _ => ""
+    }
+    assert(e.getClass == direct.getClass && condition(e) == "CAST_INVALID_INPUT" &&
+      condition(direct) == condition(e), e)
+    assert(log.jobs.values.exists(_.startsWith("drift:")))
+    assert(log.running.isEmpty, s"jobs still running after the throw: ${log.running}")
+    // the status store is fed by its own listener queue
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    assert(sc.getPersistentRDDs.keySet.toSet == before,
+      s"leaked RDDs: ${sc.getPersistentRDDs.keySet.toSet -- before}")
+  }
+
   test("z-outliers on a constant column count zero outliers (no ANSI divide-by-zero)") {
     val ref = Seq.fill(50)(7.0).toDF("x")
     val curr = Seq.tabulate(50)(i => 7.0 + (if (i == 0) 100.0 else 0.0)).toDF("x")

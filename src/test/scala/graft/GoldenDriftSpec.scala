@@ -167,4 +167,61 @@ class GoldenDriftSpec extends SparkSpec {
     assert(row.getAs[Long]("curr_anomaly_count") == ml.currAnomalyCount)
     assert(row.getAs[Boolean]("significant") == ml.significant)
   }
+
+  test("concurrent families equal the family functions called one by one on the same pair") {
+    // deep_dive turns every family on; the target adds feature importance
+    val cfg = DriftConfig(profile = "deep_dive", sampleSize = 0,
+      targetColumn = Some("numeric_normal"))
+    val r = detector.detectDrift(v1, v3, cfg)
+    assert(r.errors.isEmpty, r.errors.mkString("; "))
+
+    val common = v1.columns.toSeq.intersect(v3.columns.toSeq)
+    val num = common.filter(r.columnTypes(_) == "numerical")
+    val cat = common.filter(r.columnTypes(_) == "categorical")
+    val corrCols = CorrelationDrift.validColumns(v1, v3, num)
+    val dims = cat.take(3)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val sequential = Seq(
+      NumericDrift.quantileShiftsForPair(v1, v3, num),
+      NumericDrift.shapesForPair(v1, v3, num),
+      CategoricalDrift.jsFullForPair(v1, v3, cat, threshold = cfg.jsDistanceThreshold),
+      CategoricalDrift.rareValueChangesForPair(v1, v3, cat, thr = cfg.rareValueThreshold),
+      NumericDrift.histogramForPair(v1, v3, num),
+      NumericDrift.zOutliersForPair(v1, v3, num),
+      CorrelationDrift.forPair(v1, v3, corrCols, cfg),
+      CategoricalDrift.rareCategoriesForPair(v1, v3, cat, maxFreq = cfg.rareValueThreshold),
+      dims.map(d => GroupDrift.forPair(v1, v3, d, num, cat.filterNot(_ == d))).reduce(_ union _),
+      dims.map(d => CorrelationDrift.groupCorrelationsForPair(v1, v3, d, corrCols))
+        .reduce(_ unionByName _),
+      CorrelationDrift.featureImportanceForPair(v1, v3, "numeric_normal",
+        num.filterNot(_ == "numeric_normal")))
+    val concurrent = Seq(r.quantileShifts, r.shapes, r.jsFull, r.rareValueChanges, r.histograms,
+      r.zOutliers, r.correlationChanges, r.rareCategories, r.groupDrift, r.groupCorrelations,
+      r.featureImportance)
+    concurrent.zip(sequential).zipWithIndex.foreach { case ((c, s), i) =>
+      assert(c.schema == s.schema, s"frame $i schema")
+      assert(rows(c) == rows(s), s"frame $i rows")
+    }
+
+    def verdicts(df: org.apache.spark.sql.DataFrame) = df.collect().map(v =>
+      (v.getAs[String]("column_name"), v.getAs[Double]("drift_score"),
+        v.getAs[Boolean]("drift_detected"))).toSeq
+    assert(r.numeric.map(n => (n.column, n.driftScore, n.driftDetected)) ==
+      verdicts(NumericDrift.driftForPair(v1, v3, num)))
+    assert(r.categorical.map(c => (c.column, c.driftScore, c.driftDetected)) ==
+      verdicts(CategoricalDrift.categoricalDriftForPair(v1, v3, cat)))
+  }
+
+  test("every job of one detectDrift carries a drift:<family> description") {
+    val cfg = DriftConfig(profile = "deep_dive", sampleSize = 2500,
+      targetColumn = Some("numeric_normal"))
+    val (r, log) = jobsOf(detector.detectDrift(v1, v3, cfg))
+    assert(r.errors.isEmpty, r.errors.mkString("; "))
+    val undescribed = log.jobs.filterNot(_._2.startsWith("drift:"))
+    assert(undescribed.isEmpty, s"jobs without a drift: description: $undescribed")
+    val families = log.jobs.values.map(_.stripPrefix("drift:")).toSet
+    assert(Set("sampling", "type_inference", "numeric", "categorical", "quantile_shifts",
+      "correlations", "group_drift", "feature_importance").subsetOf(families), families)
+    assert(log.running.isEmpty)
+  }
 }
