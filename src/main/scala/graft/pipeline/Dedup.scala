@@ -831,8 +831,10 @@ object Dedup {
       "WHERE d.source <> ev.eval_source GROUP BY 1 ORDER BY 1"
 
   /** False-positive probability for [[decontaminationBloom]]'s prefilter.
-    * At 1% a 10M-shingle eval set costs ~12 MB of filter — executor-local
-    * and corpus-size-independent. */
+    * The filter is sized by the eval side's DISTINCT shingles (an
+    * `approx_count_distinct` estimate), so duplicated eval text does not
+    * grow it. At 1% a 10M-distinct-shingle eval set costs ~12 MB of
+    * filter — executor-local and corpus-size-independent. */
   val DecontamBloomFpp = 0.01
 
   /** Bloom-prefiltered twin of [[decontamination]] with IDENTICAL output
@@ -874,21 +876,19 @@ object Dedup {
       .crossJoin(broadcast(evalSrc)).cache()
     val trainTri = tri.filter(col("source") =!= col("eval_source"))
     val evalTri = tri.filter(col("source") === col("eval_source"))
-    // Build the filter over the RAW (doc, shingle) rows, not a distinct
-    // set (r17): Bloom inserts are idempotent, so duplicates change
-    // nothing but the sizing — expectedNumItems = the row count (an upper
-    // bound on distinct shingles) just makes the filter a bit larger and
-    // its real fpp lower. The previous distinct() executed its exchange
-    // TWICE (once under count(), once under stat.bloomFilter — both
-    // actions re-ran the uncached distinct) for zero semantic gain.
-    val nEvalRows = evalTri.count()
+    // Insert the RAW (doc, shingle) rows, not a distinct set: Bloom
+    // inserts are idempotent, and a distinct() would add an exchange. Size
+    // the filter by the distinct shingles, though: the row count grows
+    // with duplication, and so would the filter. The estimate is one
+    // aggregate over the cached rows, the same single job a count() was.
+    val nEvalShingles = evalTri.agg(approx_count_distinct("sh")).head().getLong(0)
     // an empty eval side (eval docs too short to shingle) NPEs Spark's
     // stat.bloomFilter — and means no train shingle can match, so the
     // candidate stream is empty by construction
     val candTri =
-      if (nEvalRows == 0) trainTri.limit(0)
+      if (nEvalShingles == 0) trainTri.limit(0)
       else {
-        val bf = evalTri.stat.bloomFilter("sh", nEvalRows, fpp)
+        val bf = evalTri.stat.bloomFilter("sh", nEvalShingles, fpp)
         val mightContain = udf((s: String) => s != null && bf.mightContain(s))
         trainTri.filter(mightContain(col("sh")))
       }

@@ -948,6 +948,31 @@ class PipelineSpec extends SparkSpec {
     // frames' storage and the localCheckpoint blocks, so no new persistent
     // RDD id may survive the sweep
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    // the report the five stage functions give when called one by one, in
+    // a scope of their own (so the run below computes every stage afresh)
+    val sequential = graft.drift.CacheScope.using(spark) { scope =>
+      val funnel = TextAnalysis.corpusPrepNeardup(spark, dir, Some(scope)).collect()
+      def sumCol(c: String): Long = funnel.map(_.getAs[Long](c)).sum
+      val path = s"$work/neardup_clusters.parquet"
+      Dedup.writeClusters(Dedup.neardupComponents(
+        graft.drift.table(spark, dir, "documents").select("doc_id", "text"),
+        scope = Some(scope)), path)
+      val artifact = Dedup.readClusters(spark, path)
+      val leak = DataSplit.splitLeakageNeardup(spark, dir,
+        precomputed = Some(artifact)).collect()(0)
+      CorpusPipeline.CorpusReport(
+        nDocs = sumCol("n_docs"), nLangKept = sumCol("n_lang_kept"),
+        nQualityKept = sumCol("n_quality_kept"), nDedupKept = sumCol("n_dedup_kept"),
+        nNeardupKept = sumCol("n_neardup_kept"),
+        nClusters = artifact.filter(col("cluster_id") === col("doc_id")).count(),
+        nLeakyClusters = leak.getAs[Long]("n_leaky_clusters"),
+        nLeakedDocs = leak.getAs[Long]("n_leaked_docs"),
+        pplBuckets = LmScore.lmPplBuckets(spark, dir, scope = Some(scope)).collect()
+          .groupBy(_.getAs[String]("bucket"))
+          .map { case (b, rs) => b -> rs.map(_.getAs[Long]("n_docs")).sum },
+        clustersPath = path,
+        nContainmentPairs = Dedup.containmentPairs(spark, dir, scope = Some(scope)).count())
+    }
     val r = CorpusPipeline.run(spark, dir, work)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
     assert(leaked.isEmpty, s"corpus sweep leaked cached RDDs: $leaked")
@@ -961,9 +986,51 @@ class PipelineSpec extends SparkSpec {
     assert(r.nLeakedDocs == standalone.getAs[Long]("n_leaked_docs"))
     // buckets partition the corpus
     assert(r.pplBuckets.values.sum == r.nDocs)
-    // the asymmetric containment sweep is routed through the one-call API
-    // and agrees with the standalone operator
-    assert(r.nContainmentPairs == Dedup.containmentPairs(spark, dir).count())
+    // the concurrent stages give exactly the sequential report: every
+    // count, the buckets and the containment sweep
+    assert(r == sequential)
+  }
+
+  test("every job of one corpus pipeline run carries a corpus:<stage> description") {
+    val work = java.nio.file.Files.createTempDirectory("graft-pipeline").toString
+    val (_, log) = jobsOf(CorpusPipeline.run(spark, "/root/testdata/sf0.001", work))
+    val undescribed = log.jobs.filterNot(_._2.startsWith("corpus:"))
+    assert(undescribed.isEmpty, s"jobs without a corpus: description: $undescribed")
+    assert(log.jobs.values.map(_.stripPrefix("corpus:")).toSet ==
+      Set("funnel", "neardup_artifact", "containment", "ppl_buckets"))
+    assert(log.running.isEmpty)
+  }
+
+  test("a failing corpus stage surfaces its own exception, cancels its siblings, leaks nothing") {
+    // a regular file as the work dir: the artifact stage's write throws
+    // while the funnel, containment and bucket stages are running
+    val notADir = java.nio.file.Files.createTempFile("graft-workdir", ".txt").toString
+    val direct = intercept[Exception](Dedup.writeClusters(
+      spark.range(3).selectExpr("id AS doc_id", "id AS cluster_id"),
+      s"$notADir/neardup_clusters.parquet"))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val (e, log) = jobsOf {
+      val e = intercept[Exception](CorpusPipeline.run(spark, "/root/testdata/sf0.001", notADir))
+      // job ids follow submission order: a stage left running would go on
+      // submitting jobs after this marker (the funnel outlasts the failure)
+      graft.drift.CallPool.described(sc, "after-the-call")(sc.parallelize(Seq(1), 1).count())
+      Thread.sleep(2000)
+      e
+    }
+    assert(e.getClass == direct.getClass, e)
+    assert(log.jobs.values.exists(_ == "corpus:neardup_artifact"))
+    val marker = log.jobs.collectFirst { case (id, "after-the-call") => id }.get
+    val late = log.jobs.filter { case (id, d) => id > marker && d.startsWith("corpus:") }
+    assert(late.isEmpty, s"stages still submitting jobs after the call threw: $late")
+    assert(log.running.isEmpty, s"jobs still running after the throw: ${log.running}")
+    // the status store is fed by its own listener queue
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    assert(sc.getPersistentRDDs.keySet.toSet == before,
+      s"leaked RDDs: ${sc.getPersistentRDDs.keySet.toSet -- before}")
   }
 
   test("span dedup flags only the cross-doc repeated 8-token run") {
