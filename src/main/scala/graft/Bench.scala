@@ -377,15 +377,17 @@ object Bench {
           precomputed = Some(art)))
       } { rmTmp() }
       // the corpus is LM-scored once; per-doc, per-source and ppl-bucket
-      // surfaces all aggregate the shared cached frame
+      // surfaces all aggregate the shared cached frame (tercile fit on the
+      // sketch, as the bench's lm_ppl_buckets row)
       val lm = prodFamily("lm_family") { spark.catalog.clearCache() } {
-        graft.pipeline.LmScore.lmFamilyShared(spark, sfDir).foreach(exec)
+        graft.plans.SketchModeRewrite.during(spark)(
+          graft.pipeline.LmScore.lmFamilyShared(spark, sfDir)).foreach(exec)
       } {}
       // the per-doc quality-ensemble frame scores once; the per-source
       // rollup and the snapshot-drift monitor aggregate the cached frame
       val ensemble = prodFamily("ensemble_family") { spark.catalog.clearCache() } {
-        graft.pipeline.TextAnalysis.ensembleFamilyShared(spark, sfDir)
-          .foreach(exec)
+        graft.plans.SketchModeRewrite.during(spark)(
+          graft.pipeline.TextAnalysis.ensembleFamilyShared(spark, sfDir)).foreach(exec)
       } {}
       // the IVF index is built once on ingest and every search joins the
       // artifact (build + one query-many-shaped search per run; fresh

@@ -202,7 +202,7 @@ object Example {
       // snapshot drift monitor on it — deployment-shape: both roll up ONE
       // cached per-doc ensemble frame instead of re-paying the scoring DAG
       val Seq(qeDf, sqdDf) =
-        graft.pipeline.TextAnalysis.ensembleFamilyShared(spark, sfDir, approx = false)
+        graft.pipeline.TextAnalysis.ensembleFamilyShared(spark, sfDir)
       val qe = qeDf.collect()
       if (qe.nonEmpty) {
         val best = qe.maxBy(_.getAs[Double]("mean_score"))

@@ -61,66 +61,62 @@ object SparkEntry {
       "ROUND(AVG(l_discount), 6) AS avg_disc, COUNT(*) AS count_order " +
       "FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2"
 
+  /** Every gate module: its operators ([[queries]]) and their DuckDB twins
+    * ([[oracleSql]]) both come from this one list, so the two maps cannot
+    * drift apart. */
+  private val modules: Seq[OperatorModule] = Seq(
+    PricingSummary, NumericDrift, DistanceDrift, JsonDrift, CategoricalDrift,
+    CorrelationDrift, GroupDrift, SchemaOps, AdaptiveThresholds, TimelineDrift,
+    RobustDrift, PcaAnomaly, Report, Dedup, Similarity, TextAnalysis, Sessions,
+    EventAnalytics, RangeJoin, SnapshotDiff, AsofJoin, LmScore, SpanDedup,
+    DataSplit, Multimodal, EmbeddingDrift, Dsir, ScaleJoins, Packing, Layout,
+    EntityResolution, Retrieval, MarketBasket, Constraints, Benford,
+    CorpusDesign, Privacy, EngineProbe, Orchestrated,
+    graft.streaming.StreamingReplay)
+
+  private object PricingSummary extends OperatorModule {
+    def queries: Map[String, (SparkSession, String) => DataFrame] =
+      Map("q1_pricing_summary" -> (q1 _))
+    def oracles: Map[String, String] = Map("q1_pricing_summary" -> q1Sql)
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Map[String, (SparkSession, String) => DataFrame]("q1_pricing_summary" -> (q1 _)) ++
-      NumericDrift.queries ++
-      DistanceDrift.queries ++
-      JsonDrift.queries ++
-      CategoricalDrift.queries ++
-      CorrelationDrift.queries ++
-      GroupDrift.queries ++
-      SchemaOps.queries ++
-      AdaptiveThresholds.queries ++
-      TimelineDrift.queries ++
-      RobustDrift.queries ++
-      PcaAnomaly.queries ++
-      Report.queries ++
-      Dedup.queries ++
-      Similarity.queries ++
-      TextAnalysis.queries ++
-      Sessions.queries ++
-      EventAnalytics.queries ++
-      RangeJoin.queries ++
-      SnapshotDiff.queries ++
-      AsofJoin.queries ++
-      LmScore.queries ++
-      SpanDedup.queries ++
-      DataSplit.queries ++
-      Multimodal.queries ++
-      EmbeddingDrift.queries ++
-      Dsir.queries ++
-      ScaleJoins.queries ++
-      Packing.queries ++
-      Layout.queries ++
-      EntityResolution.queries ++
-      Retrieval.queries ++
-      MarketBasket.queries ++
-      Constraints.queries ++
-      Benford.queries ++
-      CorpusDesign.queries ++
-      Privacy.queries ++
-      EngineProbe.queries ++
-      Orchestrated.queries ++
-      graft.streaming.StreamingReplay.queries
+    modules.flatMap(_.queries).toMap
 
-  /** The benchmark surface: same operators, but the percentile-heavy
-    * queries run their `approx = true` scale path (fixed-size mergeable
-    * sketches instead of exact sort-based `percentile`, which buffers every
-    * value per agg buffer and OOMs at 100 TB). Verify keeps the exact forms
-    * so the DuckDB oracle reproduces values bit-for-bit; DriftMathSpec
-    * asserts the approx results track exact within tolerance. */
-  def benchQueries: Map[String, (SparkSession, String) => DataFrame] =
-    queries ++ Map[String, (SparkSession, String) => DataFrame](
-      "numeric_stats" -> ((s, d) => NumericDrift.stats(s, d, approx = true)),
-      "token_stats" -> ((s, d) => TextAnalysis.tokenStats(s, d, approx = true)),
+  /** The operators whose 100 TB path only swaps exact `percentile` /
+    * `COUNT(DISTINCT x)` for their mergeable sketches: the bench runs them
+    * under sketch mode ([[graft.plans.SketchModeRewrite]]). */
+  private[graft] val SketchedOnBench = Seq(
+    "numeric_stats", "token_stats", "type_inference", "lm_ppl_buckets",
+    "quality_ensemble", "source_quality_drift", "numeric_drift", "metric_audit",
+    "numeric_drift_score", "quantile_shifts", "mad_outliers", "rfm_segments",
+    "conversion_lag", "revenue_concentration", "embedding_audit",
+    "group_numeric_metrics", "group_drift", "orchestrated_report")
+
+  /** The benchmark surface: the same operators on their 100 TB path. Verify
+    * keeps the exact forms so the DuckDB oracle reproduces values
+    * bit-for-bit; the approx-vs-exact specs pin how closely the bench forms
+    * track them.
+    *  - [[SketchedOnBench]]: `during` covers the aggregates an operator
+    *    collects while building its frame (a percentile fit replayed as
+    *    literals, a type probe, a drift report), `sketched` the plan the
+    *    bench runs later.
+    *  - The explicit overrides are operators whose scale path is a
+    *    different algorithm, not a swapped aggregate, so they keep a flag. */
+  def benchQueries: Map[String, (SparkSession, String) => DataFrame] = {
+    import graft.plans.SketchModeRewrite.{during, sketched}
+    val exact = queries
+    exact ++ SketchedOnBench.map(k => k -> { (s: SparkSession, d: String) =>
+      during(s)(sketched(exact(k)(s, d)))
+    }) ++ Map[String, (SparkSession, String) => DataFrame](
+      // hash-threshold keep instead of the per-source rank window
       "corpus_balance" -> ((s, d) => TextAnalysis.balancedMix(s, d, approx = true)),
+      // md5-bucket per row instead of the per-source rank window
       "data_split" -> ((s, d) => DataSplit.dataSplit(s, d, approx = true)),
-      "type_inference" -> ((s, d) => TypeInference.typeInferenceQuery(s, d, approxDistinct = true)),
+      // the distinct count from one raw-table HLL agg, so no
+      // cardinality-sized frame feeds the base profile
       "topk_entropy" -> ((s, d) => CategoricalDrift.topkEntropy(s, d, approx = true)),
-      "lm_ppl_buckets" -> ((s, d) => LmScore.lmPplBuckets(s, d, approx = true)),
-      "quality_ensemble" -> ((s, d) => TextAnalysis.qualityEnsemble(s, d, approx = true)),
-      "source_quality_drift" -> ((s, d) => TextAnalysis.sourceQualityDrift(s, d, approx = true)),
       // the per-source rollup switches canonical doc-ordered folds (which
       // collect per-source doc lists — oracle-exact but driver-sized) to
       // plain map-side-combined SUMs
@@ -129,79 +125,31 @@ object SparkEntry {
       // instead of the raw distinct-value frame
       "ks_test" -> ((s, d) => DistanceDrift.ksTest(s, d, approx = true)),
       "wasserstein" -> ((s, d) => DistanceDrift.wasserstein(s, d, approx = true)),
-      "numeric_drift" -> ((s, d) => NumericDrift.drift(s, d, approx = true)),
-      "metric_audit" -> ((s, d) => NumericDrift.metricAudit(s, d, approx = true)),
-      "numeric_drift_score" -> ((s, d) => NumericDrift.driftScore(s, d, approx = true)),
-      "quantile_shifts" -> ((s, d) => NumericDrift.quantileShifts(s, d, approx = true)),
-      "mad_outliers" -> ((s, d) => RobustDrift.madOutliers(s, d, approx = true)),
-      "rfm_segments" -> ((s, d) => EventAnalytics.rfmSegments(s, d, approx = true)),
       // HLL sketches straight off the raw scan: the (user, day) universe is
       // never shuffled (sketches merge map-side)
       "active_users" -> ((s, d) => EventAnalytics.activeUsers(s, d, approx = true)),
-      // uniqueness/FK-coverage distinct counts via HLL sketches instead of
-      // exact COUNT(DISTINCT tuple) — the exact form shuffles every key
-      // tuple (the one 100 TB-hostile shuffle on the bench surface before
-      // round 12); approx-vs-exact pinned in ConstraintsSpec
+      // uniqueness/FK-coverage distinct counts via HLL sketches of the key
+      // TUPLE — multi-column distincts the sketch-mode rule leaves exact;
+      // approx-vs-exact pinned in ConstraintsSpec
       "constraint_check" -> ((s, d) => Constraints.constraintCheck(s, d, approx = true)),
-      "conversion_lag" -> ((s, d) => EventAnalytics.conversionLag(s, d, approx = true)),
-      "revenue_concentration" -> ((s, d) => EventAnalytics.revenueConcentration(s, d, approx = true)),
-      "embedding_audit" -> ((s, d) => EmbeddingDrift.embeddingAudit(s, d, approx = true)),
-      "group_numeric_metrics" -> ((s, d) => GroupDrift.groupNumericMetrics(s, d, approx = true)),
-      "group_drift" -> ((s, d) => GroupDrift.groupDriftVerdict(s, d, approx = true)),
       // the report family shares one memoized scoring DAG; at scale that DAG
-      // runs on the sketch percentiles too
+      // is memoized in its sketched form
       "drift_results" -> ((s, d) => Report.driftResultsCached(s, d, approx = true)),
       "drift_summary" -> ((s, d) => Report.driftSummary(s, d, approx = true)),
       "dimensional_summary" -> ((s, d) => Report.dimensionalSummary(s, d, approx = true)),
       "top_dimensions" -> ((s, d) => Report.topDimensions(s, d, approx = true)),
       "top_drifted_columns" -> ((s, d) => Report.topDriftedColumns(s, d, approx = true)),
-      // the full O40 orchestration runs its O12 percentiles on the sketch
-      // too (round 10 — this was the single most expensive bench query
-      // while it still paid exact percentile through the orchestrator)
-      "orchestrated_report" -> ((s, d) => Orchestrated.orchestratedReport(s, d, approx = true)),
     )
+  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on the
     * same parquet tables. Omitted keys get a weaker rows-only check. */
-  def oracleSql: Map[String, String] =
-    Map("q1_pricing_summary" -> q1Sql) ++
-      NumericDrift.oracles ++
-      DistanceDrift.oracles ++
-      JsonDrift.oracles ++
-      CategoricalDrift.oracles ++
-      CorrelationDrift.oracles ++
-      GroupDrift.oracles ++
-      SchemaOps.oracles ++
-      AdaptiveThresholds.oracles ++
-      TimelineDrift.oracles ++
-      RobustDrift.oracles ++
-      PcaAnomaly.oracles ++
-      Report.oracles ++
-      Dedup.oracles ++
-      Similarity.oracles ++
-      TextAnalysis.oracles ++
-      Sessions.oracles ++
-      EventAnalytics.oracles ++
-      RangeJoin.oracles ++
-      SnapshotDiff.oracles ++
-      AsofJoin.oracles ++
-      LmScore.oracles ++
-      SpanDedup.oracles ++
-      DataSplit.oracles ++
-      Multimodal.oracles ++
-      EmbeddingDrift.oracles ++
-      Dsir.oracles ++
-      ScaleJoins.oracles ++
-      Packing.oracles ++
-      Layout.oracles ++
-      EntityResolution.oracles ++
-      Retrieval.oracles ++
-      MarketBasket.oracles ++
-      Constraints.oracles ++
-      Benford.oracles ++
-      CorpusDesign.oracles ++
-      Privacy.oracles ++
-      EngineProbe.oracles ++
-      Orchestrated.oracles ++
-      graft.streaming.StreamingReplay.oracles
+  def oracleSql: Map[String, String] = modules.flatMap(_.oracles).toMap
+}
+
+/** One registry entry of [[SparkEntry]]: a module's gate operators, each a
+  * frame over the testdata at `dir`, and their DuckDB twins by key. */
+trait OperatorModule {
+  def queries: Map[String, (SparkSession, String) => DataFrame]
+  def oracles: Map[String, String]
 }

@@ -17,7 +17,7 @@ import graft.drift.{splits => S}
   * banding is a CASE expression evaluated in-plan (shared with the oracle),
   * not driver-side Python over collect()ed stats.
   */
-object AdaptiveThresholds {
+object AdaptiveThresholds extends graft.OperatorModule {
 
   val BaseNumerical = 0.1
   val BaseCategorical = 0.05

@@ -19,7 +19,7 @@ import graft.drift.{splits => S}
   * SURVEY.md §8.9) is a rank-filter with a deterministic (count desc, value
   * asc) tie-break so Spark and the DuckDB oracle agree.
   */
-object CategoricalDrift {
+object CategoricalDrift extends graft.OperatorModule {
 
   /** Standard-profile defaults (/root/reference/categorical_analyzer.py:32-35). */
   val CategoryThreshold = 0.03

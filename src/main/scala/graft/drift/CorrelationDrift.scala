@@ -16,7 +16,7 @@ import graft.drift.{splits => S}
   * Pairs are keyed as (col1, col2) columns, not the reference's ambiguous
   * "col1_col2" string (defect §8.4 of SURVEY.md).
   */
-object CorrelationDrift {
+object CorrelationDrift extends graft.OperatorModule {
 
   val CorrelationThreshold = 0.7        // standard profile
   val CorrelationChangeThreshold = 0.2  // standard profile

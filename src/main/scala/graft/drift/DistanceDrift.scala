@@ -27,9 +27,11 @@ import graft.drift.{splits => S}
   * rows; the `approx` path first snaps values onto a [[EdfBins]]-cell
   * grid (shared edges from one bounds agg, broadcast) so the per-column
   * window input is ≤ [[EdfBins]] rows at ANY corpus size — that is the
-  * 100 TB surface, wired in `SparkEntry.benchQueries`.
+  * 100 TB surface, wired in `SparkEntry.benchQueries`. It is a different
+  * algorithm, not a swapped aggregate, so it keeps its own flag instead
+  * of riding sketch mode (graft.plans.SketchModeRewrite).
   */
-object DistanceDrift {
+object DistanceDrift extends graft.OperatorModule {
 
   /** PSI industry bands (Siddiqi, "Credit Risk Scorecards", ch. 10). */
   val PsiModerate = 0.1

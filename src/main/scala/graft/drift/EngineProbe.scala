@@ -42,7 +42,7 @@ import org.apache.spark.sql.functions._
   * red `*_scan` => the data read or integer aggregation diverges; red
   * integer gate rows with green probes => driver check mechanics.
   * All probes are expected green. */
-object EngineProbe {
+object EngineProbe extends graft.OperatorModule {
 
   /** Mantissa-extraction: x scaled by an exact power of two into
     * [2^51, 2^53), floored to BIGINT — bit-faithful, survives the

@@ -18,7 +18,7 @@ import graft.drift.{splits => S}
   * independent of category count. At 100 TB that is the difference between
   * ~hundreds of scans and two.
   */
-object GroupDrift {
+object GroupDrift extends graft.OperatorModule {
 
   case class GroupSpec(tableName: String, dim: String, numMetrics: Seq[String],
       catMetrics: Seq[String], ref: Column, refSql: String)
@@ -73,12 +73,13 @@ object GroupDrift {
 
   // --------------------------------------------- numeric group metrics (O32)
 
+  /** Exact median of metric `m`; the DOUBLE cast leaves it unchanged and
+    * lets sketch mode reach integral metrics too. */
+  private def median(m: String): Column = expr(s"percentile(CAST($m AS DOUBLE), 0.5)")
+
   /** Per-(category, metric) side stats, pivoted. Nulls coalesced to 0 as the
     * reference does post-collect (group_analyzer.py:311-333). */
-  private def numPivot(spark: SparkSession, dir: String, sp: GroupSpec,
-      approx: Boolean = false): DataFrame = {
-    val med = (m: String) =>
-      if (approx) s"CAST(percentile_approx($m, 0.5, $SketchAccuracy) AS DOUBLE)" else s"percentile($m, 0.5)"
+  private def numPivot(spark: SparkSession, dir: String, sp: GroupSpec): DataFrame = {
     val aggs = count(lit(1)).as("n") +: sp.numMetrics.flatMap { m =>
       Seq(
         sum(when(col(m).isNull, 1L).otherwise(0L)).as(s"${m}__nulls"),
@@ -86,7 +87,7 @@ object GroupDrift {
         coalesce(stddev(col(m)), lit(0.0)).as(s"${m}__std"),
         coalesce(min(col(m)).cast("double"), lit(0.0)).as(s"${m}__min"),
         coalesce(max(col(m)).cast("double"), lit(0.0)).as(s"${m}__max"),
-        coalesce(expr(med(m)), lit(0.0)).as(s"${m}__med"))
+        coalesce(median(m), lit(0.0)).as(s"${m}__med"))
     }
     val rows = sp.numMetrics.map { m =>
       s"'$m', ${m}__nulls, ${m}__mean, ${m}__std, ${m}__min, ${m}__max, ${m}__med"
@@ -143,13 +144,12 @@ object GroupDrift {
       coalesce(max("ref_n"), lit(0L)).as("ref_n"),
       coalesce(max("curr_n"), lit(0L)).as("curr_n"))
 
-  /** `approx=true` is the benchmarked 100 TB path (sketch-based group
-    * medians); the oracle-checked query keeps exact `percentile` so DuckDB's
-    * `quantile_cont` reproduces values. */
-  def groupNumericMetrics(spark: SparkSession, dir: String, approx: Boolean = false): DataFrame = {
+  /** Exact group medians, so DuckDB's `quantile_cont` reproduces values;
+    * sketch mode swaps in the mergeable sketch at scale. */
+  def groupNumericMetrics(spark: SparkSession, dir: String): DataFrame = {
     val per = specs.map { sp =>
       // every metric row of a category carries the category's side counts
-      keepEligible(numPivot(spark, dir, sp, approx))
+      keepEligible(numPivot(spark, dir, sp))
         .select(lit(sp.tableName).as("table_name"), lit(sp.dim).as("dimension"), col("*"))
         .selectExpr(numFinal: _*)
     }
@@ -303,28 +303,30 @@ object GroupDrift {
       "max_null_drift >= 0.1 OR max_mean_change >= 0.2 OR max_median_change >= 0.2 OR " +
       "max_freq_drift >= 0.15 OR max_distinct_pct >= 0.25) AS drift_detected")
 
-  def groupDriftVerdict(spark: SparkSession, dir: String, approx: Boolean = false): DataFrame =
-    groupDriftVerdictFrame(spark, dir, approx)
+  def groupDriftVerdict(spark: SparkSession, dir: String): DataFrame =
+    groupDriftVerdictFrame(spark, dir)
       .orderBy("table_name", "dimension", "category")
 
   /** [[groupDriftVerdict]] without the final sort (see
     * NumericDrift.driftScoreFrame for why Report's cache wants it). */
-  private[drift] def groupDriftVerdictFrame(spark: SparkSession, dir: String,
-      approx: Boolean = false): DataFrame = {
+  private[drift] def groupDriftVerdictFrame(spark: SparkSession, dir: String): DataFrame = {
     val per = specs.map { sp =>
-      // UNCACHED (r17): np feeds the four numeric component projections
-      // AND the eligibility counts, but the branches' shared exchange
-      // dedupes (ReusedExchange) so only the tiny per-category final agg
-      // replays per branch, while a fresh registered-cold cache got
-      // stampeded by the concurrent consumers (see
-      // NumericDrift.driftScoreFrame; measured on the bench rows below)
-      val np = numPivot(spark, dir, sp, approx)
-      val elig = eligibleFromCounts(countsFromNumPivot(np))
+      // UNCACHED (r17): np feeds the numeric component projections, whose
+      // shared exchange dedupes (ReusedExchange), while a fresh
+      // registered-cold cache got stampeded by the concurrent consumers
+      // (see NumericDrift.driftScoreFrame). Eligibility ranks np's own rows
+      // (keepEligible): a second aggregate for the counts would be pruned
+      // differently and scan the table again. Every metric row of an
+      // eligible category repeats its row_pct component, which only MAX
+      // reads; categories without one are not eligible and drop after the
+      // verdict aggregate, as the oracle's join drops them.
+      val np = keepEligible(numPivot(spark, dir, sp))
       val numComps = Seq(
         ("null", "ABS(curr_nulls * 1e0 / curr_n - ref_nulls * 1e0 / ref_n)"),
         ("mean", s"ABS(${pctChangeSql("ref_mean", "curr_mean")})"),
         ("std", s"ABS(${pctChangeSql("ref_std", "curr_std")})"),
-        ("median", s"ABS(${pctChangeSql("ref_med", "curr_med")})"))
+        ("median", s"ABS(${pctChangeSql("ref_med", "curr_med")})"),
+        ("row_pct", pctChangeSql("ref_n", "curr_n")))
         .map { case (k, e) => np.selectExpr("category", s"'$k' AS kind", s"$e AS value") }
         .reduce(_ union _)
       val catComps = sp.catMetrics.map { m =>
@@ -345,11 +347,9 @@ object GroupDrift {
           .union(cm.selectExpr("category", "'distinct_pct' AS kind",
             s"ABS(${pctChangeSql("ref_distinct", "curr_distinct")}) AS value"))
       }.reduce(_ union _)
-      val rowComp = elig.selectExpr("category", "'row_pct' AS kind",
-        s"${pctChangeSql("ref_n", "curr_n")} AS value")
-      numComps.union(catComps).union(rowComp)
-        .join(elig.select("category"), "category")
+      numComps.union(catComps)
         .groupBy("category").agg(verdictAggs.map(expr).head, verdictAggs.map(expr).tail: _*)
+        .filter(col("row_pct_change").isNotNull)
         .select(lit(sp.tableName).as("table_name"), lit(sp.dim).as("dimension"), col("*"))
         .selectExpr(verdictFinal: _*)
     }
@@ -379,7 +379,7 @@ object GroupDrift {
     * path. */
   def forPair(ref: DataFrame, curr: DataFrame, dim: String,
       numMetrics: Seq[String], catMetrics: Seq[String],
-      approx: Boolean = false, scope: Option[CacheScope] = None): DataFrame = {
+      scope: Option[CacheScope] = None): DataFrame = {
     // a monitoring loop passes a CacheScope so the cached pivot/value-count
     // frames (new plans per call — fresh data) are releasable; without one
     // they stay Spark-cached for the session (one-shot process semantics)
@@ -397,8 +397,7 @@ object GroupDrift {
           sum(when(col(m).isNull, 1L).otherwise(0L)).as(s"${m}__nulls"),
           coalesce(avg(col(m)), lit(0.0)).as(s"${m}__mean"),
           coalesce(stddev(col(m)), lit(0.0)).as(s"${m}__std"),
-          coalesce(expr(if (approx) s"CAST(percentile_approx($m, 0.5, $SketchAccuracy) AS DOUBLE)"
-            else s"percentile($m, 0.5)"), lit(0.0)).as(s"${m}__med"))
+          coalesce(median(m), lit(0.0)).as(s"${m}__med"))
       }
       val rows = numMetrics.map { m =>
         s"'$m', ${m}__nulls, ${m}__mean, ${m}__std, ${m}__med"

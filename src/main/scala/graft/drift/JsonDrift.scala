@@ -23,7 +23,7 @@ import graft.drift.{splits => S}
   * Scale: one scan → explode → groupBy(key) partial aggs; side totals are
   * a 1-row broadcast. Key cardinality bounds every frame after the scan.
   */
-object JsonDrift {
+object JsonDrift extends graft.OperatorModule {
 
   private def kvLong(spark: SparkSession, dir: String): DataFrame =
     withSide(table(spark, dir, "events"), S.eventsRef)

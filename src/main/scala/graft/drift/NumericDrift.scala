@@ -20,7 +20,7 @@ import graft.drift.{splits => S}
   * with the DuckDB oracle (`selectExpr` on the Spark side), so the two
   * engines cannot diverge on formula details.
   */
-object NumericDrift {
+object NumericDrift extends graft.OperatorModule {
 
   // ---------------------------------------------------------------- stats
 
@@ -34,15 +34,16 @@ object NumericDrift {
     "events" -> Seq("value"),
   )
 
-  private def statAggs(c: String, approx: Boolean): Seq[Column] = Seq(
+  // the DOUBLE cast leaves exact percentiles unchanged and lets sketch
+  // mode reach integral columns too (graft.plans.SketchModeRewrite)
+  private def statAggs(c: String): Seq[Column] = Seq(
     count(lit(1)).as(s"${c}__total"),
     count(col(c)).as(s"${c}__nonnull"),
     avg(col(c)).as(s"${c}__mean"),
     stddev(col(c)).as(s"${c}__std"),
     min(col(c)).cast("double").as(s"${c}__min"),
     max(col(c)).cast("double").as(s"${c}__max"),
-    (if (approx) expr(s"percentile_approx($c, array(0.25, 0.5, 0.75), $SketchAccuracy)")
-     else expr(s"percentile($c, array(0.25, 0.5, 0.75))"))
+    expr(s"percentile(CAST($c AS DOUBLE), array(0.25, 0.5, 0.75))")
       .cast("array<double>").as(s"${c}__pct"),
   )
 
@@ -56,13 +57,11 @@ object NumericDrift {
       "(table_name, column_name, n_total, n_nonnull, mean, std, vmin, vmax, p25, p50, p75)"
   }
 
-  /** `approx=true` is the 100 TB path (benchmarked): `percentile_approx` is
-    * a fixed-size sketch mergeable map-side, where exact `percentile`
-    * buffers every value per agg buffer. The oracle-checked query keeps
-    * exact so DuckDB's `quantile_cont` reproduces values bit-for-bit. */
-  def stats(spark: SparkSession, dir: String, approx: Boolean = false): DataFrame = {
+  /** Exact percentiles, so DuckDB's `quantile_cont` reproduces values
+    * bit-for-bit; sketch mode swaps in the mergeable sketch at scale. */
+  def stats(spark: SparkSession, dir: String): DataFrame = {
     val longs = statsTables.map { case (t, cols) =>
-      val aggs = cols.flatMap(statAggs(_, approx))
+      val aggs = cols.flatMap(statAggs)
       table(spark, dir, t).agg(aggs.head, aggs.tail: _*).select(expr(stackStats(t, cols)))
     }
     longs.reduce(_ unionAll _)
@@ -94,23 +93,17 @@ object NumericDrift {
   /** One-pass per-side stats for a split table, long format:
     * (table_name, column_name, side, n_total, n_nonnull, mean, std, vmin,
     * vmax, p25, p50, p75, p95, p99, p01, p05). */
-  private def sideStatsLong(spark: SparkSession, dir: String, sp: S.NumSplit,
-      approx: Boolean = false): DataFrame =
-    sideStatsFrom(withSide(table(spark, dir, sp.tableName), sp.ref), sp.tableName, sp.cols, approx)
+  private def sideStatsLong(spark: SparkSession, dir: String, sp: S.NumSplit): DataFrame =
+    sideStatsFrom(withSide(table(spark, dir, sp.tableName), sp.ref), sp.tableName, sp.cols)
 
   /** Same one-pass stats over any side-tagged frame (generic pair entry).
-    * `approx=true` is the 100 TB path: `percentile_approx` — the
+    * Exact `percentile` so DuckDB can reproduce values; sketch mode
+    * (graft.plans.SketchModeRewrite) swaps in `percentile_approx` — the
     * reference's own choice (numerical_analyzer.py:306-307, rel. err 0.01)
-    * — instead of the exact sort-based `percentile`. We run the sketch at
-    * accuracy [[SketchAccuracy]] (rank err 1e-4, 100× tighter than the
-    * reference's; still a fixed-size mergeable summary — round-9
-    * collect-forced profiling showed sketch cost is insert-bound and
-    * accuracy-independent here, so the tight setting is free). The oracle-checked queries use exact so
-    * DuckDB can reproduce values; at scale flip the flag. */
-  private def sideStatsFrom(tagged: DataFrame, tableName: String, cols: Seq[String],
-      approx: Boolean = false): DataFrame = {
-    val pctFn = if (approx) "percentile_approx" else "percentile"
-    val acc = if (approx) s", $SketchAccuracy" else ""
+    * — at [[SketchAccuracy]]. The DOUBLE cast leaves the exact value
+    * unchanged and lets the sketch reach integral columns. */
+  private def sideStatsFrom(tagged: DataFrame, tableName: String,
+      cols: Seq[String]): DataFrame = {
     val aggs = cols.flatMap { c =>
       Seq(
         count(lit(1)).as(s"${c}__total"),
@@ -119,7 +112,7 @@ object NumericDrift {
         stddev(col(c)).as(s"${c}__std"),
         min(col(c)).cast("double").as(s"${c}__min"),
         max(col(c)).cast("double").as(s"${c}__max"),
-        expr(s"$pctFn($c, array(0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99)$acc)")
+        expr(s"percentile(CAST($c AS DOUBLE), array(0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99))")
           .cast("array<double>").as(s"${c}__pct"),
       )
     }
@@ -139,16 +132,15 @@ object NumericDrift {
 
   /** Per-snapshot numeric profile — the persistable artifact of the
     * whylogs/Deequ-style workflow: at 100 TB each snapshot is scanned
-    * ONCE on arrival (`approx = true`: every stat is a fixed-size
+    * ONCE on arrival (under sketch mode every stat is a fixed-size
     * mergeable sketch) and every later drift comparison runs
     * profile-vs-profile on KB-sized frames, never rescanning raw data.
     * Schema = exactly the per-column stat row the drift DAG consumes
     * ([[driftFromProfiles]] is spec-pinned equal to [[driftForPair]],
     * including through a parquet round-trip). */
-  def profileOf(df: DataFrame, cols: Seq[String], label: String = "snapshot",
-      approx: Boolean = false): DataFrame =
+  def profileOf(df: DataFrame, cols: Seq[String], label: String = "snapshot"): DataFrame =
     sideStatsFrom(df.select(cols.map(col): _*).withColumn("side", lit("p")),
-      label, cols, approx).drop("side")
+      label, cols).drop("side")
 
   def writeProfile(profile: DataFrame, path: String): Unit =
     profile.coalesce(1).write.mode("overwrite").parquet(path)
@@ -175,8 +167,8 @@ object NumericDrift {
 
   /** Generic O11/O12 drift metrics for an arbitrary snapshot pair. */
   def driftForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
-      label: String = "pair", approx: Boolean = false): DataFrame =
-    pivotSides(sideStatsFrom(tagPair(ref, curr, cols), label, cols, approx))
+      label: String = "pair"): DataFrame =
+    pivotSides(sideStatsFrom(tagPair(ref, curr, cols), label, cols))
       .selectExpr(driftStage1: _*)
       .selectExpr(driftStage2: _*)
       .selectExpr(driftStage3: _*)
@@ -196,9 +188,9 @@ object NumericDrift {
 
   /** Generic O20 quantile shifts for an arbitrary snapshot pair. */
   def quantileShiftsForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
-      label: String = "pair", approx: Boolean = false): DataFrame = {
+      label: String = "pair"): DataFrame = {
     val rows = shiftQs.map { case (q, c) => s"'$q', ref_$c, curr_$c" }.mkString(", ")
-    pivotSides(sideStatsFrom(tagPair(ref, curr, cols), label, cols, approx))
+    pivotSides(sideStatsFrom(tagPair(ref, curr, cols), label, cols))
       .select(col("table_name"), col("column_name"),
         expr(s"stack(${shiftQs.size}, $rows) as (quantile, ref_value, curr_value)"))
       .selectExpr("table_name", "column_name", "quantile",
@@ -334,8 +326,8 @@ object NumericDrift {
         s"${severitySql(s"$score")} AS drift_severity")
   }
 
-  def drift(spark: SparkSession, dir: String, approx: Boolean = false): DataFrame = {
-    val long = S.numeric.map(sideStatsLong(spark, dir, _, approx)).reduce(_ unionAll _)
+  def drift(spark: SparkSession, dir: String): DataFrame = {
+    val long = S.numeric.map(sideStatsLong(spark, dir, _)).reduce(_ unionAll _)
     pivotSides(long)
       .selectExpr(driftStage1: _*)
       .selectExpr(driftStage2: _*)
@@ -376,11 +368,11 @@ object NumericDrift {
     * (column, metric) with reference/current values, the diff, the
     * standard-profile threshold and the per-metric drift flag — derived
     * from the same one-pass O12 stats, so it costs no extra scan. */
-  def metricAudit(spark: SparkSession, dir: String, approx: Boolean = false): DataFrame = {
+  def metricAudit(spark: SparkSession, dir: String): DataFrame = {
     val rows = auditMetrics.map { case (n, r, c, d, t) =>
       s"'$n', CAST($r AS DOUBLE), CAST($c AS DOUBLE), CAST($d AS DOUBLE), CAST($t AS DOUBLE)"
     }.mkString(", ")
-    val long = S.numeric.map(sideStatsLong(spark, dir, _, approx)).reduce(_ unionAll _)
+    val long = S.numeric.map(sideStatsLong(spark, dir, _)).reduce(_ unionAll _)
     pivotSides(long)
       .selectExpr(driftStage1: _*)
       .selectExpr(driftStage2: _*)
@@ -501,16 +493,15 @@ object NumericDrift {
       names.map(n => s"ROUND($n, 6) AS $n")
   }
 
-  def driftScore(spark: SparkSession, dir: String, approx: Boolean = false): DataFrame =
-    driftScoreFrame(spark, dir, approx).orderBy("table_name", "column_name")
+  def driftScore(spark: SparkSession, dir: String): DataFrame =
+    driftScoreFrame(spark, dir).orderBy("table_name", "column_name")
 
   /** [[driftScore]] without the final sort — the form Report's memoized
     * union caches: a Sort directly under a cache materialization executes
     * its child TWICE (the range partitioner's sampling pass plus the sort
     * pass), so the cached consumer stack sorts on top of the tiny cached
     * frame instead. */
-  private[drift] def driftScoreFrame(spark: SparkSession, dir: String,
-      approx: Boolean = false): DataFrame = {
+  private[drift] def driftScoreFrame(spark: SparkSession, dir: String): DataFrame = {
     // UNCACHED per-side stats (r17): they feed both the score pivot and
     // the outlier bounds, but a registered-cold cache gets STAMPEDED by
     // the plan's concurrent broadcast futures (each consumer recomputes
@@ -520,7 +511,7 @@ object NumericDrift {
     // re-registers fresh caches every run: numeric_drift_score cost MORE
     // (4.7 s) than the SUPERSET drift_results row (3.6 s), whose memoized
     // frame runs cache-free after clearCache.
-    val longs = S.numeric.map(sp => sp -> sideStatsLong(spark, dir, sp, approx)).toMap
+    val longs = S.numeric.map(sp => sp -> sideStatsLong(spark, dir, sp)).toMap
     val long = S.numeric.map(longs).reduce(_ unionAll _)
     val outs = S.numeric.map(sp => outlierCounts(spark, dir, sp, longs(sp))).reduce(_ unionAll _)
     def outSide(s: String) = outs.filter(col("side") === s).drop("side")
@@ -551,8 +542,8 @@ object NumericDrift {
 
   /** Per-quantile shifts with the distribution-analyzer zero rule
     * (/root/reference/distribution_analyzer.py:83-151). */
-  def quantileShifts(spark: SparkSession, dir: String, approx: Boolean = false): DataFrame = {
-    val long = S.numeric.map(sideStatsLong(spark, dir, _, approx)).reduce(_ unionAll _)
+  def quantileShifts(spark: SparkSession, dir: String): DataFrame = {
+    val long = S.numeric.map(sideStatsLong(spark, dir, _)).reduce(_ unionAll _)
     val rows = shiftQs.map { case (q, c) =>
       s"'$q', ref_$c, curr_$c"
     }.mkString(", ")

@@ -41,13 +41,7 @@ case class DriftConfig(
     // gamma) in place of the reference's banded p-value approximation
     // (categorical_analyzer.py:395-437). Default false: the bands are the
     // reference parity contract and the oracle surface.
-    exactChiPValue: Boolean = false,
-    // scale path: percentile-based analyzers (O12 median/IQR, O20 shifts)
-    // use percentile_approx's fixed-size mergeable sketch instead of exact
-    // sort-based percentile (which buffers every value per agg buffer —
-    // the 100 TB killer). Default false: the oracle surface is exact; the
-    // bench surface flips this on (SparkEntry.benchQueries).
-    approx: Boolean = false) {
+    exactChiPValue: Boolean = false) {
 
   private def pick(summary: Double, standard: Double, deep: Double): Double =
     profile match {
@@ -374,8 +368,7 @@ class DriftDetector(spark: SparkSession) {
       // 3. numeric drift (O12 metrics + verdicts)
       val numericF = pool.submit("drift:numeric") {
         if (numericCols.isEmpty) Seq.empty
-        else NumericDrift.driftForPair(ref, curr, numericCols,
-          approx = config.approx).collect().toSeq.map { r =>
+        else NumericDrift.driftForPair(ref, curr, numericCols).collect().toSeq.map { r =>
           NumericColumnDrift(
             r.getAs[String]("column_name"),
             r.getAs[Double]("ref_mean"), r.getAs[Double]("curr_mean"),
@@ -437,7 +430,7 @@ class DriftDetector(spark: SparkSession) {
 
       val families = Seq(
         safe("quantile_shifts", config.analyzeDistributions && numericCols.nonEmpty)(
-          NumericDrift.quantileShiftsForPair(ref, curr, numericCols, approx = config.approx)),
+          NumericDrift.quantileShiftsForPair(ref, curr, numericCols)),
         safe("shapes", config.analyzeDistributions && numericCols.nonEmpty)(
           NumericDrift.shapesForPair(ref, curr, numericCols)),
         // categorical half of the distribution module
@@ -554,18 +547,14 @@ private final case class FamilyResult(frame: DataFrame, rows: Seq[Row], error: O
   * plumbing, type routing, verdict assembly), not new math. Sampling is
   * off (sampleSize = 0): the oracle sees every row, and the sampled path
   * is pinned by the `adaptive_sampled` gate row + GoldenDriftSpec. */
-object Orchestrated {
+object Orchestrated extends graft.OperatorModule {
 
   private val NumCols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
   private val CatCols = Seq("l_returnflag", "l_linestatus")
 
-  /** `approx = true` is the bench/100 TB surface: the O12 analyzer's
-    * median/IQR percentiles come from the mergeable sketch instead of the
-    * exact sort-based percentile the oracle reproduces (this was the last
-    * exact-percentile holdout on the bench — every other percentile query
-    * had the override since round 7). */
-  def orchestratedReport(spark: SparkSession, dir: String,
-      approx: Boolean = false): DataFrame = {
+  /** The O12 median/IQR percentiles are exact, as the oracle reproduces
+    * them; sketch mode runs them on the mergeable sketch at scale. */
+  def orchestratedReport(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val li = table(spark, dir, "lineitem")
     // mirror withSide's CASE semantics: pred-true → ref, false OR NULL → curr
@@ -576,8 +565,7 @@ object Orchestrated {
       analyzeDistributionsFlag = Some(false), detectRareEventsFlag = Some(false),
       includeColumns = NumCols ++ CatCols,
       customColumnTypes =
-        NumCols.map(_ -> "numerical").toMap ++ CatCols.map(_ -> "categorical").toMap,
-      approx = approx)
+        NumCols.map(_ -> "numerical").toMap ++ CatCols.map(_ -> "categorical").toMap)
     val rep = new DriftDetector(spark).detectDrift(ref, curr, cfg)
     val k = rep.numeric.count(_.driftDetected) + rep.categorical.count(_.driftDetected)
     val rows =

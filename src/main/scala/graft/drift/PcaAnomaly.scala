@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * worker round-trips. The models are fitted once on the reference and the
   * error pass is a single scan per frame.
   */
-object PcaAnomaly {
+object PcaAnomaly extends graft.OperatorModule {
 
   case class Result(columns: Seq[String], k: Int,
       refAnomalyCount: Long, currAnomalyCount: Long,

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * runs entirely on the (side, x, y) count frame — cardinality-sized, not
   * row-sized — after one partial-aggregated scan.
   */
-object RobustDrift {
+object RobustDrift extends graft.OperatorModule {
 
   import graft.drift.{splits => S}
 
@@ -42,21 +42,19 @@ object RobustDrift {
 
   /** Median/MAD outlier drift per numeric column: fit median + MAD on the
     * REFERENCE side, gate both sides at |x − med| > k·1.4826·MAD, compare
-    * outlier rates. `approx = true` (the bench/100 TB path) swaps both
-    * exact percentile passes for `percentile_approx`'s fixed-size mergeable
-    * sketch. */
-  def madOutliers(spark: SparkSession, dir: String, approx: Boolean = false): DataFrame = {
+    * outlier rates. Sketch mode swaps both exact percentile passes for the
+    * fixed-size mergeable sketch (the 100 TB path). */
+  def madOutliers(spark: SparkSession, dir: String): DataFrame = {
     require(S.numeric.nonEmpty, "no numeric splits configured")
-    val pct = if (approx) "percentile_approx" else "percentile"
     val perTable = S.numeric.map { sp =>
       val tagged = withSide(table(spark, dir, sp.tableName), sp.ref)
       val med = tagged.filter(col("side") === "ref").agg(
-        expr(s"$pct(${sp.cols.head}, 0.5)").as(s"med_${sp.cols.head}"),
-        sp.cols.tail.map(c => expr(s"$pct($c, 0.5)").as(s"med_$c")): _*)
+        expr(s"percentile(${sp.cols.head}, 0.5)").as(s"med_${sp.cols.head}"),
+        sp.cols.tail.map(c => expr(s"percentile($c, 0.5)").as(s"med_$c")): _*)
       val withMed = tagged.crossJoin(broadcast(med))
       val mad = withMed.filter(col("side") === "ref").agg(
-        expr(s"$pct(abs(${sp.cols.head} - med_${sp.cols.head}), 0.5)").as(s"mad_${sp.cols.head}"),
-        sp.cols.tail.map(c => expr(s"$pct(abs($c - med_$c), 0.5)").as(s"mad_$c")): _*)
+        expr(s"percentile(abs(${sp.cols.head} - med_${sp.cols.head}), 0.5)").as(s"mad_${sp.cols.head}"),
+        sp.cols.tail.map(c => expr(s"percentile(abs($c - med_$c), 0.5)").as(s"mad_$c")): _*)
       val aggs = sp.cols.flatMap { c =>
         val out = abs(col(c) - col(s"med_$c")) > lit(MadScale) * col(s"mad_$c")
         Seq(

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
   * nested-type content drift (O8/O9) which IS distributed (one agg per
   * frame).
   */
-object SchemaOps {
+object SchemaOps extends graft.OperatorModule {
 
   /** One schema change record (flat, path-addressed for nested types). */
   case class SchemaChange(changeType: String, path: String,

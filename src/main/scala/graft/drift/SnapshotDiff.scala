@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   *    plan you want whenever the snapshots share storage (e.g. a
   *    date-partitioned fact table read twice by version predicate).
   */
-object SnapshotDiff {
+object SnapshotDiff extends graft.OperatorModule {
 
   /** General two-frame diff at `key` grain: per key, `status` in
     * {added, removed, changed, unchanged} plus one `<col>_changed` flag per

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * all post-aggregation. At 100 TB this costs the same one pass a daily
   * count does.
   */
-object TimelineDrift {
+object TimelineDrift extends graft.OperatorModule {
 
   val PsiEpsilon = 1e-6
   val MeanShiftThreshold = 0.1

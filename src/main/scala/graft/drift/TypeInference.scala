@@ -14,9 +14,11 @@ import org.apache.spark.sql.types._
   * column_analyzer.py:100-101). Here ONE aggregation computes every column's
   * probe in a single scan. Deviation (documented): the string→timestamp
   * probe is over all rows, not a nondeterministic `limit(100)` sample, so
-  * the DuckDB oracle can reproduce it; `approxDistinct=true` swaps the exact
-  * distinct for `approx_count_distinct` — the right choice at 100 TB, where
-  * exactness is irrelevant against a 0.05 ratio threshold.
+  * the DuckDB oracle can reproduce it. Sketch mode swaps the exact distinct
+  * counts for HLL sketches — the right choice at 100 TB: exact
+  * multi-column `countDistinct` plans an N-way expand + shuffle of every
+  * distinct value (N = numeric column count), and a ~2% cardinality error
+  * is irrelevant against the 0.05 ratio threshold.
   */
 object TypeInference {
 
@@ -30,14 +32,13 @@ object TypeInference {
   }
 
   /** Infer all columns of `df` in one aggregation pass. */
-  def infer(df: DataFrame, approxDistinct: Boolean = false): Map[String, String] = {
+  def infer(df: DataFrame): Map[String, String] = {
     val fields = df.schema.fields
     val probes = fields.flatMap { f =>
       f.dataType match {
         case dt if isNumeric(dt) =>
-          val d = if (approxDistinct) approx_count_distinct(col(f.name))
-                  else countDistinct(col(f.name))
-          Seq(d.as(s"${f.name}__d"), count(col(f.name)).as(s"${f.name}__n"))
+          Seq(countDistinct(col(f.name)).as(s"${f.name}__d"),
+            count(col(f.name)).as(s"${f.name}__n"))
         case _: StringType =>
           // try_cast: ANSI-mode cast would throw on unparseable strings
           Seq(count(when(expr(s"try_cast(${f.name} AS TIMESTAMP)").isNotNull, 1)).as(s"${f.name}__ts"),
@@ -45,7 +46,9 @@ object TypeInference {
         case _ => Seq.empty
       }
     }
-    val row = if (probes.nonEmpty) Some(df.agg(probes.head, probes.tail: _*).collect()(0)) else None
+    // several DISTINCT children: only the analyzed plan is sketchable
+    val row = if (probes.isEmpty) None else Some(graft.plans.SketchModeRewrite
+      .sketchedIfOn(df.agg(probes.head, probes.tail: _*)).collect()(0))
     fields.map { f =>
       val t = f.dataType match {
         case _: DateType | _: TimestampType | _: TimestampNTZType => "temporal"
@@ -69,14 +72,7 @@ object TypeInference {
   private val tables = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** `approxDistinct=true` is the benchmarked 100 TB path: exact
-    * multi-column `countDistinct` plans an N-way expand + shuffle of every
-    * distinct value (N = numeric column count), where
-    * `approx_count_distinct` is one pass of fixed-size mergeable HLL
-    * sketches — and a ~2% cardinality error is irrelevant against the 0.05
-    * ratio threshold. The oracle-checked query stays exact. */
-  def typeInferenceQuery(spark: SparkSession, dir: String,
-      approxDistinct: Boolean = false): DataFrame = {
+  def typeInferenceQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // the per-table probe aggs are independent one-pass jobs; submitted
     // concurrently they overlap in the scheduler instead of serializing
@@ -91,7 +87,7 @@ object TypeInference {
     val sc = spark.sparkContext
     val rows = CallPool.using(sc, math.min(tables.size, sc.defaultParallelism)) { pool =>
       val probes = tables.map(t => pool.submit(s"type_inference:$t") {
-        val r = infer(table(spark, dir, t), approxDistinct)
+        val r = infer(table(spark, dir, t))
           .toSeq.map { case (c, st) => (t, c, st) }
         pending.remove(t)
         r

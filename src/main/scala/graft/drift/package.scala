@@ -22,15 +22,15 @@ package object drift {
     * (/root/reference/numerical_analyzer.py:344). */
   val Eps = 1e-10
 
-  /** `percentile_approx` accuracy for every `approx = true` (bench /
-    * 100 TB) sketch path — ONE knob instead of per-site literals. Rank
-    * error ≤ 1/accuracy = 1e-4, 100× tighter than the reference's own
-    * rel_error=0.01 choice (numerical_analyzer.py:306-307). Round-9
-    * profiling (collect-forced, since `count()` silently PRUNES unused
-    * aggregates and fakes any percentile benchmark) showed the sketch
-    * cost is insert-bound and accuracy-independent on the gate tables
-    * (1.23 s vs 1.25 s per lineitem stats pass at 1e3 vs 1e4), so the
-    * accuracy stays at the tight setting; DriftMathSpec pins
+  /** `percentile_approx` accuracy of sketch mode
+    * ([[graft.plans.SketchModeRewrite]]) — ONE knob for every sketched
+    * percentile. Rank error ≤ 1/accuracy = 1e-4, 100× tighter than the
+    * reference's own rel_error=0.01 choice (numerical_analyzer.py:306-307).
+    * Round-9 profiling (collect-forced, since `count()` silently PRUNES
+    * unused aggregates and fakes any percentile benchmark) showed the
+    * sketch cost is insert-bound and accuracy-independent on the gate
+    * tables (1.23 s vs 1.25 s per lineitem stats pass at 1e3 vs 1e4), so
+    * the accuracy stays at the tight setting; DriftMathSpec pins
     * approx-vs-exact drift-score tracking ≤0.02 at it. */
   val SketchAccuracy = 10000
 

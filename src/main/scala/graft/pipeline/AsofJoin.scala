@@ -26,7 +26,7 @@ import graft.drift.table
   * exactly what the oracle uses — two engines, two physical strategies, one
   * semantics.
   */
-object AsofJoin {
+object AsofJoin extends graft.OperatorModule {
 
   /** Generic as-of join. `left` and `right` must both carry `key` and `ts`
     * columns under the same names; every left column passes through, and

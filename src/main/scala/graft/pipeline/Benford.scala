@@ -26,7 +26,7 @@ import graft.drift.{table, pr6Sql, microSumDoubleSql}
   * Scale shape: one scan per audited table, exact partial-agg'd counts per
   * (column, digit) — 9 groups per column — then arithmetic on a 27-row
   * frame. Nothing corpus-sized survives the first aggregation. */
-object Benford {
+object Benford extends graft.OperatorModule {
 
   /** (table, column) pairs audited by the shipped queries. */
   val Columns: Seq[(String, String)] = Seq(

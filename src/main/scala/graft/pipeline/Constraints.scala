@@ -27,7 +27,7 @@ import graft.drift.{table, pr6Sql}
   * metric is their shared-text ratio through [[graft.drift.pr6Sql]], so
   * the DuckDB oracle reproduces every row bit-for-bit.
   */
-object Constraints {
+object Constraints extends graft.OperatorModule {
 
   sealed trait Constraint {
     def name: String
@@ -110,34 +110,20 @@ object Constraints {
     pr6Sql(ratioExpr) + " AS metric", "threshold",
     s"${pr6Sql(ratioExpr)} >= threshold AS passed")
 
-  /** Numerator expression for an aggregate (non-FK) constraint. `approx`
-    * swaps exact COUNT(DISTINCT) for the HLL sketch (Spark side only —
-    * the oracle stays exact). `distinctTuple` spells the engine's
-    * multi-column DISTINCT form. */
-  /** Exact or sketched distinct-tuple count. Multi-column sketches struct
-    * the tuple (a bare second argument would parse as the relativeSD
-    * parameter). */
-  private def distinctCount(cols: Seq[String], approx: Boolean,
-      distinctTuple: Seq[String] => String): String =
-    if (approx) s"approx_count_distinct(${
-      if (cols.size == 1) cols.head else cols.mkString("struct(", ", ", ")")})"
-    else s"COUNT(DISTINCT ${distinctTuple(cols)})"
-
-  private def numExpr(c: Constraint, approx: Boolean,
-      distinctTuple: Seq[String] => String): String = c match {
-    case Unique(_, _, cols, _) => distinctCount(cols, approx, distinctTuple)
-    case FunctionalDependency(_, _, lhs, _, _) =>
-      distinctCount(lhs, approx, distinctTuple)
+  /** Numerator expression for an aggregate (non-FK) constraint;
+    * `distinctCount` spells one engine's count of distinct tuples. */
+  private def numExpr(c: Constraint, distinctCount: Seq[String] => String): String = c match {
+    case Unique(_, _, cols, _) => distinctCount(cols)
+    case FunctionalDependency(_, _, lhs, _, _) => distinctCount(lhs)
     case _: ForeignKey => sys.error("FK constraints compile to a join, not an aggregate")
     case _ => s"SUM(${indicatorExpr(c).get})"
   }
 
   /** Per-constraint denominator when it is not the table's row count —
     * only the FD ratio divides by COUNT(DISTINCT lhs ∪ rhs). */
-  private def denomExpr(c: Constraint, approx: Boolean,
-      distinctTuple: Seq[String] => String): Option[String] = c match {
-    case FunctionalDependency(_, _, lhs, rhs, _) =>
-      Some(distinctCount(lhs ++ rhs, approx, distinctTuple))
+  private def denomExpr(c: Constraint,
+      distinctCount: Seq[String] => String): Option[String] = c match {
+    case FunctionalDependency(_, _, lhs, rhs, _) => Some(distinctCount(lhs ++ rhs))
     case _ => None
   }
 
@@ -146,16 +132,23 @@ object Constraints {
       suite: Seq[Constraint] = defaultSuite,
       approx: Boolean = false): DataFrame = {
     require(suite.nonEmpty, "empty constraint suite")
+    // `approx` swaps exact COUNT(DISTINCT) for the HLL sketch (Spark side
+    // only — the oracle stays exact); a multi-column sketch structs the
+    // tuple (a bare second argument would parse as the relativeSD)
+    val distinctCount: Seq[String] => String = cols =>
+      if (approx) s"approx_count_distinct(${
+        if (cols.size == 1) cols.head else cols.mkString("struct(", ", ", ")")})"
+      else s"COUNT(DISTINCT ${cols.mkString(", ")})"
     val (fks, aggs) = suite.partition(_.isInstanceOf[ForeignKey])
     // one scan + one global aggregation per distinct table
     val aggFrames = aggs.groupBy(_.table).toSeq.map { case (t, cs) =>
       val aggCols = cs.map(c =>
-        expr(numExpr(c, approx, _.mkString(", "))).as(s"num_${c.name}")) ++
-        cs.flatMap(c => denomExpr(c, approx, _.mkString(", "))
+        expr(numExpr(c, distinctCount)).as(s"num_${c.name}")) ++
+        cs.flatMap(c => denomExpr(c, distinctCount)
           .map(e => expr(e).as(s"den_${c.name}"))) :+
         count(lit(1)).as("row_count")
       val rows = cs.map { c =>
-        val den = if (denomExpr(c, approx, _.mkString(", ")).isDefined)
+        val den = if (denomExpr(c, distinctCount).isDefined)
           s"den_${c.name}" else "row_count"
         s"'${c.name}', '${c.table}', num_${c.name}, $den, CAST(${dlit(c.threshold)} AS DOUBLE)"
       }.mkString(", ")
@@ -191,10 +184,10 @@ object Constraints {
           s"FROM (SELECT ${c.column} AS k FROM ${c.table} WHERE ${c.column} IS NOT NULL) ch " +
           s"LEFT JOIN (SELECT DISTINCT ${c.refColumn} AS k FROM ${c.refTable}) p ON ch.k = p.k) t"
       case c =>
-        val dt: Seq[String] => String = cols =>
-          if (cols.size == 1) cols.head else cols.mkString("(", ", ", ")")
-        val num = numExpr(c, approx = false, dt)
-        val den = denomExpr(c, approx = false, dt).getOrElse("COUNT(*)")
+        val dc: Seq[String] => String = cols => s"COUNT(DISTINCT ${
+          if (cols.size == 1) cols.head else cols.mkString("(", ", ", ")")})"
+        val num = numExpr(c, dc)
+        val den = denomExpr(c, dc).getOrElse("COUNT(*)")
         s"SELECT '${c.name}' AS check_name, '${c.table}' AS table_name, $num AS num, " +
           s"CAST(${dlit(c.threshold)} AS DOUBLE) AS threshold, $den AS n_total FROM ${c.table}"
     }

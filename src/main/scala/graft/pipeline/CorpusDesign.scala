@@ -37,7 +37,7 @@ import graft.drift.{table, pr6Sql, microSumSql, microTermSql, microToDoubleSql}
   * integer moments (Σx and Σx² stay < 2⁵³ for char counts up to ~10⁹ docs;
   * beyond that switch the two sums to DECIMAL(38,0)); the lang queries pay
   * one scan plus a ≤25-cell aggregate. */
-object CorpusDesign {
+object CorpusDesign extends graft.OperatorModule {
 
   /** Eval/annotation budget the allocation queries distribute. */
   val Budget = 1000

@@ -25,7 +25,7 @@ import graft.drift.table
   * plus per-split doc_id checksums, so the oracle verifies the exact
   * assignment, not just its shape.
   */
-object DataSplit {
+object DataSplit extends graft.OperatorModule {
 
   val TrainFrac = 0.8
   val ValFrac = 0.1 // val cut = TrainFrac + ValFrac

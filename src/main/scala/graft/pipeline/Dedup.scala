@@ -21,7 +21,7 @@ import graft.drift.{CacheScope, r6, table}
   * filter. All hash primitives (md5-hex → integer, affine
   * mod-prime) are chosen to be reproducible in DuckDB for the oracle.
   */
-object Dedup {
+object Dedup extends graft.OperatorModule {
 
   // ------------------------------------------------------------ exact
 

@@ -27,7 +27,7 @@ import graft.drift.{r6, table}
   * Per-doc weights reduce by (doc, source) partial aggs; the per-source
   * rollup is a 20-row frame.
   */
-object Dsir {
+object Dsir extends graft.OperatorModule {
 
   /** 16² buckets from 2 hex chars — plenty for a unigram sketch at this
     * corpus size; raise to 4 chars (65k) for a 100 TB fit. */

@@ -21,7 +21,7 @@ import graft.drift.{r6, table}
   * 1-row summary (centroid cosine/L2) with a second tiny agg. No driver
   * collect, no pairwise products.
   */
-object EmbeddingDrift {
+object EmbeddingDrift extends graft.OperatorModule {
 
   /** |z| above which a dimension's mean shift counts as drifted (two-sample
     * z test at ≈95%). */
@@ -117,8 +117,8 @@ object EmbeddingDrift {
     * and the norm distribution (count/mean/p50/p95 — a collapsed or
     * exploding norm distribution is the classic silent encoder
     * regression). One scan; per-vector signals are in-row HOF folds
-    * (zero explode); the rollup is label-cardinality-sized. `approx`
-    * swaps exact `percentile` for the sketch (the bench/100 TB path).
+    * (zero explode); the rollup is label-cardinality-sized. Sketch mode
+    * swaps exact `percentile` for the sketch (the 100 TB path).
     * Norm mean accumulates in DECIMAL (exact) with one final division. */
   /** A NaN-component norm is NaN, which the two engines order and cast
     * DIFFERENTLY (Spark's non-ANSI NaN→DECIMAL is NULL, DuckDB's errors;
@@ -128,8 +128,7 @@ object EmbeddingDrift {
     * its own `n_scored` denominator. NULL embeddings (a failed encode —
     * the most basic delivery defect) get their own census column; they
     * must never pass as a clean bill of health. */
-  def embeddingAudit(spark: SparkSession, dir: String, approx: Boolean = false): DataFrame = {
-    val pct = if (approx) "percentile_approx" else "percentile"
+  def embeddingAudit(spark: SparkSession, dir: String): DataFrame = {
     val modalDim = 64 // the corpus contract; violations are counted, not dropped
     table(spark, dir, "embeddings")
       .selectExpr("label", "CAST(size(embedding) AS BIGINT) AS dim",
@@ -148,8 +147,8 @@ object EmbeddingDrift {
         sum(when(col("norm_clean") === 0.0, 1L).otherwise(0L)).as("n_zero_norm"),
         count(col("norm_clean")).as("n_scored"),
         sum(col("norm_clean").cast("decimal(28,8)")).as("sum_norm_dec"),
-        expr(s"$pct(norm_clean, 0.5e0) AS p50_norm_raw"),
-        expr(s"$pct(norm_clean, 0.95e0) AS p95_norm_raw"))
+        expr("percentile(norm_clean, 0.5e0) AS p50_norm_raw"),
+        expr("percentile(norm_clean, 0.95e0) AS p95_norm_raw"))
       .selectExpr("label", "n_vecs", "n_null", "n_bad_dim", "n_nan", "n_zero_norm", "n_scored",
         "CASE WHEN n_scored > 0 THEN ROUND(CAST(sum_norm_dec AS DOUBLE) / n_scored, 6) END AS mean_norm",
         "ROUND(p50_norm_raw, 6) AS p50_norm",

@@ -27,7 +27,7 @@ import graft.drift.table
   *     DuckDB), keep pairs within [[MaxEdit]], score by normalized
   *     edit similarity.
   */
-object EntityResolution {
+object EntityResolution extends graft.OperatorModule {
 
   /** Max entities per block that still get the pairwise compare. */
   val MaxBlock = 1000

@@ -19,7 +19,7 @@ import graft.drift.{r6, table}
   * use a segment tree), which makes direct double window-AVG/STDDEV
   * nondeterministic in the last ulp; summing decimals sidesteps it.
   */
-object EventAnalytics {
+object EventAnalytics extends graft.OperatorModule {
 
   /** Rolling-window days (current day + 6 preceding). */
   val RollDays = 7
@@ -247,16 +247,17 @@ object EventAnalytics {
     * Here each dimension is scored 1-5 against its four quintile CUTPOINTS
     * (one 1-row exact-percentile aggregate, broadcast back), so the plan is
     * one customer-keyed aggregation + two tiny aggs and never sorts the
-    * customer universe. `approx = true` swaps the cutpoint fit for
-    * `percentile_approx`'s mergeable sketch (the 100 TB path; boundaries
-    * shift within sketch error, assignment stays one broadcast compare).
+    * customer universe. Sketch mode swaps the cutpoint fit for the
+    * mergeable sketch (the 100 TB path; boundaries shift within sketch
+    * error, assignment stays one broadcast compare); the integral
+    * recency/frequency cut on their DOUBLE casts so the sketch reaches
+    * them, which leaves the exact cutpoints unchanged.
     *
     * Scoring is value-based (score = 1 + #cutpoints strictly below), so
     * ties on a cutpoint land deterministically in the lower band in BOTH
     * engines — ntile's equal-count split of ties is rank-dependent and
     * not reproducible across engines. */
-  def rfmSegments(spark: SparkSession, dir: String, approx: Boolean = false): DataFrame = {
-    val pct = if (approx) "percentile_approx" else "percentile"
+  def rfmSegments(spark: SparkSession, dir: String): DataFrame = {
     val perCust = table(spark, dir, "orders")
       .groupBy("o_custkey").agg(
         max("o_orderdate").as("last_order"),
@@ -264,16 +265,18 @@ object EventAnalytics {
         sum(col("o_totalprice").cast("decimal(18,4)")).cast("double").as("monetary"))
     val cutAggs = Seq(expr("max(last_order) AS max_date")) ++
       RfmCuts.zipWithIndex.flatMap { case (p, i) => Seq(
-        expr(s"$pct(frequency, $p) AS f_cut$i"),
-        expr(s"$pct(monetary, $p) AS m_cut$i")) }
+        expr(s"percentile(CAST(frequency AS DOUBLE), $p) AS f_cut$i"),
+        expr(s"percentile(monetary, $p) AS m_cut$i")) }
     val cuts0 = perCust.agg(cutAggs.head, cutAggs.tail: _*)
     // recency needs max_date first; its cutpoints come from a second 1-row
     // agg over the recency column (still O(1) driver-free frames)
     val withRec = perCust.crossJoin(broadcast(cuts0))
       .withColumn("recency", datediff(col("max_date"), col("last_order")))
     val rCuts = withRec.agg(
-      expr(s"$pct(recency, 0.2) AS r_cut0"), expr(s"$pct(recency, 0.4) AS r_cut1"),
-      expr(s"$pct(recency, 0.6) AS r_cut2"), expr(s"$pct(recency, 0.8) AS r_cut3"))
+      expr("percentile(CAST(recency AS DOUBLE), 0.2) AS r_cut0"),
+      expr("percentile(CAST(recency AS DOUBLE), 0.4) AS r_cut1"),
+      expr("percentile(CAST(recency AS DOUBLE), 0.6) AS r_cut2"),
+      expr("percentile(CAST(recency AS DOUBLE), 0.8) AS r_cut3"))
     withRec.crossJoin(broadcast(rCuts))
       .selectExpr((Seq("o_custkey", "recency", "frequency", "monetary") ++ rfmScoreCols): _*)
       .selectExpr("*", s"$rfmSegmentExpr AS segment")
@@ -510,12 +513,12 @@ object EventAnalytics {
     * semantics), summarized as count / mean / p50 / p90 / min / max hours.
     * One scan, one user exchange (the funnel's stacked-window shape), then
     * a 1-row aggregate over the users-sized lag frame. Lags stay exact
-    * integer µs through the percentiles; each output converts to hours in
-    * ONE shared division. `approx = true` swaps the exact sort-based
-    * `percentile` for the mergeable sketch (the 100 TB path — exact
-    * percentile buffers every lag per agg buffer). */
-  def conversionLag(spark: SparkSession, dir: String, approx: Boolean = false): DataFrame = {
-    val pct = if (approx) "percentile_approx" else "percentile"
+    * integer µs through the percentiles (their DOUBLE cast is exact below
+    * 2^53 µs); each output converts to hours in ONE shared division.
+    * Sketch mode swaps the exact sort-based `percentile` for the mergeable
+    * sketch (the 100 TB path — exact percentile buffers every lag per agg
+    * buffer). */
+  def conversionLag(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id")
     val lags = table(spark, dir, "events")
       .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"))
@@ -528,8 +531,8 @@ object EventAnalytics {
     lags.agg(
         count(lit(1)).as("n_converted"),
         sum(col("lag_us").cast("decimal(20,0)")).as("sum_us"),
-        expr(s"$pct(lag_us, 0.5e0) AS p50_us"),
-        expr(s"$pct(lag_us, 0.9e0) AS p90_us"),
+        expr("percentile(CAST(lag_us AS DOUBLE), 0.5e0) AS p50_us"),
+        expr("percentile(CAST(lag_us AS DOUBLE), 0.9e0) AS p90_us"),
         min("lag_us").as("min_us"),
         max("lag_us").as("max_us"))
       .selectExpr(convLagFinalCols: _*)
@@ -652,18 +655,17 @@ object EventAnalytics {
     * exact-percentile fit broadcast back, never an `ntile`/global sort
     * over the customer universe; value-based cuts also make ties
     * deterministic across engines). Spend stays DECIMAL through every sum;
-    * shares divide once at the end. `approx = true` swaps the cutpoint fit
+    * shares divide once at the end. Sketch mode swaps the cutpoint fit
     * for the mergeable sketch. */
-  def revenueConcentration(spark: SparkSession, dir: String, approx: Boolean = false): DataFrame = {
-    val pct = if (approx) "percentile_approx" else "percentile"
+  def revenueConcentration(spark: SparkSession, dir: String): DataFrame = {
     val perCust = table(spark, dir, "orders")
       .groupBy("o_custkey")
       .agg(sum(col("o_totalprice").cast("decimal(18,4)")).as("spend_dec"))
       .withColumn("spend", col("spend_dec").cast("double"))
     val cuts = perCust.agg(
-      expr(s"$pct(spend, 0.99e0) AS p99"),
-      expr(s"$pct(spend, 0.9e0) AS p90"),
-      expr(s"$pct(spend, 0.5e0) AS median_spend"))
+      expr("percentile(spend, 0.99e0) AS p99"),
+      expr("percentile(spend, 0.9e0) AS p90"),
+      expr("percentile(spend, 0.5e0) AS median_spend"))
     perCust.crossJoin(broadcast(cuts))
       .agg(
         count(lit(1)).as("n_customers"),

@@ -25,7 +25,7 @@ import graft.drift.table
   * each dimension's range a bucket's footer stats cover, i.e. the
   * probability a point filter on that dim CANNOT skip the bucket.
   */
-object Layout {
+object Layout extends graft.OperatorModule {
 
   /** Morton-curve resolution: 8 bits per dimension (256×256 cells). */
   val ZBits = 8

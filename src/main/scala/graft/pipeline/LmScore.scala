@@ -34,7 +34,7 @@ import graft.drift.{CacheScope, r6, table}
   * rounding agrees (see SURVEY §10 on cross-engine float ties; per-doc
   * sums are ~100 terms, last-ulp safe).
   */
-object LmScore {
+object LmScore extends graft.OperatorModule {
 
   /** Trusted-slice language and the Stupid Backoff discount.
     * [[Backoff]] is the JVM twin of [[BackoffSql]] — the in-row scorer
@@ -370,8 +370,7 @@ object LmScore {
     * CCNet ppl buckets — from the shared frame. This is the deployment
     * cost; the bench's per-query cache-cleared runs re-pay the scoring DAG
     * once per query by harness construction. */
-  def lmFamilyShared(spark: SparkSession, dir: String,
-      approx: Boolean = true): Seq[DataFrame] = {
+  def lmFamilyShared(spark: SparkSession, dir: String): Seq[DataFrame] = {
     val docs = table(spark, dir, "documents")
     val scored = scoreDocs(docs.select("doc_id", "source", "lang", "text"),
       carry = Seq("source")).cache()
@@ -382,7 +381,7 @@ object LmScore {
         avg("oov_rate").as("mean_oov_rate"),
         avg("avg_logprob").as("mean_logprob"))
       .orderBy("source")
-    val (t1, t2) = pplTerciles(scored, approx)
+    val (t1, t2) = pplTerciles(scored)
     val buckets = scored.withColumn("bucket", bucketExpr(t1, t2))
       .groupBy("source", "bucket").agg(
         count(lit(1)).as("n_docs"), r6(avg("ppl")).as("mean_ppl"))
@@ -421,20 +420,18 @@ object LmScore {
     * Scale shape: one scoring pass (broadcast model joins, see [[lmScore]])
     * → a 1-row tercile aggregate → one counting pass with the two
     * thresholds as literals (z_outliers' broadcast-stats pattern). The
-    * oracle path uses EXACT `percentile` (matches DuckDB `quantile_cont`
-    * bit-for-bit); `approx = true` (the bench/100 TB surface) swaps in
-    * `approx_percentile`'s fixed-size mergeable sketch, since exact
-    * percentile buffers every ppl value per agg buffer. */
+    * tercile fit is EXACT `percentile` (matches DuckDB `quantile_cont`
+    * bit-for-bit); under sketch mode (the 100 TB path) it collects from
+    * the fixed-size mergeable sketch, since exact percentile buffers every
+    * ppl value per agg buffer. */
   /** Tercile thresholds (t_head, t_middle) over a frame's non-null `ppl`
     * column — the batch-side fit a streaming gate replays as literals
     * ([[graft.streaming.StreamingLm.bucketStream]]). Returns (0, 0) when
     * nothing is scorable (every doc then buckets as `unscored` before the
     * thresholds are ever compared). */
-  def pplTerciles(scoredPpl: DataFrame, approx: Boolean = false): (Double, Double) = {
-    val pcts = s"array(${1.0 / 3}, ${2.0 / 3})"
+  def pplTerciles(scoredPpl: DataFrame): (Double, Double) = {
     val trow = scoredPpl.filter(col("ppl").isNotNull)
-      .agg((if (approx) expr(s"approx_percentile(ppl, $pcts, ${graft.drift.SketchAccuracy})")
-            else expr(s"percentile(ppl, $pcts)")).as("t")).collect()(0)
+      .agg(expr(s"percentile(ppl, array(${1.0 / 3}, ${2.0 / 3}))").as("t")).collect()(0)
     if (trow.isNullAt(0)) (0.0, 0.0)
     else { val t = trow.getSeq[Double](0); (t(0), t(1)) }
   }
@@ -446,14 +443,14 @@ object LmScore {
       .when(col("ppl") <= t2, "middle")
       .otherwise("tail")
 
-  def lmPplBuckets(spark: SparkSession, dir: String, approx: Boolean = false,
+  def lmPplBuckets(spark: SparkSession, dir: String,
       scope: Option[CacheScope] = None): DataFrame = {
     val docs = table(spark, dir, "documents")
     val scoredBare = scoreDocs(docs.select("doc_id", "source", "lang", "text"),
         carry = Seq("source"))
       .select(col("doc_id"), col("source"), col("ppl"))
     val scored = scope.fold(scoredBare.cache())(_.cached(scoredBare))
-    val (t1, t2) = pplTerciles(scored, approx)
+    val (t1, t2) = pplTerciles(scored)
     scored.withColumn("bucket", bucketExpr(t1, t2))
       .groupBy("source", "bucket").agg(
         count(lit(1)).as("n_docs"),

@@ -21,7 +21,7 @@ import graft.drift.table
   * against pairs). All probabilities are exact-integer quotients with one
   * shared final text.
   */
-object MarketBasket {
+object MarketBasket extends graft.OperatorModule {
 
   val TopPairs = 20
 

@@ -18,7 +18,7 @@ import graft.drift.table
   * map stage — no shuffle ever carries decoded frames; repartition by
   * byte-size bucket before heavy decode to even out skew.
   */
-object Multimodal {
+object Multimodal extends graft.OperatorModule {
 
   /** One media item: opaque payload + typed metadata. */
   case class MediaRecord(media_id: Long, mime: String, n_bytes: Long, payload: Array[Byte])

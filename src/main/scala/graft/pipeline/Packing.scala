@@ -38,7 +38,7 @@ import graft.drift.table
   * Token counts reuse [[TextAnalysis.PretokenRegexSpark]] (+1 per doc for
   * the end-of-document separator token every packing recipe inserts).
   */
-object Packing {
+object Packing extends graft.OperatorModule {
 
   /** Context window budget (tokens) for both packing recipes. */
   val WindowTokens = 2048

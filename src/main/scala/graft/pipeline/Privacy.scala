@@ -41,7 +41,7 @@ import graft.drift.{table, pr6Sql}
   * after it is a tiny rollup. `COUNT(DISTINCT sensitive)` per class is
   * bounded by the sensitive bucket cardinality, so its expand stays
   * partial-agg friendly. Nothing row-sized crosses a second exchange. */
-object Privacy {
+object Privacy extends graft.OperatorModule {
 
   /** Alert line: classes smaller than this are "at risk" and the release
     * k value should be at least this (Sweeney's conventional k = 5). */

@@ -27,7 +27,7 @@ import graft.drift.table
   * Each matching (interval, point) pair is emitted exactly once because a
   * point lives in exactly one bin: no post-join distinct is needed.
   */
-object RangeJoin {
+object RangeJoin extends graft.OperatorModule {
 
   /** Exact floor(v / w) for longs of ANY sign, in pure integer arithmetic:
     * `pmod` is always nonnegative, so `v - pmod(v, w)` lands precisely on

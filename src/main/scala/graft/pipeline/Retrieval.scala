@@ -27,7 +27,7 @@ import graft.drift.table
   * rounding. Rank ties break on doc_id (rounded-score ordering), the
   * pq_ann determinism pattern.
   */
-object Retrieval {
+object Retrieval extends graft.OperatorModule {
 
   /** Literal query-term set (the synthetic corpus's vocabulary is a small
     * word bag; these three are mid-frequency terms). */

@@ -11,7 +11,7 @@ import graft.drift.{r6, table}
   * skew (one hot key's groupBy partition) and repeated co-located joins
   * (fact-to-fact on the same key every run) need explicit treatment.
   */
-object ScaleJoins {
+object ScaleJoins extends graft.OperatorModule {
 
   /** Salted aggregate-then-merge: two-phase groupBy for skewed keys. Phase
     * one aggregates on (key, salt) — the hot key's rows spread over `n`

@@ -14,7 +14,7 @@ import graft.drift.table
   * partitions by user — the window functions shuffle once on user_id and
   * never see a global ordering, so the plan scales with users, not events.
   */
-object Sessions {
+object Sessions extends graft.OperatorModule {
 
   /** Daily tumbling window per event type: count, sum/avg of value.
     *

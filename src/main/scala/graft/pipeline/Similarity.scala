@@ -25,7 +25,7 @@ import graft.functions.VecFunctions.vecDot
   * Cosines are rounded to 6 decimals BEFORE ranking so Spark and DuckDB
   * rank identically.
   */
-object Similarity {
+object Similarity extends graft.OperatorModule {
 
   val TopK = 5
   val NumQueries = 10 // query set: vec_id < 10

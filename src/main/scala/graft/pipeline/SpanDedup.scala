@@ -23,7 +23,7 @@ import graft.drift.table
   * more keyed agg. Hot spans (the whole point of the query) cost one row
   * per document they appear in, not df² pairs.
   */
-object SpanDedup {
+object SpanDedup extends graft.OperatorModule {
 
   /** Window length in whitespace tokens. The paper dedups ≥ 50-token
     * substrings on web corpora; the synthetic corpus's docs run ~50 tokens

@@ -21,7 +21,7 @@ import graft.drift.{CacheScope, table}
   * query. Per-doc outputs shuffle nothing; per-source rollups shuffle one
   * small aggregate.
   */
-object TextAnalysis {
+object TextAnalysis extends graft.OperatorModule {
 
   /** Marker stopwords per language (tiny but real n-gram-style signal;
     * deterministic — the mechanism is what scales, swap in fuller lists for
@@ -123,11 +123,11 @@ object TextAnalysis {
   /** Per-source corpus rollup: docs, whitespace tokens, BPE-ish counts
     * (pre-tokenizer regex matches + the cruder ceil(chars/4) estimate),
     * distinct vocabulary. The exploded-word `countDistinct` is the one
-    * corpus-sized shuffle here — `approx = true` (the bench/100 TB path)
-    * swaps it for `approx_count_distinct`'s fixed-size HLL sketch, which
-    * partial-aggregates map-side so the shuffle carries one sketch per
-    * (partition, source) instead of every distinct word. */
-  def tokenStats(spark: SparkSession, dir: String, approx: Boolean = false): DataFrame = {
+    * corpus-sized shuffle here — sketch mode (the 100 TB path) swaps it
+    * for a fixed-size HLL sketch, which partial-aggregates map-side so the
+    * shuffle carries one sketch per (partition, source) instead of every
+    * distinct word. */
+  def tokenStats(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
     val base = docs.groupBy("source").agg(
       count(lit(1)).as("n_docs"),
@@ -136,9 +136,7 @@ object TextAnalysis {
       sum(expr("CAST(ceil(LENGTH(text) / 4e0) AS BIGINT)")).as("est_bpe_tokens"))
     val vocab = docs
       .select(col("source"), explode(split(col("text"), "\\s+")).as("w"))
-      .groupBy("source").agg(
-        (if (approx) approx_count_distinct("w") else countDistinct("w"))
-          .as("distinct_words"))
+      .groupBy("source").agg(countDistinct("w").as("distinct_words"))
     base.join(vocab, "source")
       .selectExpr("source", "n_docs", "total_tokens",
         "ROUND(total_tokens * 1e0 / n_docs, 6) AS avg_tokens_per_doc",
@@ -1100,8 +1098,8 @@ object TextAnalysis {
     * (5·lang_ok + 5·qual_ok + 6·gopher_ok + 4·lm_ok), so per-source sums
     * are exact and the only doubles are final divisions through the
     * shared pr6 text. The LM tercile threshold is fit once (exact
-    * percentile on the oracle path, sketch on the bench path) and
-    * compared as a literal — the lm_ppl_buckets pattern.
+    * percentile, the sketch under sketch mode) and compared as a
+    * literal — the lm_ppl_buckets pattern.
     *
     * Scale shape: three one-pass scans of documents (gate heuristics,
     * Gopher rules, LM scoring with broadcast-only model joins), joined by
@@ -1109,8 +1107,7 @@ object TextAnalysis {
   /** Per-document ensemble indicators + integer score units — the shared
     * core of [[qualityEnsemble]]'s rollup and [[sourceQualityDrift]]'s
     * snapshot comparison. */
-  private def ensembleDoc(spark: SparkSession, dir: String,
-      approx: Boolean): DataFrame = {
+  private def ensembleDoc(spark: SparkSession, dir: String): DataFrame = {
     val gated = prepDocs(spark, dir).select("doc_id", "source", "lang_ok", "qual_ok")
     val gop = gopherDoc(spark, dir).selectExpr("doc_id",
       "words_ok AND wordlen_ok AND symbol_ok AND alpha_ok AND stopword_ok AS gopher_ok")
@@ -1119,7 +1116,7 @@ object TextAnalysis {
     val scored = LmScore.scoreDocs(
         table(spark, dir, "documents").select("doc_id", "lang", "text"))
       .select("doc_id", "ppl").cache()
-    val (_, t2) = LmScore.pplTerciles(scored, approx)
+    val (_, t2) = LmScore.pplTerciles(scored)
     gated.join(gop, "doc_id").join(scored, Seq("doc_id"), "left")
       .withColumn("lm_ok", col("ppl").isNotNull && col("ppl") <= lit(t2))
       .withColumn("score_u",
@@ -1129,9 +1126,8 @@ object TextAnalysis {
           when(col("lm_ok"), 4L).otherwise(0L))
   }
 
-  def qualityEnsemble(spark: SparkSession, dir: String,
-      approx: Boolean = false): DataFrame =
-    ensembleRollup(ensembleDoc(spark, dir, approx))
+  def qualityEnsemble(spark: SparkSession, dir: String): DataFrame =
+    ensembleRollup(ensembleDoc(spark, dir))
 
   private def ensembleRollup(doc: DataFrame): DataFrame =
     doc.groupBy("source").agg(
@@ -1195,9 +1191,8 @@ object TextAnalysis {
     * Sums are exact integer score units; the tercile threshold is fit
     * ONCE on the whole corpus so both sides are scored on the same scale
     * (a per-side fit would hide a global quality shift by re-centering). */
-  def sourceQualityDrift(spark: SparkSession, dir: String,
-      approx: Boolean = false): DataFrame =
-    qualityDriftRollup(ensembleDoc(spark, dir, approx))
+  def sourceQualityDrift(spark: SparkSession, dir: String): DataFrame =
+    qualityDriftRollup(ensembleDoc(spark, dir))
 
   /** Deployment shape for the ensemble pair: the per-doc ensemble frame
     * (three documents scans + the LM scoring DAG) computes ONCE and both
@@ -1205,9 +1200,8 @@ object TextAnalysis {
     * cached frame — the standalone queries each re-pay it. Caller owns the
     * cache (release via clearCache or unpersisting the first frame's
     * lineage), same contract as [[LmScore.lmFamilyShared]]. */
-  def ensembleFamilyShared(spark: SparkSession, dir: String,
-      approx: Boolean = true): Seq[DataFrame] = {
-    val doc = ensembleDoc(spark, dir, approx).cache()
+  def ensembleFamilyShared(spark: SparkSession, dir: String): Seq[DataFrame] = {
+    val doc = ensembleDoc(spark, dir).cache()
     Seq(ensembleRollup(doc), qualityDriftRollup(doc))
   }
 

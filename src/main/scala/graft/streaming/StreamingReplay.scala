@@ -22,7 +22,7 @@ import graft.pipeline.{Privacy, Sessions}
   * raw doubles only where both engines compute them from bit-identical
   * exact inputs (slices means, LM log-probs).
   */
-object StreamingReplay {
+object StreamingReplay extends graft.OperatorModule {
 
   /** [[StreamingDrift.windowedStats]] over 1-day windows ≡ the batch daily
     * tumbling-window aggregation ([[Sessions.eventWindow]]): day windows

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.pipeline._
+import graft.plans.SketchModeRewrite.during
 
 /** Semantics of the round-6 curation/layout operators: mixture planning,
   * z-order pruning stats, cluster profiling, entity resolution, and the
@@ -277,8 +278,8 @@ class CurationOpsSpec extends SparkSpec {
     }
     // the approx (sketch-tercile) path keeps every exact count identical;
     // only the lm threshold may move a borderline doc
-    val approx = graft.pipeline.TextAnalysis.qualityEnsemble(spark, sf, approx = true)
-      .collect().map(r => r.getString(0) -> r).toMap
+    val approx = during(spark)(graft.pipeline.TextAnalysis.qualityEnsemble(spark, sf).collect())
+      .map(r => r.getString(0) -> r).toMap
     rows.foreach { r =>
       val a = approx(r.getString(0))
       Seq("n_docs", "n_lang_ok", "n_qual_ok", "n_gopher_ok").foreach { c =>
@@ -307,7 +308,7 @@ class CurationOpsSpec extends SparkSpec {
   }
 
   test("ensembleFamilyShared frames equal the standalone ensemble queries") {
-    val shared = TextAnalysis.ensembleFamilyShared(spark, sf, approx = false)
+    val shared = TextAnalysis.ensembleFamilyShared(spark, sf)
     val standalone = Seq(
       TextAnalysis.qualityEnsemble(spark, sf),
       TextAnalysis.sourceQualityDrift(spark, sf))

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.drift._
+import graft.plans.SketchModeRewrite.sketched
 
 /** Unit tests for the scalar drift math: zero-denominator rules, severity
   * bucketing, JS/χ² invariants (SURVEY.md §5.1/5.2). */
@@ -108,14 +109,15 @@ class DriftMathSpec extends SparkSpec {
     val ref = Seq.fill(5000)(50.0 + 10 * r.nextGaussian()).toDF("x")
     val curr = Seq.fill(5000)(55.0 + 12 * r.nextGaussian()).toDF("x")
     val exact = NumericDrift.driftForPair(ref, curr, Seq("x")).collect()(0)
-    val approx = NumericDrift.driftForPair(ref, curr, Seq("x"), approx = true).collect()(0)
+    val approx = sketched(NumericDrift.driftForPair(ref, curr, Seq("x"))).collect()(0)
     assert(math.abs(exact.getAs[Double]("drift_score") - approx.getAs[Double]("drift_score")) < 0.02)
     assert(exact.getAs[Boolean]("drift_detected") == approx.getAs[Boolean]("drift_detected"))
   }
 
   test("approx drift-score DAG tracks exact on the testdata (bench surface)") {
     val dir = "/root/testdata/sf0.001"
-    def scores(approx: Boolean) = NumericDrift.driftScore(spark, dir, approx)
+    def scores(approx: Boolean) = (if (approx) sketched(NumericDrift.driftScore(spark, dir))
+        else NumericDrift.driftScore(spark, dir))
       .collect()
       .map(r => (r.getAs[String]("table_name"), r.getAs[String]("column_name")) ->
         r.getAs[Double]("drift_score")).toMap
@@ -126,8 +128,11 @@ class DriftMathSpec extends SparkSpec {
 
   test("approx distinct-vocabulary sketch tracks exact token stats (bench surface)") {
     val dir = "/root/testdata/sf0.001"
-    def vocab(approx: Boolean) = graft.pipeline.TextAnalysis.tokenStats(spark, dir, approx)
-      .collect().map(r => r.getAs[String]("source") -> r.getAs[Long]("distinct_words")).toMap
+    def vocab(approx: Boolean) = {
+      val q = graft.pipeline.TextAnalysis.tokenStats(spark, dir)
+      (if (approx) sketched(q) else q).collect()
+        .map(r => r.getAs[String]("source") -> r.getAs[Long]("distinct_words")).toMap
+    }
     val (exact, approx) = (vocab(false), vocab(true))
     assert(exact.keySet == approx.keySet && exact.nonEmpty)
     // HLL default rsd = 5%; allow 3 sigma
@@ -264,7 +269,7 @@ class DriftMathSpec extends SparkSpec {
     val (ref, curr) = (frame(50).cache(), frame(53).cache())
     val exact = GroupDrift.forPair(ref, curr, "dim", Seq("m"), Seq.empty)
       .collect().map(row => row.getAs[String]("category") -> row.getAs[Double]("overall_drift_score")).toMap
-    val approx = GroupDrift.forPair(ref, curr, "dim", Seq("m"), Seq.empty, approx = true)
+    val approx = sketched(GroupDrift.forPair(ref, curr, "dim", Seq("m"), Seq.empty))
       .collect().map(row => row.getAs[String]("category") -> row.getAs[Double]("overall_drift_score")).toMap
     assert(exact.keySet == approx.keySet && exact.nonEmpty)
     exact.foreach { case (cat, s) => assert(math.abs(s - approx(cat)) < 0.02, s"group $cat") }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.drift.table
 import graft.pipeline.EventAnalytics
+import graft.plans.SketchModeRewrite.sketched
 
 /** Rolling stats, cohort retention and funnel over the event stream,
   * checked against independent driver-side computations. */
@@ -155,7 +156,7 @@ class EventAnalyticsSpec extends SparkSpec {
   test("rfm_segments approx path yields a full partition with stable segment names") {
     val exact = EventAnalytics.rfmSegments(spark, sf).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val approx = EventAnalytics.rfmSegments(spark, sf, approx = true).collect()
+    val approx = sketched(EventAnalytics.rfmSegments(spark, sf)).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(approx.values.sum == exact.values.sum)
     // cutpoints shift within sketch error; segment totals stay close
@@ -262,7 +263,7 @@ class EventAnalyticsSpec extends SparkSpec {
     // approx path: the sketch returns a nearest-rank DATA point (no
     // interpolation), so pin it inside a rank window around the target
     // quantile rather than to a value distance
-    val a = EventAnalytics.conversionLag(spark, sf, approx = true).collect()(0)
+    val a = sketched(EventAnalytics.conversionLag(spark, sf)).collect()(0)
     assert(a.getLong(0) == r.getLong(0) && a.getDouble(1) == r.getDouble(1))
     assert(a.getDouble(2) >= q(0.4) && a.getDouble(2) <= q(0.6),
       s"approx p50 ${a.getDouble(2)} outside [${q(0.4)}, ${q(0.6)}]")
@@ -356,7 +357,7 @@ class EventAnalyticsSpec extends SparkSpec {
     // concentration sanity: top slices are proper, ordered shares
     assert(r.getDouble(2) > 0 && r.getDouble(2) < r.getDouble(3) && r.getDouble(3) < 1.0)
     // approx path returns the same exact-sum fields
-    val a = EventAnalytics.revenueConcentration(spark, sf, approx = true).collect()(0)
+    val a = sketched(EventAnalytics.revenueConcentration(spark, sf)).collect()(0)
     assert(a.getLong(0) == r.getLong(0) && a.getDouble(1) == r.getDouble(1))
   }
 

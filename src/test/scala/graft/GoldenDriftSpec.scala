@@ -1,6 +1,7 @@
 package graft
 
 import graft.drift._
+import graft.plans.SketchModeRewrite.during
 
 /** Golden end-to-end tests over the seeded port of the reference's
   * synthetic drift table (example.py:12-87; expectations per FIXTURES.md §A
@@ -131,7 +132,7 @@ class GoldenDriftSpec extends SparkSpec {
   }
 
   test("orchestrated report's approx path matches exact verdicts, scores within sketch error") {
-    // the bench runs the O40 orchestration with approx = true (sketch
+    // the bench runs the O40 orchestration under sketch mode (sketch
     // percentiles in the O12 analyzer); the scale path must change the
     // PLAN, not the report: same rows, same per-column drift verdicts,
     // scores within the 1e-4-rank-error sketch's observable shift
@@ -139,7 +140,7 @@ class GoldenDriftSpec extends SparkSpec {
     def keyed(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getString(0), r.getString(1)) -> r).toMap
     val exact = keyed(graft.drift.Orchestrated.orchestratedReport(spark, dir).collect())
-    val approx = keyed(graft.drift.Orchestrated.orchestratedReport(spark, dir, approx = true).collect())
+    val approx = keyed(during(spark)(graft.drift.Orchestrated.orchestratedReport(spark, dir).collect()))
     assert(exact.keySet == approx.keySet && exact.size == 7)
     exact.keySet.foreach { k =>
       assert(exact(k).getBoolean(3) == approx(k).getBoolean(3),

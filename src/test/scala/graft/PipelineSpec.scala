@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.pipeline._
+import graft.plans.SketchModeRewrite.during
 
 /** Dedup / similarity / text-analysis behavior on planted fixtures. */
 class PipelineSpec extends SparkSpec {
@@ -928,7 +929,7 @@ class PipelineSpec extends SparkSpec {
         assert(mid <= t, s"middle $mid > tail $t")
     }
     // approx (bench) surface lands every count within sketch slack
-    val approx = LmScore.lmPplBuckets(spark, dir, approx = true).collect()
+    val approx = during(spark)(LmScore.lmPplBuckets(spark, dir).collect())
       .map(r => (r.getAs[String]("source"), r.getAs[String]("bucket")) -> r.getAs[Long]("n_docs")).toMap
     val exact = rows.map(r => (r.getAs[String]("source"), r.getAs[String]("bucket")) -> r.getAs[Long]("n_docs")).toMap
     assert(exact.keySet == approx.keySet)

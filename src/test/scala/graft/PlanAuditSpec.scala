@@ -486,6 +486,74 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("group drift verdict scans each table once per aggregate (eligibility is derived, not re-scanned)") {
+    // the verdict reads two aggregates of different grain per table — the
+    // numeric pivot and the categorical value counts — so two scans;
+    // eligibility ranks the pivot's own rows instead of re-aggregating it
+    val df = graft.drift.GroupDrift.groupDriftVerdict(spark, sf)
+    Seq("lineitem", "orders").foreach { t =>
+      val n = finalScansOf(df, t)
+      assert(n == 2, s"$t scanned $n times in the final plan:\n${df.queryExecution.executedPlan}")
+    }
+  }
+
+  /** The optimized plans of every query `body` runs, in order — eager
+    * sub-aggregates included. */
+  private def plansRunBy(body: => Unit): Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val marker = "plans_run_by_marker"
+    @volatile var flushed = false
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.map(_.name) == Seq(marker)) flushed = true
+        else seen.add(qe.optimizedPlan)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // the listener sees executions in order: once the marker arrives,
+      // every query of `body` has arrived before it
+      spark.range(1).select(org.apache.spark.sql.functions.lit(1).as(marker)).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!flushed && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(flushed, "the listener never saw the marker query")
+      scala.jdk.CollectionConverters.CollectionHasAsScala(seen).asScala.toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("every sketched bench key runs sketches, no exact percentile or distinct count") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate._
+    import org.apache.spark.sql.catalyst.plans.logical.{Expand, LogicalPlan}
+    def walk(p: LogicalPlan): Seq[LogicalPlan] = p +: p.children.flatMap(walk)
+    SparkEntry.SketchedOnBench.foreach { k =>
+      // built as the bench builds it, run after the bench's sketch block ends
+      val nodes = plansRunBy(SparkEntry.benchQueries(k)(spark, sf).collect()).flatMap(walk)
+      val aggs = nodes.flatMap(_.expressions.flatMap(_.collect { case a: AggregateExpression => a }))
+      val exact = aggs.filter {
+        case AggregateExpression(_: Percentile, _, _, _, _) => true
+        case AggregateExpression(Count(Seq(_)), _, true, _, _) => true
+        case _ => false
+      }
+      assert(exact.isEmpty, s"$k runs exact aggregates: ${exact.mkString(", ")}")
+      // several distinct counts lowered to an Expand before any sketching
+      assert(!nodes.exists { case e: Expand => e.output.exists(_.name == "gid"); case _ => false },
+        s"$k lowers distinct counts to an Expand")
+      assert(aggs.exists(a => a.aggregateFunction.isInstanceOf[ApproximatePercentile] ||
+        a.aggregateFunction.isInstanceOf[HyperLogLogPlusPlus]), s"$k runs no sketch")
+    }
+  }
+
+  test("sketched(df) equals the session-mode result on a lazy key") {
+    import graft.plans.SketchModeRewrite.{during, sketched}
+    val q = () => graft.drift.NumericDrift.quantileShifts(spark, sf)
+    val session = during(spark)(q().collect())
+    val exact = q().collect()
+    assert(sketched(q()).collect().toSeq == session.toSeq)
+    assert(session.toSeq != exact.toSeq, "the sketch moved no quantile: the case shows nothing")
+  }
+
   test("group_slices aggregates every dimension through one Expand + one Exchange per table") {
     val df = graft.drift.GroupDrift.groupSlices(spark, sf)
     val plan = planOf(df)

@@ -1,5 +1,7 @@
 package graft
 
+import graft.plans.SketchModeRewrite.sketched
+
 /** Composed eval harnesses: dedup banding quality, ANN index recall, and
   * the per-source corpus report card — each an oracle-checked query built
   * from the engine's own operators. */
@@ -91,7 +93,7 @@ class QualityHarnessSpec extends SparkSpec {
     // clean norms only = the good vector's exact norm 4
     assert(l1.getDouble(7) == 4.0)
     // approx path agrees on all counting fields
-    val a = graft.pipeline.EmbeddingDrift.embeddingAudit(spark, dir, approx = true).collect()
+    val a = sketched(graft.pipeline.EmbeddingDrift.embeddingAudit(spark, dir)).collect()
       .map(r => r.getInt(0) -> r).toMap
     Seq(0, 1).foreach { l =>
       (1 to 6).foreach(i => assert(a(l).getLong(i) == got(l).getLong(i)))

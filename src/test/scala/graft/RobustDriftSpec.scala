@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.drift.{splits, table, withSide, RobustDrift}
+import graft.plans.SketchModeRewrite.sketched
 
 /** MAD outlier drift and mutual-information association drift, checked
   * against independent driver-side computations on the real fixture. */
@@ -36,7 +37,7 @@ class RobustDriftSpec extends SparkSpec {
   test("mad_outliers approx path tracks the exact rates") {
     val exact = RobustDrift.madOutliers(spark, sf).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(8)).toMap
-    val approx = RobustDrift.madOutliers(spark, sf, approx = true).collect()
+    val approx = sketched(RobustDrift.madOutliers(spark, sf)).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(8)).toMap
     assert(exact.keySet == approx.keySet)
     exact.foreach { case (k, v) =>

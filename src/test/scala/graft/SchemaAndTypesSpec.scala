@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.types._
 import graft.drift.{SchemaOps, TypeInference}
+import graft.plans.SketchModeRewrite.during
 
 class SchemaAndTypesSpec extends SparkSpec {
   import spark.implicits._
@@ -55,7 +56,7 @@ class SchemaAndTypesSpec extends SparkSpec {
     assert(t("date_str") == "temporal")     // >90% timestamp-castable
     assert(t("cont") == "numerical")
     // approx variant agrees on clear-cut ratios
-    val ta = TypeInference.infer(df, approxDistinct = true)
+    val ta = during(spark)(TypeInference.infer(df))
     assert(ta == t)
   }
 
@@ -63,7 +64,7 @@ class SchemaAndTypesSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val exact = TypeInference.typeInferenceQuery(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
-    val approx = TypeInference.typeInferenceQuery(spark, dir, approxDistinct = true).collect()
+    val approx = during(spark)(TypeInference.typeInferenceQuery(spark, dir).collect())
       .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
     assert(exact.nonEmpty && exact == approx)
   }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.plans.SketchModeRewrite
+import graft.plans.SketchModeRewrite.during
 
 /** Session-wide sketch mode: the optimizer rule that flips exact
   * percentile / COUNT(DISTINCT) to their mergeable sketches under
@@ -9,21 +10,11 @@ import graft.plans.SketchModeRewrite
 class SketchModeSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withRule[T](enabled: Boolean)(f: => T): T = {
-    val before = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = before :+ SketchModeRewrite
-    spark.conf.set(SketchModeRewrite.ConfKey, enabled.toString)
-    try f
-    finally {
-      spark.conf.unset(SketchModeRewrite.ConfKey)
-      spark.experimental.extraOptimizations = before
-    }
-  }
-
   private val df = (1 to 1000).map(i => (i.toDouble, i % 97)).toDF("x", "k")
 
   test("flag off: plans and results are untouched") {
-    withRule(enabled = false) {
+    during(spark) {
+      spark.conf.set(SketchModeRewrite.ConfKey, "false")
       val plan = df.agg(expr("percentile(x, 0.5e0) AS p"),
         countDistinct("k").as("d")).queryExecution.executedPlan.toString
       assert(plan.contains("percentile(") && !plan.contains("approx_percentile"))
@@ -32,7 +23,7 @@ class SketchModeSpec extends SparkSpec {
   }
 
   test("flag on: percentile becomes the sketch, result within accuracy") {
-    withRule(enabled = true) {
+    during(spark) {
       val q = df.agg(expr("percentile(x, 0.5e0) AS p"))
       val plan = q.queryExecution.executedPlan.toString
       assert(plan.contains("approx_percentile") || plan.contains("percentile_approx"),
@@ -43,7 +34,7 @@ class SketchModeSpec extends SparkSpec {
   }
 
   test("flag on: single-column COUNT(DISTINCT) becomes HLL, no Expand") {
-    withRule(enabled = true) {
+    during(spark) {
       val q = df.agg(countDistinct("k").as("d"))
       val plan = q.queryExecution.executedPlan.toString
       assert(plan.contains("approx_count_distinct") || plan.toLowerCase.contains("hyperloglog"),
@@ -57,7 +48,7 @@ class SketchModeSpec extends SparkSpec {
   }
 
   test("guards: long-typed percentile and multi-column distinct are left exact") {
-    withRule(enabled = true) {
+    during(spark) {
       // ApproximatePercentile on a LONG child returns LONG (nearest rank) —
       // a schema change the rule must refuse
       val lp = spark.range(100).agg(expr("percentile(id, 0.5e0) AS p"))
@@ -71,9 +62,42 @@ class SketchModeSpec extends SparkSpec {
   }
 
   test("sketch mode leaves DECIMAL sums and plain aggregates untouched") {
-    withRule(enabled = true) {
+    during(spark) {
       val r = df.agg(sum($"x".cast("decimal(18,4)")).as("s"), count(lit(1)).as("n")).collect()(0)
       assert(r.getDecimal(0).doubleValue() == 500500.0 && r.getLong(1) == 1000L)
     }
+  }
+
+  test("during restores the session's rules and sketch-mode setting, also on failure") {
+    val rules = spark.experimental.extraOptimizations
+    intercept[IllegalStateException](during(spark) {
+      assert(spark.conf.get(SketchModeRewrite.ConfKey) == "true")
+      assert(spark.experimental.extraOptimizations.contains(SketchModeRewrite))
+      throw new IllegalStateException("body failed")
+    })
+    assert(spark.conf.getOption(SketchModeRewrite.ConfKey).isEmpty)
+    assert(spark.experimental.extraOptimizations == rules)
+    spark.conf.set(SketchModeRewrite.ConfKey, "false")
+    try during(spark)(())
+    finally assert(spark.conf.get(SketchModeRewrite.ConfKey) == "false")
+    spark.conf.unset(SketchModeRewrite.ConfKey)
+  }
+
+  test("several DISTINCT children: only the analyzed-plan rewrite reaches them") {
+    // Spark lowers several distinct aggregates to an Expand before the
+    // user-optimizer batch, so the rule never sees them as distinct counts
+    val q = df.agg(countDistinct("x").as("dx"), countDistinct("k").as("dk"))
+    def sketches(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
+      p.expressions.exists(_.exists(_.isInstanceOf[
+        org.apache.spark.sql.catalyst.expressions.aggregate.HyperLogLogPlusPlus])) ||
+        p.children.exists(sketches)
+    during(spark) {
+      assert(!sketches(q.queryExecution.optimizedPlan))
+      assert(sketches(SketchModeRewrite.sketchedIfOn(q).queryExecution.optimizedPlan))
+    }
+    assert(SketchModeRewrite.sketchedIfOn(q) eq q)
+    val r = SketchModeRewrite.sketched(q).collect()(0)
+    // HLL's 5% relative error, 3 sigma
+    assert(math.abs(r.getLong(0) - 1000L) <= 150L && math.abs(r.getLong(1) - 97L) <= 15L)
   }
 }
