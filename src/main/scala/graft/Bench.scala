@@ -42,10 +42,8 @@ object Bench {
   /** Timed executions per query; the minimum is reported. */
   val TimedRuns = 3
 
-  /** Force full evaluation of every output column — shared with
-    * ArmedProbe via [[Measure.exec]] (round-15 review: the probe still
-    * timed `.count()` after this main stopped, and its dedup timings
-    * silently excluded the join-eliminated verification stage). */
+  /** Force full evaluation of every output column ([[Measure.exec]], never
+    * `.count()`, which lets join elimination drop the work measured). */
   private def exec(df: org.apache.spark.sql.DataFrame): Unit = Measure.exec(df)
 
   /** Timed executions per PROD FAMILY (each family run re-pays its whole

@@ -2,14 +2,10 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** ONE implementation of the measurement plumbing both benchmark mains
-  * share — round-15 review: [[Bench]] and [[ArmedProbe]] each hand-kept a
-  * copy of the task-metrics listener, the drain discipline, and the
-  * execution action, the same two-copies-drift class the dedup/ANN cap
-  * guards already hit once (a Bench drain fix would have silently left
-  * ArmedProbe measuring with the old semantics — and did: ArmedProbe
-  * still timed `.count()` after Bench moved to row iteration, so its
-  * dedup timings excluded the join-eliminated verification stage). */
+/** ONE implementation of the measurement plumbing every benchmark shares
+  * ([[Bench]] and the product benchmark): the task-metrics listener, the
+  * drain discipline and the execution action. A second hand-kept copy drifts:
+  * a fix to one would leave the other measuring with the old semantics. */
 private[graft] object Measure {
 
   /** Force full evaluation of every output column without a driver
@@ -21,10 +17,8 @@ private[graft] object Measure {
     df.queryExecution.toRdd.foreach(_ => ()): Unit
   }
 
-  /** Median of a sample — ONE implementation for the min-wall/median-cpu
-    * reduction both mains report (round-15 ADVICE: ArmedProbe hand-kept
-    * `sorted.apply(1)`, which is only the median for exactly 3 runs and
-    * would silently become a non-median if the run count changed). */
+  /** Median of a sample, for any sample size — ONE implementation for the
+    * min-wall/median-cpu reduction the benchmarks report. */
   def medianOf(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.size % 2 == 1) s(s.size / 2)

@@ -12,12 +12,13 @@ import graft.drift.{splits => S}
   *
   * Scale design: the reference collects value counts to the driver and does
   * Python math (categorical_analyzer.py:323-335). Here every step — counts,
-  * ref↔curr alignment, JS/χ² term sums — stays distributed: one
-  * `groupBy(side, value)` (map-side combined) per column, then per-value
-  * pivots and a scalar aggregation. Nothing driver-side except the final
-  * tiny result. Top-20 truncation (a reference SEMANTIC, not just perf —
-  * SURVEY.md §8.9) is a rank-filter with a deterministic (count desc, value
-  * asc) tie-break so Spark and the DuckDB oracle agree.
+  * ref↔curr alignment, JS/χ² term sums — stays distributed, and every
+  * column of a table goes through ONE stacked `groupBy(column_name, value)`
+  * (map-side combined), so the exchanges do not grow with the column count.
+  * Nothing driver-side except the final tiny result. Top-20 truncation (a
+  * reference SEMANTIC, not just perf — SURVEY.md §8.9) is a rank-filter
+  * with a deterministic (count desc, value asc) tie-break so Spark and the
+  * DuckDB oracle agree.
   */
 object CategoricalDrift extends graft.OperatorModule {
 
@@ -27,13 +28,6 @@ object CategoricalDrift extends graft.OperatorModule {
   val NullThreshold = 0.005
 
   // ------------------------------------------------------- building blocks
-
-  /** Per-side value counts for one split column. `nonNull=true` mirrors the
-    * O15/O18 isNotNull filter; `false` keeps the null group (O22/O23/O35). */
-  private def sideCounts(spark: SparkSession, dir: String, sp: S.CatSplit,
-      c: String, nonNull: Boolean): DataFrame =
-    sideCountsMulti(spark, dir, sp, nonNull)
-      .filter(col("column_name") === c).drop("column_name")
 
   /** ALL columns of a table unpivoted through one stack + one
     * groupBy(side, column, value): per-column branches filter this same
@@ -48,35 +42,11 @@ object CategoricalDrift extends graft.OperatorModule {
       .groupBy("side", "column_name", "value").agg(count(lit(1)).as("cnt"))
   }
 
-  /** Same per-side value counts over any side-tagged frame. */
-  private def sideCountsFrom(tagged: DataFrame, c: String, nonNull: Boolean): DataFrame = {
-    val base = tagged.select(col("side"), col(c).cast("string").as("value"))
-    (if (nonNull) base.filter(col("value").isNotNull) else base)
-      .groupBy("side", "value").agg(count(lit(1)).as("cnt"))
-  }
-
-  /** All-column unpivoted per-side counts over any side-tagged frame (the
-    * pair-path analogue of [[sideCountsMulti]] — one scan for every column). */
-  private def sideCountsMultiFrom(tagged: DataFrame, cols: Seq[String],
-      nonNull: Boolean): DataFrame = {
-    val rows = cols.map(c => s"'$c', CAST($c AS STRING)").mkString(", ")
-    val base = tagged.select(col("side"),
-      expr(s"stack(${cols.size}, $rows) as (column_name, value)"))
-    (if (nonNull) base.filter(col("value").isNotNull) else base)
-      .groupBy("side", "column_name", "value").agg(count(lit(1)).as("cnt"))
-  }
-
   private def sideCountsSql(sp: S.CatSplit, c: String, nonNull: Boolean): String = {
     val where = if (nonNull) s"WHERE $c IS NOT NULL " else ""
     s"SELECT CASE WHEN ${sp.refSql} THEN 'ref' ELSE 'curr' END AS side, " +
       s"CAST($c AS VARCHAR) AS value, COUNT(*) AS cnt FROM ${sp.tableName} ${where}GROUP BY 1, 2"
   }
-
-  /** Pivot per-value counts to (value, ref_cnt, curr_cnt) with absent → 0. */
-  private def pivotCounts(cnts: DataFrame): DataFrame =
-    cnts.groupBy("value").agg(
-      coalesce(sum(when(col("side") === "ref", col("cnt"))), lit(0L)).as("ref_cnt"),
-      coalesce(sum(when(col("side") === "curr", col("cnt"))), lit(0L)).as("curr_cnt"))
 
   // ------------------------------------- fused all-column building blocks
   //
@@ -141,16 +111,50 @@ object CategoricalDrift extends graft.OperatorModule {
       .agg(expr(chiSumSql).as("chi_square"), (count(lit(1)) - 1).as("dof"))
   }
 
+  // ---------------------------------------------------------- the census
+  //
+  // The categorical families detectDrift runs (O19, O22, O23, O35) are
+  // projections of ONE frame per call — the census — plus at most one
+  // groupBy(column_name) that reuses the census window's partitioning. A call
+  // therefore runs the same exchanges for 2 columns as for 200. The gate
+  // queries apply the same family functions to `withSide(table, split.ref)`.
+
+  /** Per-(column_name, value) counts of a side-tagged frame, null group kept:
+    * `ref_cnt`/`curr_cnt` on one row; per column, each side's total rows
+    * (`ref_n`), non-null rows (`ref_nn`) and rank among non-null values by
+    * (count desc, value asc) (`ref_rk`; values the side lacks rank last).
+    * One stack, one groupBy, one window partitioned by column_name. */
+  private def census(tagged: DataFrame, cols: Seq[String]): DataFrame = {
+    val rows = cols.map(c => s"${sqlStr(c)}, CAST(${sqlIdent(c)} AS STRING)").mkString(", ")
+    val w = Window.partitionBy("column_name")
+    def nonNull(cnt: String) = sum(when(col("value").isNotNull, col(cnt)).otherwise(0L)).over(w)
+    def rank(cnt: String) =
+      row_number().over(w.orderBy(col("value").isNull, col(cnt).desc, col("value").asc))
+    tagged.select(col("side"), expr(s"stack(${cols.size}, $rows) AS (column_name, value)"))
+      .groupBy("column_name", "value").agg(
+        count(when(col("side") === "ref", 1)).as("ref_cnt"),
+        count(when(col("side") === "curr", 1)).as("curr_cnt"))
+      .select(col("*"), sum("ref_cnt").over(w).as("ref_n"), sum("curr_cnt").over(w).as("curr_n"),
+        nonNull("ref_cnt").as("ref_nn"), nonNull("curr_cnt").as("curr_nn"),
+        rank("ref_cnt").as("ref_rk"), rank("curr_cnt").as("curr_rk"))
+  }
+
+  /** The census of each categorical split of the gate tables. */
+  private def splitCensus(spark: SparkSession, dir: String, sp: S.CatSplit): DataFrame =
+    census(withSide(table(spark, dir, sp.tableName), sp.ref), sp.cols)
+
+  /** Per-value counts and frequencies over all rows, absent side → NULL. */
+  private def freqPivotOf(cen: DataFrame): DataFrame =
+    cen.selectExpr("column_name", "value",
+      "CASE WHEN ref_cnt > 0 THEN ref_cnt END AS ref_cnt0",
+      "CASE WHEN curr_cnt > 0 THEN curr_cnt END AS curr_cnt0",
+      "CASE WHEN ref_cnt > 0 THEN ref_cnt * 1e0 / ref_n END AS ref_freq0",
+      "CASE WHEN curr_cnt > 0 THEN curr_cnt * 1e0 / curr_n END AS curr_freq0")
+
   private val pivotCountsSql =
     "SELECT value, COALESCE(SUM(CASE WHEN side = 'ref' THEN cnt END), 0)::BIGINT AS ref_cnt, " +
       "COALESCE(SUM(CASE WHEN side = 'curr' THEN cnt END), 0)::BIGINT AS curr_cnt " +
       "FROM cnts GROUP BY value"
-
-  /** Rank values per side by (cnt desc, value asc) — the deterministic form
-    * of the reference's `orderBy(desc("count")).limit(20)`. */
-  private def ranked(cnts: DataFrame): DataFrame =
-    cnts.withColumn("rk", row_number().over(
-      Window.partitionBy("side").orderBy(col("cnt").desc, col("value").asc)))
 
   // ----------------------------------------------- value_counts (O15 base)
 
@@ -367,20 +371,24 @@ object CategoricalDrift extends graft.OperatorModule {
 
   /** Full-support JS distance (frequencies over ALL rows incl. the null
     * group — /root/reference/distribution_analyzer.py:229-319). */
-  def jsFull(spark: SparkSession, dir: String): DataFrame = {
-    val per = S.categorical.map { sp =>
-      fullDistsMulti(sideCountsMulti(spark, dir, sp, nonNull = false))
-        .groupBy("column_name")
-        .agg(expr(s"SQRT((${jsKlPm} + ${jsKlQm}) / 2)").as("js_distance"),
-          sum(when(col("p").isNull, 1).otherwise(0)).as("new_values_count"),
-          sum(when(col("q").isNull, 1).otherwise(0)).as("disappeared_values_count"))
-        .select(lit(sp.tableName).as("table_name"), col("column_name"),
-          r6(col("js_distance")).as("js_distance"),
-          (col("js_distance") > 0.1).as("significant_change"),
-          col("new_values_count").cast("long"), col("disappeared_values_count").cast("long"))
-    }
-    per.reduce(_ union _).orderBy("table_name", "column_name")
-  }
+  def jsFull(spark: SparkSession, dir: String): DataFrame =
+    S.categorical.map(sp => jsFullOf(splitCensus(spark, dir, sp), sp.tableName, 0.1))
+      .reduce(_ union _).orderBy("table_name", "column_name")
+
+  /** O22 per column of a census: the full-support distributions, aggregated
+    * over the census window's partitioning (no further exchange). */
+  private def jsFullOf(cen: DataFrame, label: String, threshold: Double): DataFrame =
+    cen.selectExpr("column_name",
+        "CASE WHEN ref_cnt > 0 THEN ref_cnt * 1e0 / ref_n END AS p",
+        "CASE WHEN curr_cnt > 0 THEN curr_cnt * 1e0 / curr_n END AS q")
+      .groupBy("column_name")
+      .agg(expr(s"SQRT(($jsKlPm + $jsKlQm) / 2)").as("js_distance"),
+        sum(when(col("p").isNull, 1).otherwise(0)).as("new_values_count"),
+        sum(when(col("q").isNull, 1).otherwise(0)).as("disappeared_values_count"))
+      .select(lit(label).as("table_name"), col("column_name"),
+        r6(col("js_distance")).as("js_distance"),
+        (col("js_distance") > threshold).as("significant_change"),
+        col("new_values_count").cast("long"), col("disappeared_values_count").cast("long"))
 
   private val jsKlPm =
     "SUM(CASE WHEN COALESCE(p, 0) > 0 AND (COALESCE(p, 0) + COALESCE(q, 0)) > 0 " +
@@ -405,22 +413,11 @@ object CategoricalDrift extends graft.OperatorModule {
 
   /** Generic O22 full-support JS distance for an arbitrary snapshot pair
     * (the nested report's categorical distribution module,
-    * /root/reference/distribution_analyzer.py:229-319). One unpivot scan for
-    * every column. */
+    * /root/reference/distribution_analyzer.py:229-319), from one census. */
   def jsFullForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
-      label: String = "pair", threshold: Double = 0.1): DataFrame = {
-    val all = sideCountsMultiFrom(NumericDrift.tagPair(ref, curr, cols), cols, nonNull = false)
-    fullDistsMulti(all)
-      .groupBy("column_name")
-      .agg(expr(s"SQRT(($jsKlPm + $jsKlQm) / 2)").as("js_distance"),
-        sum(when(col("p").isNull, 1).otherwise(0)).as("new_values_count"),
-        sum(when(col("q").isNull, 1).otherwise(0)).as("disappeared_values_count"))
-      .select(lit(label).as("table_name"), col("column_name"),
-        r6(col("js_distance")).as("js_distance"),
-        (col("js_distance") > threshold).as("significant_change"),
-        col("new_values_count").cast("long"), col("disappeared_values_count").cast("long"))
+      label: String = "pair", threshold: Double = 0.1): DataFrame =
+    jsFullOf(census(NumericDrift.tagPair(ref, curr, cols), cols), label, threshold)
       .orderBy("column_name")
-  }
 
   /** O22 top increased/decreased values over the FULL support (frequencies
     * over all rows incl. nulls): top-5 each way per column
@@ -633,34 +630,49 @@ object CategoricalDrift extends graft.OperatorModule {
 
   /** [[categoricalDrift]] without the final sort (see
     * NumericDrift.driftScoreFrame for why Report's cache wants it). */
-  private[drift] def categoricalDriftFrame(spark: SparkSession, dir: String): DataFrame = {
-    val per = S.categorical.map { sp =>
-      // UNCACHED (r17): the three consumers below (JS, chi-square, null
-      // props) share the unpivot scan's count exchange (ReusedExchange), so
-      // the scan runs once either way and the registered-cold cache only
-      // added the stampede — see NumericDrift.driftScoreFrame
-      val all = sideCountsMulti(spark, dir, sp, nonNull = false)
-      // JS over top-20 distributions (O17 as called by O19)
-      val js = top20DistsMulti(all).groupBy("column_name")
-        .agg(expr(s"SQRT(($jsKlPm + $jsKlQm) / 2)").as("js_divergence"),
-          sum(when(col("p").isNotNull, 1).otherwise(0)).as("ref_k"),
-          sum(when(col("q").isNotNull && col("p").isNull, 1).otherwise(0)).as("new_k"),
-          sum(when(col("p").isNotNull && col("q").isNull, 1).otherwise(0)).as("missing_k"))
-      val chi = chiPMulti(all)
-        .selectExpr("column_name", "CASE WHEN chi_square < 0.001 THEN 1.0 " +
-          s"WHEN chi_square > 3 * ($chiCv) THEN 0.001 WHEN chi_square > 2 * ($chiCv) THEN 0.01 " +
-          s"WHEN chi_square > ($chiCv) THEN 0.05 " +
-          s"ELSE LEAST(1.0, GREATEST(0.05, 1.0 - (chi_square / ($chiCv)) * 0.95)) END AS p_value")
-      val nulls = nullPropsMulti(all)
-      js.join(chi, "column_name").join(nulls, "column_name")
-        .select(lit(sp.tableName).as("table_name"), col("column_name"),
-          col("js_divergence"), col("p_value"),
-          (col("curr_null_prop") - col("ref_null_prop")).as("null_diff"),
-          expr("new_k * 1e0 / NULLIF(ref_k, 0)").as("new_ratio"),
-          expr("missing_k * 1e0 / NULLIF(ref_k, 0)").as("missing_ratio"))
-        .selectExpr(o19Final: _*)
-    }
-    per.reduce(_ union _)
+  private[drift] def categoricalDriftFrame(spark: SparkSession, dir: String): DataFrame =
+    S.categorical.map(sp => categoricalDriftOf(splitCensus(spark, dir, sp), sp.tableName, false))
+      .reduce(_ union _)
+
+  /** The reference's banded χ² p-value of `chi_square` and `dof`. */
+  private val chiBandSql = "CASE WHEN chi_square < 0.001 THEN 1.0 " +
+    s"WHEN chi_square > 3 * ($chiCv) THEN 0.001 WHEN chi_square > 2 * ($chiCv) THEN 0.01 " +
+    s"WHEN chi_square > ($chiCv) THEN 0.05 " +
+    s"ELSE LEAST(1.0, GREATEST(0.05, 1.0 - (chi_square / ($chiCv)) * 0.95)) END"
+
+  /** O19 per column of a census, in one groupBy over the census window's
+    * partitioning: JS over the top-20 distributions of non-null values (O17
+    * as called by O19), χ² over the non-null values with each side's
+    * non-null total as its sum, and the null proportions. A column with no
+    * non-null value keeps the NULL divergence its empty top-20 sum gives,
+    * and a side without rows the NULL null proportion. */
+  private def categoricalDriftOf(cen: DataFrame, label: String, exactPValue: Boolean): DataFrame = {
+    val stat = cen
+      .selectExpr("*",
+        "CASE WHEN value IS NOT NULL AND ref_cnt > 0 AND ref_rk <= 20 " +
+          "THEN ref_cnt * 1e0 / ref_nn END AS p",
+        "CASE WHEN value IS NOT NULL AND curr_cnt > 0 AND curr_rk <= 20 " +
+          "THEN curr_cnt * 1e0 / curr_nn END AS q",
+        "ref_nn AS ref_sum", "curr_nn AS curr_sum")
+      .selectExpr("*", s"CASE WHEN value IS NOT NULL THEN $chiCellSql END AS cell")
+      .groupBy("column_name")
+      .agg(expr(s"CASE WHEN COUNT(p) + COUNT(q) > 0 THEN SQRT(($jsKlPm + $jsKlQm) / 2) END")
+          .as("js_divergence"),
+        count(col("p")).as("ref_k"),
+        count(when(col("q").isNotNull && col("p").isNull, 1)).as("new_k"),
+        count(when(col("p").isNotNull && col("q").isNull, 1)).as("missing_k"),
+        expr(chiSumSql).as("chi_square"), (count(col("value")) - 1).as("dof"),
+        max("ref_n").as("ref_n"), max("curr_n").as("curr_n"),
+        max("ref_nn").as("ref_nn"), max("curr_nn").as("curr_nn"))
+    val pExact = udf((chi: Double, dof: Long) => chi2PValue(chi, dof))
+    val pValue = if (exactPValue) pExact(col("chi_square"), col("dof")) else expr(chiBandSql)
+    stat.select(lit(label).as("table_name"), col("column_name"),
+        col("js_divergence"), pValue.as("p_value"),
+        expr("CASE WHEN curr_n > 0 THEN (curr_n - curr_nn) * 1e0 / curr_n END - " +
+          "CASE WHEN ref_n > 0 THEN (ref_n - ref_nn) * 1e0 / ref_n END").as("null_diff"),
+        expr("new_k * 1e0 / NULLIF(ref_k, 0)").as("new_ratio"),
+        expr("missing_k * 1e0 / NULLIF(ref_k, 0)").as("missing_ratio"))
+      .selectExpr(o19Final: _*)
   }
 
   def categoricalDriftSql: String = {
@@ -670,10 +682,7 @@ object CategoricalDrift extends graft.OperatorModule {
         "SUM(CASE WHEN q IS NOT NULL AND p IS NULL THEN 1 ELSE 0 END) AS new_k, " +
         "SUM(CASE WHEN p IS NOT NULL AND q IS NULL THEN 1 ELSE 0 END) AS missing_k " +
         s"FROM (${top20DistsSql(sp, c)}) d) js"
-      val chiSub = "(SELECT CASE WHEN chi_square < 0.001 THEN 1.0 " +
-        s"WHEN chi_square > 3 * ($chiCv) THEN 0.001 WHEN chi_square > 2 * ($chiCv) THEN 0.01 " +
-        s"WHEN chi_square > ($chiCv) THEN 0.05 " +
-        s"ELSE LEAST(1.0, GREATEST(0.05, 1.0 - (chi_square / ($chiCv)) * 0.95)) END AS p_value FROM " +
+      val chiSub = s"(SELECT $chiBandSql AS p_value FROM " +
         s"(SELECT $chiSumSql AS chi_square, " +
         "COUNT(*) - 1 AS dof FROM " +
         s"(SELECT value, $chiCellSql AS cell FROM " +
@@ -694,107 +703,28 @@ object CategoricalDrift extends graft.OperatorModule {
     per.mkString("", " UNION ALL ", " ORDER BY table_name, column_name")
   }
 
-  /** Generic O19 categorical drift for an arbitrary snapshot pair. */
+  /** Generic O19 categorical drift for an arbitrary snapshot pair, from one
+    * census of every column. */
   def categoricalDriftForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
-      label: String = "pair", exactPValue: Boolean = false): DataFrame = {
-    val per = cols.map { c =>
-      val tagged = NumericDrift.tagPair(ref, curr, Seq(c))
-      val cnts = sideCountsFrom(tagged, c, nonNull = true)
-      val totals = cnts.groupBy("side").agg(sum("cnt").as("nn"))
-      val dists = ranked(cnts).filter(col("rk") <= 20).join(totals, "side")
-        .select(col("side"), col("value"), (col("cnt") * 1e0 / col("nn")).as("prob"))
-        .groupBy("value").agg(
-          max(when(col("side") === "ref", col("prob"))).as("p"),
-          max(when(col("side") === "curr", col("prob"))).as("q"))
-      val js = dists.agg(expr(s"SQRT(($jsKlPm + $jsKlQm) / 2)").as("js_divergence"),
-        sum(when(col("p").isNotNull, 1).otherwise(0)).as("ref_k"),
-        sum(when(col("q").isNotNull && col("p").isNull, 1).otherwise(0)).as("new_k"),
-        sum(when(col("p").isNotNull && col("q").isNull, 1).otherwise(0)).as("missing_k"))
-      val chi = chiPFromCounts(cnts, exactPValue)
-      val nulls = tagged
-        .groupBy("side").agg(count(lit(1)).as("n"), sum(when(col(c).isNull, 1L).otherwise(0L)).as("nl"))
-        .groupBy().agg(
-          max(when(col("side") === "ref", col("nl") * 1e0 / col("n"))).as("ref_null_prop"),
-          max(when(col("side") === "curr", col("nl") * 1e0 / col("n"))).as("curr_null_prop"))
-      js.crossJoin(broadcast(chi)).crossJoin(broadcast(nulls))
-        .select(lit(label).as("table_name"), lit(c).as("column_name"),
-          col("js_divergence"), col("p_value"),
-          (col("curr_null_prop") - col("ref_null_prop")).as("null_diff"),
-          expr("new_k * 1e0 / NULLIF(ref_k, 0)").as("new_ratio"),
-          expr("missing_k * 1e0 / NULLIF(ref_k, 0)").as("missing_ratio"))
-        .selectExpr(o19Final: _*)
-    }
-    per.reduce(_ union _).orderBy("column_name")
-  }
+      label: String = "pair", exactPValue: Boolean = false): DataFrame =
+    categoricalDriftOf(census(NumericDrift.tagPair(ref, curr, cols), cols), label, exactPValue)
+      .orderBy("column_name")
 
-  /** χ² banded p-value from a per-side counts frame (shared by the query
-    * path and the generic pair path). */
-  private def chiPFromCounts(cnts: DataFrame, exactPValue: Boolean = false): DataFrame = {
-    val piv = pivotCounts(cnts)
-    val tot = piv.agg(sum("ref_cnt").as("ref_sum"), sum("curr_cnt").as("curr_sum"))
-    val stat = piv.crossJoin(broadcast(tot))
-      .selectExpr("value", s"$chiCellSql AS cell")
-      .agg(expr(chiSumSql).as("chi_square"), (count(lit(1)) - 1).as("dof"))
-    if (exactPValue) {
-      val pExact = udf((chi: Double, dof: Long) => chi2PValue(chi, dof))
-      stat.select(pExact(col("chi_square"), col("dof")).as("p_value"))
-    } else stat
-      .selectExpr("CASE WHEN chi_square < 0.001 THEN 1.0 " +
-        s"WHEN chi_square > 3 * ($chiCv) THEN 0.001 WHEN chi_square > 2 * ($chiCv) THEN 0.01 " +
-        s"WHEN chi_square > ($chiCv) THEN 0.05 " +
-        s"ELSE LEAST(1.0, GREATEST(0.05, 1.0 - (chi_square / ($chiCv)) * 0.95)) END AS p_value")
-  }
-
-  /** Generic O35 rare-category changes for an arbitrary snapshot pair. */
+  /** Generic O35 rare-category changes for an arbitrary snapshot pair, from
+    * one census of every column. */
   def rareCategoriesForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
-      label: String = "pair", minCount: Int = 10, maxFreq: Double = 0.01): DataFrame = {
-    val per = cols.map { c =>
-      val cnts = sideCountsFrom(NumericDrift.tagPair(ref, curr, Seq(c)), c, nonNull = false)
-      val totals = cnts.groupBy("side").agg(sum("cnt").as("n"))
-      cnts.join(totals, "side")
-        .groupBy("value").agg(
-          max(when(col("side") === "ref", col("cnt"))).as("ref_cnt0"),
-          max(when(col("side") === "curr", col("cnt"))).as("curr_cnt0"),
-          max(when(col("side") === "ref", col("cnt") * 1e0 / col("n"))).as("ref_freq0"),
-          max(when(col("side") === "curr", col("cnt") * 1e0 / col("n"))).as("curr_freq0"))
-        .selectExpr("value",
-          "COALESCE(ref_cnt0, 0) AS ref_cnt", "COALESCE(curr_cnt0, 0) AS curr_cnt",
-          "COALESCE(ref_freq0, 0) AS ref_freq", "COALESCE(curr_freq0, 0) AS curr_freq")
-        .filter(expr(s"((ref_freq <= $maxFreq AND ref_cnt >= $minCount) OR " +
-          s"(curr_freq <= $maxFreq AND curr_cnt >= $minCount))"))
-        .filter(expr("ABS(CASE WHEN ref_cnt > 0 THEN (curr_cnt - ref_cnt) * 1e0 / ref_cnt " +
-          "WHEN curr_cnt > 0 THEN 1.0 ELSE 0.0 END) >= 0.3 OR ref_cnt = 0 OR curr_cnt = 0"))
-        .filter(col("value").isNotNull)
-        .select(lit(label).as("table_name"), lit(c).as("column_name"), col("*"))
-        .selectExpr(o35Final: _*)
-    }
-    per.reduce(_ union _)
+      label: String = "pair", minCount: Int = 10, maxFreq: Double = 0.01): DataFrame =
+    rareCategoriesOf(census(NumericDrift.tagPair(ref, curr, cols), cols), label, minCount, maxFreq)
       .orderBy(when(col("severity") === "high", 0).otherwise(1),
         abs(col("rel_change")).desc, col("column_name"), col("category"))
-  }
 
   // ------------------------------------------- rare values (O23) + (O35)
 
   /** (table, column, rareThreshold) for O23; high-cardinality columns so the
     * rare-frequency band is populated. */
-  private val rareCols: Seq[(S.CatSplit, String, Double)] = Seq(
+  private[graft] val rareCols: Seq[(S.CatSplit, String, Double)] = Seq(
     (S.categorical.head.copy(cols = Seq("l_partkey")), "l_partkey", 0.0005),
     (S.categorical.find(_.tableName == "orders").get.copy(cols = Seq("o_custkey")), "o_custkey", 0.0005))
-
-  /** Per-value frequencies over ALL rows (null group kept), pivoted. */
-  private def freqPivot(spark: SparkSession, dir: String, sp: S.CatSplit, c: String): DataFrame =
-    freqPivotFromCounts(sideCounts(spark, dir, sp, c, nonNull = false))
-
-  /** Same pivot from any per-side counts frame (shared with the pair path). */
-  private def freqPivotFromCounts(cnts: DataFrame): DataFrame = {
-    val totals = cnts.groupBy("side").agg(sum("cnt").as("n"))
-    cnts.join(totals, "side")
-      .groupBy("value").agg(
-        max(when(col("side") === "ref", col("cnt"))).as("ref_cnt0"),
-        max(when(col("side") === "curr", col("cnt"))).as("curr_cnt0"),
-        max(when(col("side") === "ref", col("cnt") * 1e0 / col("n"))).as("ref_freq0"),
-        max(when(col("side") === "curr", col("cnt") * 1e0 / col("n"))).as("curr_freq0"))
-  }
 
   private def freqPivotSql(sp: S.CatSplit, c: String): String =
     "SELECT value, MAX(CASE WHEN side = 'ref' THEN cnt END) AS ref_cnt0, " +
@@ -809,7 +739,7 @@ object CategoricalDrift extends graft.OperatorModule {
     * PRESENT in the other side (distribution_analyzer.py:366-377). */
   def rareValueSummary(spark: SparkSession, dir: String): DataFrame = {
     val per = rareCols.map { case (sp, c, thr) =>
-      freqPivot(spark, dir, sp, c)
+      freqPivotOf(splitCensus(spark, dir, sp))
         .agg(
           sum(when(col("ref_freq0") <= thr, 1).otherwise(0)).as("ref_rare_count"),
           sum(when(col("curr_freq0") <= thr, 1).otherwise(0)).as("curr_rare_count"),
@@ -842,22 +772,24 @@ object CategoricalDrift extends graft.OperatorModule {
     * rare before) and disappeared_rare (rare before, present but not rare
     * now) with prev/curr freq + count
     * (/root/reference/distribution_analyzer.py:366-401). */
-  def rareValueChanges(spark: SparkSession, dir: String): DataFrame = {
-    val per = rareCols.map { case (sp, c, thr) =>
-      freqPivot(spark, dir, sp, c)
-        .selectExpr("value",
-          s"CASE WHEN curr_freq0 <= $thr AND NOT (ref_freq0 <= $thr) AND ref_freq0 IS NOT NULL THEN 'new_rare' " +
-            s"WHEN ref_freq0 <= $thr AND NOT (curr_freq0 <= $thr) AND curr_freq0 IS NOT NULL THEN 'disappeared_rare' END AS change_type",
-          "COALESCE(ref_freq0, 0) AS prev_freq", "COALESCE(curr_freq0, 0) AS curr_freq",
-          "COALESCE(ref_cnt0, 0) AS prev_count", "COALESCE(curr_cnt0, 0) AS curr_count")
-        .filter(col("change_type").isNotNull)
-        .select(lit(sp.tableName).as("table_name"), lit(c).as("column_name"),
-          col("change_type"), col("value"),
-          r6(col("prev_freq")).as("prev_freq"), r6(col("curr_freq")).as("curr_freq"),
-          col("prev_count"), col("curr_count"))
-    }
-    per.reduce(_ union _).orderBy("table_name", "column_name", "change_type", "value")
-  }
+  def rareValueChanges(spark: SparkSession, dir: String): DataFrame =
+    rareCols.map { case (sp, _, thr) =>
+        rareValueChangesOf(splitCensus(spark, dir, sp), sp.tableName, thr)
+      }.reduce(_ union _).orderBy("table_name", "column_name", "change_type", "value")
+
+  /** O23 per column of a census: a projection, no further exchange. */
+  private def rareValueChangesOf(cen: DataFrame, label: String, thr: Double): DataFrame =
+    freqPivotOf(cen)
+      .selectExpr("column_name", "value",
+        s"CASE WHEN curr_freq0 <= $thr AND NOT (ref_freq0 <= $thr) AND ref_freq0 IS NOT NULL THEN 'new_rare' " +
+          s"WHEN ref_freq0 <= $thr AND NOT (curr_freq0 <= $thr) AND curr_freq0 IS NOT NULL THEN 'disappeared_rare' END AS change_type",
+        "COALESCE(ref_freq0, 0) AS prev_freq", "COALESCE(curr_freq0, 0) AS curr_freq",
+        "COALESCE(ref_cnt0, 0) AS prev_count", "COALESCE(curr_cnt0, 0) AS curr_count")
+      .filter(col("change_type").isNotNull)
+      .select(lit(label).as("table_name"), col("column_name"),
+        col("change_type"), col("value"),
+        r6(col("prev_freq")).as("prev_freq"), r6(col("curr_freq")).as("curr_freq"),
+        col("prev_count"), col("curr_count"))
 
   def rareValueChangesSql: String = {
     val per = rareCols.map { case (sp, c, thr) =>
@@ -875,28 +807,14 @@ object CategoricalDrift extends graft.OperatorModule {
 
   /** Generic O23 per-value rare-value changes for an arbitrary snapshot pair
     * (the nested report's rare-value module,
-    * /root/reference/distribution_analyzer.py:366-401). */
+    * /root/reference/distribution_analyzer.py:366-401), from one census. */
   def rareValueChangesForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
-      label: String = "pair", thr: Double = 0.01): DataFrame = {
-    val per = cols.map { c =>
-      freqPivotFromCounts(
-          sideCountsFrom(NumericDrift.tagPair(ref, curr, Seq(c)), c, nonNull = false))
-        .selectExpr("value",
-          s"CASE WHEN curr_freq0 <= $thr AND NOT (ref_freq0 <= $thr) AND ref_freq0 IS NOT NULL THEN 'new_rare' " +
-            s"WHEN ref_freq0 <= $thr AND NOT (curr_freq0 <= $thr) AND curr_freq0 IS NOT NULL THEN 'disappeared_rare' END AS change_type",
-          "COALESCE(ref_freq0, 0) AS prev_freq", "COALESCE(curr_freq0, 0) AS curr_freq",
-          "COALESCE(ref_cnt0, 0) AS prev_count", "COALESCE(curr_cnt0, 0) AS curr_count")
-        .filter(col("change_type").isNotNull)
-        .select(lit(label).as("table_name"), lit(c).as("column_name"),
-          col("change_type"), col("value"),
-          r6(col("prev_freq")).as("prev_freq"), r6(col("curr_freq")).as("curr_freq"),
-          col("prev_count"), col("curr_count"))
-    }
-    per.reduce(_ union _).orderBy("table_name", "column_name", "change_type", "value")
-  }
+      label: String = "pair", thr: Double = 0.01): DataFrame =
+    rareValueChangesOf(census(NumericDrift.tagPair(ref, curr, cols), cols), label, thr)
+      .orderBy("table_name", "column_name", "change_type", "value")
 
   /** O35 rare-category change detection (full port of
-    * /root/reference/rare_event_analyzer.py:12-113; the one real join). */
+    * /root/reference/rare_event_analyzer.py:12-113). */
   private val o35Final: Seq[String] = {
     val rel = "CASE WHEN ref_cnt > 0 THEN (curr_cnt - ref_cnt) * 1e0 / ref_cnt " +
       "WHEN curr_cnt > 0 THEN 1.0 ELSE 0.0 END"
@@ -911,26 +829,27 @@ object CategoricalDrift extends graft.OperatorModule {
         s"ELSE (CASE WHEN ABS($rel) > 0.5 THEN 'high' ELSE 'medium' END) END AS severity")
   }
 
-  def rareCategories(spark: SparkSession, dir: String): DataFrame = {
-    val minCount = 10
-    val maxFreq = 0.01
-    val per = rareCols.map { case (sp, c, _) =>
-      freqPivot(spark, dir, sp, c)
-        .selectExpr("value",
-          "COALESCE(ref_cnt0, 0) AS ref_cnt", "COALESCE(curr_cnt0, 0) AS curr_cnt",
-          "COALESCE(ref_freq0, 0) AS ref_freq", "COALESCE(curr_freq0, 0) AS curr_freq")
-        .filter(expr(s"((ref_freq <= $maxFreq AND ref_cnt >= $minCount) OR " +
-          s"(curr_freq <= $maxFreq AND curr_cnt >= $minCount))"))
-        .filter(expr("ABS(CASE WHEN ref_cnt > 0 THEN (curr_cnt - ref_cnt) * 1e0 / ref_cnt " +
-          "WHEN curr_cnt > 0 THEN 1.0 ELSE 0.0 END) >= 0.3 OR ref_cnt = 0 OR curr_cnt = 0"))
-        .filter(col("value").isNotNull)
-        .select(lit(sp.tableName).as("table_name"), lit(c).as("column_name"), col("*"))
-        .selectExpr(o35Final: _*)
-    }
-    per.reduce(_ union _)
+  def rareCategories(spark: SparkSession, dir: String): DataFrame =
+    rareCols.map { case (sp, _, _) =>
+        rareCategoriesOf(splitCensus(spark, dir, sp), sp.tableName, minCount = 10, maxFreq = 0.01)
+      }.reduce(_ union _)
       .orderBy(when(col("severity") === "high", 0).otherwise(1),
         abs(col("rel_change")).desc, col("table_name"), col("column_name"), col("category"))
-  }
+
+  /** O35 per column of a census: a projection, no further exchange. */
+  private def rareCategoriesOf(cen: DataFrame, label: String, minCount: Int,
+      maxFreq: Double): DataFrame =
+    freqPivotOf(cen)
+      .selectExpr("column_name", "value",
+        "COALESCE(ref_cnt0, 0) AS ref_cnt", "COALESCE(curr_cnt0, 0) AS curr_cnt",
+        "COALESCE(ref_freq0, 0) AS ref_freq", "COALESCE(curr_freq0, 0) AS curr_freq")
+      .filter(expr(s"((ref_freq <= $maxFreq AND ref_cnt >= $minCount) OR " +
+        s"(curr_freq <= $maxFreq AND curr_cnt >= $minCount))"))
+      .filter(expr("ABS(CASE WHEN ref_cnt > 0 THEN (curr_cnt - ref_cnt) * 1e0 / ref_cnt " +
+        "WHEN curr_cnt > 0 THEN 1.0 ELSE 0.0 END) >= 0.3 OR ref_cnt = 0 OR curr_cnt = 0"))
+      .filter(col("value").isNotNull)
+      .select(lit(label).as("table_name"), col("*"))
+      .selectExpr(o35Final: _*)
 
   def rareCategoriesSql: String = {
     val minCount = 10

@@ -11,12 +11,13 @@ import graft.drift.{splits => S}
   * Scale design: the reference is the job-count explosion center — per
   * dimension it collects top-20 categories, then per category runs two
   * `filter(dim === cat)` frames and 3-6 jobs per metric column: O(dims ×
-  * 20 × cols) Spark jobs (group_analyzer.py:64-102, 206-447). Here each
-  * dimension is ONE `groupBy(side, dim)` aggregation computing every metric
-  * for every category at once, plus one `groupBy(side, dim, value)` for the
-  * categorical frequency tables — two shuffles per dimension total,
-  * independent of category count. At 100 TB that is the difference between
-  * ~hundreds of scans and two.
+  * 20 × cols) Spark jobs (group_analyzer.py:64-102, 206-447). Here the
+  * verdict stacks the rows once per dimension and aggregates every
+  * (dimension, category) at once, and stacks the categorical metrics once
+  * per (dimension, metric) pair for one value-count aggregate: a fixed
+  * number of shuffles whatever the number of dimensions, categories or
+  * metrics. At 100 TB that is the difference between ~hundreds of scans
+  * and two.
   */
 object GroupDrift extends graft.OperatorModule {
 
@@ -35,29 +36,17 @@ object GroupDrift extends graft.OperatorModule {
 
   // ------------------------------------------------------ eligibility (O34)
 
-  /** Eligibility tail over an already-aggregated (category, ref_n, curr_n)
-    * frame: ≥20 rows in BOTH frames, top-20 by combined count
-    * (deterministic tie-break on category). The counts frame is derived
-    * from the aggregation that computes the metrics (numPivot's n / the
-    * categorical value-count frame), never from a second groupBy of the
-    * raw rows. */
-  private def eligibleFromCounts(counts: DataFrame): DataFrame =
-    counts
-      .filter(col("ref_n") >= MinGroupRows && col("curr_n") >= MinGroupRows)
-      // orderBy.limit plans TakeOrderedAndProject — distributed top-k, not a
-      // single-partition rank window over every category
-      .orderBy((col("ref_n") + col("curr_n")).desc, col("category").asc)
-      .limit(TopCategories)
-
-  /** [[eligibleFromCounts]] as a rank window over aggregated rows that
-    * carry (ref_n, curr_n): a self-join would plan a second, differently
-    * pruned scan that exchange reuse cannot merge. A category's rows share
-    * a dense rank; a NULL category holds its slot but is dropped, as the
-    * join on category drops it. */
-  private def keepEligible(rows: DataFrame): DataFrame =
+  /** Eligibility (O34) as a rank window over aggregated rows that carry
+    * (ref_n, curr_n): ≥20 rows on both sides, top 20 by combined count
+    * (deterministic tie-break on category). A self-join would plan a second,
+    * differently pruned scan that exchange reuse cannot merge. A category's
+    * rows share a dense rank; a NULL category holds its slot but is dropped,
+    * as the oracle's join on category drops it. Ranks run within each
+    * group of the `by` columns. */
+  private def keepEligible(rows: DataFrame, by: String*): DataFrame =
     rows.filter(col("ref_n") >= MinGroupRows && col("curr_n") >= MinGroupRows)
-      .withColumn("__rk", dense_rank().over(
-        Window.orderBy((col("ref_n") + col("curr_n")).desc, col("category").asc)))
+      .withColumn("__rk", dense_rank().over(Window.partitionBy(by.map(col): _*)
+        .orderBy((col("ref_n") + col("curr_n")).desc, col("category").asc)))
       .filter(col("__rk") <= TopCategories && col("category").isNotNull)
       .drop("__rk")
 
@@ -73,9 +62,9 @@ object GroupDrift extends graft.OperatorModule {
 
   // --------------------------------------------- numeric group metrics (O32)
 
-  /** Exact median of metric `m`; the DOUBLE cast leaves it unchanged and
-    * lets sketch mode reach integral metrics too. */
-  private def median(m: String): Column = expr(s"percentile(CAST($m AS DOUBLE), 0.5)")
+  /** Exact median of the SQL expression `e`; the DOUBLE cast leaves it
+    * unchanged and lets sketch mode reach integral metrics too. */
+  private def median(e: String): Column = expr(s"percentile(CAST($e AS DOUBLE), 0.5)")
 
   /** Per-(category, metric) side stats, pivoted. Nulls coalesced to 0 as the
     * reference does post-collect (group_analyzer.py:311-333). */
@@ -137,13 +126,6 @@ object GroupDrift extends graft.OperatorModule {
     s"ROUND(${pctChangeSql("(ref_max - ref_min)", "(curr_max - curr_min)")}, 6) AS range_pct_change",
     "ROUND(ABS(curr_nulls * 1e0 / curr_n - ref_nulls * 1e0 / ref_n), 6) AS null_drift")
 
-  /** Per-category (ref_n, curr_n) derived from the pivoted metrics frame —
-    * every metric row of a category carries the same side counts. */
-  private def countsFromNumPivot(np: DataFrame): DataFrame =
-    np.groupBy("category").agg(
-      coalesce(max("ref_n"), lit(0L)).as("ref_n"),
-      coalesce(max("curr_n"), lit(0L)).as("curr_n"))
-
   /** Exact group medians, so DuckDB's `quantile_cont` reproduces values;
     * sketch mode swaps in the mergeable sketch at scale. */
   def groupNumericMetrics(spark: SparkSession, dir: String): DataFrame = {
@@ -178,13 +160,6 @@ object GroupDrift extends graft.OperatorModule {
     withSide(table(spark, dir, sp.tableName), sp.ref)
       .groupBy(col("side"), col(sp.dim).cast("string").as("category"), col(m).cast("string").as("v"))
       .agg(count(lit(1)).as("cnt"))
-
-  /** Per-category (ref_n, curr_n) row counts recovered from the value-count
-    * frame (the v groups partition the rows, nulls included). */
-  private def countsFromVc(vc: DataFrame): DataFrame =
-    vc.groupBy("category").agg(
-      coalesce(sum(when(col("side") === "ref", col("cnt"))), lit(0L)).as("ref_n"),
-      coalesce(sum(when(col("side") === "curr", col("cnt"))), lit(0L)).as("curr_n"))
 
   /** Top-10 value frequencies per (category, v), plus each side's row count. */
   private def catPivot(vc: DataFrame): DataFrame = {
@@ -309,51 +284,89 @@ object GroupDrift extends graft.OperatorModule {
 
   /** [[groupDriftVerdict]] without the final sort (see
     * NumericDrift.driftScoreFrame for why Report's cache wants it). */
-  private[drift] def groupDriftVerdictFrame(spark: SparkSession, dir: String): DataFrame = {
-    val per = specs.map { sp =>
-      // UNCACHED (r17): np feeds the numeric component projections, whose
-      // shared exchange dedupes (ReusedExchange), while a fresh
-      // registered-cold cache got stampeded by the concurrent consumers
-      // (see NumericDrift.driftScoreFrame). Eligibility ranks np's own rows
-      // (keepEligible): a second aggregate for the counts would be pruned
-      // differently and scan the table again. Every metric row of an
-      // eligible category repeats its row_pct component, which only MAX
-      // reads; categories without one are not eligible and drop after the
-      // verdict aggregate, as the oracle's join drops them.
-      val np = keepEligible(numPivot(spark, dir, sp))
-      val numComps = Seq(
-        ("null", "ABS(curr_nulls * 1e0 / curr_n - ref_nulls * 1e0 / ref_n)"),
-        ("mean", s"ABS(${pctChangeSql("ref_mean", "curr_mean")})"),
-        ("std", s"ABS(${pctChangeSql("ref_std", "curr_std")})"),
-        ("median", s"ABS(${pctChangeSql("ref_med", "curr_med")})"),
-        ("row_pct", pctChangeSql("ref_n", "curr_n")))
-        .map { case (k, e) => np.selectExpr("category", s"'$k' AS kind", s"$e AS value") }
-        .reduce(_ union _)
-      val catComps = sp.catMetrics.map { m =>
-        // one scan for the whole categorical side: the frequency pivot AND
-        // the null census both derive from the shared value-count frame
-        // (the v-null group IS the null count); uncached — see np above
-        val vc = vcFrame(spark, dir, sp, m)
-        val cm = catPivot(vc)
-          .groupBy("category").agg(catAggs.map(expr).head, catAggs.map(expr).tail: _*)
-        val cn = vc.groupBy("category").agg(
-            sum(when(col("side") === "ref", col("cnt"))).as("ref_n"),
-            sum(when(col("side") === "ref", when(col("v").isNull, col("cnt")).otherwise(0L))).as("ref_nulls"),
-            sum(when(col("side") === "curr", col("cnt"))).as("curr_n"),
-            sum(when(col("side") === "curr", when(col("v").isNull, col("cnt")).otherwise(0L))).as("curr_nulls"))
-        cn.selectExpr("category", "'null' AS kind",
-            "ABS(curr_nulls * 1e0 / curr_n - ref_nulls * 1e0 / ref_n) AS value")
-          .union(cm.selectExpr("category", "'freq' AS kind", "avg_freq_drift AS value"))
-          .union(cm.selectExpr("category", "'distinct_pct' AS kind",
-            s"ABS(${pctChangeSql("ref_distinct", "curr_distinct")}) AS value"))
-      }.reduce(_ union _)
-      numComps.union(catComps)
-        .groupBy("category").agg(verdictAggs.map(expr).head, verdictAggs.map(expr).tail: _*)
-        .filter(col("row_pct_change").isNotNull)
-        .select(lit(sp.tableName).as("table_name"), lit(sp.dim).as("dimension"), col("*"))
-        .selectExpr(verdictFinal: _*)
+  private[drift] def groupDriftVerdictFrame(spark: SparkSession, dir: String): DataFrame =
+    specs.map(sp => verdictOf(withSide(table(spark, dir, sp.tableName), sp.ref),
+        Seq(sp.dim), sp.numMetrics, sp.catMetrics, sp.tableName).drop("dim_ix"))
+      .reduce(_ union _)
+
+  /** O33 verdict rows of every dimension of `dims` over a side-tagged frame,
+    * keyed by `dim_ix`, the dimension's index in `dims`. A dimension's metrics
+    * are `numMetrics` and the `catMetrics` other than itself. Two stacked
+    * aggregates feed every dimension and metric at once: one per (dimension,
+    * category) with side-conditional numeric stats, which also ranks
+    * eligibility, and one per (dimension, category, metric, value) with both
+    * sides' counts, whose window gives the totals and top-10 ranks. The
+    * exchanges are therefore the same whatever the number of dimensions or
+    * metrics. Every division is guarded: eligible categories have ≥20 rows
+    * on each side. */
+  private def verdictOf(tagged: DataFrame, dims: Seq[String], numMetrics: Seq[String],
+      catMetrics: Seq[String], label: String): DataFrame = {
+    val sides = Seq("ref", "curr")
+    def onSide(s: String, c: Column): Column = when(col("side") === s, c)
+    def stackOf(rows: Seq[String], as: String): String =
+      s"stack(${rows.size}, ${rows.mkString(", ")}) AS ($as)"
+    def dimRow(d: String, i: Int) = s"$i, ${sqlStr(d)}, CAST(${sqlIdent(d)} AS STRING)"
+
+    // per (dimension, category): row counts and every numeric metric's stats
+    val numAggs = sides.map(s => count(onSide(s, lit(1))).as(s"${s}_n")) ++
+      numMetrics.zipWithIndex.flatMap { case (m, j) => sides.flatMap { s =>
+        Seq(
+          sum(when(col("side") === s && col(m).isNull, 1L).otherwise(0L)).as(s"${s}_nulls_$j"),
+          coalesce(avg(onSide(s, col(m))), lit(0.0)).as(s"${s}_mean_$j"),
+          coalesce(stddev(onSide(s, col(m))), lit(0.0)).as(s"${s}_std_$j"),
+          coalesce(median(s"CASE WHEN side = '$s' THEN ${sqlIdent(m)} END"), lit(0.0))
+            .as(s"${s}_med_$j"))
+      } }
+    val eligible = keepEligible(tagged
+      .select((col("side") +: numMetrics.map(col)) :+
+        expr(stackOf(dims.zipWithIndex.map((dimRow _).tupled), "dim_ix, dimension, category")): _*)
+      .groupBy("dim_ix", "dimension", "category").agg(numAggs.head, numAggs.tail: _*), "dim_ix")
+    val numComps = numMetrics.indices.flatMap { j => Seq(
+        "null" -> s"ABS(curr_nulls_$j * 1e0 / curr_n - ref_nulls_$j * 1e0 / ref_n)",
+        "mean" -> s"ABS(${pctChangeSql(s"ref_mean_$j", s"curr_mean_$j")})",
+        "std" -> s"ABS(${pctChangeSql(s"ref_std_$j", s"curr_std_$j")})",
+        "median" -> s"ABS(${pctChangeSql(s"ref_med_$j", s"curr_med_$j")})")
+      } :+ ("row_pct" -> pctChangeSql("ref_n", "curr_n"))
+    val comps = eligible.selectExpr("dim_ix", "dimension", "category",
+      stackOf(numComps.map { case (k, e) => s"'$k', CAST($e AS DOUBLE)" }, "kind, value"))
+
+    // per (dimension, category, metric, value): both sides' counts, then the
+    // category's totals and each side's top-10 frequencies (over all rows
+    // incl. nulls, group_analyzer.py:378-387) in one window
+    val catRows = for ((d, i) <- dims.zipWithIndex; m <- catMetrics if m != d)
+      yield s"${dimRow(d, i)}, ${sqlStr(m)}, CAST(${sqlIdent(m)} AS STRING)"
+    val catComps = if (catRows.isEmpty) None else Some {
+      val w = Window.partitionBy("dim_ix", "dimension", "category", "metric")
+      def top10(s: String): Column = {
+        val cnt = col(s"${s}_cnt")
+        when(cnt > 0 && row_number().over(w.orderBy(cnt.desc, col("v").asc)) <= 10,
+          cnt / sum(cnt).over(w))
+      }
+      def nulls(s: String) = sum(when(col("v").isNull, col(s"${s}_cnt")).otherwise(0L)).as(s"${s}_nulls")
+      val catAggExprs = Seq(max("ref_n").as("ref_n"), max("curr_n").as("curr_n"),
+        nulls("ref"), nulls("curr")) ++ catAggs.map(expr)
+      tagged.select(col("side"), expr(stackOf(catRows, "dim_ix, dimension, category, metric, v")))
+        .groupBy("dim_ix", "dimension", "category", "metric", "v")
+        .agg(count(onSide("ref", lit(1))).as("ref_cnt"), count(onSide("curr", lit(1))).as("curr_cnt"))
+        .select(col("*"), top10("ref").as("p"), top10("curr").as("q"),
+          sum("ref_cnt").over(w).as("ref_n"), sum("curr_cnt").over(w).as("curr_n"))
+        .groupBy("dim_ix", "dimension", "category", "metric")
+        .agg(catAggExprs.head, catAggExprs.tail: _*)
+        .filter(col("ref_n") >= MinGroupRows && col("curr_n") >= MinGroupRows)
+        .selectExpr("dim_ix", "dimension", "category", stackOf(Seq(
+          "'null', ABS(curr_nulls * 1e0 / curr_n - ref_nulls * 1e0 / ref_n)",
+          "'freq', CAST(avg_freq_drift AS DOUBLE)",
+          s"'distinct_pct', CAST(ABS(${pctChangeSql("ref_distinct", "curr_distinct")}) AS DOUBLE)"),
+          "kind, value"))
     }
-    per.reduce(_ union _)
+
+    // categories outside the top 20 carry no row_pct component and drop
+    (comps +: catComps.toSeq).reduce(_ union _)
+      .groupBy("dim_ix", "dimension", "category")
+      .agg(verdictAggs.map(expr).head, verdictAggs.map(expr).tail: _*)
+      .filter(col("row_pct_change").isNotNull)
+      .withColumn("table_name", lit(label))
+      .selectExpr("dim_ix" +: verdictFinal: _*)
   }
 
   def groupDriftVerdictSql: String = {
@@ -374,96 +387,19 @@ object GroupDrift extends graft.OperatorModule {
 
   // ------------------------------------------------- generic pair entry
 
-  /** Generic O32/O33 for an arbitrary snapshot pair: per-category verdict
-    * over one dimension. Same two-shuffles-per-dimension plan as the query
-    * path. */
+  /** Generic O32/O33 for an arbitrary snapshot pair: per-category verdicts
+    * of every dimension of `dims` from one call of the gate's verdict
+    * function, in dimension order, then category. */
+  def verdictForPair(ref: DataFrame, curr: DataFrame, dims: Seq[String],
+      numMetrics: Seq[String], catMetrics: Seq[String], label: String = "pair"): DataFrame =
+    verdictOf(NumericDrift.tagPair(ref, curr, (dims ++ numMetrics ++ catMetrics).distinct),
+        dims, numMetrics, catMetrics, label)
+      .orderBy("dim_ix", "category").drop("dim_ix")
+
+  /** [[verdictForPair]] over one dimension. */
   def forPair(ref: DataFrame, curr: DataFrame, dim: String,
-      numMetrics: Seq[String], catMetrics: Seq[String],
-      scope: Option[CacheScope] = None): DataFrame = {
-    // a monitoring loop passes a CacheScope so the cached pivot/value-count
-    // frames (new plans per call — fresh data) are releasable; without one
-    // they stay Spark-cached for the session (one-shot process semantics)
-    def cached(df: DataFrame): DataFrame = scope.fold(df.cache())(_.cached(df))
-    val allCols = (Seq(dim) ++ numMetrics ++ catMetrics).distinct
-    val tagged = NumericDrift.tagPair(ref, curr, allCols)
-
-    // same one-scan discipline as the query path: the numeric pivot and
-    // the per-metric value-count frames are the ONLY scans of the pair;
-    // eligibility and null censuses derive from those cached aggregates
-    // (caching the tagged pair itself would pin a corpus-sized frame)
-    val npOpt = if (numMetrics.isEmpty) None else Some {
-      val aggs = count(lit(1)).as("n") +: numMetrics.flatMap { m =>
-        Seq(
-          sum(when(col(m).isNull, 1L).otherwise(0L)).as(s"${m}__nulls"),
-          coalesce(avg(col(m)), lit(0.0)).as(s"${m}__mean"),
-          coalesce(stddev(col(m)), lit(0.0)).as(s"${m}__std"),
-          coalesce(median(m), lit(0.0)).as(s"${m}__med"))
-      }
-      val rows = numMetrics.map { m =>
-        s"'$m', ${m}__nulls, ${m}__mean, ${m}__std, ${m}__med"
-      }.mkString(", ")
-      val long = tagged
-        .groupBy(col("side"), col(dim).cast("string").as("category"))
-        .agg(aggs.head, aggs.tail: _*)
-        .select(col("side"), col("category"), col("n"),
-          expr(s"stack(${numMetrics.size}, $rows) as (metric, nulls, mean, std, med)"))
-      val pivAggs = Seq("n", "nulls", "mean", "std", "med").flatMap { c => Seq(
-        max(when(col("side") === "ref", col(c))).as(s"ref_$c"),
-        max(when(col("side") === "curr", col(c))).as(s"curr_$c")) }
-      cached(long.groupBy("category", "metric").agg(pivAggs.head, pivAggs.tail: _*)
-        .filter(col("ref_n").isNotNull && col("curr_n").isNotNull))
-    }
-    val vcs = catMetrics.filterNot(_ == dim).map { m =>
-      m -> cached(tagged
-        .groupBy(col("side"), col(dim).cast("string").as("category"), col(m).cast("string").as("v"))
-        .agg(count(lit(1)).as("cnt")))
-    }
-
-    val counts = npOpt.map(countsFromNumPivot)
-      .orElse(vcs.headOption.map { case (_, vc) => countsFromVc(vc) })
-      .getOrElse(tagged
-        .groupBy(col("side"), col(dim).cast("string").as("category"))
-        .agg(count(lit(1)).as("n"))
-        .groupBy("category").agg(
-          coalesce(max(when(col("side") === "ref", col("n"))), lit(0L)).as("ref_n"),
-          coalesce(max(when(col("side") === "curr", col("n"))), lit(0L)).as("curr_n")))
-    val elig = eligibleFromCounts(counts)
-
-    val numComps = npOpt.toSeq.flatMap { piv =>
-      Seq(
-        ("null", "ABS(curr_nulls * 1e0 / curr_n - ref_nulls * 1e0 / ref_n)"),
-        ("mean", s"ABS(${pctChangeSql("ref_mean", "curr_mean")})"),
-        ("std", s"ABS(${pctChangeSql("ref_std", "curr_std")})"),
-        ("median", s"ABS(${pctChangeSql("ref_med", "curr_med")})"))
-        .map { case (k, e) => piv.selectExpr("category", s"'$k' AS kind", s"$e AS value") }
-    }
-
-    val catComps = vcs.flatMap { case (_, vc) =>
-      val cm = catPivot(vc)
-        .groupBy("category").agg(catAggs.map(expr).head, catAggs.map(expr).tail: _*)
-      val cn = vc.groupBy("category").agg(
-          sum(when(col("side") === "ref", col("cnt"))).as("ref_n"),
-          sum(when(col("side") === "ref", when(col("v").isNull, col("cnt")).otherwise(0L))).as("ref_nulls"),
-          sum(when(col("side") === "curr", col("cnt"))).as("curr_n"),
-          sum(when(col("side") === "curr", when(col("v").isNull, col("cnt")).otherwise(0L))).as("curr_nulls"))
-        .filter(col("ref_n").isNotNull && col("curr_n").isNotNull)
-      Seq(
-        cn.selectExpr("category", "'null' AS kind",
-          "ABS(curr_nulls * 1e0 / curr_n - ref_nulls * 1e0 / ref_n) AS value"),
-        cm.selectExpr("category", "'freq' AS kind", "avg_freq_drift AS value"),
-        cm.selectExpr("category", "'distinct_pct' AS kind",
-          s"ABS(${pctChangeSql("ref_distinct", "curr_distinct")}) AS value"))
-    }
-
-    val rowComp = elig.selectExpr("category", "'row_pct' AS kind",
-      s"${pctChangeSql("ref_n", "curr_n")} AS value")
-    (numComps ++ catComps :+ rowComp).reduce(_ union _)
-      .join(elig.select("category"), "category")
-      .groupBy("category").agg(verdictAggs.map(expr).head, verdictAggs.map(expr).tail: _*)
-      .select(lit("pair").as("table_name"), lit(dim).as("dimension"), col("*"))
-      .selectExpr(verdictFinal: _*)
-      .orderBy("category")
-  }
+      numMetrics: Seq[String], catMetrics: Seq[String]): DataFrame =
+    verdictForPair(ref, curr, Seq(dim), numMetrics, catMetrics)
 
   // ------------------------------------- one-pass multi-dim slices (O32+)
 

@@ -259,8 +259,10 @@ case class DriftReport(
     executionTimeSec: Double)
 
 /** O40 orchestrator: run every analyzer family over a snapshot pair per the
-  * config flags and assemble the nested report. Each family is one or two
-  * aggregation jobs (SURVEY.md §4.2 rewrites), never per-column job storms. */
+  * config flags and assemble the nested report. The categorical families and
+  * the group-drift verdict each run one stacked pass over all their columns
+  * and dimensions, so their job counts do not grow with the column count
+  * (GoldenDriftSpec pins this; SURVEY.md §4.2 anti-patterns 1 and 2). */
 class DriftDetector(spark: SparkSession) {
 
   /** Config-file entry point, the reference's
@@ -455,8 +457,7 @@ class DriftDetector(spark: SparkSession) {
           CategoricalDrift.rareCategoriesForPair(ref, curr, catCols,
             maxFreq = config.rareValueThreshold)),
         safe("group_drift", config.analyzeGroups && groupDims.nonEmpty)(
-          groupDims.map(d => GroupDrift.forPair(ref, curr, d, numericCols,
-            catCols.filterNot(_ == d), scope = Some(scope))).reduce(_ union _)),
+          GroupDrift.verdictForPair(ref, curr, groupDims, numericCols, catCols)),
         // O26: per-category correlations over the first ≤3 group dimensions,
         // matching the reference's group_columns[:3] loop
         // (correlation_analyzer.py:163-171) — one groupBy(side, dim) pass each

@@ -64,6 +64,12 @@ package object drift {
     }
   }
 
+  /** A column name as a quoted Spark SQL identifier. */
+  def sqlIdent(name: String): String = "`" + name.replace("`", "``") + "`"
+
+  /** A string as a Spark SQL string literal. */
+  def sqlStr(s: String): String = "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
   /** Tag rows ref/curr in one pass; groupBy("side") then does a map-side
     * partial agg — one job for both snapshots. */
   def withSide(df: DataFrame, refPred: Column): DataFrame =

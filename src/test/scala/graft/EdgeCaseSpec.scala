@@ -635,4 +635,83 @@ class EdgeCaseSpec extends SparkSpec {
     val nullRow = rows2.find(_.isNullAt(2)).get
     assert(nullRow.getLong(4) == 25 && nullRow.getLong(5) == 25)
   }
+
+  // Degenerate shapes through the stacked categorical census and the
+  // group-drift verdict, with every output row pinned: the rows are the
+  // ones a separate pass per column and per dimension gives.
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] = df.collect().map(_.toString).toSeq
+
+  test("stacked census: a column null on both sides keeps its NULL divergence") {
+    val ref = Seq.tabulate(60)(i => (Option.empty[String], "k" + (i % 3))).toDF("c", "g")
+    val curr = Seq.tabulate(50)(i => (Option.empty[String], "k" + (i % 4))).toDF("c", "g")
+    val cols = Seq("c", "g")
+    assert(rowsOf(CategoricalDrift.categoricalDriftForPair(ref, curr, cols)) == Seq(
+      "[pair,c,null,1.0,0.0,null,null,null,,0.6,High]",
+      "[pair,g,0.3634,0.01,0.0,0.333333,0.0,true,distribution_change,statistical_significance," +
+        "new_categories,0.773333,Critical]"))
+    assert(rowsOf(CategoricalDrift.jsFullForPair(ref, curr, cols)) == Seq(
+      "[pair,c,0.0,false,0,0]", "[pair,g,0.3634,true,1,0]"))
+    assert(rowsOf(CategoricalDrift.rareValueChangesForPair(ref, curr, cols, thr = 0.3)) == Seq(
+      "[pair,g,new_rare,k0,0.333333,0.26,20,13]",
+      "[pair,g,new_rare,k1,0.333333,0.26,20,13]",
+      "[pair,g,new_rare,k2,0.333333,0.24,20,12]"))
+    assert(rowsOf(CategoricalDrift.rareCategoriesForPair(ref, curr, cols,
+        minCount = 1, maxFreq = 0.5)) == Seq(
+      "[pair,g,k3,0,12,0.0,0.24,1.0,new_rare_category,high]",
+      "[pair,g,k2,20,12,0.333333,0.24,-0.4,decreased_rare_category,medium]",
+      "[pair,g,k0,20,13,0.333333,0.26,-0.35,decreased_rare_category,medium]",
+      "[pair,g,k1,20,13,0.333333,0.26,-0.35,decreased_rare_category,medium]"))
+  }
+
+  test("stacked census and group verdict: an empty current side divides by nothing") {
+    val ref = Seq.tabulate(60)(i => ("v" + (i % 4), "k" + (i % 2), i.toDouble)).toDF("c", "g", "x")
+    val curr = ref.limit(0)
+    val cols = Seq("c", "g")
+    assert(rowsOf(CategoricalDrift.categoricalDriftForPair(ref, curr, cols)) == Seq(
+      "[pair,c,0.707107,1.0,null,0.0,1.0,true,distribution_change,missing_categories,0.7,High]",
+      "[pair,g,0.707107,1.0,null,0.0,1.0,true,distribution_change,missing_categories,0.7,High]"))
+    assert(rowsOf(CategoricalDrift.jsFullForPair(ref, curr, cols)) == Seq(
+      "[pair,c,0.707107,true,0,4]", "[pair,g,0.707107,true,0,2]"))
+    assert(rowsOf(CategoricalDrift.rareValueChangesForPair(ref, curr, cols, thr = 0.3)).isEmpty)
+    assert(rowsOf(CategoricalDrift.rareCategoriesForPair(ref, curr, cols,
+        minCount = 1, maxFreq = 0.3)) ==
+      (0 to 3).map(v => s"[pair,c,v$v,15,0,0.25,0.0,-1.0,disappeared_rare_category,high]"))
+    assert(rowsOf(GroupDrift.verdictForPair(ref, curr, Seq("g", "c"), Seq("x"), cols)).isEmpty)
+  }
+
+  test("group verdict: a dimension with no eligible category adds no rows") {
+    val ref = Seq.tabulate(100)(i => ("s" + (i % 10), "k" + (i % 2), i.toDouble)).toDF("s", "h", "x")
+    val curr = Seq.tabulate(90)(i => ("s" + (i % 9), "k" + (i % 3), i * 1.1)).toDF("s", "h", "x")
+    assert(rowsOf(GroupDrift.forPair(ref, curr, "s", Seq("x"), Seq("h"))).isEmpty)
+    assert(rowsOf(GroupDrift.verdictForPair(ref, curr, Seq("s", "h"), Seq("x"), Seq("s", "h"))) == Seq(
+      "[pair,h,k0,0.030637,1,-0.4,true]", "[pair,h,k1,0.029814,1,-0.4,true]"))
+  }
+
+  test("group verdict with categorical metrics only, in dimension order") {
+    val ref = Seq.tabulate(200)(i =>
+      ("v" + (i % 4), "k" + (i % 3), if (i % 7 == 0) null else "m" + (i % 5))).toDF("c", "g", "m")
+    val curr = Seq.tabulate(180)(i =>
+      ("v" + (i % 5), "k" + (i % 3), if (i % 4 == 0) null else "m" + (i % 6))).toDF("c", "g", "m")
+    val byG = Seq("[pair,g,k0,0.078731,2,-0.104478,true]", "[pair,g,k1,0.078731,2,-0.104478,true]",
+      "[pair,g,k2,0.063636,1,-0.090909,true]")
+    assert(rowsOf(GroupDrift.forPair(ref, curr, "g", Nil, Seq("c", "m"))) == byG)
+    assert(rowsOf(GroupDrift.verdictForPair(ref, curr, Seq("g", "c"), Nil, Seq("c", "g", "m"))) ==
+      byG ++ Seq("[pair,c,v0,0.040278,1,-0.28,true]", "[pair,c,v1,0.046389,1,-0.28,true]",
+        "[pair,c,v2,0.045833,1,-0.28,true]", "[pair,c,v3,0.045833,1,-0.28,true]"))
+  }
+
+  test("stacked census and group verdict accept column names that need quoting") {
+    // ≥20 rows per category on both sides, so both dimensions have rows
+    val ref = Seq.tabulate(120)(i => ("v" + (i % 3), "k" + (i % 2), i.toDouble))
+      .toDF("my col", "it's", "x-y")
+    val curr = Seq.tabulate(120)(i => ("v" + (i % 4), "k" + (i % 2), i * 1.5))
+      .toDF("my col", "it's", "x-y")
+    val cols = Seq("my col", "it's")
+    def names(df: org.apache.spark.sql.DataFrame, field: String) =
+      df.collect().map(_.getAs[String](field)).toSeq.distinct.sorted
+    assert(names(CategoricalDrift.categoricalDriftForPair(ref, curr, cols), "column_name") == cols.sorted)
+    assert(names(CategoricalDrift.jsFullForPair(ref, curr, cols), "column_name") == cols.sorted)
+    assert(names(GroupDrift.verdictForPair(ref, curr, cols, Seq("x-y"), cols), "dimension") == cols.sorted)
+  }
 }

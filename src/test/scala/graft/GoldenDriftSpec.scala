@@ -213,6 +213,32 @@ class GoldenDriftSpec extends SparkSpec {
       verdicts(CategoricalDrift.categoricalDriftForPair(v1, v3, cat)))
   }
 
+  test("categorical and group-drift jobs per report do not grow with the column count") {
+    // the same pair with 2 and with 7 categorical columns (3 group
+    // dimensions by default on the wide one), types pinned so only the
+    // column count differs
+    import org.apache.spark.sql.functions.{col, expr}
+    val base = Seq("numeric_normal", "numeric_uniform", "category_balanced", "category_imbalanced")
+      .map(col)
+    val extra = (1 to 5).map(k => expr(s"CAST((id * ${k + 1}) % ${k + 2} AS STRING)").as(s"c$k"))
+    def narrow(v: org.apache.spark.sql.DataFrame) = v.select(base: _*)
+    def wide(v: org.apache.spark.sql.DataFrame) = v.select(base ++ extra: _*)
+    def families(ref: org.apache.spark.sql.DataFrame, curr: org.apache.spark.sql.DataFrame) = {
+      val cat = ref.columns.filter(_.startsWith("c"))
+      val types = ref.columns.map(c => c -> (if (cat.contains(c)) "categorical" else "numerical")).toMap
+      val (r, log) = jobsOf(detector.detectDrift(ref, curr,
+        DriftConfig(sampleSize = 0, customColumnTypes = types)))
+      assert(r.errors.isEmpty, r.errors.mkString("; "))
+      assert(r.categorical.size == cat.length && r.groupDrift.count() > 0)
+      Seq("categorical", "js_full", "rare_value_changes", "rare_categories", "group_drift")
+        .map(f => f -> log.jobs.values.count(_ == s"drift:$f")).toMap
+    }
+    val two = families(narrow(v1), narrow(v3))
+    val seven = families(wide(v1), wide(v3))
+    assert(seven == two, s"jobs per family with 2 columns $two, with 7 columns $seven")
+    assert(two.values.forall(_ > 0), two)
+  }
+
   test("every job of one detectDrift carries a drift:<family> description") {
     val cfg = DriftConfig(profile = "deep_dive", sampleSize = 2500,
       targetColumn = Some("numeric_normal"))
