@@ -114,29 +114,30 @@ object CategoricalDrift extends graft.OperatorModule {
   // ---------------------------------------------------------- the census
   //
   // The categorical families detectDrift runs (O19, O22, O23, O35) are
-  // projections of ONE frame per call — the census — plus at most one
-  // groupBy(column_name) that reuses the census window's partitioning. A call
-  // therefore runs the same exchanges for 2 columns as for 200. The gate
-  // queries apply the same family functions to `withSide(table, split.ref)`.
+  // projections of ONE frame per call — the census — plus a fixed handful of
+  // groupBy/window passes keyed by column. A call therefore runs the same
+  // exchanges for 2 columns as for 200. The gate queries apply the same
+  // family functions to `withSide(table, split.ref)`.
 
   /** Per-(column_name, value) counts of a side-tagged frame, null group kept:
-    * `ref_cnt`/`curr_cnt` on one row; per column, each side's total rows
-    * (`ref_n`), non-null rows (`ref_nn`) and rank among non-null values by
-    * (count desc, value asc) (`ref_rk`; values the side lacks rank last).
-    * One stack, one groupBy, one window partitioned by column_name. */
+    * `ref_cnt`/`curr_cnt` on one row. One stack, one groupBy. */
   private def census(tagged: DataFrame, cols: Seq[String]): DataFrame = {
     val rows = cols.map(c => s"${sqlStr(c)}, CAST(${sqlIdent(c)} AS STRING)").mkString(", ")
-    val w = Window.partitionBy("column_name")
-    def nonNull(cnt: String) = sum(when(col("value").isNotNull, col(cnt)).otherwise(0L)).over(w)
-    def rank(cnt: String) =
-      row_number().over(w.orderBy(col("value").isNull, col(cnt).desc, col("value").asc))
     tagged.select(col("side"), expr(s"stack(${cols.size}, $rows) AS (column_name, value)"))
       .groupBy("column_name", "value").agg(
         count(when(col("side") === "ref", 1)).as("ref_cnt"),
         count(when(col("side") === "curr", 1)).as("curr_cnt"))
-      .select(col("*"), sum("ref_cnt").over(w).as("ref_n"), sum("curr_cnt").over(w).as("curr_n"),
-        nonNull("ref_cnt").as("ref_nn"), nonNull("curr_cnt").as("curr_nn"),
-        rank("ref_cnt").as("ref_rk"), rank("curr_cnt").as("curr_rk"))
+  }
+
+  /** The census with each column's per-side total rows (`ref_n`) and
+    * non-null rows (`ref_nn`) on every row, from a groupBy(column_name)
+    * broadcast back — no window keyed by column alone, so the values of a
+    * high-cardinality column stay spread over tasks. */
+  private def withTotals(cen: DataFrame): DataFrame = {
+    def nonNull(cnt: String) = sum(when(col("value").isNotNull, col(cnt)).otherwise(0L))
+    cen.join(broadcast(cen.groupBy("column_name").agg(sum("ref_cnt").as("ref_n"),
+      sum("curr_cnt").as("curr_n"), nonNull("ref_cnt").as("ref_nn"), nonNull("curr_cnt").as("curr_nn"))),
+      "column_name")
   }
 
   /** The census of each categorical split of the gate tables. */
@@ -145,7 +146,7 @@ object CategoricalDrift extends graft.OperatorModule {
 
   /** Per-value counts and frequencies over all rows, absent side → NULL. */
   private def freqPivotOf(cen: DataFrame): DataFrame =
-    cen.selectExpr("column_name", "value",
+    withTotals(cen).selectExpr("column_name", "value",
       "CASE WHEN ref_cnt > 0 THEN ref_cnt END AS ref_cnt0",
       "CASE WHEN curr_cnt > 0 THEN curr_cnt END AS curr_cnt0",
       "CASE WHEN ref_cnt > 0 THEN ref_cnt * 1e0 / ref_n END AS ref_freq0",
@@ -375,10 +376,10 @@ object CategoricalDrift extends graft.OperatorModule {
     S.categorical.map(sp => jsFullOf(splitCensus(spark, dir, sp), sp.tableName, 0.1))
       .reduce(_ union _).orderBy("table_name", "column_name")
 
-  /** O22 per column of a census: the full-support distributions, aggregated
-    * over the census window's partitioning (no further exchange). */
+  /** O22 per column of a census: the full-support distributions, in one
+    * groupBy(column_name). */
   private def jsFullOf(cen: DataFrame, label: String, threshold: Double): DataFrame =
-    cen.selectExpr("column_name",
+    withTotals(cen).selectExpr("column_name",
         "CASE WHEN ref_cnt > 0 THEN ref_cnt * 1e0 / ref_n END AS p",
         "CASE WHEN curr_cnt > 0 THEN curr_cnt * 1e0 / curr_n END AS q")
       .groupBy("column_name")
@@ -640,19 +641,30 @@ object CategoricalDrift extends graft.OperatorModule {
     s"WHEN chi_square > ($chiCv) THEN 0.05 " +
     s"ELSE LEAST(1.0, GREATEST(0.05, 1.0 - (chi_square / ($chiCv)) * 0.95)) END"
 
-  /** O19 per column of a census, in one groupBy over the census window's
-    * partitioning: JS over the top-20 distributions of non-null values (O17
-    * as called by O19), χ² over the non-null values with each side's
-    * non-null total as its sum, and the null proportions. A column with no
+  /** O19 per column of a census, in one groupBy(column_name): JS over the
+    * top-20 distributions of non-null values (O17 as called by O19), χ² over
+    * the non-null values with each side's non-null total as its sum, and the
+    * null proportions. Each side's top 20 is ranked per (column, side), so
+    * the rank is limited before its exchange and no task sorts a whole
+    * column, and is broadcast back onto the census rows. A column with no
     * non-null value keeps the NULL divergence its empty top-20 sum gives,
     * and a side without rows the NULL null proportion. */
   private def categoricalDriftOf(cen: DataFrame, label: String, exactPValue: Boolean): DataFrame = {
-    val stat = cen
-      .selectExpr("*",
-        "CASE WHEN value IS NOT NULL AND ref_cnt > 0 AND ref_rk <= 20 " +
-          "THEN ref_cnt * 1e0 / ref_nn END AS p",
-        "CASE WHEN value IS NOT NULL AND curr_cnt > 0 AND curr_rk <= 20 " +
-          "THEN curr_cnt * 1e0 / curr_nn END AS q",
+    // the null group drops out through `cnt`: a filter on `value` would push
+    // below the census aggregate and plan a second scan instead of reusing it
+    val top = cen
+      .select(col("column_name"), col("value"), expr("stack(2, " +
+        "'ref', CASE WHEN value IS NOT NULL THEN ref_cnt END, " +
+        "'curr', CASE WHEN value IS NOT NULL THEN curr_cnt END) AS (side, cnt)"))
+      .filter(col("cnt") > 0)
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("column_name", "side").orderBy(col("cnt").desc, col("value").asc)))
+      .filter(col("rk") <= 20)
+      .groupBy("column_name", "value").agg(
+        max(col("side") === "ref").as("ref_top"), max(col("side") === "curr").as("curr_top"))
+    val stat = withTotals(cen).join(broadcast(top), Seq("column_name", "value"), "left")
+      .selectExpr("*", "CASE WHEN ref_top THEN ref_cnt * 1e0 / ref_nn END AS p",
+        "CASE WHEN curr_top THEN curr_cnt * 1e0 / curr_nn END AS q",
         "ref_nn AS ref_sum", "curr_nn AS curr_sum")
       .selectExpr("*", s"CASE WHEN value IS NOT NULL THEN $chiCellSql END AS cell")
       .groupBy("column_name")

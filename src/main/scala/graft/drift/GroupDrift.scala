@@ -391,9 +391,9 @@ object GroupDrift extends graft.OperatorModule {
     * of every dimension of `dims` from one call of the gate's verdict
     * function, in dimension order, then category. */
   def verdictForPair(ref: DataFrame, curr: DataFrame, dims: Seq[String],
-      numMetrics: Seq[String], catMetrics: Seq[String], label: String = "pair"): DataFrame =
+      numMetrics: Seq[String], catMetrics: Seq[String]): DataFrame =
     verdictOf(NumericDrift.tagPair(ref, curr, (dims ++ numMetrics ++ catMetrics).distinct),
-        dims, numMetrics, catMetrics, label)
+        dims, numMetrics, catMetrics, "pair")
       .orderBy("dim_ix", "category").drop("dim_ix")
 
   /** [[verdictForPair]] over one dimension. */

@@ -77,7 +77,7 @@ class GateFamilySpec extends SparkSpec {
     GroupDrift.specs.foreach { sp =>
       val (ref, curr) = halves(sp.tableName, sp.ref)
       assertSameRows(gate, sp.tableName, GroupDrift.verdictForPair(ref, curr, Seq(sp.dim),
-        sp.numMetrics, sp.catMetrics, label = sp.tableName))
+        sp.numMetrics, sp.catMetrics).withColumn("table_name", lit(sp.tableName)))
     }
   }
 }

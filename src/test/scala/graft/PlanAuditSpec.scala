@@ -497,6 +497,25 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("categorical census never windows a whole column in one task") {
+    // a window keyed by column_name alone would send every distinct value of
+    // a high-cardinality column (l_partkey, o_custkey) through one sort; the
+    // census takes its totals from a broadcast aggregate, and only the O19
+    // top-20 rank windows, keyed by (column_name, side)
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.catalyst.expressions.NamedExpression
+    val windowKeys = Seq(
+        graft.drift.CategoricalDrift.categoricalDrift(spark, sf),
+        graft.drift.CategoricalDrift.jsFull(spark, sf),
+        graft.drift.CategoricalDrift.rareValueChanges(spark, sf),
+        graft.drift.CategoricalDrift.rareCategories(spark, sf))
+      .map(df => physicalTree(df).collect { case w: WindowExec =>
+        w.partitionSpec.collect { case n: NamedExpression => n.name }.sorted
+      }.distinct)
+    assert(windowKeys.head == Seq(Seq("column_name", "side")), s"categorical_drift windows: ${windowKeys.head}")
+    assert(windowKeys.tail.forall(_.isEmpty), s"js_full / rare_* windows: ${windowKeys.tail}")
+  }
+
   /** The optimized plans of every query `body` runs, in order — eager
     * sub-aggregates included. */
   private def plansRunBy(body: => Unit): Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = {
