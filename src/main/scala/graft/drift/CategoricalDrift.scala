@@ -27,101 +27,27 @@ object CategoricalDrift extends graft.OperatorModule {
   val ChiSquarePValue = 0.05
   val NullThreshold = 0.005
 
-  // ------------------------------------------------------- building blocks
-
-  /** ALL columns of a table unpivoted through one stack + one
-    * groupBy(side, column, value): per-column branches filter this same
-    * subplan, so Spark's ReusedExchange collapses them to a single scan +
-    * shuffle per table per query (instead of one scan per column). */
-  private def sideCountsMulti(spark: SparkSession, dir: String, sp: S.CatSplit,
-      nonNull: Boolean): DataFrame = {
-    val rows = sp.cols.map(c => s"'$c', CAST($c AS STRING)").mkString(", ")
-    val base = withSide(table(spark, dir, sp.tableName), sp.ref)
-      .select(col("side"), expr(s"stack(${sp.cols.size}, $rows) as (column_name, value)"))
-    (if (nonNull) base.filter(col("value").isNotNull) else base)
-      .groupBy("side", "column_name", "value").agg(count(lit(1)).as("cnt"))
-  }
-
   private def sideCountsSql(sp: S.CatSplit, c: String, nonNull: Boolean): String = {
     val where = if (nonNull) s"WHERE $c IS NOT NULL " else ""
     s"SELECT CASE WHEN ${sp.refSql} THEN 'ref' ELSE 'curr' END AS side, " +
       s"CAST($c AS VARCHAR) AS value, COUNT(*) AS cnt FROM ${sp.tableName} ${where}GROUP BY 1, 2"
   }
 
-  // ------------------------------------- fused all-column building blocks
-  //
-  // Each takes the sideCountsMulti frame (side, column_name, value, cnt —
-  // null-value group kept) and computes a per-column result for EVERY split
-  // column in one groupBy(column_name, ...) pass, so a query over k columns
-  // costs one scan + a handful of shuffles instead of k scalar-agg subplans.
-  // All split columns carry non-null values at every SF, so the per-column
-  // groupBy frames are never empty (no spine join needed).
-
-  /** Per-(column, side) totals: all rows, non-null rows, null rows. */
-  private def sideTotalsMulti(all: DataFrame): DataFrame =
-    all.groupBy("column_name", "side").agg(
-      sum("cnt").as("n"),
-      coalesce(sum(when(col("value").isNotNull, col("cnt"))), lit(0L)).as("nn"),
-      coalesce(sum(when(col("value").isNull, col("cnt"))), lit(0L)).as("nl"))
-
-  /** Per-column ref/curr null proportions. */
-  private def nullPropsMulti(all: DataFrame): DataFrame =
-    sideTotalsMulti(all).groupBy("column_name").agg(
-      max(when(col("side") === "ref", col("nl") * 1e0 / col("n"))).as("ref_null_prop"),
-      max(when(col("side") === "curr", col("nl") * 1e0 / col("n"))).as("curr_null_prop"))
-
-  /** Per-column top-20 per-side distributions (probability over non-null),
-    * pivoted to (column_name, value, p, q). The rank window is partitioned
-    * by (column, side) — never a single-partition global sort. */
-  private def top20DistsMulti(all: DataFrame): DataFrame = {
-    val tot = sideTotalsMulti(all).select(col("column_name"), col("side"), col("nn"))
-    all.filter(col("value").isNotNull)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("column_name", "side").orderBy(col("cnt").desc, col("value").asc)))
-      .filter(col("rk") <= 20)
-      .join(tot, Seq("column_name", "side"))
-      .select(col("column_name"), col("side"), col("value"), (col("cnt") * 1e0 / col("nn")).as("prob"))
-      .groupBy("column_name", "value").agg(
-        max(when(col("side") === "ref", col("prob"))).as("p"),
-        max(when(col("side") === "curr", col("prob"))).as("q"))
-  }
-
-  /** Per-column FULL-support distributions (frequencies over all rows incl.
-    * the null group), pivoted to (column_name, value, p, q). */
-  private def fullDistsMulti(all: DataFrame): DataFrame = {
-    val tot = sideTotalsMulti(all).select(col("column_name"), col("side"), col("n"))
-    all.join(tot, Seq("column_name", "side"))
-      .select(col("column_name"), col("value"), col("side"), (col("cnt") * 1e0 / col("n")).as("prob"))
-      .groupBy("column_name", "value").agg(
-        max(when(col("side") === "ref", col("prob"))).as("p"),
-        max(when(col("side") === "curr", col("prob"))).as("q"))
-  }
-
-  /** Per-column χ² banded p-value, all columns in two groupBy passes. */
-  private def chiPMulti(all: DataFrame): DataFrame = {
-    val piv = all.filter(col("value").isNotNull)
-      .groupBy("column_name", "value").agg(
-        coalesce(sum(when(col("side") === "ref", col("cnt"))), lit(0L)).as("ref_cnt"),
-        coalesce(sum(when(col("side") === "curr", col("cnt"))), lit(0L)).as("curr_cnt"))
-    val sums = piv.groupBy("column_name")
-      .agg(sum("ref_cnt").as("ref_sum"), sum("curr_cnt").as("curr_sum"))
-    piv.join(broadcast(sums), "column_name")
-      .selectExpr("column_name", "value", s"$chiCellSql AS cell")
-      .groupBy("column_name")
-      .agg(expr(chiSumSql).as("chi_square"), (count(lit(1)) - 1).as("dof"))
-  }
-
   // ---------------------------------------------------------- the census
   //
-  // The categorical families detectDrift runs (O19, O22, O23, O35) are
-  // projections of ONE frame per call — the census — plus a fixed handful of
-  // groupBy/window passes keyed by column. A call therefore runs the same
-  // exchanges for 2 columns as for 200. The gate queries apply the same
-  // family functions to `withSide(table, split.ref)`.
+  // Every categorical query here, gate or pair, is a projection of ONE frame
+  // per call — the census — plus a fixed handful of groupBy/window passes
+  // keyed by column. A call therefore runs the same exchanges for 2 columns
+  // as for 200, and each statistic (χ², top-20 JS, null proportion, ...) has
+  // one implementation. The gate queries apply the pair functions to
+  // `withSide(table, split.ref)`. No consumer filters the census on `value`:
+  // the filter would push below the census aggregate, and the branches that
+  // read the unfiltered census would plan a second scan instead of reusing
+  // its exchange.
 
   /** Per-(column_name, value) counts of a side-tagged frame, null group kept:
     * `ref_cnt`/`curr_cnt` on one row. One stack, one groupBy. */
-  private def census(tagged: DataFrame, cols: Seq[String]): DataFrame = {
+  private[drift] def census(tagged: DataFrame, cols: Seq[String]): DataFrame = {
     val rows = cols.map(c => s"${sqlStr(c)}, CAST(${sqlIdent(c)} AS STRING)").mkString(", ")
     tagged.select(col("side"), expr(s"stack(${cols.size}, $rows) AS (column_name, value)"))
       .groupBy("column_name", "value").agg(
@@ -133,7 +59,7 @@ object CategoricalDrift extends graft.OperatorModule {
     * non-null rows (`ref_nn`) on every row, from a groupBy(column_name)
     * broadcast back — no window keyed by column alone, so the values of a
     * high-cardinality column stay spread over tasks. */
-  private def withTotals(cen: DataFrame): DataFrame = {
+  private[drift] def withTotals(cen: DataFrame): DataFrame = {
     def nonNull(cnt: String) = sum(when(col("value").isNotNull, col(cnt)).otherwise(0L))
     cen.join(broadcast(cen.groupBy("column_name").agg(sum("ref_cnt").as("ref_n"),
       sum("curr_cnt").as("curr_n"), nonNull("ref_cnt").as("ref_nn"), nonNull("curr_cnt").as("curr_nn"))),
@@ -141,8 +67,62 @@ object CategoricalDrift extends graft.OperatorModule {
   }
 
   /** The census of each categorical split of the gate tables. */
-  private def splitCensus(spark: SparkSession, dir: String, sp: S.CatSplit): DataFrame =
+  private[drift] def splitCensus(spark: SparkSession, dir: String, sp: S.CatSplit): DataFrame =
     census(withSide(table(spark, dir, sp.tableName), sp.ref), sp.cols)
+
+  /** [[withTotals]] plus each side's top-20 probabilities over its non-null
+    * values: `p`/`q` are NULL outside that side's top 20 (by count desc,
+    * value asc). Each side's top 20 is ranked per (column, side), so the
+    * rank is limited before its exchange and no task sorts a whole column,
+    * and is broadcast back onto the census rows. */
+  private def top20Rows(cen: DataFrame): DataFrame = {
+    // the null group drops out through `cnt`, not through a `value` filter
+    val top = cen
+      .select(col("column_name"), col("value"), expr("stack(2, " +
+        "'ref', CASE WHEN value IS NOT NULL THEN ref_cnt END, " +
+        "'curr', CASE WHEN value IS NOT NULL THEN curr_cnt END) AS (side, cnt)"))
+      .filter(col("cnt") > 0)
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("column_name", "side").orderBy(col("cnt").desc, col("value").asc)))
+      .filter(col("rk") <= 20)
+      .groupBy("column_name", "value").agg(
+        max(col("side") === "ref").as("ref_top"), max(col("side") === "curr").as("curr_top"))
+    withTotals(cen).join(broadcast(top), Seq("column_name", "value"), "left")
+      .selectExpr("*", "CASE WHEN ref_top THEN ref_cnt * 1e0 / ref_nn END AS p",
+        "CASE WHEN curr_top THEN curr_cnt * 1e0 / curr_nn END AS q")
+  }
+
+  /** One row per column of a census, in one groupBy(column_name):
+    *   - the top-20 JS divergence (O17 as called by O19), the top-20
+    *     supports' sizes (`ref_k`, `curr_k`), overlap (`common_k`,
+    *     `new_k`, `missing_k`) and entropies;
+    *   - each side's distinct non-null values;
+    *   - χ² and its dof over the non-null values, each side's non-null
+    *     total as its sum;
+    *   - the totals and each side's null proportion.
+    * Consumers select what they read and column pruning drops the rest. A
+    * column with no non-null value keeps the NULL divergence its empty
+    * top-20 sum gives, and a side without rows the NULL null proportion. */
+  private def columnStats(cen: DataFrame): DataFrame = {
+    def entropy(p: String) = coalesce(sum(expr(s"-$p * log2($p)")), lit(0.0))
+    def distinct(cnt: String) = count(when(col("value").isNotNull && col(cnt) > 0, 1))
+    top20Rows(cen).selectExpr("*", "ref_nn AS ref_sum", "curr_nn AS curr_sum")
+      .selectExpr("*", s"CASE WHEN value IS NOT NULL THEN $chiCellSql END AS cell")
+      .groupBy("column_name")
+      .agg(expr(s"CASE WHEN COUNT(p) + COUNT(q) > 0 THEN SQRT(($jsKlPm + $jsKlQm) / 2) END")
+          .as("js_divergence"),
+        count(col("p")).as("ref_k"), count(col("q")).as("curr_k"),
+        count(when(col("p").isNotNull && col("q").isNotNull, 1)).as("common_k"),
+        count(when(col("q").isNotNull && col("p").isNull, 1)).as("new_k"),
+        count(when(col("p").isNotNull && col("q").isNull, 1)).as("missing_k"),
+        entropy("p").as("ref_entropy"), entropy("q").as("curr_entropy"),
+        distinct("ref_cnt").as("ref_distinct"), distinct("curr_cnt").as("curr_distinct"),
+        expr(chiSumSql).as("chi_square"), (count(col("value")) - 1).as("dof"),
+        max("ref_n").as("ref_n"), max("curr_n").as("curr_n"),
+        max("ref_nn").as("ref_nn"), max("curr_nn").as("curr_nn"))
+      .selectExpr("*", "CASE WHEN ref_n > 0 THEN (ref_n - ref_nn) * 1e0 / ref_n END AS ref_null_prop",
+        "CASE WHEN curr_n > 0 THEN (curr_n - curr_nn) * 1e0 / curr_n END AS curr_null_prop")
+  }
 
   /** Per-value counts and frequencies over all rows, absent side → NULL. */
   private def freqPivotOf(cen: DataFrame): DataFrame =
@@ -162,13 +142,11 @@ object CategoricalDrift extends graft.OperatorModule {
   /** Per-side value counts + relative frequency over non-null rows. */
   def valueCounts(spark: SparkSession, dir: String): DataFrame = {
     val per = S.categorical.map { sp =>
-      // UNCACHED (r17): consumed by the totals agg and the join below,
-      // whose shared exchange dedupes (ReusedExchange) — a fresh
-      // registered-cold cache got stampeded instead (see
-      // NumericDrift.driftScoreFrame)
-      val cnts = sideCountsMulti(spark, dir, sp, nonNull = true)
-      val totals = cnts.groupBy("column_name", "side").agg(sum("cnt").as("total"))
-      cnts.join(totals, Seq("column_name", "side"))
+      withTotals(splitCensus(spark, dir, sp))
+        .select(col("column_name"), col("value"), expr("stack(2, " +
+          "'ref', CASE WHEN value IS NOT NULL THEN ref_cnt END, ref_nn, " +
+          "'curr', CASE WHEN value IS NOT NULL THEN curr_cnt END, curr_nn) AS (side, cnt, total)"))
+        .filter(col("cnt") > 0)
         .select(lit(sp.tableName).as("table_name"), col("column_name"),
           col("side"), col("value"), col("cnt"),
           r6(col("cnt") / col("total")).as("freq"))
@@ -276,30 +254,12 @@ object CategoricalDrift extends graft.OperatorModule {
       s"FROM (${sideCountsSql(sp, c, nonNull = true)}) t) r WHERE rk <= 20 GROUP BY value"
 
   /** O16 distribution-diff summary per split column (top-20 supports). */
-  def distDiff(spark: SparkSession, dir: String): DataFrame = {
-    val per = S.categorical.map { sp =>
-      // UNCACHED (r17): three consumers (top-20 sets, distinct counts,
-      // null props) share the count exchange — see
-      // NumericDrift.driftScoreFrame
-      val all = sideCountsMulti(spark, dir, sp, nonNull = false)
-      val sets = top20DistsMulti(all).groupBy("column_name").agg(
-        sum(when(col("p").isNotNull, 1).otherwise(0)).as("ref_k"),
-        sum(when(col("q").isNotNull, 1).otherwise(0)).as("curr_k"),
-        sum(when(col("p").isNotNull && col("q").isNotNull, 1).otherwise(0)).as("common_k"),
-        coalesce(sum(when(col("p").isNotNull, expr("-p * log2(p)"))), lit(0.0)).as("ref_entropy"),
-        coalesce(sum(when(col("q").isNotNull, expr("-q * log2(q)"))), lit(0.0)).as("curr_entropy"))
-      val distincts = all.filter(col("value").isNotNull)
-        .groupBy("column_name", "side").agg(count(lit(1)).as("k"))
-        .groupBy("column_name").agg(
-          coalesce(max(when(col("side") === "ref", col("k"))), lit(0L)).as("ref_distinct"),
-          coalesce(max(when(col("side") === "curr", col("k"))), lit(0L)).as("curr_distinct"))
-      val nulls = nullPropsMulti(all)
-      sets.join(distincts, "column_name").join(nulls, "column_name")
+  def distDiff(spark: SparkSession, dir: String): DataFrame =
+    S.categorical.map { sp =>
+      columnStats(splitCensus(spark, dir, sp))
         .select(lit(sp.tableName).as("table_name"), col("*"))
         .selectExpr(distDiffFinal: _*)
-    }
-    per.reduce(_ union _).orderBy("table_name", "column_name")
-  }
+    }.reduce(_ union _).orderBy("table_name", "column_name")
 
   private val distDiffFinal: Seq[String] = Seq(
     "table_name", "column_name",
@@ -341,7 +301,7 @@ object CategoricalDrift extends graft.OperatorModule {
     * tie-break on category). */
   def categoryChanges(spark: SparkSession, dir: String): DataFrame = {
     val per = S.categorical.map { sp =>
-      top20DistsMulti(sideCountsMulti(spark, dir, sp, nonNull = false))
+      top20Rows(splitCensus(spark, dir, sp))
         .filter(col("p").isNotNull && col("q").isNotNull)
         .selectExpr("column_name", "value AS category", "p AS ref_prob", "q AS curr_prob",
           "q - p AS abs_diff",
@@ -425,12 +385,9 @@ object CategoricalDrift extends graft.OperatorModule {
     * (/root/reference/distribution_analyzer.py:287-299). */
   def topMovers(spark: SparkSession, dir: String): DataFrame = {
     val per = S.categorical.map { sp =>
-      // UNCACHED (r17): the increased/decreased branches share every
-      // exchange below the dists projection (ReusedExchange), so the scan
-      // does NOT replay per branch — see NumericDrift.driftScoreFrame
-      val dists = fullDistsMulti(sideCountsMulti(spark, dir, sp, nonNull = false))
-        .filter(col("p").isNotNull && col("q").isNotNull)
-        .withColumn("diff", col("q") - col("p"))
+      val dists = freqPivotOf(splitCensus(spark, dir, sp))
+        .filter(col("ref_freq0").isNotNull && col("curr_freq0").isNotNull)
+        .withColumn("diff", col("curr_freq0") - col("ref_freq0"))
       val inc = dists.filter(col("diff") > 0)
         .withColumn("rk", row_number().over(
           Window.partitionBy("column_name").orderBy(col("diff").desc, col("value").asc)))
@@ -475,11 +432,15 @@ object CategoricalDrift extends graft.OperatorModule {
       "WHEN dof = 7 THEN 14.07 WHEN dof = 8 THEN 15.51 WHEN dof = 9 THEN 16.92 WHEN dof = 10 THEN 18.31 " +
       "ELSE 3.84 END"
 
+  /** The reference's banded χ² p-value of `chi_square` and `dof`. */
+  private val chiBandSql = "CASE WHEN chi_square < 0.001 THEN 1.0 " +
+    s"WHEN chi_square > 3 * ($chiCv) THEN 0.001 WHEN chi_square > 2 * ($chiCv) THEN 0.01 " +
+    s"WHEN chi_square > ($chiCv) THEN 0.05 " +
+    s"ELSE LEAST(1.0, GREATEST(0.05, 1.0 - (chi_square / ($chiCv)) * 0.95)) END"
+
   private val chiFinal: Seq[String] = Seq(
     "table_name", "column_name", pr6Sql("chi_square") + " AS chi_square", "dof",
-    pr6Sql(s"CASE WHEN chi_square < 0.001 THEN 1.0 WHEN chi_square > 3 * ($chiCv) THEN 0.001 " +
-      s"WHEN chi_square > 2 * ($chiCv) THEN 0.01 WHEN chi_square > ($chiCv) THEN 0.05 " +
-      s"ELSE LEAST(1.0, GREATEST(0.05, 1.0 - (chi_square / ($chiCv)) * 0.95)) END") + " AS p_value")
+    pr6Sql(chiBandSql) + " AS p_value")
 
   // χ² exactness contract (the cramers_v lesson, CORRECTNESS_r06/r07): the
   // cell term is built ONLY from IEEE correctly-rounded ops on exact integer
@@ -565,15 +526,16 @@ object CategoricalDrift extends graft.OperatorModule {
   private[graft] def chi2PValue(chi: Double, dof: Long): Double =
     if (dof <= 0 || chi <= 0) 1.0 else gammaQ(dof / 2.0, chi / 2.0)
 
+  private val pExact = udf((chi: Double, dof: Long) => chi2PValue(chi, dof))
+
   /** `exactPValue = false` (default, the oracle surface) keeps the
     * reference's banded p-value table verbatim — the bands ARE the contract
     * (categorical_analyzer.py:395-437). `exactPValue = true` swaps in the
     * true survival function via [[chi2PValue]]; DriftMathSpec pins it to
     * the bands' critical values (each cv row is the exact 0.05 quantile). */
   def chiSquare(spark: SparkSession, dir: String, exactPValue: Boolean = false): DataFrame = {
-    val pExact = udf((chi: Double, dof: Long) => chi2PValue(chi, dof))
     val per = S.categorical.map { sp =>
-      val base = chiPMulti(sideCountsMulti(spark, dir, sp, nonNull = false))
+      val base = columnStats(splitCensus(spark, dir, sp))
         .select(lit(sp.tableName).as("table_name"), col("column_name"),
           col("chi_square"), col("dof"))
       if (exactPValue)
@@ -635,53 +597,12 @@ object CategoricalDrift extends graft.OperatorModule {
     S.categorical.map(sp => categoricalDriftOf(splitCensus(spark, dir, sp), sp.tableName, false))
       .reduce(_ union _)
 
-  /** The reference's banded χ² p-value of `chi_square` and `dof`. */
-  private val chiBandSql = "CASE WHEN chi_square < 0.001 THEN 1.0 " +
-    s"WHEN chi_square > 3 * ($chiCv) THEN 0.001 WHEN chi_square > 2 * ($chiCv) THEN 0.01 " +
-    s"WHEN chi_square > ($chiCv) THEN 0.05 " +
-    s"ELSE LEAST(1.0, GREATEST(0.05, 1.0 - (chi_square / ($chiCv)) * 0.95)) END"
-
-  /** O19 per column of a census, in one groupBy(column_name): JS over the
-    * top-20 distributions of non-null values (O17 as called by O19), χ² over
-    * the non-null values with each side's non-null total as its sum, and the
-    * null proportions. Each side's top 20 is ranked per (column, side), so
-    * the rank is limited before its exchange and no task sorts a whole
-    * column, and is broadcast back onto the census rows. A column with no
-    * non-null value keeps the NULL divergence its empty top-20 sum gives,
-    * and a side without rows the NULL null proportion. */
+  /** O19 per column of a census: a projection of [[columnStats]]. */
   private def categoricalDriftOf(cen: DataFrame, label: String, exactPValue: Boolean): DataFrame = {
-    // the null group drops out through `cnt`: a filter on `value` would push
-    // below the census aggregate and plan a second scan instead of reusing it
-    val top = cen
-      .select(col("column_name"), col("value"), expr("stack(2, " +
-        "'ref', CASE WHEN value IS NOT NULL THEN ref_cnt END, " +
-        "'curr', CASE WHEN value IS NOT NULL THEN curr_cnt END) AS (side, cnt)"))
-      .filter(col("cnt") > 0)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("column_name", "side").orderBy(col("cnt").desc, col("value").asc)))
-      .filter(col("rk") <= 20)
-      .groupBy("column_name", "value").agg(
-        max(col("side") === "ref").as("ref_top"), max(col("side") === "curr").as("curr_top"))
-    val stat = withTotals(cen).join(broadcast(top), Seq("column_name", "value"), "left")
-      .selectExpr("*", "CASE WHEN ref_top THEN ref_cnt * 1e0 / ref_nn END AS p",
-        "CASE WHEN curr_top THEN curr_cnt * 1e0 / curr_nn END AS q",
-        "ref_nn AS ref_sum", "curr_nn AS curr_sum")
-      .selectExpr("*", s"CASE WHEN value IS NOT NULL THEN $chiCellSql END AS cell")
-      .groupBy("column_name")
-      .agg(expr(s"CASE WHEN COUNT(p) + COUNT(q) > 0 THEN SQRT(($jsKlPm + $jsKlQm) / 2) END")
-          .as("js_divergence"),
-        count(col("p")).as("ref_k"),
-        count(when(col("q").isNotNull && col("p").isNull, 1)).as("new_k"),
-        count(when(col("p").isNotNull && col("q").isNull, 1)).as("missing_k"),
-        expr(chiSumSql).as("chi_square"), (count(col("value")) - 1).as("dof"),
-        max("ref_n").as("ref_n"), max("curr_n").as("curr_n"),
-        max("ref_nn").as("ref_nn"), max("curr_nn").as("curr_nn"))
-    val pExact = udf((chi: Double, dof: Long) => chi2PValue(chi, dof))
     val pValue = if (exactPValue) pExact(col("chi_square"), col("dof")) else expr(chiBandSql)
-    stat.select(lit(label).as("table_name"), col("column_name"),
+    columnStats(cen).select(lit(label).as("table_name"), col("column_name"),
         col("js_divergence"), pValue.as("p_value"),
-        expr("CASE WHEN curr_n > 0 THEN (curr_n - curr_nn) * 1e0 / curr_n END - " +
-          "CASE WHEN ref_n > 0 THEN (ref_n - ref_nn) * 1e0 / ref_n END").as("null_diff"),
+        (col("curr_null_prop") - col("ref_null_prop")).as("null_diff"),
         expr("new_k * 1e0 / NULLIF(ref_k, 0)").as("new_ratio"),
         expr("missing_k * 1e0 / NULLIF(ref_k, 0)").as("missing_ratio"))
       .selectExpr(o19Final: _*)
@@ -888,10 +809,7 @@ object CategoricalDrift extends graft.OperatorModule {
     * /root/reference/group_analyzer.py:167-204). */
   def topCombined(spark: SparkSession, dir: String): DataFrame = {
     val per = S.categorical.map { sp =>
-      sideCountsMulti(spark, dir, sp, nonNull = false)
-        .groupBy("column_name", "value").agg(
-          coalesce(sum(when(col("side") === "ref", col("cnt"))), lit(0L)).as("ref_cnt"),
-          coalesce(sum(when(col("side") === "curr", col("cnt"))), lit(0L)).as("curr_cnt"))
+      splitCensus(spark, dir, sp)
         .withColumn("combined", col("ref_cnt") + col("curr_cnt"))
         .withColumn("rk", row_number().over(
           Window.partitionBy("column_name").orderBy(col("combined").desc, col("value").asc)))

@@ -231,27 +231,10 @@ object CorrelationDrift extends graft.OperatorModule {
     * single pass. Categories need ≥30 rows in both frames. */
   private val groupDim = "l_returnflag"
 
-  def groupCorrelations(spark: SparkSession, dir: String): DataFrame = {
-    val aggs = count(lit(1)).as("n") +:
-      pairs.zipWithIndex.map { case ((a, b), i) => corr(col(a), col(b)).as(s"c$i") }
-    val rows = pairs.zipWithIndex.map { case ((a, b), i) => s"'$a', '$b', c$i" }.mkString(", ")
-    val long = withSide(table(spark, dir, "lineitem"), S.lineitemRef)
-      .groupBy(col("side"), col(groupDim).cast("string").as("category"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("side"), col("category"), col("n"),
-        expr(s"stack(${pairs.size}, $rows) as (col1, col2, corr)"))
-    long.groupBy("category", "col1", "col2").agg(
-        max(when(col("side") === "ref", col("n"))).as("ref_n"),
-        coalesce(max(when(col("side") === "ref", col("corr"))), lit(0.0)).as("ref_corr"),
-        max(when(col("side") === "curr", col("n"))).as("curr_n"),
-        coalesce(max(when(col("side") === "curr", col("corr"))), lit(0.0)).as("curr_corr"))
-      .filter(col("ref_n") >= 30 && col("curr_n") >= 30)
-      .selectExpr(s"'$groupDim' AS dimension", "category", "col1", "col2",
-        "ROUND(ref_corr, 6) AS ref_correlation", "ROUND(curr_corr, 6) AS curr_correlation",
-        "ROUND(ABS(curr_corr - ref_corr), 6) AS abs_change",
-        s"(ABS(curr_corr - ref_corr) >= $GroupCorrChangeThreshold) AS significant_shift")
-      .orderBy("category", "col1", "col2")
-  }
+  def groupCorrelations(spark: SparkSession, dir: String): DataFrame =
+    groupCorrelationsOf(withSide(table(spark, dir, "lineitem"), S.lineitemRef), Seq(groupDim),
+        corrCols, 30, GroupCorrChangeThreshold)
+      .drop("dim_ix").orderBy("category", "col1", "col2")
 
   def groupCorrelationsSql: String = {
     val un = pairs.map { case (a, b) =>
@@ -274,27 +257,45 @@ object CorrelationDrift extends graft.OperatorModule {
   /** Generic O26: per-category pair correlations over a dimension for an
     * arbitrary snapshot pair — one groupBy(side, dim) pass. */
   def groupCorrelationsForPair(ref: DataFrame, curr: DataFrame, dim: String,
-      cols: Seq[String], minRows: Int = 30, threshold: Double = GroupCorrChangeThreshold): DataFrame = {
+      cols: Seq[String], minRows: Int = 30, threshold: Double = GroupCorrChangeThreshold): DataFrame =
+    groupCorrelationsForDims(ref, curr, Seq(dim), cols, minRows, threshold)
+
+  /** [[groupCorrelationsForPair]] over every dimension of `dims` in one
+    * pass, in dimension order, then category and pair. */
+  private[drift] def groupCorrelationsForDims(ref: DataFrame, curr: DataFrame, dims: Seq[String],
+      cols: Seq[String], minRows: Int = 30, threshold: Double = GroupCorrChangeThreshold): DataFrame =
+    groupCorrelationsOf(NumericDrift.tagPair(ref, curr, (dims ++ cols).distinct), dims, cols,
+        minRows, threshold)
+      .orderBy("dim_ix", "category", "col1", "col2").drop("dim_ix")
+
+  /** O26 over a side-tagged frame: every dimension of `dims` is stacked as
+    * (dim_ix, dimension, category), `dim_ix` being its index in `dims`, so
+    * one groupBy(side, dim_ix, category) computes every dimension × category
+    * × pair corr. A category needs `minRows` rows on both sides. */
+  private def groupCorrelationsOf(tagged: DataFrame, dims: Seq[String], cols: Seq[String],
+      minRows: Int, threshold: Double): DataFrame = {
     val prs = cols.combinations(2).map(p => (p(0), p(1))).toSeq
     val aggs = count(lit(1)).as("n") +:
       prs.zipWithIndex.map { case ((a, b), i) => corr(col(a), col(b)).as(s"c$i") }
     val rows = prs.zipWithIndex.map { case ((a, b), i) => s"'$a', '$b', c$i" }.mkString(", ")
-    val long = NumericDrift.tagPair(ref, curr, (dim +: cols).distinct)
-      .groupBy(col("side"), col(dim).cast("string").as("category"))
+    val dimRows = dims.zipWithIndex.map((GroupDrift.dimRow _).tupled).mkString(", ")
+    val long = tagged
+      .select((col("side") +: cols.map(col)) :+
+        expr(s"stack(${dims.size}, $dimRows) AS (dim_ix, dimension, category)"): _*)
+      .groupBy("side", "dim_ix", "dimension", "category")
       .agg(aggs.head, aggs.tail: _*)
-      .select(col("side"), col("category"), col("n"),
+      .select(col("side"), col("dim_ix"), col("dimension"), col("category"), col("n"),
         expr(s"stack(${prs.size}, $rows) as (col1, col2, corr)"))
-    long.groupBy("category", "col1", "col2").agg(
+    long.groupBy("dim_ix", "dimension", "category", "col1", "col2").agg(
         max(when(col("side") === "ref", col("n"))).as("ref_n"),
         coalesce(max(when(col("side") === "ref", col("corr"))), lit(0.0)).as("ref_corr"),
         max(when(col("side") === "curr", col("n"))).as("curr_n"),
         coalesce(max(when(col("side") === "curr", col("corr"))), lit(0.0)).as("curr_corr"))
       .filter(col("ref_n") >= minRows && col("curr_n") >= minRows)
-      .selectExpr(s"'$dim' AS dimension", "category", "col1", "col2",
+      .selectExpr("dim_ix", "dimension", "category", "col1", "col2",
         "ROUND(ref_corr, 6) AS ref_correlation", "ROUND(curr_corr, 6) AS curr_correlation",
         "ROUND(ABS(curr_corr - ref_corr), 6) AS abs_change",
         s"(ABS(curr_corr - ref_corr) >= $threshold) AS significant_shift")
-      .orderBy("category", "col1", "col2")
   }
 
   /** O29 valid-column screen: keep columns whose non-null ratio is ≥

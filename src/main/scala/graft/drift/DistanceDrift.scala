@@ -18,11 +18,10 @@ import graft.drift.{splits => S}
   *   - Cramér's V effect size for the side×category contingency
   *
   * Scale design: everything is built from two long frames per table —
-  * (side, column_name, x) for numerics, (column_name, value, side-counts)
-  * for categoricals — produced by ONE stack + one map-side-combined
-  * groupBy per table, so a k-column table costs one scan regardless of k
-  * (same shape as [[NumericDrift]]'s zOutliersLong /
-  * [[CategoricalDrift]]'s sideCountsMulti). The ECDF windows are
+  * (side, column_name, x) for numerics, and for categoricals the
+  * [[CategoricalDrift]] census (column_name, value, ref_cnt, curr_cnt) —
+  * each produced by ONE stack + one map-side-combined groupBy per table,
+  * so a k-column table costs one scan regardless of k. The ECDF windows are
   * partitioned per column and run on the DISTINCT-value frame, not raw
   * rows; the `approx` path first snaps values onto a [[EdfBins]]-cell
   * grid (shared edges from one bounds agg, broadcast) so the per-column
@@ -281,8 +280,8 @@ object DistanceDrift extends graft.OperatorModule {
     * expected≥5 exclusion): this is the textbook effect size, not the
     * banded test. Effect bands follow Cohen's conventions for df* = 1. */
   def cramersV(spark: SparkSession, dir: String): DataFrame =
-    S.categorical.map { sp => cramersVCore(
-      withSide(table(spark, dir, sp.tableName), sp.ref), sp.cols, sp.tableName)
+    S.categorical.map { sp =>
+      cramersVCore(CategoricalDrift.splitCensus(spark, dir, sp), sp.tableName)
         .selectExpr(cramersIntFinal: _*)
     }.reduce(_ unionAll _).orderBy("table_name", "column_name")
 
@@ -295,13 +294,12 @@ object DistanceDrift extends graft.OperatorModule {
     * separately on literal inputs ([[EngineProbe]]). DistanceDriftSpec
     * pins this surface against a JVM twin. */
   def cramersVFull(spark: SparkSession, dir: String): DataFrame =
-    S.categorical.map { sp => cramersVFromTagged(
-      withSide(table(spark, dir, sp.tableName), sp.ref), sp.cols, sp.tableName)
-    }.reduce(_ unionAll _).orderBy("table_name", "column_name")
+    S.categorical.map(sp => cramersVOf(CategoricalDrift.splitCensus(spark, dir, sp), sp.tableName))
+      .reduce(_ unionAll _).orderBy("table_name", "column_name")
 
   def cramersVForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    cramersVFromTagged(NumericDrift.tagPair(ref, curr, cols), cols, label)
+    cramersVOf(CategoricalDrift.census(NumericDrift.tagPair(ref, curr, cols), cols), label)
       .orderBy("table_name", "column_name")
 
   /** Per-cell χ² contribution from EXACT integer counts (rc, cc, rs, cs) —
@@ -353,47 +351,35 @@ object DistanceDrift extends graft.OperatorModule {
         "ELSE 'large' END AS effect")
   }
 
-  private def cramersVFromTagged(tagged: DataFrame, cols: Seq[String],
-      label: String): DataFrame =
-    cramersVCore(tagged, cols, label)
+  private def cramersVOf(cen: DataFrame, label: String): DataFrame =
+    cramersVCore(cen, label)
       .select(col("table_name"), col("column_name"),
         col("n").as("n_total"), (col("k") - 1).as("dof"),
         expr(pr6Sql(chi2RawSql)).as("chi2"),
         expr(pr6Sql("v_raw")).as("cramers_v"),
         expr(effectSql("v_raw")).as("effect"))
 
-  /** Shared contingency core: exact integer marginals + the micro-unit
-    * χ² sum, plus the derived float v_raw (used only by the full
-    * surface). */
-  private def cramersVCore(tagged: DataFrame, cols: Seq[String],
-      label: String): DataFrame = {
-    val rows = cols.map(c => s"'$c', CAST($c AS STRING)").mkString(", ")
-    val piv = tagged
-      .select(col("side"), expr(s"stack(${cols.size}, $rows) as (column_name, value)"))
-      .filter(col("value").isNotNull)
-      .groupBy("column_name", "value").agg(
-        sum(when(col("side") === "ref", 1L).otherwise(0L)).as("rc"),
-        sum(when(col("side") === "curr", 1L).otherwise(0L)).as("cc"))
-    val sums = piv.groupBy("column_name").agg(
-      sum("rc").as("rs"), sum("cc").as("cs"), count(lit(1)).as("k"))
-    // χ² accumulates as an exact micro-unit integer sum (microSumSql):
-    // each per-cell term quantizes half-up at 6 dp into DECIMAL(38,0) and
-    // the SUM is commutative integer arithmetic, so partial-agg order is
-    // irrelevant on any engine. This replaces the round-7 canonical fold
-    // (collect_list + sequential aggregate), which assumed DuckDB's
-    // list_sum is a left fold — an internal that changed across versions
-    // (driver hash-red two rounds running). Headroom: χ² ≤ N, so the
-    // micro-sum stays < 2⁵³ through ~sf1000; and dropping collect_list
-    // makes this a plain partial-aggregated SUM — better at scale too.
-    piv.join(broadcast(sums), "column_name")
-      .withColumn("term", expr(chiTermSql))
+  /** Shared contingency core over the non-null values of a census: exact
+    * integer marginals + the micro-unit χ² sum, plus the derived float
+    * v_raw (used only by the full surface). A column without a non-null
+    * value has no contingency and no row. */
+  private def cramersVCore(cen: DataFrame, label: String): DataFrame =
+    // χ² accumulates as an exact micro-unit integer sum (microSumSql): each
+    // per-cell term quantizes half-up at 6 dp into DECIMAL(38,0) and the SUM
+    // is commutative integer arithmetic, so partial-agg order is irrelevant
+    // on any engine. Headroom: χ² ≤ N, so the micro-sum stays < 2⁵³ through
+    // ~sf1000.
+    CategoricalDrift.withTotals(cen)
+      .selectExpr("value", "column_name", "ref_cnt AS rc", "curr_cnt AS cc",
+        "ref_nn AS rs", "curr_nn AS cs")
+      .withColumn("term", expr(s"CASE WHEN value IS NOT NULL THEN $chiTermSql END"))
       .groupBy("column_name").agg(
-        first("rs").as("rs"), first("cs").as("cs"), first("k").as("k"),
+        first("rs").as("rs"), first("cs").as("cs"), count(col("value")).as("k"),
         expr(microSumSql("term")).as("chi2_u"))
+      .filter(col("k") > 0)
       .withColumn("n", col("rs") + col("cs"))
       .withColumn("v_raw", expr(vRawSql))
       .withColumn("table_name", lit(label))
-  }
 
   def cramersVSql: String = {
     val branches = S.categorical.flatMap(sp => sp.cols.map { c =>
@@ -441,39 +427,33 @@ object DistanceDrift extends graft.OperatorModule {
     * Same scale shape as [[cramersV]]: one stack + one map-side-combined
     * groupBy per table; every later frame is category-cardinality-sized. */
   def catDistances(spark: SparkSession, dir: String): DataFrame =
-    S.categorical.map { sp => catDistancesFromTagged(
-      withSide(table(spark, dir, sp.tableName), sp.ref), sp.cols, sp.tableName)
-    }.reduce(_ unionAll _).orderBy("table_name", "column_name")
+    S.categorical.map(sp => catDistancesOf(CategoricalDrift.splitCensus(spark, dir, sp), sp.tableName))
+      .reduce(_ unionAll _).orderBy("table_name", "column_name")
 
   def catDistancesForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    catDistancesFromTagged(NumericDrift.tagPair(ref, curr, cols), cols, label)
+    catDistancesOf(CategoricalDrift.census(NumericDrift.tagPair(ref, curr, cols), cols), label)
       .orderBy("table_name", "column_name")
 
-  private def catDistancesFromTagged(tagged: DataFrame, cols: Seq[String],
-      label: String): DataFrame = {
-    val rows = cols.map(c => s"'$c', CAST($c AS STRING)").mkString(", ")
-    val piv = tagged
-      .select(col("side"), expr(s"stack(${cols.size}, $rows) as (column_name, value)"))
-      .filter(col("value").isNotNull)
-      .groupBy("column_name", "value").agg(
-        sum(when(col("side") === "ref", 1L).otherwise(0L)).as("rc"),
-        sum(when(col("side") === "curr", 1L).otherwise(0L)).as("cc"))
-    val sums = piv.groupBy("column_name").agg(sum("rc").as("rs"), sum("cc").as("cs"))
-    piv.join(broadcast(sums), "column_name")
-      .withColumn("p", col("rc") * lit(1.0) / col("rs"))
-      .withColumn("q", col("cc") * lit(1.0) / col("cs"))
+  /** The trio over the non-null values of a census; a column without a
+    * non-null value has no row. */
+  private def catDistancesOf(cen: DataFrame, label: String): DataFrame =
+    CategoricalDrift.withTotals(cen)
+      .selectExpr("column_name", "value",
+        "CASE WHEN value IS NOT NULL THEN ref_cnt * 1e0 / ref_nn END AS p",
+        "CASE WHEN value IS NOT NULL THEN curr_cnt * 1e0 / curr_nn END AS q")
       .groupBy("column_name").agg(
         (sum(abs(col("p") - col("q"))) / 2).as("tvd_raw"),
         sqrt(sum(pow(sqrt(col("p")) - sqrt(col("q")), 2)) / 2).as("hel_raw"),
         sum(greatest(col("p"), lit(PsiEps)) *
           log(greatest(col("p"), lit(PsiEps)) / greatest(col("q"), lit(PsiEps))))
-          .as("kl_raw"))
+          .as("kl_raw"),
+        count(col("value")).as("k"))
+      .filter(col("k") > 0)
       .select(lit(label).as("table_name"), col("column_name"),
         r6(col("tvd_raw")).as("tvd"), r6(col("hel_raw")).as("hellinger"),
         r6(col("kl_raw")).as("kl_ref_curr"),
         (col("hel_raw") > HellingerThreshold).as("drifted"))
-  }
 
   def catDistancesSql: String = {
     val branches = S.categorical.flatMap(sp => sp.cols.map { c =>

@@ -11,13 +11,13 @@ import graft.drift.{splits => S}
   * Scale design: the reference is the job-count explosion center — per
   * dimension it collects top-20 categories, then per category runs two
   * `filter(dim === cat)` frames and 3-6 jobs per metric column: O(dims ×
-  * 20 × cols) Spark jobs (group_analyzer.py:64-102, 206-447). Here the
-  * verdict stacks the rows once per dimension and aggregates every
-  * (dimension, category) at once, and stacks the categorical metrics once
-  * per (dimension, metric) pair for one value-count aggregate: a fixed
-  * number of shuffles whatever the number of dimensions, categories or
-  * metrics. At 100 TB that is the difference between ~hundreds of scans
-  * and two.
+  * 20 × cols) Spark jobs (group_analyzer.py:64-102, 206-447). Here every
+  * group query projects two stacked aggregates: the rows stacked once per
+  * dimension give every (dimension, category)'s numeric stats and
+  * eligibility, and the categorical metrics stacked once per (dimension,
+  * metric) pair give one value-count aggregate. That is a fixed number of
+  * shuffles whatever the number of dimensions, categories or metrics: at
+  * 100 TB, two scans per table where the reference runs hundreds.
   */
 object GroupDrift extends graft.OperatorModule {
 
@@ -60,40 +60,83 @@ object GroupDrift extends graft.OperatorModule {
       s"GROUP BY category) p WHERE ref_n >= $MinGroupRows AND curr_n >= $MinGroupRows) r " +
       s"WHERE rk <= $TopCategories"
 
-  // --------------------------------------------- numeric group metrics (O32)
+  // ------------------------------------------- the two stacked aggregates
+  //
+  // Every group query here is a projection of two aggregates over a
+  // side-tagged frame: numStats per (dimension, category) and catStats per
+  // (dimension, category, categorical metric).
+
+  /** A gate spec's table, tagged by its split. */
+  private def splitOf(spark: SparkSession, dir: String, sp: GroupSpec): DataFrame =
+    withSide(table(spark, dir, sp.tableName), sp.ref)
+
+  private val sides = Seq("ref", "curr")
+  private def onSide(s: String, c: Column): Column = when(col("side") === s, c)
+  private def stackOf(rows: Seq[String], as: String): String =
+    s"stack(${rows.size}, ${rows.mkString(", ")}) AS ($as)"
+  /** A dimension's stack row: its index, name and value as the category. */
+  private[drift] def dimRow(d: String, i: Int) = s"$i, ${sqlStr(d)}, CAST(${sqlIdent(d)} AS STRING)"
 
   /** Exact median of the SQL expression `e`; the DOUBLE cast leaves it
     * unchanged and lets sketch mode reach integral metrics too. */
   private def median(e: String): Column = expr(s"percentile(CAST($e AS DOUBLE), 0.5)")
 
-  /** Per-(category, metric) side stats, pivoted. Nulls coalesced to 0 as the
-    * reference does post-collect (group_analyzer.py:311-333). */
-  private def numPivot(spark: SparkSession, dir: String, sp: GroupSpec): DataFrame = {
-    val aggs = count(lit(1)).as("n") +: sp.numMetrics.flatMap { m =>
-      Seq(
-        sum(when(col(m).isNull, 1L).otherwise(0L)).as(s"${m}__nulls"),
-        coalesce(avg(col(m)), lit(0.0)).as(s"${m}__mean"),
-        coalesce(stddev(col(m)), lit(0.0)).as(s"${m}__std"),
-        coalesce(min(col(m)).cast("double"), lit(0.0)).as(s"${m}__min"),
-        coalesce(max(col(m)).cast("double"), lit(0.0)).as(s"${m}__max"),
-        coalesce(median(m), lit(0.0)).as(s"${m}__med"))
-    }
-    val rows = sp.numMetrics.map { m =>
-      s"'$m', ${m}__nulls, ${m}__mean, ${m}__std, ${m}__min, ${m}__max, ${m}__med"
-    }.mkString(", ")
-    val long = withSide(table(spark, dir, sp.tableName), sp.ref)
-      .groupBy(col("side"), col(sp.dim).cast("string").as("category"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("side"), col("category"), col("n"),
-        expr(s"stack(${sp.numMetrics.size}, $rows) as (metric, nulls, mean, std, vmin, vmax, med)"))
-    val statCols = Seq("n", "nulls", "mean", "std", "vmin", "vmax", "med")
-    val names = Map("vmin" -> "min", "vmax" -> "max")
-    val pivAggs = statCols.flatMap { c => Seq(
-      max(when(col("side") === "ref", col(c))).as(s"ref_${names.getOrElse(c, c)}"),
-      max(when(col("side") === "curr", col(c))).as(s"curr_${names.getOrElse(c, c)}")) }
-    long.groupBy("category", "metric").agg(pivAggs.head, pivAggs.tail: _*)
-      .filter(col("ref_n").isNotNull && col("curr_n").isNotNull)
+  /** Per (dimension, category) of a side-tagged frame, every dimension of
+    * `dims` stacked as (dim_ix, dimension, category), `dim_ix` being its
+    * index in `dims`: each side's rows (`ref_n`) and, for the j-th numeric
+    * metric, its nulls, mean, std, min, max and median (`ref_mean_j`, ...).
+    * Empty stats are 0, as the reference coalesces them post-collect
+    * (group_analyzer.py:311-333). */
+  private def numStats(tagged: DataFrame, dims: Seq[String], numMetrics: Seq[String]): DataFrame = {
+    val numAggs = sides.map(s => count(onSide(s, lit(1))).as(s"${s}_n")) ++
+      numMetrics.zipWithIndex.flatMap { case (m, j) => sides.flatMap { s =>
+        Seq(
+          sum(when(col("side") === s && col(m).isNull, 1L).otherwise(0L)).as(s"${s}_nulls_$j"),
+          coalesce(avg(onSide(s, col(m))), lit(0.0)).as(s"${s}_mean_$j"),
+          coalesce(stddev(onSide(s, col(m))), lit(0.0)).as(s"${s}_std_$j"),
+          coalesce(min(onSide(s, col(m))).cast("double"), lit(0.0)).as(s"${s}_min_$j"),
+          coalesce(max(onSide(s, col(m))).cast("double"), lit(0.0)).as(s"${s}_max_$j"),
+          coalesce(median(s"CASE WHEN side = '$s' THEN ${sqlIdent(m)} END"), lit(0.0))
+            .as(s"${s}_med_$j"))
+      } }
+    tagged
+      .select((col("side") +: numMetrics.map(col)) :+
+        expr(stackOf(dims.zipWithIndex.map((dimRow _).tupled), "dim_ix, dimension, category")): _*)
+      .groupBy("dim_ix", "dimension", "category").agg(numAggs.head, numAggs.tail: _*)
   }
+
+  /** Per (dimension, category, metric) of a side-tagged frame, a dimension's
+    * metrics being the `catMetrics` other than itself: each side's rows
+    * (`ref_n`) and nulls, and [[catAggs]] over each side's top-10 value
+    * frequencies (over all rows incl. nulls, group_analyzer.py:378-387).
+    * One aggregate per (dimension, category, metric, value) with both
+    * sides' counts, whose window gives the totals and top-10 ranks. None
+    * when no dimension has a categorical metric. */
+  private def catStats(tagged: DataFrame, dims: Seq[String],
+      catMetrics: Seq[String]): Option[DataFrame] = {
+    val catRows = for ((d, i) <- dims.zipWithIndex; m <- catMetrics if m != d)
+      yield s"${dimRow(d, i)}, ${sqlStr(m)}, CAST(${sqlIdent(m)} AS STRING)"
+    if (catRows.isEmpty) None else Some {
+      val w = Window.partitionBy("dim_ix", "dimension", "category", "metric")
+      def top10(s: String): Column = {
+        val cnt = col(s"${s}_cnt")
+        when(cnt > 0 && row_number().over(w.orderBy(cnt.desc, col("v").asc)) <= 10,
+          cnt / sum(cnt).over(w))
+      }
+      def nulls(s: String) = sum(when(col("v").isNull, col(s"${s}_cnt")).otherwise(0L)).as(s"${s}_nulls")
+      val catAggExprs = Seq(max("ref_n").as("ref_n"), max("curr_n").as("curr_n"),
+        nulls("ref"), nulls("curr")) ++ catAggs.map(expr)
+      tagged.select(col("side"), expr(stackOf(catRows, "dim_ix, dimension, category, metric, v")))
+        .groupBy("dim_ix", "dimension", "category", "metric", "v")
+        .agg(count(onSide("ref", lit(1))).as("ref_cnt"), count(onSide("curr", lit(1))).as("curr_cnt"))
+        .select(col("*"), top10("ref").as("p"), top10("curr").as("q"),
+          sum("ref_cnt").over(w).as("ref_n"), sum("curr_cnt").over(w).as("curr_n"))
+        .groupBy("dim_ix", "dimension", "category", "metric")
+        .agg(catAggExprs.head, catAggExprs.tail: _*)
+    }
+  }
+
+  // --------------------------------------------- numeric group metrics (O32)
 
   private def numPivotSql(sp: GroupSpec): String = {
     val un = sp.numMetrics.map { m =>
@@ -127,12 +170,17 @@ object GroupDrift extends graft.OperatorModule {
     "ROUND(ABS(curr_nulls * 1e0 / curr_n - ref_nulls * 1e0 / ref_n), 6) AS null_drift")
 
   /** Exact group medians, so DuckDB's `quantile_cont` reproduces values;
-    * sketch mode swaps in the mergeable sketch at scale. */
+    * sketch mode swaps in the mergeable sketch at scale. Every metric row of
+    * a category carries the category's side counts. */
   def groupNumericMetrics(spark: SparkSession, dir: String): DataFrame = {
     val per = specs.map { sp =>
-      // every metric row of a category carries the category's side counts
-      keepEligible(numPivot(spark, dir, sp))
-        .select(lit(sp.tableName).as("table_name"), lit(sp.dim).as("dimension"), col("*"))
+      val stats = for (s <- sides; st <- Seq("nulls", "mean", "std", "min", "max", "med"))
+        yield s"${s}_$st"
+      val rows = sp.numMetrics.zipWithIndex.map { case (m, j) =>
+        (sqlStr(m) +: stats.map(st => s"${st}_$j")).mkString(", ") }
+      keepEligible(numStats(splitOf(spark, dir, sp), Seq(sp.dim), sp.numMetrics), "dim_ix")
+        .selectExpr(s"${sqlStr(sp.tableName)} AS table_name", "dimension", "category",
+          "ref_n", "curr_n", stackOf(rows, ("metric" +: stats).mkString(", ")))
         .selectExpr(numFinal: _*)
     }
     per.reduce(_ union _).orderBy("table_name", "dimension", "category", "metric")
@@ -148,33 +196,6 @@ object GroupDrift extends graft.OperatorModule {
   }
 
   // ----------------------------------------- categorical group metrics (O32)
-
-  /** Per-(category, cat-metric): top-10 value frequency tables per side
-    * (freq over ALL group rows incl. nulls — window normalization in the
-    * reference, group_analyzer.py:378-387), then common/new/disappeared and
-    * avg frequency drift. */
-  /** Per-(side, category, value) counts for one categorical metric — the
-    * ONE scan every downstream frame of the categorical family (top-10
-    * frequency pivot, eligibility counts, null census) derives from. */
-  private def vcFrame(spark: SparkSession, dir: String, sp: GroupSpec, m: String): DataFrame =
-    withSide(table(spark, dir, sp.tableName), sp.ref)
-      .groupBy(col("side"), col(sp.dim).cast("string").as("category"), col(m).cast("string").as("v"))
-      .agg(count(lit(1)).as("cnt"))
-
-  /** Top-10 value frequencies per (category, v), plus each side's row count. */
-  private def catPivot(vc: DataFrame): DataFrame = {
-    val w = Window.partitionBy("side", "category")
-    val top = vc
-      .withColumn("n", sum("cnt").over(w))
-      .withColumn("freq", col("cnt") / col("n"))
-      .withColumn("rk", row_number().over(w.orderBy(col("cnt").desc, col("v").asc)))
-      .filter(col("rk") <= 10)
-    top.groupBy("category", "v").agg(
-      max(when(col("side") === "ref", col("freq"))).as("p"),
-      max(when(col("side") === "curr", col("freq"))).as("q"),
-      max(when(col("side") === "ref", col("n"))).as("ref_n"),
-      max(when(col("side") === "curr", col("n"))).as("curr_n"))
-  }
 
   private def catPivotSql(sp: GroupSpec, m: String): String =
     "SELECT category, v, MAX(CASE WHEN side = 'ref' THEN freq END) AS p, " +
@@ -204,12 +225,11 @@ object GroupDrift extends graft.OperatorModule {
     "ROUND(avg_freq_drift, 6) AS avg_freq_drift")
 
   def groupCatMetrics(spark: SparkSession, dir: String): DataFrame = {
-    val per = for (sp <- specs; m <- sp.catMetrics) yield {
-      keepEligible(catPivot(vcFrame(spark, dir, sp, m)).groupBy("category")
-          .agg(max("ref_n").as("ref_n"), (max("curr_n").as("curr_n") +: catAggs.map(expr)): _*))
-        .select(lit(sp.tableName).as("table_name"), lit(sp.dim).as("dimension"),
-          lit(m).as("metric"), col("*"))
-        .selectExpr(catFinal: _*)
+    val per = specs.flatMap { sp =>
+      catStats(splitOf(spark, dir, sp), Seq(sp.dim), sp.catMetrics).map(cs =>
+        keepEligible(cs, "dim_ix", "metric")
+          .select(lit(sp.tableName).as("table_name"), col("*"))
+          .selectExpr(catFinal: _*))
     }
     per.reduce(_ union _).orderBy("table_name", "dimension", "category", "metric")
   }
@@ -285,80 +305,33 @@ object GroupDrift extends graft.OperatorModule {
   /** [[groupDriftVerdict]] without the final sort (see
     * NumericDrift.driftScoreFrame for why Report's cache wants it). */
   private[drift] def groupDriftVerdictFrame(spark: SparkSession, dir: String): DataFrame =
-    specs.map(sp => verdictOf(withSide(table(spark, dir, sp.tableName), sp.ref),
-        Seq(sp.dim), sp.numMetrics, sp.catMetrics, sp.tableName).drop("dim_ix"))
+    specs.map(sp => verdictOf(splitOf(spark, dir, sp), Seq(sp.dim), sp.numMetrics, sp.catMetrics,
+        sp.tableName).drop("dim_ix"))
       .reduce(_ union _)
 
   /** O33 verdict rows of every dimension of `dims` over a side-tagged frame,
-    * keyed by `dim_ix`, the dimension's index in `dims`. A dimension's metrics
-    * are `numMetrics` and the `catMetrics` other than itself. Two stacked
-    * aggregates feed every dimension and metric at once: one per (dimension,
-    * category) with side-conditional numeric stats, which also ranks
-    * eligibility, and one per (dimension, category, metric, value) with both
-    * sides' counts, whose window gives the totals and top-10 ranks. The
-    * exchanges are therefore the same whatever the number of dimensions or
-    * metrics. Every division is guarded: eligible categories have ≥20 rows
-    * on each side. */
+    * keyed by `dim_ix`, from [[numStats]], whose rows also rank eligibility,
+    * and [[catStats]]: the exchanges are the same whatever the number of
+    * dimensions or metrics. Every division is guarded: eligible categories
+    * have ≥20 rows on each side. */
   private def verdictOf(tagged: DataFrame, dims: Seq[String], numMetrics: Seq[String],
       catMetrics: Seq[String], label: String): DataFrame = {
-    val sides = Seq("ref", "curr")
-    def onSide(s: String, c: Column): Column = when(col("side") === s, c)
-    def stackOf(rows: Seq[String], as: String): String =
-      s"stack(${rows.size}, ${rows.mkString(", ")}) AS ($as)"
-    def dimRow(d: String, i: Int) = s"$i, ${sqlStr(d)}, CAST(${sqlIdent(d)} AS STRING)"
-
-    // per (dimension, category): row counts and every numeric metric's stats
-    val numAggs = sides.map(s => count(onSide(s, lit(1))).as(s"${s}_n")) ++
-      numMetrics.zipWithIndex.flatMap { case (m, j) => sides.flatMap { s =>
-        Seq(
-          sum(when(col("side") === s && col(m).isNull, 1L).otherwise(0L)).as(s"${s}_nulls_$j"),
-          coalesce(avg(onSide(s, col(m))), lit(0.0)).as(s"${s}_mean_$j"),
-          coalesce(stddev(onSide(s, col(m))), lit(0.0)).as(s"${s}_std_$j"),
-          coalesce(median(s"CASE WHEN side = '$s' THEN ${sqlIdent(m)} END"), lit(0.0))
-            .as(s"${s}_med_$j"))
-      } }
-    val eligible = keepEligible(tagged
-      .select((col("side") +: numMetrics.map(col)) :+
-        expr(stackOf(dims.zipWithIndex.map((dimRow _).tupled), "dim_ix, dimension, category")): _*)
-      .groupBy("dim_ix", "dimension", "category").agg(numAggs.head, numAggs.tail: _*), "dim_ix")
     val numComps = numMetrics.indices.flatMap { j => Seq(
         "null" -> s"ABS(curr_nulls_$j * 1e0 / curr_n - ref_nulls_$j * 1e0 / ref_n)",
         "mean" -> s"ABS(${pctChangeSql(s"ref_mean_$j", s"curr_mean_$j")})",
         "std" -> s"ABS(${pctChangeSql(s"ref_std_$j", s"curr_std_$j")})",
         "median" -> s"ABS(${pctChangeSql(s"ref_med_$j", s"curr_med_$j")})")
       } :+ ("row_pct" -> pctChangeSql("ref_n", "curr_n"))
-    val comps = eligible.selectExpr("dim_ix", "dimension", "category",
-      stackOf(numComps.map { case (k, e) => s"'$k', CAST($e AS DOUBLE)" }, "kind, value"))
-
-    // per (dimension, category, metric, value): both sides' counts, then the
-    // category's totals and each side's top-10 frequencies (over all rows
-    // incl. nulls, group_analyzer.py:378-387) in one window
-    val catRows = for ((d, i) <- dims.zipWithIndex; m <- catMetrics if m != d)
-      yield s"${dimRow(d, i)}, ${sqlStr(m)}, CAST(${sqlIdent(m)} AS STRING)"
-    val catComps = if (catRows.isEmpty) None else Some {
-      val w = Window.partitionBy("dim_ix", "dimension", "category", "metric")
-      def top10(s: String): Column = {
-        val cnt = col(s"${s}_cnt")
-        when(cnt > 0 && row_number().over(w.orderBy(cnt.desc, col("v").asc)) <= 10,
-          cnt / sum(cnt).over(w))
-      }
-      def nulls(s: String) = sum(when(col("v").isNull, col(s"${s}_cnt")).otherwise(0L)).as(s"${s}_nulls")
-      val catAggExprs = Seq(max("ref_n").as("ref_n"), max("curr_n").as("curr_n"),
-        nulls("ref"), nulls("curr")) ++ catAggs.map(expr)
-      tagged.select(col("side"), expr(stackOf(catRows, "dim_ix, dimension, category, metric, v")))
-        .groupBy("dim_ix", "dimension", "category", "metric", "v")
-        .agg(count(onSide("ref", lit(1))).as("ref_cnt"), count(onSide("curr", lit(1))).as("curr_cnt"))
-        .select(col("*"), top10("ref").as("p"), top10("curr").as("q"),
-          sum("ref_cnt").over(w).as("ref_n"), sum("curr_cnt").over(w).as("curr_n"))
-        .groupBy("dim_ix", "dimension", "category", "metric")
-        .agg(catAggExprs.head, catAggExprs.tail: _*)
-        .filter(col("ref_n") >= MinGroupRows && col("curr_n") >= MinGroupRows)
+    val comps = keepEligible(numStats(tagged, dims, numMetrics), "dim_ix")
+      .selectExpr("dim_ix", "dimension", "category",
+        stackOf(numComps.map { case (k, e) => s"'$k', CAST($e AS DOUBLE)" }, "kind, value"))
+    val catComps = catStats(tagged, dims, catMetrics).map(
+      _.filter(col("ref_n") >= MinGroupRows && col("curr_n") >= MinGroupRows)
         .selectExpr("dim_ix", "dimension", "category", stackOf(Seq(
           "'null', ABS(curr_nulls * 1e0 / curr_n - ref_nulls * 1e0 / ref_n)",
           "'freq', CAST(avg_freq_drift AS DOUBLE)",
           s"'distinct_pct', CAST(ABS(${pctChangeSql("ref_distinct", "curr_distinct")}) AS DOUBLE)"),
-          "kind, value"))
-    }
+          "kind, value")))
 
     // categories outside the top 20 carry no row_pct component and drop
     (comps +: catComps.toSeq).reduce(_ union _)

@@ -460,11 +460,10 @@ class DriftDetector(spark: SparkSession) {
           GroupDrift.verdictForPair(ref, curr, groupDims, numericCols, catCols)),
         // O26: per-category correlations over the first ≤3 group dimensions,
         // matching the reference's group_columns[:3] loop
-        // (correlation_analyzer.py:163-171) — one groupBy(side, dim) pass each
+        // (correlation_analyzer.py:163-171) — one pass for all of them
         safe("group_correlations", config.analyzeGroups && groupDims.nonEmpty && correlationsOn)(
-          if (corrCols.size >= 2) groupDims.take(3).map(d =>
-            CorrelationDrift.groupCorrelationsForPair(ref, curr, d, corrCols))
-            .reduce(_ unionByName _)
+          if (corrCols.size >= 2)
+            CorrelationDrift.groupCorrelationsForDims(ref, curr, groupDims.take(3), corrCols)
           else empty),
         safe("feature_importance", target.isDefined)(
           CorrelationDrift.featureImportanceForPair(ref, curr, target.get,

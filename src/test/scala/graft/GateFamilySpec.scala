@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * function applied to every table split: the gate rows of one table equal,
   * row for row, the pair function over that table's (ref, curr) halves with
   * the table name as label. This ties the product path to the gate texts the
-  * DuckDB oracle checks. */
+  * DuckDB oracle checks. Gate queries that report the same statistic agree
+  * on it, because each statistic has one implementation. */
 class GateFamilySpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
@@ -79,5 +80,29 @@ class GateFamilySpec extends SparkSpec {
       assertSameRows(gate, sp.tableName, GroupDrift.verdictForPair(ref, curr, Seq(sp.dim),
         sp.numMetrics, sp.catMetrics).withColumn("table_name", lit(sp.tableName)))
     }
+  }
+
+  /** One row per key of `df`: the key columns to the value columns. */
+  private def byKey(df: DataFrame, keys: Seq[String], values: Seq[String]): Map[Seq[Any], Seq[Any]] =
+    df.select((keys ++ values).map(col): _*).collect()
+      .map(r => r.toSeq.take(keys.size) -> r.toSeq.drop(keys.size)).toMap
+
+  test("chi_square and dist_diff agree with categorical_drift on every split column") {
+    val key = Seq("table_name", "column_name")
+    val drift = CategoricalDrift.categoricalDrift(spark, dir)
+    val splitCols = splits.categorical.flatMap(sp => sp.cols.map(c => Seq(sp.tableName, c))).toSet
+    assert(byKey(drift, key, Nil).keySet == splitCols)
+    assert(byKey(CategoricalDrift.chiSquare(spark, dir), key, Seq("p_value")) ==
+      byKey(drift, key, Seq("chi_p_value")))
+    val shared = Seq("null_proportion_diff", "new_categories_ratio", "missing_categories_ratio")
+    assert(byKey(CategoricalDrift.distDiff(spark, dir), key, shared) == byKey(drift, key, shared))
+  }
+
+  test("group metrics cover exactly the categories group_drift judges") {
+    val key = Seq("table_name", "dimension", "category")
+    val judged = byKey(GroupDrift.groupDriftVerdict(spark, dir), key, Nil).keySet
+    assert(judged.nonEmpty)
+    assert(byKey(GroupDrift.groupNumericMetrics(spark, dir), key, Nil).keySet == judged)
+    assert(byKey(GroupDrift.groupCatMetrics(spark, dir), key, Nil).keySet == judged)
   }
 }

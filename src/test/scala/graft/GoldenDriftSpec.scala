@@ -214,9 +214,8 @@ class GoldenDriftSpec extends SparkSpec {
   }
 
   test("categorical and group-drift jobs per report do not grow with the column count") {
-    // the same pair with 2 and with 7 categorical columns (3 group
-    // dimensions by default on the wide one), types pinned so only the
-    // column count differs
+    // the same pair with 2 and with 7 categorical columns (2 and 3 group
+    // dimensions by default), types pinned so only the column count differs
     import org.apache.spark.sql.functions.{col, expr}
     val base = Seq("numeric_normal", "numeric_uniform", "category_balanced", "category_imbalanced")
       .map(col)
@@ -230,7 +229,8 @@ class GoldenDriftSpec extends SparkSpec {
         DriftConfig(sampleSize = 0, customColumnTypes = types)))
       assert(r.errors.isEmpty, r.errors.mkString("; "))
       assert(r.categorical.size == cat.length && r.groupDrift.count() > 0)
-      Seq("categorical", "js_full", "rare_value_changes", "rare_categories", "group_drift")
+      Seq("categorical", "js_full", "rare_value_changes", "rare_categories", "group_drift",
+          "group_correlations")
         .map(f => f -> log.jobs.values.count(_ == s"drift:$f")).toMap
     }
     val two = families(narrow(v1), narrow(v3))

@@ -475,21 +475,30 @@ class PlanAuditSpec extends SparkSpec {
   test("group drift family scans each table once (eligibility is derived, not re-scanned)") {
     // eligibility ranks the categories of the one metrics aggregate with a
     // window over its rows; a self-join would plan a second, differently
-    // pruned aggregate that exchange reuse cannot merge
-    for (df <- Seq(
-        graft.drift.GroupDrift.groupNumericMetrics(spark, sf),
-        graft.drift.GroupDrift.groupCatMetrics(spark, sf))) {
-      Seq("lineitem", "orders").foreach { t =>
-        val n = finalScansOf(df, t)
-        assert(n == 1, s"$t scanned $n times in the final plan:\n${df.queryExecution.executedPlan}")
-      }
+    // pruned aggregate that exchange reuse cannot merge. The categorical
+    // queries read one census per table: a filter on its `value` column
+    // would push below the census aggregate and plan a second scan.
+    import graft.drift._
+    val groupTables = GroupDrift.specs.map(_.tableName)
+    val catTables = splits.categorical.map(_.tableName)
+    val queries = Seq(GroupDrift.groupNumericMetrics(spark, sf), GroupDrift.groupCatMetrics(spark, sf))
+      .map(_ -> groupTables) ++ Seq(
+        CategoricalDrift.valueCounts(spark, sf), CategoricalDrift.distDiff(spark, sf),
+        CategoricalDrift.categoryChanges(spark, sf), CategoricalDrift.topMovers(spark, sf),
+        CategoricalDrift.chiSquare(spark, sf), CategoricalDrift.topCombined(spark, sf),
+        DistanceDrift.cramersV(spark, sf), DistanceDrift.catDistances(spark, sf))
+      .map(_ -> catTables)
+    for ((df, tables) <- queries; t <- tables) {
+      val n = finalScansOf(df, t)
+      assert(n == 1, s"$t scanned $n times in the final plan:\n${df.queryExecution.executedPlan}")
     }
   }
 
   test("group drift verdict scans each table once per aggregate (eligibility is derived, not re-scanned)") {
     // the verdict reads two aggregates of different grain per table — the
-    // numeric pivot and the categorical value counts — so two scans;
-    // eligibility ranks the pivot's own rows instead of re-aggregating it
+    // numeric stats per category and the categorical value counts — so two
+    // scans; eligibility ranks the numeric aggregate's own rows instead of
+    // re-aggregating it
     val df = graft.drift.GroupDrift.groupDriftVerdict(spark, sf)
     Seq("lineitem", "orders").foreach { t =>
       val n = finalScansOf(df, t)
