@@ -377,7 +377,7 @@ object CategoricalDrift extends graft.OperatorModule {
     * /root/reference/distribution_analyzer.py:229-319), from one census. */
   def jsFullForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair", threshold: Double = 0.1): DataFrame =
-    jsFullOf(census(NumericDrift.tagPair(ref, curr, cols), cols), label, threshold)
+    jsFullOf(census(tagPair(ref, curr, cols), cols), label, threshold)
       .orderBy("column_name")
 
   /** O22 top increased/decreased values over the FULL support (frequencies
@@ -563,13 +563,17 @@ object CategoricalDrift extends graft.OperatorModule {
 
   // ------------------------------------------- categorical_drift (O19)
 
-  /** O19 verdict + weighted score, assembled from the O15/O17/O18 pieces. */
+  /** O19 verdict + weighted score, assembled from the O15/O17/O18 pieces. A
+    * NULL term (a side without rows or without a non-null value has no JS
+    * divergence, null difference or category ratio) scores 0 and detects
+    * nothing: `LEAST` skips NULL arguments, so an unguarded NULL term would
+    * score its full weight. */
   private val o19Final: Seq[String] = {
     val chiScore = "CASE WHEN p_value <= 0.001 THEN 1.0 WHEN p_value <= 0.01 THEN 0.8 " +
       "WHEN p_value <= 0.05 THEN 0.6 WHEN p_value <= 0.1 THEN 0.3 ELSE 0.0 END"
-    val score = s"LEAST(1.0, 0.4 * LEAST(1.0, js_divergence * 4) + 0.3 * ($chiScore) + " +
-      "0.1 * LEAST(1.0, ABS(null_diff) * 10) + " +
-      "0.2 * LEAST(1.0, GREATEST(new_ratio, missing_ratio) * 2))"
+    val score = s"LEAST(1.0, 0.4 * LEAST(1.0, COALESCE(js_divergence, 0) * 4) + 0.3 * ($chiScore) + " +
+      "0.1 * LEAST(1.0, COALESCE(ABS(null_diff), 0) * 10) + " +
+      "0.2 * LEAST(1.0, COALESCE(GREATEST(new_ratio, missing_ratio), 0) * 2))"
     val conds = Seq(
       s"js_divergence > $CategoryThreshold" -> "distribution_change",
       s"p_value < $ChiSquarePValue" -> "statistical_significance",
@@ -582,7 +586,7 @@ object CategoricalDrift extends graft.OperatorModule {
       "ROUND(js_divergence, 6) AS js_divergence", "ROUND(p_value, 6) AS chi_p_value",
       "ROUND(null_diff, 6) AS null_proportion_diff",
       "ROUND(new_ratio, 6) AS new_categories_ratio", "ROUND(missing_ratio, 6) AS missing_categories_ratio",
-      s"(${conds.map(_._1).mkString(" OR ")}) AS drift_detected",
+      s"COALESCE(${conds.map(_._1).mkString(" OR ")}, false) AS drift_detected",
       s"$causes AS drift_causes",
       s"ROUND($score, 6) AS drift_score",
       s"${severitySql(score)} AS drift_severity")
@@ -640,14 +644,14 @@ object CategoricalDrift extends graft.OperatorModule {
     * census of every column. */
   def categoricalDriftForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair", exactPValue: Boolean = false): DataFrame =
-    categoricalDriftOf(census(NumericDrift.tagPair(ref, curr, cols), cols), label, exactPValue)
+    categoricalDriftOf(census(tagPair(ref, curr, cols), cols), label, exactPValue)
       .orderBy("column_name")
 
   /** Generic O35 rare-category changes for an arbitrary snapshot pair, from
     * one census of every column. */
   def rareCategoriesForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair", minCount: Int = 10, maxFreq: Double = 0.01): DataFrame =
-    rareCategoriesOf(census(NumericDrift.tagPair(ref, curr, cols), cols), label, minCount, maxFreq)
+    rareCategoriesOf(census(tagPair(ref, curr, cols), cols), label, minCount, maxFreq)
       .orderBy(when(col("severity") === "high", 0).otherwise(1),
         abs(col("rel_change")).desc, col("column_name"), col("category"))
 
@@ -743,7 +747,7 @@ object CategoricalDrift extends graft.OperatorModule {
     * /root/reference/distribution_analyzer.py:366-401), from one census. */
   def rareValueChangesForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair", thr: Double = 0.01): DataFrame =
-    rareValueChangesOf(census(NumericDrift.tagPair(ref, curr, cols), cols), label, thr)
+    rareValueChangesOf(census(tagPair(ref, curr, cols), cols), label, thr)
       .orderBy("table_name", "column_name", "change_type", "value")
 
   /** O35 rare-category change detection (full port of

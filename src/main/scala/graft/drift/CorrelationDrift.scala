@@ -23,18 +23,23 @@ object CorrelationDrift extends graft.OperatorModule {
   val GroupCorrChangeThreshold = 0.3
   val RelationshipChangeThreshold = 0.3
 
-  private val corrCols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
+  private[graft] val corrCols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
   private val pairs: Seq[(String, String)] =
     corrCols.combinations(2).map(p => (p(0), p(1))).toSeq
 
-  /** Long per-side pair correlations for lineitem: (side, col1, col2, corr). */
-  private def sidePairCorrs(spark: SparkSession, dir: String): DataFrame = {
-    val aggs = pairs.zipWithIndex.map { case ((a, b), i) => corr(col(a), col(b)).as(s"c$i") }
-    val rows = pairs.zipWithIndex.map { case ((a, b), i) => s"'$a', '$b', c$i" }.mkString(", ")
-    withSide(table(spark, dir, "lineitem"), S.lineitemRef)
-      .groupBy(col("side")).agg(aggs.head, aggs.tail: _*)
-      .select(col("side"), expr(s"stack(${pairs.size}, $rows) as (col1, col2, corr)"))
+  /** Per-side correlations of every column pair of a tagged frame, long:
+    * (side, col1, col2, corr), from one groupBy(side). */
+  private def pairCorrs(tagged: DataFrame, cols: Seq[String]): DataFrame = {
+    val prs = cols.combinations(2).map(p => (p(0), p(1))).toSeq
+    val aggs = prs.zipWithIndex.map { case ((a, b), i) => corr(col(a), col(b)).as(s"c$i") }
+    val rows = prs.zipWithIndex.map { case ((a, b), i) => s"'$a', '$b', c$i" }.mkString(", ")
+    tagged.groupBy(col("side")).agg(aggs.head, aggs.tail: _*)
+      .select(col("side"), expr(s"stack(${prs.size}, $rows) as (col1, col2, corr)"))
   }
+
+  /** [[pairCorrs]] of the lineitem split. */
+  private def sidePairCorrs(spark: SparkSession, dir: String): DataFrame =
+    pairCorrs(withSide(table(spark, dir, "lineitem"), S.lineitemRef), corrCols)
 
   private def sidePairCorrsSql: String =
     pairs.map { case (a, b) =>
@@ -58,17 +63,10 @@ object CorrelationDrift extends graft.OperatorModule {
 
   /** Generic O25 for an arbitrary snapshot pair (orchestrator entry). */
   def forPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
-      config: DriftConfig = DriftConfig()): DataFrame = {
-    val prs = cols.combinations(2).map(p => (p(0), p(1))).toSeq
-    val aggs = prs.zipWithIndex.map { case ((a, b), i) => corr(col(a), col(b)).as(s"c$i") }
-    val rows = prs.zipWithIndex.map { case ((a, b), i) => s"'$a', '$b', c$i" }.mkString(", ")
-    val long = NumericDrift.tagPair(ref, curr, cols)
-      .groupBy(col("side")).agg(aggs.head, aggs.tail: _*)
-      .select(col("side"), expr(s"stack(${prs.size}, $rows) as (col1, col2, corr)"))
-    pivotPairs(long)
+      config: DriftConfig = DriftConfig()): DataFrame =
+    pivotPairs(pairCorrs(tagPair(ref, curr, cols), cols))
       .selectExpr(corrFinalFor(config.correlationChangeThreshold, config.correlationThreshold): _*)
       .orderBy("col1", "col2")
-  }
 
   private def corrFinalFor(chg: Double, strong: Double): Seq[String] = Seq(
     "col1", "col2",
@@ -79,14 +77,7 @@ object CorrelationDrift extends graft.OperatorModule {
     s"(ABS(ref_corr) < $strong AND ABS(curr_corr) >= $strong) AS new_strong",
     s"(ABS(ref_corr) >= $strong AND ABS(curr_corr) < $strong) AS disappeared_strong")
 
-  private val corrFinal: Seq[String] = Seq(
-    "col1", "col2",
-    "ROUND(ref_corr, 6) AS ref_correlation", "ROUND(curr_corr, 6) AS curr_correlation",
-    "ROUND(ABS(curr_corr - ref_corr), 6) AS abs_change",
-    s"(ABS(curr_corr - ref_corr) >= $CorrelationChangeThreshold) AS significant_shift",
-    "CASE WHEN ABS(curr_corr) < ABS(ref_corr) THEN 'weaker' ELSE 'stronger' END AS change_type",
-    s"(ABS(ref_corr) < $CorrelationThreshold AND ABS(curr_corr) >= $CorrelationThreshold) AS new_strong",
-    s"(ABS(ref_corr) >= $CorrelationThreshold AND ABS(curr_corr) < $CorrelationThreshold) AS disappeared_strong")
+  private val corrFinal: Seq[String] = corrFinalFor(CorrelationChangeThreshold, CorrelationThreshold)
 
   def corrMatrix(spark: SparkSession, dir: String): DataFrame =
     pivotPairs(sidePairCorrs(spark, dir)).selectExpr(corrFinal: _*).orderBy("col1", "col2")
@@ -100,42 +91,26 @@ object CorrelationDrift extends graft.OperatorModule {
   /** |corr(predictor, target)| as importance; rank shift between snapshots.
     * Ranks use (importance desc, column asc) — a deterministic version of
     * the reference's stable Python sort. */
-  private val fiTarget = "l_extendedprice"
-  private val fiPredictors = Seq("l_quantity", "l_discount", "l_tax")
+  private[graft] val fiTarget = "l_extendedprice"
+  private[graft] val fiPredictors = Seq("l_quantity", "l_discount", "l_tax")
 
-  def featureImportance(spark: SparkSession, dir: String): DataFrame = {
-    val aggs = fiPredictors.zipWithIndex.map { case (p, i) => corr(col(p), col(fiTarget)).as(s"c$i") }
-    val rows = fiPredictors.zipWithIndex.map { case (p, i) => s"'$p', c$i" }.mkString(", ")
-    val long = withSide(table(spark, dir, "lineitem"), S.lineitemRef)
-      .groupBy(col("side")).agg(aggs.head, aggs.tail: _*)
-      .select(col("side"), expr(s"stack(${fiPredictors.size}, $rows) as (column_name, corr)"))
-      .select(col("side"), col("column_name"), abs(coalesce(col("corr"), lit(0.0))).as("importance"))
-    val ranked = long.withColumn("rk", row_number().over(
-      org.apache.spark.sql.expressions.Window.partitionBy("side")
-        .orderBy(col("importance").desc, col("column_name").asc)))
-    ranked.groupBy("column_name").agg(
-        max(when(col("side") === "ref", col("importance"))).as("ref_importance"),
-        max(when(col("side") === "ref", col("rk"))).as("ref_rank"),
-        max(when(col("side") === "curr", col("importance"))).as("curr_importance"),
-        max(when(col("side") === "curr", col("rk"))).as("curr_rank"))
-      .selectExpr(fiFinal: _*).orderBy("column_name")
-  }
-
-  private val fiFinal: Seq[String] = Seq(
-    s"'$fiTarget' AS target_column", "column_name",
-    "ROUND(ref_importance, 6) AS ref_importance", "ROUND(curr_importance, 6) AS curr_importance",
-    "ROUND(ABS(curr_importance - ref_importance), 6) AS abs_change",
-    "ROUND(ABS(curr_importance - ref_importance) / GREATEST(ref_importance, 0.01), 6) AS rel_change",
-    "CASE WHEN curr_importance > ref_importance THEN 'increased' ELSE 'decreased' END AS change_type",
-    "ref_rank", "curr_rank", "ref_rank - curr_rank AS rank_shift",
-    "(ABS(ref_rank - curr_rank) >= 2) AS significant_rank_shift")
+  def featureImportance(spark: SparkSession, dir: String): DataFrame =
+    featureImportanceOf(withSide(table(spark, dir, "lineitem"), S.lineitemRef), fiTarget, fiPredictors)
+      .orderBy("column_name")
 
   /** Generic O27 for an arbitrary snapshot pair. */
   def featureImportanceForPair(ref: DataFrame, curr: DataFrame, target: String,
+      predictors: Seq[String]): DataFrame =
+    featureImportanceOf(tagPair(ref, curr, (predictors :+ target).distinct), target, predictors)
+      .orderBy("column_name")
+
+  /** O27 over a tagged frame: every predictor's |corr| with the target from
+    * one groupBy(side), ranked per side. */
+  private def featureImportanceOf(tagged: DataFrame, target: String,
       predictors: Seq[String]): DataFrame = {
     val aggs = predictors.zipWithIndex.map { case (p, i) => corr(col(p), col(target)).as(s"c$i") }
     val rows = predictors.zipWithIndex.map { case (p, i) => s"'$p', c$i" }.mkString(", ")
-    val long = NumericDrift.tagPair(ref, curr, (predictors :+ target).distinct)
+    val long = tagged
       .groupBy(col("side")).agg(aggs.head, aggs.tail: _*)
       .select(col("side"), expr(s"stack(${predictors.size}, $rows) as (column_name, corr)"))
       .select(col("side"), col("column_name"), abs(coalesce(col("corr"), lit(0.0))).as("importance"))
@@ -147,9 +122,17 @@ object CorrelationDrift extends graft.OperatorModule {
         max(when(col("side") === "ref", col("rk"))).as("ref_rank"),
         max(when(col("side") === "curr", col("importance"))).as("curr_importance"),
         max(when(col("side") === "curr", col("rk"))).as("curr_rank"))
-      .selectExpr(fiFinal.map(_.replace(s"'$fiTarget'", s"'$target'")): _*)
-      .orderBy("column_name")
+      .selectExpr(fiFinal(target): _*)
   }
+
+  private def fiFinal(target: String): Seq[String] = Seq(
+    s"'$target' AS target_column", "column_name",
+    "ROUND(ref_importance, 6) AS ref_importance", "ROUND(curr_importance, 6) AS curr_importance",
+    "ROUND(ABS(curr_importance - ref_importance), 6) AS abs_change",
+    "ROUND(ABS(curr_importance - ref_importance) / GREATEST(ref_importance, 0.01), 6) AS rel_change",
+    "CASE WHEN curr_importance > ref_importance THEN 'increased' ELSE 'decreased' END AS change_type",
+    "ref_rank", "curr_rank", "ref_rank - curr_rank AS rank_shift",
+    "(ABS(ref_rank - curr_rank) >= 2) AS significant_rank_shift")
 
   def featureImportanceSql: String = {
     val un = fiPredictors.map { p =>
@@ -163,7 +146,7 @@ object CorrelationDrift extends graft.OperatorModule {
       "MAX(CASE WHEN side = 'ref' THEN rk END) AS ref_rank, " +
       "MAX(CASE WHEN side = 'curr' THEN importance END) AS curr_importance, " +
       "MAX(CASE WHEN side = 'curr' THEN rk END) AS curr_rank FROM ranked GROUP BY 1) " +
-      s"SELECT ${fiFinal.mkString(", ")} FROM piv ORDER BY column_name"
+      s"SELECT ${fiFinal(fiTarget).mkString(", ")} FROM piv ORDER BY column_name"
   }
 
   // --------------------------------------- correlation structure (O30)
@@ -264,7 +247,7 @@ object CorrelationDrift extends graft.OperatorModule {
     * pass, in dimension order, then category and pair. */
   private[drift] def groupCorrelationsForDims(ref: DataFrame, curr: DataFrame, dims: Seq[String],
       cols: Seq[String], minRows: Int = 30, threshold: Double = GroupCorrChangeThreshold): DataFrame =
-    groupCorrelationsOf(NumericDrift.tagPair(ref, curr, (dims ++ cols).distinct), dims, cols,
+    groupCorrelationsOf(tagPair(ref, curr, (dims ++ cols).distinct), dims, cols,
         minRows, threshold)
       .orderBy("dim_ix", "category", "col1", "col2").drop("dim_ix")
 
@@ -379,17 +362,13 @@ object CorrelationDrift extends graft.OperatorModule {
     * — ONE conditional aggregation per table over the tagged pair (the
     * reference loops a count per column, correlation_analyzer.py:643-663),
     * emitting both frames' non-null ratios and the ≥0.7-in-both verdict. */
-  def validColumnsQuery(spark: SparkSession, dir: String): DataFrame = {
-    val per = S.numeric.map { sp =>
-      val aggs = count(lit(1)).as("n") +: sp.cols.map(c => count(col(c)).as(s"${c}__nn"))
-      val rows = sp.cols.map(c => s"'${sp.tableName}', '$c', n, ${c}__nn").mkString(", ")
-      withSide(table(spark, dir, sp.tableName), sp.ref)
-        .groupBy("side").agg(aggs.head, aggs.tail: _*)
-        .select(col("side"),
-          expr(s"stack(${sp.cols.size}, $rows) as (table_name, column_name, n, nn)"))
-    }
-    per.reduce(_ union _)
-      .groupBy("table_name", "column_name").agg(
+  def validColumnsQuery(spark: SparkSession, dir: String): DataFrame =
+    overNumericSplits(spark, dir) { (tagged, label, cols) =>
+      val aggs = count(lit(1)).as("n") +: cols.map(c => count(col(c)).as(s"${c}__nn"))
+      val rows = cols.map(c => s"'$label', '$c', n, ${c}__nn").mkString(", ")
+      tagged.groupBy("side").agg(aggs.head, aggs.tail: _*)
+        .select(col("side"), expr(s"stack(${cols.size}, $rows) as (table_name, column_name, n, nn)"))
+    }.groupBy("table_name", "column_name").agg(
         max(when(col("side") === "ref", col("nn") * 1e0 / col("n"))).as("ref_ratio"),
         max(when(col("side") === "curr", col("nn") * 1e0 / col("n"))).as("curr_ratio"))
       .selectExpr("table_name", "column_name",
@@ -397,7 +376,6 @@ object CorrelationDrift extends graft.OperatorModule {
         "ROUND(curr_ratio, 6) AS curr_nonnull_ratio",
         "(ref_ratio >= 0.7 AND curr_ratio >= 0.7) AS valid")
       .orderBy("table_name", "column_name")
-  }
 
   def validColumnsSql: String = {
     val per = for (sp <- S.numeric; c <- sp.cols) yield

@@ -29,6 +29,10 @@ import graft.drift.{splits => S}
   * 100 TB surface, wired in `SparkEntry.benchQueries`. It is a different
   * algorithm, not a swapped aggregate, so it keeps its own flag instead
   * of riding sketch mode (graft.plans.SketchModeRewrite).
+  *
+  * Each family is one private `…Of` function of a side-tagged frame: the
+  * gate queries apply it to `withSide(table, split.ref)` for each table
+  * split, and the `…ForPair` functions to `tagPair(ref, curr, cols)`.
   */
 object DistanceDrift extends graft.OperatorModule {
 
@@ -55,37 +59,52 @@ object DistanceDrift extends graft.OperatorModule {
       .filter(col("x").isNotNull)
   }
 
-  /** Same long frame with x snapped to the left edge of its grid cell.
-    * Edges are SHARED between sides (one bounds agg over both sides,
-    * broadcast), so bin k means the same value range on ref and curr —
-    * the property PSI requires and the reference's per-side-range
-    * histograms lack (SURVEY.md §8; distribution_analyzer.py:440-449).
-    * A constant column (w = 0) maps wholly to its lone edge. */
-  private def binnedLong(tagged: DataFrame, cols: Seq[String], bins: Int): DataFrame = {
-    val boundAggs = cols.flatMap { c =>
+  /** Bin edges of every column of a tagged frame as ONE wide row: `<c>__lo`
+    * is the column's minimum and `<c>__w` the cell width (max − min) / bins,
+    * both over the two sides together. */
+  private[drift] def sharedEdges(tagged: DataFrame, cols: Seq[String], bins: Int): DataFrame = {
+    val aggs = cols.flatMap { c =>
       Seq(min(col(c)).cast("double").as(s"${c}__lo"),
         ((max(col(c)).cast("double") - min(col(c)).cast("double")) / bins).as(s"${c}__w"))
     }
-    val bounds = tagged.agg(boundAggs.head, boundAggs.tail: _*)
+    tagged.agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** (side, column_name, lo, w, bin) for every non-null value of every
+    * column, in one stack: `bin` ∈ [0, bins) is the value's cell on the
+    * [[sharedEdges]] row (broadcast). The edges are SHARED between sides, so
+    * bin k means the same value range on ref and curr — the property PSI
+    * requires and the reference's per-side-range histograms lack
+    * (SURVEY.md §8; distribution_analyzer.py:440-449). A constant column
+    * (w = 0) falls wholly in bin 0. */
+  private[drift] def binnedCells(tagged: DataFrame, cols: Seq[String], edges: DataFrame,
+      bins: Int): DataFrame = {
     val rows = cols.map(c => s"'$c', CAST($c AS DOUBLE), ${c}__lo, ${c}__w").mkString(", ")
-    tagged.crossJoin(broadcast(bounds))
+    tagged.crossJoin(broadcast(edges))
       .select(col("side"), expr(s"stack(${cols.size}, $rows) as (column_name, x, lo, w)"))
       .filter(col("x").isNotNull)
-      .select(col("side"), col("column_name"),
-        when(col("w") === 0.0, col("lo"))
-          .otherwise(col("lo") +
-            least(floor((col("x") - col("lo")) / col("w")), lit(bins - 1)) * col("w"))
-          .as("x"))
+      .select(col("side"), col("column_name"), col("lo"), col("w"),
+        when(col("w") === 0.0, lit(0))
+          .otherwise(least(floor((col("x") - col("lo")) / col("w")), lit(bins - 1)))
+          .cast("int").as("bin"))
   }
+
+  /** The [[numericLong]] frame with x snapped to the left edge of its
+    * [[binnedCells]] cell; a constant column maps wholly to its lone edge. */
+  private def binnedLong(tagged: DataFrame, cols: Seq[String], bins: Int): DataFrame =
+    binnedCells(tagged, cols, sharedEdges(tagged, cols, bins), bins)
+      .select(col("side"), col("column_name"),
+        when(col("w") === 0.0, col("lo")).otherwise(col("lo") + col("bin") * col("w")).as("x"))
 
   /** SQL mirror of one [[numericLong]] / [[binnedLong]] branch. */
   private def longBranchSql(sp: S.NumSplit, c: String): String =
     s"SELECT CASE WHEN ${sp.refSql} THEN 'ref' ELSE 'curr' END AS side, " +
-      s"'$c' AS column_name, CAST($c AS DOUBLE) AS x " +
+      s"'${sp.tableName}' AS table_name, '$c' AS column_name, CAST($c AS DOUBLE) AS x " +
       s"FROM ${sp.tableName} WHERE $c IS NOT NULL"
 
   private def binnedBranchSql(sp: S.NumSplit, c: String, bins: Int): String =
-    s"SELECT CASE WHEN ${sp.refSql} THEN 'ref' ELSE 'curr' END AS side, '$c' AS column_name, " +
+    s"SELECT CASE WHEN ${sp.refSql} THEN 'ref' ELSE 'curr' END AS side, " +
+      s"'${sp.tableName}' AS table_name, '$c' AS column_name, " +
       s"CASE WHEN b.w = 0 THEN b.lo ELSE b.lo + LEAST(FLOOR((CAST($c AS DOUBLE) - b.lo) / b.w), ${bins - 1}) * b.w END AS x " +
       s"FROM ${sp.tableName}, (SELECT MIN($c)::DOUBLE AS lo, " +
       s"(MAX($c)::DOUBLE - MIN($c)::DOUBLE) / $bins AS w FROM ${sp.tableName}) b " +
@@ -117,22 +136,19 @@ object DistanceDrift extends graft.OperatorModule {
   /** PSI for every numeric split column: 10 shared-edge bins per column,
     * one scan + one small shuffle per table. */
   def psi(spark: SparkSession, dir: String): DataFrame =
-    S.numeric.map { sp =>
-      psiFromLong(binnedLong(withSide(table(spark, dir, sp.tableName), sp.ref),
-        sp.cols, 10), sp.tableName)
-    }.reduce(_ unionAll _).orderBy("table_name", "column_name")
+    overNumericSplits(spark, dir)(psiOf).orderBy("table_name", "column_name")
 
   /** PSI for an arbitrary snapshot pair (library surface). */
   def psiForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    psiFromLong(binnedLong(NumericDrift.tagPair(ref, curr, cols), cols, 10), label)
-      .orderBy("table_name", "column_name")
+    psiOf(tagPair(ref, curr, cols), label, cols).orderBy("table_name", "column_name")
+
+  private def psiOf(tagged: DataFrame, label: String, cols: Seq[String]): DataFrame =
+    psiFromLong(binnedLong(tagged, cols, 10), label)
 
   def psiSql: String = {
-    val branches = S.numeric.flatMap(sp => sp.cols.map { c =>
-      binnedBranchSql(sp, c, 10).replace(s"'$c' AS column_name",
-        s"'${sp.tableName}' AS table_name, '$c' AS column_name")
-    }).mkString(" UNION ALL ")
+    val branches = S.numeric.flatMap(sp => sp.cols.map(binnedBranchSql(sp, _, 10)))
+      .mkString(" UNION ALL ")
     s"WITH long AS ($branches), cnt AS (SELECT table_name, column_name, x, " +
       "SUM(CASE WHEN side = 'ref' THEN 1 ELSE 0 END)::BIGINT AS rc, " +
       "SUM(CASE WHEN side = 'curr' THEN 1 ELSE 0 END)::BIGINT AS cc " +
@@ -169,19 +185,13 @@ object DistanceDrift extends graft.OperatorModule {
       .withColumn("dx", lead("x", 1).over(wOrd) - col("x"))
   }
 
-  private def edfOf(spark: SparkSession, dir: String, sp: S.NumSplit,
-      approx: Boolean): DataFrame = {
-    val tagged = withSide(table(spark, dir, sp.tableName), sp.ref)
-    edfFromLong(if (approx) binnedLong(tagged, sp.cols, EdfBins)
-      else numericLong(tagged, sp.cols))
-  }
+  private def edfOf(tagged: DataFrame, cols: Seq[String], approx: Boolean): DataFrame =
+    edfFromLong(if (approx) binnedLong(tagged, cols, EdfBins) else numericLong(tagged, cols))
 
   /** Shared ECDF CTE text over the exact long branches. */
   private def edfSqlCtes: String = {
-    val branches = S.numeric.flatMap(sp => sp.cols.map { c =>
-      longBranchSql(sp, c).replace(s"'$c' AS column_name",
-        s"'${sp.tableName}' AS table_name, '$c' AS column_name")
-    }).mkString(" UNION ALL ")
+    val branches = S.numeric.flatMap(sp => sp.cols.map(longBranchSql(sp, _)))
+      .mkString(" UNION ALL ")
     s"WITH long AS ($branches), cnt AS (SELECT table_name, column_name, x, " +
       "SUM(CASE WHEN side = 'ref' THEN 1 ELSE 0 END)::BIGINT AS rc, " +
       "SUM(CASE WHEN side = 'curr' THEN 1 ELSE 0 END)::BIGINT AS cc " +
@@ -199,32 +209,24 @@ object DistanceDrift extends graft.OperatorModule {
   /** Two-sample KS: D = sup |F_ref − F_curr|, with the asymptotic α=0.05
     * decision D > c(α)·√((n_ref+n_curr)/(n_ref·n_curr)). */
   def ksTest(spark: SparkSession, dir: String, approx: Boolean = false): DataFrame =
-    S.numeric.map { sp =>
-      edfOf(spark, dir, sp, approx)
-        .groupBy("column_name").agg(
-          max(abs(col("fr") - col("fc"))).as("ks_raw"),
-          first("nr").as("nr"), first("nc").as("nc"))
-        .select(lit(sp.tableName).as("table_name"), col("column_name"),
-          r6(col("ks_raw")).as("ks_stat"),
-          r6(lit(KsCoeff) * sqrt((col("nr") + col("nc")) * lit(1.0) / (col("nr") * col("nc"))))
-            .as("ks_crit"),
-          (col("ks_raw") > lit(KsCoeff) *
-            sqrt((col("nr") + col("nc")) * lit(1.0) / (col("nr") * col("nc")))).as("drifted"))
-    }.reduce(_ unionAll _).orderBy("table_name", "column_name")
+    overNumericSplits(spark, dir)(ksOf(_, _, _, approx)).orderBy("table_name", "column_name")
 
   def ksForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    edfFromLong(numericLong(NumericDrift.tagPair(ref, curr, cols), cols))
+    ksOf(tagPair(ref, curr, cols), label, cols, approx = false)
+      .orderBy("table_name", "column_name")
+
+  private def ksOf(tagged: DataFrame, label: String, cols: Seq[String],
+      approx: Boolean): DataFrame = {
+    val crit = lit(KsCoeff) * sqrt((col("nr") + col("nc")) * lit(1.0) / (col("nr") * col("nc")))
+    edfOf(tagged, cols, approx)
       .groupBy("column_name").agg(
         max(abs(col("fr") - col("fc"))).as("ks_raw"),
         first("nr").as("nr"), first("nc").as("nc"))
       .select(lit(label).as("table_name"), col("column_name"),
-        r6(col("ks_raw")).as("ks_stat"),
-        r6(lit(KsCoeff) * sqrt((col("nr") + col("nc")) * lit(1.0) / (col("nr") * col("nc"))))
-          .as("ks_crit"),
-        (col("ks_raw") > lit(KsCoeff) *
-          sqrt((col("nr") + col("nc")) * lit(1.0) / (col("nr") * col("nc")))).as("drifted"))
-      .orderBy("table_name", "column_name")
+        r6(col("ks_raw")).as("ks_stat"), r6(crit).as("ks_crit"),
+        (col("ks_raw") > crit).as("drifted"))
+  }
 
   def ksTestSql: String =
     s"$edfSqlCtes, agg AS (SELECT table_name, column_name, " +
@@ -239,20 +241,16 @@ object DistanceDrift extends graft.OperatorModule {
     * over ECDF steps, plus the range-normalized form (comparable across
     * columns of different units). */
   def wasserstein(spark: SparkSession, dir: String, approx: Boolean = false): DataFrame =
-    S.numeric.map { sp =>
-      edfOf(spark, dir, sp, approx)
-        .groupBy("column_name").agg(
-          coalesce(sum(abs(col("fr") - col("fc")) * col("dx")), lit(0.0)).as("w1"),
-          (max("x") - min("x")).as("range"))
-        .select(lit(sp.tableName).as("table_name"), col("column_name"),
-          r6(col("w1")).as("wasserstein"),
-          r6(when(col("range") === 0.0, lit(0.0)).otherwise(col("w1") / col("range")))
-            .as("wasserstein_norm"))
-    }.reduce(_ unionAll _).orderBy("table_name", "column_name")
+    overNumericSplits(spark, dir)(wassersteinOf(_, _, _, approx)).orderBy("table_name", "column_name")
 
   def wassersteinForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    edfFromLong(numericLong(NumericDrift.tagPair(ref, curr, cols), cols))
+    wassersteinOf(tagPair(ref, curr, cols), label, cols, approx = false)
+      .orderBy("table_name", "column_name")
+
+  private def wassersteinOf(tagged: DataFrame, label: String, cols: Seq[String],
+      approx: Boolean): DataFrame =
+    edfOf(tagged, cols, approx)
       .groupBy("column_name").agg(
         coalesce(sum(abs(col("fr") - col("fc")) * col("dx")), lit(0.0)).as("w1"),
         (max("x") - min("x")).as("range"))
@@ -260,7 +258,6 @@ object DistanceDrift extends graft.OperatorModule {
         r6(col("w1")).as("wasserstein"),
         r6(when(col("range") === 0.0, lit(0.0)).otherwise(col("w1") / col("range")))
           .as("wasserstein_norm"))
-      .orderBy("table_name", "column_name")
 
   def wassersteinSql: String =
     s"$edfSqlCtes, agg AS (SELECT table_name, column_name, " +
@@ -299,7 +296,7 @@ object DistanceDrift extends graft.OperatorModule {
 
   def cramersVForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    cramersVOf(CategoricalDrift.census(NumericDrift.tagPair(ref, curr, cols), cols), label)
+    cramersVOf(CategoricalDrift.census(tagPair(ref, curr, cols), cols), label)
       .orderBy("table_name", "column_name")
 
   /** Per-cell χ² contribution from EXACT integer counts (rc, cc, rs, cs) —
@@ -432,7 +429,7 @@ object DistanceDrift extends graft.OperatorModule {
 
   def catDistancesForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    catDistancesOf(CategoricalDrift.census(NumericDrift.tagPair(ref, curr, cols), cols), label)
+    catDistancesOf(CategoricalDrift.census(tagPair(ref, curr, cols), cols), label)
       .orderBy("table_name", "column_name")
 
   /** The trio over the non-null values of a census; a column without a

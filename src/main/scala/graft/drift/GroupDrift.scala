@@ -365,7 +365,7 @@ object GroupDrift extends graft.OperatorModule {
     * function, in dimension order, then category. */
   def verdictForPair(ref: DataFrame, curr: DataFrame, dims: Seq[String],
       numMetrics: Seq[String], catMetrics: Seq[String]): DataFrame =
-    verdictOf(NumericDrift.tagPair(ref, curr, (dims ++ numMetrics ++ catMetrics).distinct),
+    verdictOf(tagPair(ref, curr, (dims ++ numMetrics ++ catMetrics).distinct),
         dims, numMetrics, catMetrics, "pair")
       .orderBy("dim_ix", "category").drop("dim_ix")
 
@@ -422,7 +422,7 @@ object GroupDrift extends graft.OperatorModule {
   def groupSlicesForPair(ref: DataFrame, curr: DataFrame, dims: Seq[String],
       metrics: Seq[String], label: String = "pair",
       quantScale: Int = 6): DataFrame =
-    sliceAgg(NumericDrift.tagPair(ref, curr, (dims ++ metrics).distinct),
+    sliceAgg(tagPair(ref, curr, (dims ++ metrics).distinct),
         dims, metrics, label, quantScale)
       .orderBy("table_name", "dimension", "category", "metric")
 

@@ -1,6 +1,6 @@
 package graft.drift
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.drift.{splits => S}
 
@@ -9,12 +9,19 @@ import graft.drift.{splits => S}
   * /root/reference/numerical_analyzer.py, distribution_analyzer.py,
   * rare_event_analyzer.py).
   *
-  * Scale design: every per-column statistic for a snapshot pair is computed in
-  * ONE `groupBy("side")` aggregation over a single scan — the reference runs
-  * ~5 Spark jobs per column per frame (numerical_analyzer.py:124-143); we run
-  * one job for all columns of a table, with map-side partial aggregation, so
-  * the cost at 100 TB is one scan + a 2-row shuffle. The drift math is then a
-  * join of two 1-row-per-column frames (broadcast, no shuffle).
+  * Scale design: each family is one private `…Of(tagged, label, cols)`
+  * over a side-tagged frame. The pair functions apply it to
+  * `tagPair(ref, curr, cols)`; the gate queries apply it to
+  * `withSide(table, split.ref)` for each table split and union the results.
+  * Every family aggregates all of its columns at once: one
+  * `groupBy("side")` over a single scan for the per-side statistics (the
+  * reference runs ~5 Spark jobs per column per frame,
+  * numerical_analyzer.py:124-143), one bounds aggregate plus one stacked
+  * `groupBy(column_name, bin)` for the histograms. So a family's job count
+  * does not grow with the column count, and at 100 TB a family costs one
+  * scan (two where it needs reference constants first) and a shuffle of
+  * partial aggregates. The ref/curr comparison is a conditional-aggregation
+  * pivot of the per-side rows.
   *
   * The final drift arithmetic is expressed as SQL strings shared verbatim
   * with the DuckDB oracle (`selectExpr` on the Spark side), so the two
@@ -34,37 +41,12 @@ object NumericDrift extends graft.OperatorModule {
     "events" -> Seq("value"),
   )
 
-  // the DOUBLE cast leaves exact percentiles unchanged and lets sketch
-  // mode reach integral columns too (graft.plans.SketchModeRewrite)
-  private def statAggs(c: String): Seq[Column] = Seq(
-    count(lit(1)).as(s"${c}__total"),
-    count(col(c)).as(s"${c}__nonnull"),
-    avg(col(c)).as(s"${c}__mean"),
-    stddev(col(c)).as(s"${c}__std"),
-    min(col(c)).cast("double").as(s"${c}__min"),
-    max(col(c)).cast("double").as(s"${c}__max"),
-    expr(s"percentile(CAST($c AS DOUBLE), array(0.25, 0.5, 0.75))")
-      .cast("array<double>").as(s"${c}__pct"),
-  )
-
-  /** Unpivot the wide agg row into (table_name, column_name, stats...) rows. */
-  private def stackStats(tableName: String, cols: Seq[String]): String = {
-    val rows = cols.map { c =>
-      s"'$tableName', '$c', ${c}__total, ${c}__nonnull, ${c}__mean, ${c}__std, " +
-        s"${c}__min, ${c}__max, ${c}__pct[0], ${c}__pct[1], ${c}__pct[2]"
-    }.mkString(", ")
-    s"stack(${cols.size}, $rows) as " +
-      "(table_name, column_name, n_total, n_nonnull, mean, std, vmin, vmax, p25, p50, p75)"
-  }
-
-  /** Exact percentiles, so DuckDB's `quantile_cont` reproduces values
-    * bit-for-bit; sketch mode swaps in the mergeable sketch at scale. */
-  def stats(spark: SparkSession, dir: String): DataFrame = {
-    val longs = statsTables.map { case (t, cols) =>
-      val aggs = cols.flatMap(statAggs)
-      table(spark, dir, t).agg(aggs.head, aggs.tail: _*).select(expr(stackStats(t, cols)))
-    }
-    longs.reduce(_ unionAll _)
+  /** Each table's [[profileOf]] row. Exact percentiles, so DuckDB's
+    * `quantile_cont` reproduces values bit-for-bit; sketch mode swaps in the
+    * mergeable sketch at scale. */
+  def stats(spark: SparkSession, dir: String): DataFrame =
+    statsTables.map { case (t, cols) => profileOf(table(spark, dir, t), cols, t) }
+      .reduce(_ unionAll _)
       .selectExpr(
         "table_name", "column_name",
         "n_total", "n_total - n_nonnull AS n_null",
@@ -72,7 +54,6 @@ object NumericDrift extends graft.OperatorModule {
         "round(vmin, 6) AS vmin", "round(vmax, 6) AS vmax",
         "round(p25, 6) AS p25", "round(p50, 6) AS p50", "round(p75, 6) AS p75")
       .orderBy("table_name", "column_name")
-  }
 
   def statsSql: String = {
     val selects = statsTables.flatMap { case (t, cols) =>
@@ -90,13 +71,9 @@ object NumericDrift extends graft.OperatorModule {
 
   // ------------------------------------------------------------- ref/curr
 
-  /** One-pass per-side stats for a split table, long format:
-    * (table_name, column_name, side, n_total, n_nonnull, mean, std, vmin,
-    * vmax, p25, p50, p75, p95, p99, p01, p05). */
-  private def sideStatsLong(spark: SparkSession, dir: String, sp: S.NumSplit): DataFrame =
-    sideStatsFrom(withSide(table(spark, dir, sp.tableName), sp.ref), sp.tableName, sp.cols)
-
-  /** Same one-pass stats over any side-tagged frame (generic pair entry).
+  /** One-pass per-side stats of every column of a side-tagged frame, long
+    * format: (side, table_name, column_name, n_total, n_nonnull, mean, std,
+    * vmin, vmax, p01, p05, p25, p50, p75, p95, p99).
     * Exact `percentile` so DuckDB can reproduce values; sketch mode
     * (graft.plans.SketchModeRewrite) swaps in `percentile_approx` — the
     * reference's own choice (numerical_analyzer.py:306-307, rel. err 0.01)
@@ -153,80 +130,12 @@ object NumericDrift extends graft.OperatorModule {
     * a column present in only one profile is dropped, the same
     * schema-drift rule [[pivotSides]] applies to live pairs). */
   def driftFromProfiles(refProfile: DataFrame, currProfile: DataFrame): DataFrame =
-    pivotSides(refProfile.withColumn("side", lit("ref"))
+    driftOfStats(refProfile.withColumn("side", lit("ref"))
         .unionByName(currProfile.withColumn("side", lit("curr"))))
-      .selectExpr(driftStage1: _*)
-      .selectExpr(driftStage2: _*)
-      .selectExpr(driftStage3: _*)
       .orderBy("table_name", "column_name")
 
-  /** Tag + union two snapshots on their common requested columns. */
-  private[drift] def tagPair(ref: DataFrame, curr: DataFrame, cols: Seq[String]): DataFrame =
-    ref.select(cols.map(col): _*).withColumn("side", lit("ref"))
-      .unionByName(curr.select(cols.map(col): _*).withColumn("side", lit("curr")))
-
-  /** Generic O11/O12 drift metrics for an arbitrary snapshot pair. */
-  def driftForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
-      label: String = "pair"): DataFrame =
-    pivotSides(sideStatsFrom(tagPair(ref, curr, cols), label, cols))
-      .selectExpr(driftStage1: _*)
-      .selectExpr(driftStage2: _*)
-      .selectExpr(driftStage3: _*)
-      .orderBy("column_name")
-
-  /** Generic O13 drift score (without the O14 outlier components) for an
-    * arbitrary snapshot pair. */
-  def scoreForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
-      label: String = "pair"): DataFrame = {
-    val piv = pivotSides(sideStatsFrom(tagPair(ref, curr, cols), label, cols))
-      .withColumn("ref_n_out", lit(null).cast("long"))
-      .withColumn("ref_n_ext", lit(null).cast("long"))
-      .withColumn("curr_n_out", lit(null).cast("long"))
-      .withColumn("curr_n_ext", lit(null).cast("long"))
-    piv.selectExpr(scoreStage: _*).selectExpr(scoreFinal: _*).orderBy("column_name")
-  }
-
-  /** Generic O20 quantile shifts for an arbitrary snapshot pair. */
-  def quantileShiftsForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
-      label: String = "pair"): DataFrame = {
-    val rows = shiftQs.map { case (q, c) => s"'$q', ref_$c, curr_$c" }.mkString(", ")
-    pivotSides(sideStatsFrom(tagPair(ref, curr, cols), label, cols))
-      .select(col("table_name"), col("column_name"),
-        expr(s"stack(${shiftQs.size}, $rows) as (quantile, ref_value, curr_value)"))
-      .selectExpr("table_name", "column_name", "quantile",
-        "ROUND(ref_value, 6) AS ref_value", "ROUND(curr_value, 6) AS curr_value",
-        "ROUND(ABS(curr_value - ref_value), 6) AS abs_diff",
-        "ROUND(CASE WHEN ref_value <> 0 THEN ABS((curr_value - ref_value) / ref_value) " +
-          "WHEN curr_value <> 0 THEN ABS(curr_value - ref_value) / GREATEST(ABS(curr_value), 1e-10) " +
-          "ELSE 0.0 END, 6) AS rel_diff")
-      .orderBy("column_name", "quantile")
-  }
-
-  /** Generic O21 shape drift for an arbitrary snapshot pair. */
-  def shapesForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
-      label: String = "pair"): DataFrame = {
-    val tagged = tagPair(ref, curr, cols)
-    val aggs = cols.flatMap { c =>
-      Seq(skewness(col(c)).as(s"${c}__skew"), kurtosis(col(c)).as(s"${c}__kurt"))
-    }
-    val rows = cols.map(c => s"'$label', '$c', ${c}__skew, ${c}__kurt").mkString(", ")
-    val long = tagged.groupBy(col("side")).agg(aggs.head, aggs.tail: _*)
-      .select(col("side"), expr(s"stack(${cols.size}, $rows) as (table_name, column_name, skew, kurt)"))
-    pivotShapes(long)
-      .selectExpr(shapeFinal: _*)
-      .orderBy("column_name")
-  }
-
-  /** Generic O36 z-score outlier drift for an arbitrary snapshot pair —
-    * every column in one stats pass + one counting pass. */
-  def zOutliersForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
-      label: String = "pair"): DataFrame = {
-    val long = zOutliersLong(tagPair(ref, curr, cols), label, cols)
-    pivotZ(long).selectExpr(zFinal: _*).orderBy("column_name")
-  }
-
-  /** SQL mirror of [[sideStatsLong]] for all numeric splits (a UNION ALL CTE
-    * body named `sides`). */
+  /** SQL mirror of [[sideStatsFrom]] over every numeric split (a UNION ALL
+    * CTE body named `sides`). */
   private def sideStatsLongSql: String =
     S.numeric.flatMap { sp =>
       sp.cols.map { c =>
@@ -245,8 +154,7 @@ object NumericDrift extends graft.OperatorModule {
     "vmax", "p01", "p05", "p25", "p50", "p75", "p95", "p99")
 
   /** Pivot the long side stats into one row per column with ref_/curr_
-    * prefixes (Spark side — a tiny broadcast self-join). */
-  /** Pivot via conditional aggregation, NOT a ref/curr self-join: a
+    * prefixes, via conditional aggregation, NOT a ref/curr self-join: a
     * self-join would duplicate the whole upstream aggregation pipeline and
     * scan every table twice (verified with .explain — 2x ReadSchema per
     * table before this form). */
@@ -326,14 +234,25 @@ object NumericDrift extends graft.OperatorModule {
         s"${severitySql(s"$score")} AS drift_severity")
   }
 
-  def drift(spark: SparkSession, dir: String): DataFrame = {
-    val long = S.numeric.map(sideStatsLong(spark, dir, _)).reduce(_ unionAll _)
-    pivotSides(long)
-      .selectExpr(driftStage1: _*)
-      .selectExpr(driftStage2: _*)
-      .selectExpr(driftStage3: _*)
-      .orderBy("table_name", "column_name")
-  }
+  /** O11/O12 drift metrics of per-side stat rows: the pivot, then the three
+    * shared-text stages. */
+  private def driftOfStats(long: DataFrame): DataFrame =
+    diffsOf(long).selectExpr(driftStage3: _*)
+
+  /** The pivot and the first two stages: per-column values and differences. */
+  private def diffsOf(long: DataFrame): DataFrame =
+    pivotSides(long).selectExpr(driftStage1: _*).selectExpr(driftStage2: _*)
+
+  private def driftOf(tagged: DataFrame, label: String, cols: Seq[String]): DataFrame =
+    driftOfStats(sideStatsFrom(tagged, label, cols))
+
+  def drift(spark: SparkSession, dir: String): DataFrame =
+    overNumericSplits(spark, dir)(driftOf).orderBy("table_name", "column_name")
+
+  /** Generic O11/O12 drift metrics for an arbitrary snapshot pair. */
+  def driftForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
+      label: String = "pair"): DataFrame =
+    driftOf(tagPair(ref, curr, cols), label, cols).orderBy("column_name")
 
   def driftSql: String =
     s"WITH sides AS ($sideStatsLongSql), piv AS ($pivotSidesSql), " +
@@ -372,10 +291,7 @@ object NumericDrift extends graft.OperatorModule {
     val rows = auditMetrics.map { case (n, r, c, d, t) =>
       s"'$n', CAST($r AS DOUBLE), CAST($c AS DOUBLE), CAST($d AS DOUBLE), CAST($t AS DOUBLE)"
     }.mkString(", ")
-    val long = S.numeric.map(sideStatsLong(spark, dir, _)).reduce(_ unionAll _)
-    pivotSides(long)
-      .selectExpr(driftStage1: _*)
-      .selectExpr(driftStage2: _*)
+    diffsOf(overNumericSplits(spark, dir)(sideStatsFrom))
       .select(col("table_name"), col("column_name"),
         expr(s"stack(${auditMetrics.size}, $rows) as " +
           "(metric_checked, reference_value, current_value, diff_value, threshold_value)"))
@@ -398,24 +314,16 @@ object NumericDrift extends graft.OperatorModule {
 
   // ------------------------------------------------ O13/O14 flat drift score
 
-  /** Outlier/extreme counts against reference IQR bounds (O14) — one extra
-    * pass per table, bounds broadcast from the stats row (no collect). */
-  private def outlierCounts(spark: SparkSession, dir: String, sp: S.NumSplit,
-      longStats0: DataFrame = null): DataFrame = {
-    val df = withSide(table(spark, dir, sp.tableName), sp.ref)
-    // one wide 1-row frame of all columns' reference IQR bounds, broadcast
-    // onto ONE counting scan for every column (the per-column variant would
-    // rescan the table len(cols) times)
-    val longStats = Option(longStats0).getOrElse(sideStatsLong(spark, dir, sp))
-    val boundsWide = longStats.filter(col("side") === "ref")
-      .groupBy().agg(
-        sp.cols.flatMap(c => Seq(
-          max(when(col("column_name") === c, col("p25"))).as(s"${c}__q1"),
-          max(when(col("column_name") === c, col("p75"))).as(s"${c}__q3"))).head,
-        sp.cols.flatMap(c => Seq(
-          max(when(col("column_name") === c, col("p25"))).as(s"${c}__q1"),
-          max(when(col("column_name") === c, col("p75"))).as(s"${c}__q3"))).tail: _*)
-    val aggs = sp.cols.flatMap { c =>
+  /** Outlier/extreme counts against reference IQR bounds (O14) for every
+    * column of a tagged frame: one wide 1-row frame of all columns'
+    * reference quartiles, taken from the per-side stat rows and broadcast
+    * onto one counting pass (no collect, and no rescan per column). */
+  private def outlierCounts(tagged: DataFrame, long: DataFrame, cols: Seq[String]): DataFrame = {
+    val quartiles = cols.flatMap(c => Seq(
+      max(when(col("column_name") === c, col("p25"))).as(s"${c}__q1"),
+      max(when(col("column_name") === c, col("p75"))).as(s"${c}__q3")))
+    val boundsWide = long.filter(col("side") === "ref").agg(quartiles.head, quartiles.tail: _*)
+    val aggs = cols.flatMap { c =>
       def outPred(mult: Double) =
         s"$c IS NOT NULL AND ($c < ${c}__q1 - (${c}__q3 - ${c}__q1) * $mult OR " +
           s"$c > ${c}__q3 + (${c}__q3 - ${c}__q1) * $mult)"
@@ -423,11 +331,10 @@ object NumericDrift extends graft.OperatorModule {
         expr(s"SUM(CASE WHEN ${outPred(1.5)} THEN 1 ELSE 0 END)").cast("long").as(s"${c}__out"),
         expr(s"SUM(CASE WHEN ${outPred(3.0)} THEN 1 ELSE 0 END)").cast("long").as(s"${c}__ext"))
     }
-    val rows = sp.cols.map(c => s"'${sp.tableName}', '$c', ${c}__out, ${c}__ext").mkString(", ")
-    df.crossJoin(broadcast(boundsWide))
+    val rows = cols.map(c => s"'$c', ${c}__out, ${c}__ext").mkString(", ")
+    tagged.crossJoin(broadcast(boundsWide))
       .groupBy("side").agg(aggs.head, aggs.tail: _*)
-      .select(col("side"), expr(s"stack(${sp.cols.size}, $rows) as (table_name, column_name, n_out, n_ext)"))
-      .select(col("table_name"), col("column_name"), col("side"), col("n_out"), col("n_ext"))
+      .select(col("side"), expr(s"stack(${cols.size}, $rows) as (column_name, n_out, n_ext)"))
   }
 
   private def outlierCountsSql: String =
@@ -501,27 +408,38 @@ object NumericDrift extends graft.OperatorModule {
     * its child TWICE (the range partitioner's sampling pass plus the sort
     * pass), so the cached consumer stack sorts on top of the tiny cached
     * frame instead. */
-  private[drift] def driftScoreFrame(spark: SparkSession, dir: String): DataFrame = {
-    // UNCACHED per-side stats (r17): they feed both the score pivot and
-    // the outlier bounds, but a registered-cold cache gets STAMPEDED by
-    // the plan's concurrent broadcast futures (each consumer recomputes
-    // blocks and all but one are discarded), while uncached the shared
-    // subtree dedupes at its exchange (ReusedExchange) and only the cheap
-    // 2-group final agg runs per consumer. Measured on the bench row that
-    // re-registers fresh caches every run: numeric_drift_score cost MORE
-    // (4.7 s) than the SUPERSET drift_results row (3.6 s), whose memoized
-    // frame runs cache-free after clearCache.
-    val longs = S.numeric.map(sp => sp -> sideStatsLong(spark, dir, sp)).toMap
-    val long = S.numeric.map(longs).reduce(_ unionAll _)
-    val outs = S.numeric.map(sp => outlierCounts(spark, dir, sp, longs(sp))).reduce(_ unionAll _)
+  private[drift] def driftScoreFrame(spark: SparkSession, dir: String): DataFrame =
+    overNumericSplits(spark, dir)(scoreOf)
+
+  /** O13/O14 score of every column of a tagged frame. The per-side stats
+    * feed both the pivot and the outlier bounds, and stay uncached: the
+    * shared subtree dedupes at its exchange (ReusedExchange), so only the
+    * 2-group final aggregate runs per consumer, where a cache registered
+    * cold would be filled by each of the plan's concurrent broadcast
+    * consumers at once. */
+  private def scoreOf(tagged: DataFrame, label: String, cols: Seq[String]): DataFrame = {
+    val long = sideStatsFrom(tagged, label, cols)
+    val outs = outlierCounts(tagged, long, cols)
     def outSide(s: String) = outs.filter(col("side") === s).drop("side")
       .withColumnRenamed("n_out", s"${s}_n_out").withColumnRenamed("n_ext", s"${s}_n_ext")
-    pivotSides(long)
-      .join(outSide("ref"), Seq("table_name", "column_name"))
-      .join(outSide("curr"), Seq("table_name", "column_name"))
-      .selectExpr(scoreStage: _*)
-      .selectExpr(scoreFinal: _*)
+    scoreStages(pivotSides(long)
+      .join(outSide("ref"), Seq("column_name"))
+      .join(outSide("curr"), Seq("column_name")))
   }
+
+  private def scoreStages(joined: DataFrame): DataFrame =
+    joined.selectExpr(scoreStage: _*).selectExpr(scoreFinal: _*)
+
+  /** Generic O13 drift score for an arbitrary snapshot pair, without the O14
+    * outlier components. */
+  def scoreForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
+      label: String = "pair"): DataFrame =
+    scoreStages(pivotSides(sideStatsFrom(tagPair(ref, curr, cols), label, cols))
+      .withColumn("ref_n_out", lit(null).cast("long"))
+      .withColumn("ref_n_ext", lit(null).cast("long"))
+      .withColumn("curr_n_out", lit(null).cast("long"))
+      .withColumn("curr_n_ext", lit(null).cast("long")))
+      .orderBy("column_name")
 
   def driftScoreSql: String =
     s"WITH sides AS ($sideStatsLongSql), piv AS ($pivotSidesSql), " +
@@ -542,12 +460,17 @@ object NumericDrift extends graft.OperatorModule {
 
   /** Per-quantile shifts with the distribution-analyzer zero rule
     * (/root/reference/distribution_analyzer.py:83-151). */
-  def quantileShifts(spark: SparkSession, dir: String): DataFrame = {
-    val long = S.numeric.map(sideStatsLong(spark, dir, _)).reduce(_ unionAll _)
-    val rows = shiftQs.map { case (q, c) =>
-      s"'$q', ref_$c, curr_$c"
-    }.mkString(", ")
-    pivotSides(long)
+  def quantileShifts(spark: SparkSession, dir: String): DataFrame =
+    overNumericSplits(spark, dir)(quantileShiftsOf).orderBy("table_name", "column_name", "quantile")
+
+  /** Generic O20 quantile shifts for an arbitrary snapshot pair. */
+  def quantileShiftsForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
+      label: String = "pair"): DataFrame =
+    quantileShiftsOf(tagPair(ref, curr, cols), label, cols).orderBy("column_name", "quantile")
+
+  private def quantileShiftsOf(tagged: DataFrame, label: String, cols: Seq[String]): DataFrame = {
+    val rows = shiftQs.map { case (q, c) => s"'$q', ref_$c, curr_$c" }.mkString(", ")
+    pivotSides(sideStatsFrom(tagged, label, cols))
       .select(col("table_name"), col("column_name"),
         expr(s"stack(${shiftQs.size}, $rows) as (quantile, ref_value, curr_value)"))
       .selectExpr("table_name", "column_name", "quantile",
@@ -556,7 +479,6 @@ object NumericDrift extends graft.OperatorModule {
         "ROUND(CASE WHEN ref_value <> 0 THEN ABS((curr_value - ref_value) / ref_value) " +
           "WHEN curr_value <> 0 THEN ABS(curr_value - ref_value) / GREATEST(ABS(curr_value), 1e-10) " +
           "ELSE 0.0 END, 6) AS rel_diff")
-      .orderBy("table_name", "column_name", "quantile")
   }
 
   def quantileShiftsSql: String = {
@@ -592,28 +514,28 @@ object NumericDrift extends graft.OperatorModule {
     * the oracle computes the identical definition via two-pass central
     * moments (DuckDB's built-ins use the sample-corrected formulas, which
     * would NOT match). */
-  def shapes(spark: SparkSession, dir: String): DataFrame = {
-    val per = S.numeric.map { sp =>
-      val aggs = sp.cols.flatMap { c =>
-        Seq(skewness(col(c)).as(s"${c}__skew"), kurtosis(col(c)).as(s"${c}__kurt"))
-      }
-      val rows = sp.cols.map(c => s"'${sp.tableName}', '$c', ${c}__skew, ${c}__kurt").mkString(", ")
-      withSide(table(spark, dir, sp.tableName), sp.ref)
-        .groupBy(col("side")).agg(aggs.head, aggs.tail: _*)
-        .select(col("side"), expr(s"stack(${sp.cols.size}, $rows) as (table_name, column_name, skew, kurt)"))
-    }
-    val long = per.reduce(_ unionAll _)
-    pivotShapes(long)
-      .selectExpr(shapeFinal: _*)
-      .orderBy("table_name", "column_name")
-  }
+  def shapes(spark: SparkSession, dir: String): DataFrame =
+    overNumericSplits(spark, dir)(shapesOf).orderBy("table_name", "column_name")
 
-  private def pivotShapes(long: DataFrame): DataFrame =
-    long.groupBy("table_name", "column_name").agg(
-      max(when(col("side") === "ref", col("skew"))).as("ref_skew"),
-      max(when(col("side") === "ref", col("kurt"))).as("ref_kurt"),
-      max(when(col("side") === "curr", col("skew"))).as("curr_skew"),
-      max(when(col("side") === "curr", col("kurt"))).as("curr_kurt"))
+  /** Generic O21 shape drift for an arbitrary snapshot pair. */
+  def shapesForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
+      label: String = "pair"): DataFrame =
+    shapesOf(tagPair(ref, curr, cols), label, cols).orderBy("column_name")
+
+  private def shapesOf(tagged: DataFrame, label: String, cols: Seq[String]): DataFrame = {
+    val aggs = cols.flatMap { c =>
+      Seq(skewness(col(c)).as(s"${c}__skew"), kurtosis(col(c)).as(s"${c}__kurt"))
+    }
+    val rows = cols.map(c => s"'$label', '$c', ${c}__skew, ${c}__kurt").mkString(", ")
+    tagged.groupBy(col("side")).agg(aggs.head, aggs.tail: _*)
+      .select(col("side"), expr(s"stack(${cols.size}, $rows) as (table_name, column_name, skew, kurt)"))
+      .groupBy("table_name", "column_name").agg(
+        max(when(col("side") === "ref", col("skew"))).as("ref_skew"),
+        max(when(col("side") === "ref", col("kurt"))).as("ref_kurt"),
+        max(when(col("side") === "curr", col("skew"))).as("curr_skew"),
+        max(when(col("side") === "curr", col("kurt"))).as("curr_kurt"))
+      .selectExpr(shapeFinal: _*)
+  }
 
   def shapesSql: String = {
     val moments = S.numeric.flatMap { sp =>
@@ -639,48 +561,28 @@ object NumericDrift extends graft.OperatorModule {
 
   // ----------------------------------------------------- O24 histogram
 
-  private val histCols: Seq[(String, String, Column, String)] = Seq(
-    ("lineitem", "l_extendedprice", S.lineitemRef, S.lineitemRefSql),
-    ("orders", "o_totalprice", S.ordersRef, S.ordersRefSql))
+  /** The histogram gate's columns: one per split table. */
+  private[graft] val histSplits: Seq[S.NumSplit] = Seq(
+    S.numeric.head.copy(cols = Seq("l_extendedprice")),
+    S.numeric.find(_.tableName == "orders").get)
 
-  /** 10-bin histogram per snapshot side. Replaces the reference's RDD
-    * `histogram(10)` escape hatch (/root/reference/distribution_analyzer.py:
-    * 440-449) with SQL binning over global min/max — bins identical across
-    * sides, whole plan stays in Tungsten codegen. */
-  def histogram(spark: SparkSession, dir: String): DataFrame = {
-    val per = histCols.map { case (t, c, ref, _) =>
-      val df = withSide(table(spark, dir, t), ref)
-      val bounds = table(spark, dir, t).agg(
-        min(col(c)).cast("double").as("lo"), max(col(c)).cast("double").as("hi"))
-      df.select(col("side"), col(c).cast("double").as("x"))
-        .crossJoin(broadcast(bounds))
-        .select(col("side"), col("x"), col("lo"),
-          ((col("hi") - col("lo")) / 10.0).as("w"))
-        .where(col("x").isNotNull)
-        // w=0 (constant column) → bin 0 in BOTH engines: Spark's x/0 is
-        // NaN→null while DuckDB's FLOOR(inf) clamps to 9 via LEAST
-        .select(col("side"),
-          when(col("w") === 0.0, lit(0))
-            .otherwise(least(floor((col("x") - col("lo")) / col("w")), lit(9))).cast("int").as("bin"),
-          col("lo"), col("w"))
-        .groupBy("bin")
-        .agg(first("lo").as("lo"), first("w").as("w"),
-          sum(when(col("side") === "ref", 1L).otherwise(0L)).as("ref_cnt"),
-          sum(when(col("side") === "curr", 1L).otherwise(0L)).as("curr_cnt"))
-        .select(lit(t).as("table_name"), lit(c).as("column_name"), col("bin"),
-          r6(col("lo") + col("bin") * col("w")).as("bin_lo"),
-          r6(col("lo") + (col("bin") + 1) * col("w")).as("bin_hi"),
-          col("ref_cnt"), col("curr_cnt"))
-    }
-    per.reduce(_ unionAll _).orderBy("table_name", "column_name", "bin")
-  }
+  /** 10-bin histogram per snapshot side, non-empty bins only. Replaces the
+    * reference's RDD `histogram(10)` escape hatch
+    * (/root/reference/distribution_analyzer.py:440-449) with SQL binning
+    * over the whole table's min/max — bins identical across sides, whole
+    * plan stays in Tungsten codegen. */
+  def histogram(spark: SparkSession, dir: String): DataFrame =
+    histSplits.map { sp =>
+      histogramOf(withSide(table(spark, dir, sp.tableName), sp.ref), sp.tableName, sp.cols)
+    }.reduce(_ unionAll _)
+      .filter(col("ref_cnt") + col("curr_cnt") > 0)
+      .orderBy("table_name", "column_name", "bin")
 
   /** Generic O24 10-bin histogram for an arbitrary snapshot pair (the nested
     * report's distribution summaries,
-    * /root/reference/distribution_analyzer.py:429-481): one counting scan
-    * per column, bounds broadcast, full 0..9 bin spine emitted (zero-count
-    * bins included, matching the reference's RDD `histogram(10)` which also
-    * emits empty bins).
+    * /root/reference/distribution_analyzer.py:429-481), with the full 0..9
+    * bin spine (zero-count bins included, matching the reference's RDD
+    * `histogram(10)` which also emits empty bins).
     *
     * Deviation: the reference bins each side independently with that side's
     * own min/max (`distribution_analyzer.py:440-449`), so its ref/curr bin
@@ -690,39 +592,34 @@ object NumericDrift extends graft.OperatorModule {
     * what a drift comparison needs. Outputs differ from the reference
     * whenever ref/curr ranges differ. */
   def histogramForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
-      label: String = "pair"): DataFrame = {
-    val tagged = tagPair(ref, curr, cols)
-    val per = cols.map { c =>
-      val bounds = tagged.agg(
-        min(col(c)).cast("double").as("lo"), max(col(c)).cast("double").as("hi"))
-      val counts = tagged.select(col("side"), col(c).cast("double").as("x"))
-        .crossJoin(broadcast(bounds))
-        .select(col("side"), col("x"), col("lo"),
-          ((col("hi") - col("lo")) / 10.0).as("w"))
-        .where(col("x").isNotNull)
-        .select(col("side"),
-          when(col("w") === 0.0, lit(0))
-            .otherwise(least(floor((col("x") - col("lo")) / col("w")), lit(9))).cast("int").as("bin"))
-        .groupBy("bin")
-        .agg(
-          sum(when(col("side") === "ref", 1L).otherwise(0L)).as("ref_cnt"),
-          sum(when(col("side") === "curr", 1L).otherwise(0L)).as("curr_cnt"))
-      // all-10-bins spine (empty on an all-null column, like the RDD path)
-      val spine = bounds.where(col("lo").isNotNull)
-        .select(explode(sequence(lit(0), lit(9))).as("bin"),
-          col("lo"), ((col("hi") - col("lo")) / 10.0).as("w"))
-      spine.join(counts, Seq("bin"), "left")
-        .select(lit(label).as("table_name"), lit(c).as("column_name"), col("bin"),
-          r6(col("lo") + col("bin") * col("w")).as("bin_lo"),
-          r6(col("lo") + (col("bin") + 1) * col("w")).as("bin_hi"),
-          coalesce(col("ref_cnt"), lit(0L)).as("ref_cnt"),
-          coalesce(col("curr_cnt"), lit(0L)).as("curr_cnt"))
-    }
-    per.reduce(_ unionAll _).orderBy("table_name", "column_name", "bin")
+      label: String = "pair"): DataFrame =
+    histogramOf(tagPair(ref, curr, cols), label, cols).orderBy("table_name", "column_name", "bin")
+
+  /** Every column's histogram in one stacked pass: one bounds aggregate
+    * (broadcast), one groupBy(column_name, bin), and a join onto the 0..9
+    * spine of each column with a non-null value. A constant column (w = 0)
+    * falls wholly in bin 0 in both engines. */
+  private def histogramOf(tagged: DataFrame, label: String, cols: Seq[String]): DataFrame = {
+    val edges = DistanceDrift.sharedEdges(tagged, cols, 10)
+    val counts = DistanceDrift.binnedCells(tagged, cols, edges, 10)
+      .groupBy("column_name", "bin").agg(
+        sum(when(col("side") === "ref", 1L).otherwise(0L)).as("ref_cnt"),
+        sum(when(col("side") === "curr", 1L).otherwise(0L)).as("curr_cnt"))
+    val rows = cols.map(c => s"'$c', ${c}__lo, ${c}__w").mkString(", ")
+    val spine = edges.select(expr(s"stack(${cols.size}, $rows) as (column_name, lo, w)"))
+      .where(col("lo").isNotNull)
+      .select(col("column_name"), explode(sequence(lit(0), lit(9))).as("bin"), col("lo"), col("w"))
+    spine.join(counts, Seq("column_name", "bin"), "left")
+      .select(lit(label).as("table_name"), col("column_name"), col("bin"),
+        r6(col("lo") + col("bin") * col("w")).as("bin_lo"),
+        r6(col("lo") + (col("bin") + 1) * col("w")).as("bin_hi"),
+        coalesce(col("ref_cnt"), lit(0L)).as("ref_cnt"),
+        coalesce(col("curr_cnt"), lit(0L)).as("curr_cnt"))
   }
 
   def histogramSql: String =
-    histCols.map { case (t, c, _, refSql) =>
+    (for (sp <- histSplits; c <- sp.cols) yield {
+      val (t, refSql) = (sp.tableName, sp.refSql)
       val bin = s"CASE WHEN b.w = 0 THEN 0 ELSE LEAST(FLOOR(($c - b.lo) / b.w), 9) END"
       s"SELECT '$t' AS table_name, '$c' AS column_name, " +
         s"($bin)::INT AS bin, " +
@@ -732,7 +629,7 @@ object NumericDrift extends graft.OperatorModule {
         s"SUM(CASE WHEN $refSql THEN 0 ELSE 1 END)::BIGINT AS curr_cnt " +
         s"FROM $t, (SELECT MIN($c)::DOUBLE AS lo, (MAX($c)::DOUBLE - MIN($c)::DOUBLE) / 10.0 AS w FROM $t) b " +
         s"WHERE $c IS NOT NULL GROUP BY 1, 2, 3, 4, 5"
-    }.mkString("", " UNION ALL ", " ORDER BY table_name, column_name, bin")
+    }).mkString("", " UNION ALL ", " ORDER BY table_name, column_name, bin")
 
   // ----------------------------------------------------- O36 z-outliers
 
@@ -740,18 +637,18 @@ object NumericDrift extends graft.OperatorModule {
     * (/root/reference/rare_event_analyzer.py:115-185). Deviation: rows are
     * always emitted with a `significant` flag (the reference silently drops
     * insignificant columns). */
-  def zOutliers(spark: SparkSession, dir: String): DataFrame = {
-    val per = S.numeric.map { sp =>
-      zOutliersLong(withSide(table(spark, dir, sp.tableName), sp.ref), sp.tableName, sp.cols)
-    }
-    val long = per.reduce(_ unionAll _)
-    pivotZ(long).selectExpr(zFinal: _*).orderBy("table_name", "column_name")
-  }
+  def zOutliers(spark: SparkSession, dir: String): DataFrame =
+    overNumericSplits(spark, dir)(zOutliersOf).orderBy("table_name", "column_name")
 
-  /** All columns' z-outlier counts in TWO jobs per table: one agg for every
-    * column's reference mean/std (a 1-row broadcast), one counting pass with
-    * a conditional sum per column — instead of a scan pair per column. */
-  private def zOutliersLong(tagged: DataFrame, tableName: String, cols: Seq[String]): DataFrame = {
+  /** Generic O36 z-score outlier drift for an arbitrary snapshot pair. */
+  def zOutliersForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
+      label: String = "pair"): DataFrame =
+    zOutliersOf(tagPair(ref, curr, cols), label, cols).orderBy("column_name")
+
+  /** All columns' z-outlier counts in two jobs: one agg for every column's
+    * reference mean/std (a 1-row broadcast), one counting pass with a
+    * conditional sum per column — instead of a scan pair per column. */
+  private def zOutliersOf(tagged: DataFrame, label: String, cols: Seq[String]): DataFrame = {
     val statAggs = cols.flatMap { c =>
       Seq(avg(col(c)).as(s"${c}__mean"), stddev(col(c)).as(s"${c}__std"))
     }
@@ -764,19 +661,18 @@ object NumericDrift extends graft.OperatorModule {
       sum(when(abs((col(c).cast("double") - col(s"${c}__mean")) / safeStd) > 3.0, 1L)
         .otherwise(0L)).as(s"${c}__out")
     }
-    val rows = cols.map(c => s"'$tableName', '$c', n, ${c}__out").mkString(", ")
+    val rows = cols.map(c => s"'$label', '$c', n, ${c}__out").mkString(", ")
     tagged.crossJoin(broadcast(refStats))
       .groupBy("side").agg(cntAggs.head, cntAggs.tail: _*)
       .select(col("side"), expr(s"stack(${cols.size}, $rows) as (table_name, column_name, n, n_out)"))
       .select(col("table_name"), col("column_name"), col("side"), col("n"), col("n_out"))
+      .groupBy("table_name", "column_name").agg(
+        max(when(col("side") === "ref", col("n"))).as("ref_n"),
+        max(when(col("side") === "ref", col("n_out"))).as("ref_out"),
+        max(when(col("side") === "curr", col("n"))).as("curr_n"),
+        max(when(col("side") === "curr", col("n_out"))).as("curr_out"))
+      .selectExpr(zFinal: _*)
   }
-
-  private def pivotZ(long: DataFrame): DataFrame =
-    long.groupBy("table_name", "column_name").agg(
-      max(when(col("side") === "ref", col("n"))).as("ref_n"),
-      max(when(col("side") === "ref", col("n_out"))).as("ref_out"),
-      max(when(col("side") === "curr", col("n"))).as("curr_n"),
-      max(when(col("side") === "curr", col("n_out"))).as("curr_out"))
 
   private val zFinal: Seq[String] = {
     val refRatio = "ref_out * 1e0 / ref_n"

@@ -259,10 +259,14 @@ case class DriftReport(
     executionTimeSec: Double)
 
 /** O40 orchestrator: run every analyzer family over a snapshot pair per the
-  * config flags and assemble the nested report. The categorical families and
-  * the group-drift verdict each run one stacked pass over all their columns
-  * and dimensions, so their job counts do not grow with the column count
-  * (GoldenDriftSpec pins this; SURVEY.md §4.2 anti-patterns 1 and 2). */
+  * config flags and assemble the nested report. Each family — the numeric,
+  * distribution, correlation and categorical ones and the group-drift
+  * verdict — aggregates all of its columns and dimensions in a fixed number
+  * of stacked passes (a constants pass first for z-outliers and
+  * histograms), so its job count does not grow with the column count
+  * (GoldenDriftSpec pins this per family; SURVEY.md §4.2 anti-patterns 1
+  * and 2). The pair functions it calls are the ones the gate queries apply
+  * to each table split. */
 class DriftDetector(spark: SparkSession) {
 
   /** Config-file entry point, the reference's

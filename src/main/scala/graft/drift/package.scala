@@ -75,6 +75,21 @@ package object drift {
   def withSide(df: DataFrame, refPred: Column): DataFrame =
     df.withColumn("side", when(refPred, "ref").otherwise("curr"))
 
+  /** The same `side` tag over two snapshots: their requested columns,
+    * tagged and unioned, so a family function reads a snapshot pair exactly
+    * as it reads a [[withSide]] table split. */
+  private[drift] def tagPair(ref: DataFrame, curr: DataFrame, cols: Seq[String]): DataFrame =
+    ref.select(cols.map(col): _*).withColumn("side", lit("ref"))
+      .unionByName(curr.select(cols.map(col): _*).withColumn("side", lit("curr")))
+
+  /** A numeric family's gate query: `of(tagged, label, cols)` applied to
+    * each numeric table split, with the table name as label, unioned. */
+  private[drift] def overNumericSplits(spark: SparkSession, dir: String)(
+      of: (DataFrame, String, Seq[String]) => DataFrame): DataFrame =
+    splits.numeric.map { sp =>
+      of(withSide(table(spark, dir, sp.tableName), sp.ref), sp.tableName, sp.cols)
+    }.reduce(_ unionAll _)
+
   /** Test-only escape: when true, [[r6]] is the identity, exposing PRE-round
     * doubles so DriftMathSpec can assert they sit far from the 6-dp rounding
     * boundary — the zone where an engine-order partial-sum reassociation or

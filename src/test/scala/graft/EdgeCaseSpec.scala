@@ -647,11 +647,8 @@ class EdgeCaseSpec extends SparkSpec {
     val curr = Seq.tabulate(50)(i => (Option.empty[String], "k" + (i % 4))).toDF("c", "g")
     val cols = Seq("c", "g")
     assert(rowsOf(CategoricalDrift.categoricalDriftForPair(ref, curr, cols)) == Seq(
-      // known wrong, pinned for parity with the per-column implementation:
-      // LEAST skips the NULL divergence and ratios, so the column scores 0.6
-      // "High" (CHANGES.md FOUND entry on o19Final); fixing it changes this
-      // row and the oracle SQL together
-      "[pair,c,null,1.0,0.0,null,null,null,,0.6,High]",
+      // the NULL divergence and category ratios score 0 and detect nothing
+      "[pair,c,null,1.0,0.0,null,null,false,,0.0,None]",
       "[pair,g,0.3634,0.01,0.0,0.333333,0.0,true,distribution_change,statistical_significance," +
         "new_categories,0.773333,Critical]"))
     assert(rowsOf(CategoricalDrift.jsFullForPair(ref, curr, cols)) == Seq(
@@ -672,9 +669,10 @@ class EdgeCaseSpec extends SparkSpec {
     val ref = Seq.tabulate(60)(i => ("v" + (i % 4), "k" + (i % 2), i.toDouble)).toDF("c", "g", "x")
     val curr = ref.limit(0)
     val cols = Seq("c", "g")
+    // the NULL null-proportion difference scores 0
     assert(rowsOf(CategoricalDrift.categoricalDriftForPair(ref, curr, cols)) == Seq(
-      "[pair,c,0.707107,1.0,null,0.0,1.0,true,distribution_change,missing_categories,0.7,High]",
-      "[pair,g,0.707107,1.0,null,0.0,1.0,true,distribution_change,missing_categories,0.7,High]"))
+      "[pair,c,0.707107,1.0,null,0.0,1.0,true,distribution_change,missing_categories,0.6,High]",
+      "[pair,g,0.707107,1.0,null,0.0,1.0,true,distribution_change,missing_categories,0.6,High]"))
     assert(rowsOf(CategoricalDrift.jsFullForPair(ref, curr, cols)) == Seq(
       "[pair,c,0.707107,true,0,4]", "[pair,g,0.707107,true,0,2]"))
     assert(rowsOf(CategoricalDrift.rareValueChangesForPair(ref, curr, cols, thr = 0.3)).isEmpty)

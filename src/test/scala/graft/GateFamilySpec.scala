@@ -82,6 +82,56 @@ class GateFamilySpec extends SparkSpec {
     }
   }
 
+  /** A numeric family's gate against its pair function over the halves of
+    * each split, with the table name as label. */
+  private def assertSplitsMatch(gate: DataFrame, splitsOf: Seq[splits.NumSplit] = splits.numeric)(
+      pair: (DataFrame, DataFrame, Seq[String], String) => DataFrame): Unit = {
+    assert(gate.count() > 0)
+    splitsOf.foreach { sp =>
+      val (ref, curr) = halves(sp.tableName, sp.ref)
+      assertSameRows(gate, sp.tableName, pair(ref, curr, sp.cols, sp.tableName))
+    }
+  }
+
+  test("numeric_drift equals driftForPair on every split") {
+    assertSplitsMatch(NumericDrift.drift(spark, dir))(NumericDrift.driftForPair)
+  }
+
+  test("quantile_shifts equals quantileShiftsForPair on every split") {
+    assertSplitsMatch(NumericDrift.quantileShifts(spark, dir))(NumericDrift.quantileShiftsForPair)
+  }
+
+  test("dist_shapes equals shapesForPair on every split") {
+    assertSplitsMatch(NumericDrift.shapes(spark, dir))(NumericDrift.shapesForPair)
+  }
+
+  test("z_outliers equals zOutliersForPair on every split") {
+    assertSplitsMatch(NumericDrift.zOutliers(spark, dir))(NumericDrift.zOutliersForPair)
+  }
+
+  test("histogram equals the non-empty bins of histogramForPair on every histogram column") {
+    assertSplitsMatch(NumericDrift.histogram(spark, dir), NumericDrift.histSplits) { (ref, curr, cols, label) =>
+      NumericDrift.histogramForPair(ref, curr, cols, label).filter(col("ref_cnt") + col("curr_cnt") > 0)
+    }
+  }
+
+  test("ks_test, wasserstein and psi equal their pair functions on every split") {
+    assertSplitsMatch(DistanceDrift.ksTest(spark, dir))(DistanceDrift.ksForPair)
+    assertSplitsMatch(DistanceDrift.wasserstein(spark, dir))(DistanceDrift.wassersteinForPair)
+    assertSplitsMatch(DistanceDrift.psi(spark, dir))(DistanceDrift.psiForPair)
+  }
+
+  test("corr_matrix and feature_importance equal their pair functions on the lineitem split") {
+    val (ref, curr) = halves("lineitem", splits.lineitemRef)
+    val corrs = CorrelationDrift.corrMatrix(spark, dir).collect().toSeq
+    assert(corrs.nonEmpty)
+    assert(corrs == CorrelationDrift.forPair(ref, curr, CorrelationDrift.corrCols).collect().toSeq)
+    val importance = CorrelationDrift.featureImportance(spark, dir).collect().toSeq
+    assert(importance.nonEmpty)
+    assert(importance == CorrelationDrift.featureImportanceForPair(ref, curr,
+      CorrelationDrift.fiTarget, CorrelationDrift.fiPredictors).collect().toSeq)
+  }
+
   /** One row per key of `df`: the key columns to the value columns. */
   private def byKey(df: DataFrame, keys: Seq[String], values: Seq[String]): Map[Seq[Any], Seq[Any]] =
     df.select((keys ++ values).map(col): _*).collect()

@@ -239,6 +239,31 @@ class GoldenDriftSpec extends SparkSpec {
     assert(two.values.forall(_ > 0), two)
   }
 
+  test("numeric, distribution and correlation jobs per report do not grow with the numeric column count") {
+    // a deep_dive pair with 3 and with 6 numeric columns, types pinned so
+    // only the numeric column count differs. Not 2: one column pair makes a
+    // 1-row correlation result, whose final sort AQE runs without its range
+    // exchange, so 2 columns run fewer correlation jobs than 3 or more do
+    import org.apache.spark.sql.functions.{col, expr}
+    val base = Seq("numeric_normal", "numeric_uniform", "category_balanced").map(col)
+    val extra = (1 to 4).map(k =>
+      expr(s"CAST(numeric_uniform * ${k + 1} + id % ${k + 2} AS DOUBLE)").as(s"n$k"))
+    def families(ref: org.apache.spark.sql.DataFrame, curr: org.apache.spark.sql.DataFrame) = {
+      val types = ref.columns.map(c =>
+        c -> (if (c.startsWith("category")) "categorical" else "numerical")).toMap
+      val (r, log) = jobsOf(detector.detectDrift(ref, curr, DriftConfig(profile = "deep_dive",
+        sampleSize = 0, customColumnTypes = types, analyzeGroups = false)))
+      assert(r.errors.isEmpty, r.errors.mkString("; "))
+      assert(r.numeric.size == ref.columns.length - 1 && r.histograms.count() == 10L * r.numeric.size)
+      Seq("numeric", "quantile_shifts", "shapes", "histograms", "z_outliers", "correlations")
+        .map(f => f -> log.jobs.values.count(_ == s"drift:$f")).toMap
+    }
+    val three = families(v1.select(base :+ extra.head: _*), v3.select(base :+ extra.head: _*))
+    val six = families(v1.select(base ++ extra: _*), v3.select(base ++ extra: _*))
+    assert(six == three, s"jobs per family with 3 numeric columns $three, with 6 $six")
+    assert(three.values.forall(_ > 0), three)
+  }
+
   test("every job of one detectDrift carries a drift:<family> description") {
     val cfg = DriftConfig(profile = "deep_dive", sampleSize = 2500,
       targetColumn = Some("numeric_normal"))

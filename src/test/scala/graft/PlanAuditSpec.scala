@@ -506,6 +506,28 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("numeric, distance and correlation gates keep their scans per split table") {
+    // one stacked pass per table; z_outliers and histogram read a table a
+    // second time, for the reference moments or the bin bounds that their
+    // counting pass takes as constants
+    import graft.drift._
+    val numTables = splits.numeric.map(_.tableName)
+    val expected = Seq(
+      "numeric_drift" -> NumericDrift.drift(spark, sf) -> numTables.map(_ -> 1),
+      "quantile_shifts" -> NumericDrift.quantileShifts(spark, sf) -> numTables.map(_ -> 1),
+      "dist_shapes" -> NumericDrift.shapes(spark, sf) -> numTables.map(_ -> 1),
+      "histogram" -> NumericDrift.histogram(spark, sf) -> Seq("lineitem" -> 2, "orders" -> 2),
+      "z_outliers" -> NumericDrift.zOutliers(spark, sf) -> numTables.map(_ -> 2),
+      "ks_test" -> DistanceDrift.ksTest(spark, sf) -> numTables.map(_ -> 1),
+      "wasserstein" -> DistanceDrift.wasserstein(spark, sf) -> numTables.map(_ -> 1),
+      "corr_matrix" -> CorrelationDrift.corrMatrix(spark, sf) -> Seq("lineitem" -> 1),
+      "feature_importance" -> CorrelationDrift.featureImportance(spark, sf) -> Seq("lineitem" -> 1))
+    for (((name, df), counts) <- expected; (t, n) <- counts) {
+      val got = finalScansOf(df, t)
+      assert(got == n, s"$name scanned $t $got times, expected $n:\n${df.queryExecution.executedPlan}")
+    }
+  }
+
   test("categorical census never windows a whole column in one task") {
     // a window keyed by column_name alone would send every distinct value of
     // a high-cardinality column (l_partkey, o_custkey) through one sort; the
