@@ -39,11 +39,18 @@ object CategoricalDrift extends graft.OperatorModule {
   // per call — the census — plus a fixed handful of groupBy/window passes
   // keyed by column. A call therefore runs the same exchanges for 2 columns
   // as for 200, and each statistic (χ², top-20 JS, null proportion, ...) has
-  // one implementation. The gate queries apply the pair functions to
-  // `withSide(table, split.ref)`. No consumer filters the census on `value`:
-  // the filter would push below the census aggregate, and the branches that
-  // read the unfiltered census would plan a second scan instead of reusing
-  // its exchange.
+  // one implementation, a private `…Of(cen, label, …)`. The gate queries
+  // apply it to the census of `withSide(table, split.ref)`, the pair
+  // functions to the census of `tagPair(ref, curr, cols)`, and
+  // `DriftDetector.detectDrift` computes its pair's census once, collects
+  // it, and applies every categorical family to that local frame. The
+  // census has one row per distinct (column, value) of the pair, so the
+  // local copy is bounded by the distinct values of the (sampled) pair: the
+  // inference rule keeps numeric columns with many values out, but a string
+  // column is always categorical, and its distinct values are this bound.
+  // No consumer filters the census on `value`: the filter would push below
+  // the census aggregate, and the branches that read the unfiltered census
+  // would plan a second scan instead of reusing its exchange.
 
   /** Per-(column_name, value) counts of a side-tagged frame, null group kept:
     * `ref_cnt`/`curr_cnt` on one row. One stack, one groupBy. */
@@ -54,6 +61,10 @@ object CategoricalDrift extends graft.OperatorModule {
         count(when(col("side") === "ref", 1)).as("ref_cnt"),
         count(when(col("side") === "curr", 1)).as("curr_cnt"))
   }
+
+  /** The [[census]] of a snapshot pair, through `tagPair`. */
+  private[drift] def pairCensus(ref: DataFrame, curr: DataFrame, cols: Seq[String]): DataFrame =
+    census(tagPair(ref, curr, cols), cols)
 
   /** The census with each column's per-side total rows (`ref_n`) and
     * non-null rows (`ref_nn`) on every row, from a groupBy(column_name)
@@ -377,8 +388,12 @@ object CategoricalDrift extends graft.OperatorModule {
     * /root/reference/distribution_analyzer.py:229-319), from one census. */
   def jsFullForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair", threshold: Double = 0.1): DataFrame =
-    jsFullOf(census(tagPair(ref, curr, cols), cols), label, threshold)
-      .orderBy("column_name")
+    jsFullOfPair(pairCensus(ref, curr, cols), label, threshold)
+
+  /** [[jsFullForPair]] of a pair's [[pairCensus]]. */
+  private[drift] def jsFullOfPair(cen: DataFrame, label: String = "pair",
+      threshold: Double = 0.1): DataFrame =
+    jsFullOf(cen, label, threshold).orderBy("column_name")
 
   /** O22 top increased/decreased values over the FULL support (frequencies
     * over all rows incl. nulls): top-5 each way per column
@@ -644,14 +659,23 @@ object CategoricalDrift extends graft.OperatorModule {
     * census of every column. */
   def categoricalDriftForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair", exactPValue: Boolean = false): DataFrame =
-    categoricalDriftOf(census(tagPair(ref, curr, cols), cols), label, exactPValue)
-      .orderBy("column_name")
+    categoricalDriftOfPair(pairCensus(ref, curr, cols), label, exactPValue)
+
+  /** [[categoricalDriftForPair]] of a pair's [[pairCensus]]. */
+  private[drift] def categoricalDriftOfPair(cen: DataFrame, label: String = "pair",
+      exactPValue: Boolean = false): DataFrame =
+    categoricalDriftOf(cen, label, exactPValue).orderBy("column_name")
 
   /** Generic O35 rare-category changes for an arbitrary snapshot pair, from
     * one census of every column. */
   def rareCategoriesForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair", minCount: Int = 10, maxFreq: Double = 0.01): DataFrame =
-    rareCategoriesOf(census(tagPair(ref, curr, cols), cols), label, minCount, maxFreq)
+    rareCategoriesOfPair(pairCensus(ref, curr, cols), label, minCount, maxFreq)
+
+  /** [[rareCategoriesForPair]] of a pair's [[pairCensus]]. */
+  private[drift] def rareCategoriesOfPair(cen: DataFrame, label: String = "pair",
+      minCount: Int = 10, maxFreq: Double = 0.01): DataFrame =
+    rareCategoriesOf(cen, label, minCount, maxFreq)
       .orderBy(when(col("severity") === "high", 0).otherwise(1),
         abs(col("rel_change")).desc, col("column_name"), col("category"))
 
@@ -747,8 +771,12 @@ object CategoricalDrift extends graft.OperatorModule {
     * /root/reference/distribution_analyzer.py:366-401), from one census. */
   def rareValueChangesForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair", thr: Double = 0.01): DataFrame =
-    rareValueChangesOf(census(tagPair(ref, curr, cols), cols), label, thr)
-      .orderBy("table_name", "column_name", "change_type", "value")
+    rareValueChangesOfPair(pairCensus(ref, curr, cols), label, thr)
+
+  /** [[rareValueChangesForPair]] of a pair's [[pairCensus]]. */
+  private[drift] def rareValueChangesOfPair(cen: DataFrame, label: String = "pair",
+      thr: Double = 0.01): DataFrame =
+    rareValueChangesOf(cen, label, thr).orderBy("table_name", "column_name", "change_type", "value")
 
   /** O35 rare-category change detection (full port of
     * /root/reference/rare_event_analyzer.py:12-113). */

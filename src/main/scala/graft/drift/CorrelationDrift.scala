@@ -282,19 +282,30 @@ object CorrelationDrift extends graft.OperatorModule {
   }
 
   /** O29 valid-column screen: keep columns whose non-null ratio is ≥
-    * `minRatio` in BOTH frames — one aggregation over the tagged pair
-    * (the reference batches the agg then collects per column in a loop,
-    * correlation_analyzer.py:643-663). */
+    * `minRatio` in BOTH frames — read from the pair's numeric profile, one
+    * aggregation over the tagged pair (the reference batches the agg then
+    * collects per column in a loop, correlation_analyzer.py:643-663). A
+    * frame without rows has no ratio, so it keeps no column. */
   def validColumns(ref: DataFrame, curr: DataFrame, cols: Seq[String],
+      minRatio: Double = 0.7): Seq[String] =
+    if (cols.isEmpty) Seq.empty
+    else validColumnsOf(NumericDrift.pairProfile(ref, curr, cols), cols, minRatio)
+
+  /** [[validColumns]] of a pair's numeric profile, in `cols` order. */
+  private[graft] def validColumnsOf(profile: DataFrame, cols: Seq[String],
       minRatio: Double = 0.7): Seq[String] = {
-    if (cols.isEmpty) return Seq.empty
-    val aggs = cols.map(c => (count(col(c)) / count(lit(1))).as(c))
-    val refRow = ref.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val currRow = curr.agg(aggs.head, aggs.tail: _*).collect()(0)
-    cols.zipWithIndex.filter { case (_, i) =>
-      refRow.getDouble(i) >= minRatio && currRow.getDouble(i) >= minRatio
-    }.map(_._1)
+    val valid = nonNullRatiosOf(profile, "pair", cols)
+      .filter(col("ref_ratio") >= minRatio && col("curr_ratio") >= minRatio)
+      .select("column_name").collect().map(_.getString(0)).toSet
+    cols.filter(valid)
   }
+
+  /** Each column's non-null ratio per side, from the profile's counts. */
+  private def nonNullRatiosOf(profile: DataFrame, label: String, cols: Seq[String]): DataFrame =
+    NumericDrift.sideStats(profile, label, cols, Seq("n_total", "n_nonnull"))
+      .groupBy("table_name", "column_name").agg(
+        max(when(col("side") === "ref", col("n_nonnull") * 1e0 / col("n_total"))).as("ref_ratio"),
+        max(when(col("side") === "curr", col("n_nonnull") * 1e0 / col("n_total"))).as("curr_ratio"))
 
   // --------------------------------- connected components (O28, driver-side)
 
@@ -359,19 +370,14 @@ object CorrelationDrift extends graft.OperatorModule {
   // ----------------------------------------------------------------- API
 
   /** O29 as a query: the null-ratio screen over every numeric split column
-    * — ONE conditional aggregation per table over the tagged pair (the
-    * reference loops a count per column, correlation_analyzer.py:643-663),
-    * emitting both frames' non-null ratios and the ≥0.7-in-both verdict. */
+    * — the counts of each split's numeric profile, ONE conditional
+    * aggregation per table over the tagged pair (the reference loops a count
+    * per column, correlation_analyzer.py:643-663), emitting both frames'
+    * non-null ratios and the ≥0.7-in-both verdict. */
   def validColumnsQuery(spark: SparkSession, dir: String): DataFrame =
     overNumericSplits(spark, dir) { (tagged, label, cols) =>
-      val aggs = count(lit(1)).as("n") +: cols.map(c => count(col(c)).as(s"${c}__nn"))
-      val rows = cols.map(c => s"'$label', '$c', n, ${c}__nn").mkString(", ")
-      tagged.groupBy("side").agg(aggs.head, aggs.tail: _*)
-        .select(col("side"), expr(s"stack(${cols.size}, $rows) as (table_name, column_name, n, nn)"))
-    }.groupBy("table_name", "column_name").agg(
-        max(when(col("side") === "ref", col("nn") * 1e0 / col("n"))).as("ref_ratio"),
-        max(when(col("side") === "curr", col("nn") * 1e0 / col("n"))).as("curr_ratio"))
-      .selectExpr("table_name", "column_name",
+      nonNullRatiosOf(NumericDrift.sideProfile(tagged, cols), label, cols)
+    }.selectExpr("table_name", "column_name",
         "ROUND(ref_ratio, 6) AS ref_nonnull_ratio",
         "ROUND(curr_ratio, 6) AS curr_nonnull_ratio",
         "(ref_ratio >= 0.7 AND curr_ratio >= 0.7) AS valid")

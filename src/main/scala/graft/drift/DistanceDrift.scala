@@ -59,15 +59,16 @@ object DistanceDrift extends graft.OperatorModule {
       .filter(col("x").isNotNull)
   }
 
-  /** Bin edges of every column of a tagged frame as ONE wide row: `<c>__lo`
-    * is the column's minimum and `<c>__w` the cell width (max − min) / bins,
-    * both over the two sides together. */
-  private[drift] def sharedEdges(tagged: DataFrame, cols: Seq[String], bins: Int): DataFrame = {
+  /** Bin edges of every column as ONE wide row, from the per-side min/max of
+    * a numeric profile (NumericDrift.sideProfile): `<c>__lo` is the
+    * column's minimum and `<c>__w` the cell width (max − min) / bins, both
+    * over the two sides together. */
+  private[drift] def sharedEdges(profile: DataFrame, cols: Seq[String], bins: Int): DataFrame = {
     val aggs = cols.flatMap { c =>
-      Seq(min(col(c)).cast("double").as(s"${c}__lo"),
-        ((max(col(c)).cast("double") - min(col(c)).cast("double")) / bins).as(s"${c}__w"))
+      val (lo, hi) = (min(col(sqlIdent(s"${c}__min"))), max(col(sqlIdent(s"${c}__max"))))
+      Seq(lo.as(s"${c}__lo"), ((hi - lo) / bins).as(s"${c}__w"))
     }
-    tagged.agg(aggs.head, aggs.tail: _*)
+    profile.agg(aggs.head, aggs.tail: _*)
   }
 
   /** (side, column_name, lo, w, bin) for every non-null value of every
@@ -92,7 +93,7 @@ object DistanceDrift extends graft.OperatorModule {
   /** The [[numericLong]] frame with x snapped to the left edge of its
     * [[binnedCells]] cell; a constant column maps wholly to its lone edge. */
   private def binnedLong(tagged: DataFrame, cols: Seq[String], bins: Int): DataFrame =
-    binnedCells(tagged, cols, sharedEdges(tagged, cols, bins), bins)
+    binnedCells(tagged, cols, sharedEdges(NumericDrift.sideProfile(tagged, cols), cols, bins), bins)
       .select(col("side"), col("column_name"),
         when(col("w") === 0.0, col("lo")).otherwise(col("lo") + col("bin") * col("w")).as("x"))
 
@@ -296,7 +297,7 @@ object DistanceDrift extends graft.OperatorModule {
 
   def cramersVForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    cramersVOf(CategoricalDrift.census(tagPair(ref, curr, cols), cols), label)
+    cramersVOf(CategoricalDrift.pairCensus(ref, curr, cols), label)
       .orderBy("table_name", "column_name")
 
   /** Per-cell χ² contribution from EXACT integer counts (rc, cc, rs, cs) —
@@ -429,7 +430,7 @@ object DistanceDrift extends graft.OperatorModule {
 
   def catDistancesForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    catDistancesOf(CategoricalDrift.census(tagPair(ref, curr, cols), cols), label)
+    catDistancesOf(CategoricalDrift.pairCensus(ref, curr, cols), label)
       .orderBy("table_name", "column_name")
 
   /** The trio over the non-null values of a census; a column without a

@@ -1,6 +1,6 @@
 package graft.drift
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.drift.{splits => S}
 
@@ -9,19 +9,25 @@ import graft.drift.{splits => S}
   * /root/reference/numerical_analyzer.py, distribution_analyzer.py,
   * rare_event_analyzer.py).
   *
-  * Scale design: each family is one private `…Of(tagged, label, cols)`
-  * over a side-tagged frame. The pair functions apply it to
-  * `tagPair(ref, curr, cols)`; the gate queries apply it to
-  * `withSide(table, split.ref)` for each table split and union the results.
-  * Every family aggregates all of its columns at once: one
-  * `groupBy("side")` over a single scan for the per-side statistics (the
+  * Scale design: every family that only combines per-side results reads
+  * one frame, the numeric profile of a side-tagged frame ([[sideProfile]]):
+  * one row per side with every column's counts, moments, min/max and exact
+  * percentiles, from one `groupBy("side")` over a single scan (the
   * reference runs ~5 Spark jobs per column per frame,
-  * numerical_analyzer.py:124-143), one bounds aggregate plus one stacked
-  * `groupBy(column_name, bin)` for the histograms. So a family's job count
-  * does not grow with the column count, and at 100 TB a family costs one
-  * scan (two where it needs reference constants first) and a shuffle of
-  * partial aggregates. The ref/curr comparison is a conditional-aggregation
-  * pivot of the per-side rows.
+  * numerical_analyzer.py:124-143). Each family is one private
+  * `…Of(profile, label, cols)` that stacks only the statistics it reads, so
+  * column pruning drops the rest of the aggregate from its plan. The pair
+  * functions apply it to the profile of `tagPair(ref, curr, cols)`; the
+  * gate queries apply it to the profile of `withSide(table, split.ref)` for
+  * each table split and union the results; `DriftDetector.detectDrift`
+  * computes the pair's profile once and applies every family to it. The
+  * two families that count rows against constants, z-outliers and
+  * histograms, make one row pass and take the reference moments or the
+  * shared bounds from the profile. So a family's job count does not grow
+  * with the column count, and at 100 TB a family costs one scan (two where
+  * it needs constants first) and a shuffle of partial aggregates. The
+  * ref/curr comparison is a conditional-aggregation pivot of the per-side
+  * rows.
   *
   * The final drift arithmetic is expressed as SQL strings shared verbatim
   * with the DuckDB oracle (`selectExpr` on the Spark side), so the two
@@ -69,40 +75,72 @@ object NumericDrift extends graft.OperatorModule {
     selects.mkString("", " UNION ALL ", " ORDER BY table_name, column_name")
   }
 
-  // ------------------------------------------------------------- ref/curr
+  // ------------------------------------------------------ numeric profile
 
-  /** One-pass per-side stats of every column of a side-tagged frame, long
-    * format: (side, table_name, column_name, n_total, n_nonnull, mean, std,
-    * vmin, vmax, p01, p05, p25, p50, p75, p95, p99).
-    * Exact `percentile` so DuckDB can reproduce values; sketch mode
-    * (graft.plans.SketchModeRewrite) swaps in `percentile_approx` — the
-    * reference's own choice (numerical_analyzer.py:306-307, rel. err 0.01)
-    * — at [[SketchAccuracy]]. The DOUBLE cast leaves the exact value
-    * unchanged and lets the sketch reach integral columns. */
-  private def sideStatsFrom(tagged: DataFrame, tableName: String,
-      cols: Seq[String]): DataFrame = {
-    val aggs = cols.flatMap { c =>
-      Seq(
-        count(lit(1)).as(s"${c}__total"),
-        count(col(c)).as(s"${c}__nonnull"),
-        avg(col(c)).as(s"${c}__mean"),
-        stddev(col(c)).as(s"${c}__std"),
-        min(col(c)).cast("double").as(s"${c}__min"),
-        max(col(c)).cast("double").as(s"${c}__max"),
-        expr(s"percentile(CAST($c AS DOUBLE), array(0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99))")
-          .cast("array<double>").as(s"${c}__pct"),
-      )
-    }
-    val rows = cols.map { c =>
-      s"'$tableName', '$c', ${c}__total, ${c}__nonnull, ${c}__mean, ${c}__std, " +
-        s"${c}__min, ${c}__max, ${c}__pct[0], ${c}__pct[1], ${c}__pct[2], ${c}__pct[3], " +
-        s"${c}__pct[4], ${c}__pct[5], ${c}__pct[6]"
-    }.mkString(", ")
-    tagged
-      .groupBy(col("side")).agg(aggs.head, aggs.tail: _*)
-      .select(col("side"), expr(s"stack(${cols.size}, $rows) as " +
-        "(table_name, column_name, n_total, n_nonnull, mean, std, vmin, vmax, " +
-        "p01, p05, p25, p50, p75, p95, p99)"))
+  /** The profile's exact percentiles: (level, stacked column name). */
+  private val shiftQs = Seq("0.01" -> "p01", "0.05" -> "p05", "0.25" -> "p25",
+    "0.5" -> "p50", "0.75" -> "p75", "0.95" -> "p95", "0.99" -> "p99")
+
+  /** One profile field of column `c` (`<c>__<stat>`) as SQL text. */
+  private def field(c: String, stat: String): String = sqlIdent(s"${c}__$stat")
+
+  /** Every column's profile aggregates. Exact `percentile` so DuckDB can
+    * reproduce values; sketch mode (graft.plans.SketchModeRewrite) swaps in
+    * `percentile_approx` — the reference's own choice
+    * (numerical_analyzer.py:306-307, rel. err 0.01) — at [[SketchAccuracy]].
+    * The DOUBLE cast leaves the exact value unchanged and lets the sketch
+    * reach integral columns. `skewness`/`kurtosis` are Spark's population
+    * (biased) moments. */
+  private def profileAggs(cols: Seq[String]): Seq[Column] = cols.flatMap { c =>
+    val x = col(c)
+    Seq(
+      count(lit(1)).as(s"${c}__total"),
+      count(x).as(s"${c}__nonnull"),
+      avg(x).as(s"${c}__mean"),
+      stddev(x).as(s"${c}__std"),
+      min(x).cast("double").as(s"${c}__min"),
+      max(x).cast("double").as(s"${c}__max"),
+      expr(s"percentile(CAST(${sqlIdent(c)} AS DOUBLE), array(${shiftQs.map(_._1).mkString(", ")}))")
+        .cast("array<double>").as(s"${c}__pct"),
+      skewness(x).as(s"${c}__skew"),
+      kurtosis(x).as(s"${c}__kurt"))
+  }
+
+  /** The numeric profile of a side-tagged frame: one row per side present,
+    * `side` plus every column's `<c>__<stat>` fields, in one scan. */
+  private[drift] def sideProfile(tagged: DataFrame, cols: Seq[String]): DataFrame = {
+    val aggs = profileAggs(cols)
+    tagged.groupBy(col("side")).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** [[sideProfile]] of a snapshot pair, through `tagPair`. */
+  private[graft] def pairProfile(ref: DataFrame, curr: DataFrame, cols: Seq[String]): DataFrame =
+    sideProfile(tagPair(ref, curr, cols), cols)
+
+  /** The long per-side statistics every O11/O12 consumer reads. */
+  private val sideStatCols = Seq("n_total", "n_nonnull", "mean", "std", "vmin", "vmax") ++
+    shiftQs.map(_._2)
+
+  /** A stacked statistic's SQL text over column `c`'s profile fields. */
+  private def statSql(c: String, stat: String): String = stat match {
+    case "n_total" => field(c, "total")
+    case "n_nonnull" => field(c, "nonnull")
+    case "vmin" => field(c, "min")
+    case "vmax" => field(c, "max")
+    case p if shiftQs.exists(_._2 == p) => s"${field(c, "pct")}[${shiftQs.indexWhere(_._2 == p)}]"
+    case other => field(c, other)
+  }
+
+  /** `stats` of a profile, one row per (side, column): the profile's `side`
+    * (when it has one), then (table_name, column_name, stats…). Only the
+    * fields of `stats` are referenced, so column pruning drops every other
+    * aggregate of the profile from the plan. */
+  private[drift] def sideStats(profile: DataFrame, label: String, cols: Seq[String],
+      stats: Seq[String] = sideStatCols): DataFrame = {
+    val rows = cols.map(c => (Seq(sqlStr(label), sqlStr(c)) ++ stats.map(statSql(c, _))).mkString(", "))
+    profile.select(profile.columns.filter(_ == "side").map(col) :+
+      expr(s"stack(${cols.size}, ${rows.mkString(", ")}) as " +
+        s"(table_name, column_name, ${stats.mkString(", ")})"): _*)
   }
 
   // ------------------------------------------- profile-once, diff-many
@@ -114,10 +152,12 @@ object NumericDrift extends graft.OperatorModule {
     * profile-vs-profile on KB-sized frames, never rescanning raw data.
     * Schema = exactly the per-column stat row the drift DAG consumes
     * ([[driftFromProfiles]] is spec-pinned equal to [[driftForPair]],
-    * including through a parquet round-trip). */
-  def profileOf(df: DataFrame, cols: Seq[String], label: String = "snapshot"): DataFrame =
-    sideStatsFrom(df.select(cols.map(col): _*).withColumn("side", lit("p")),
-      label, cols).drop("side")
+    * including through a parquet round-trip). One global aggregate, so an
+    * empty snapshot still has one `n_total = 0` row per column. */
+  def profileOf(df: DataFrame, cols: Seq[String], label: String = "snapshot"): DataFrame = {
+    val aggs = profileAggs(cols)
+    sideStats(df.select(cols.map(col): _*).agg(aggs.head, aggs.tail: _*), label, cols)
+  }
 
   def writeProfile(profile: DataFrame, path: String): Unit =
     profile.coalesce(1).write.mode("overwrite").parquet(path)
@@ -128,13 +168,16 @@ object NumericDrift extends graft.OperatorModule {
   /** O12 drift metrics from two precomputed [[profileOf]] frames. The
     * profiles must carry the same `label` (table_name keys the pivot —
     * a column present in only one profile is dropped, the same
-    * schema-drift rule [[pivotSides]] applies to live pairs). */
+    * schema-drift rule [[pivotSides]] applies to live pairs). A column
+    * without rows on one side (an empty snapshot's `n_total = 0` row) is
+    * dropped too, as [[driftForPair]] drops it when a side has no rows. */
   def driftFromProfiles(refProfile: DataFrame, currProfile: DataFrame): DataFrame =
     driftOfStats(refProfile.withColumn("side", lit("ref"))
-        .unionByName(currProfile.withColumn("side", lit("curr"))))
+        .unionByName(currProfile.withColumn("side", lit("curr")))
+        .filter(col("n_total") > 0))
       .orderBy("table_name", "column_name")
 
-  /** SQL mirror of [[sideStatsFrom]] over every numeric split (a UNION ALL
+  /** SQL mirror of [[sideStats]] over every numeric split (a UNION ALL
     * CTE body named `sides`). */
   private def sideStatsLongSql: String =
     S.numeric.flatMap { sp =>
@@ -149,9 +192,6 @@ object NumericDrift extends graft.OperatorModule {
           s"quantile_cont($c, 0.99) AS p99 FROM ${sp.tableName} GROUP BY 1, 2, 3"
       }
     }.mkString(" UNION ALL ")
-
-  private val sideStatCols = Seq("n_total", "n_nonnull", "mean", "std", "vmin",
-    "vmax", "p01", "p05", "p25", "p50", "p75", "p95", "p99")
 
   /** Pivot the long side stats into one row per column with ref_/curr_
     * prefixes, via conditional aggregation, NOT a ref/curr self-join: a
@@ -243,16 +283,26 @@ object NumericDrift extends graft.OperatorModule {
   private def diffsOf(long: DataFrame): DataFrame =
     pivotSides(long).selectExpr(driftStage1: _*).selectExpr(driftStage2: _*)
 
-  private def driftOf(tagged: DataFrame, label: String, cols: Seq[String]): DataFrame =
-    driftOfStats(sideStatsFrom(tagged, label, cols))
+  private def driftOf(profile: DataFrame, label: String, cols: Seq[String]): DataFrame =
+    driftOfStats(sideStats(profile, label, cols))
+
+  /** `of` applied to the numeric profile of each numeric table split. */
+  private def overSplitProfiles(spark: SparkSession, dir: String)(
+      of: (DataFrame, String, Seq[String]) => DataFrame): DataFrame =
+    overNumericSplits(spark, dir)((tagged, label, cols) => of(sideProfile(tagged, cols), label, cols))
 
   def drift(spark: SparkSession, dir: String): DataFrame =
-    overNumericSplits(spark, dir)(driftOf).orderBy("table_name", "column_name")
+    overSplitProfiles(spark, dir)(driftOf).orderBy("table_name", "column_name")
 
   /** Generic O11/O12 drift metrics for an arbitrary snapshot pair. */
   def driftForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    driftOf(tagPair(ref, curr, cols), label, cols).orderBy("column_name")
+    driftOfPair(pairProfile(ref, curr, cols), cols, label)
+
+  /** [[driftForPair]] of a pair's [[pairProfile]]. */
+  private[drift] def driftOfPair(profile: DataFrame, cols: Seq[String],
+      label: String = "pair"): DataFrame =
+    driftOf(profile, label, cols).orderBy("column_name")
 
   def driftSql: String =
     s"WITH sides AS ($sideStatsLongSql), piv AS ($pivotSidesSql), " +
@@ -291,7 +341,7 @@ object NumericDrift extends graft.OperatorModule {
     val rows = auditMetrics.map { case (n, r, c, d, t) =>
       s"'$n', CAST($r AS DOUBLE), CAST($c AS DOUBLE), CAST($d AS DOUBLE), CAST($t AS DOUBLE)"
     }.mkString(", ")
-    diffsOf(overNumericSplits(spark, dir)(sideStatsFrom))
+    diffsOf(overSplitProfiles(spark, dir)(sideStats(_, _, _)))
       .select(col("table_name"), col("column_name"),
         expr(s"stack(${auditMetrics.size}, $rows) as " +
           "(metric_checked, reference_value, current_value, diff_value, threshold_value)"))
@@ -418,7 +468,7 @@ object NumericDrift extends graft.OperatorModule {
     * cold would be filled by each of the plan's concurrent broadcast
     * consumers at once. */
   private def scoreOf(tagged: DataFrame, label: String, cols: Seq[String]): DataFrame = {
-    val long = sideStatsFrom(tagged, label, cols)
+    val long = sideStats(sideProfile(tagged, cols), label, cols)
     val outs = outlierCounts(tagged, long, cols)
     def outSide(s: String) = outs.filter(col("side") === s).drop("side")
       .withColumnRenamed("n_out", s"${s}_n_out").withColumnRenamed("n_ext", s"${s}_n_ext")
@@ -434,7 +484,7 @@ object NumericDrift extends graft.OperatorModule {
     * outlier components. */
   def scoreForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    scoreStages(pivotSides(sideStatsFrom(tagPair(ref, curr, cols), label, cols))
+    scoreStages(pivotSides(sideStats(pairProfile(ref, curr, cols), label, cols))
       .withColumn("ref_n_out", lit(null).cast("long"))
       .withColumn("ref_n_ext", lit(null).cast("long"))
       .withColumn("curr_n_out", lit(null).cast("long"))
@@ -455,22 +505,24 @@ object NumericDrift extends graft.OperatorModule {
 
   // --------------------------------------------------- O20 quantile shifts
 
-  private val shiftQs = Seq("0.01" -> "p01", "0.05" -> "p05", "0.25" -> "p25",
-    "0.5" -> "p50", "0.75" -> "p75", "0.95" -> "p95", "0.99" -> "p99")
-
   /** Per-quantile shifts with the distribution-analyzer zero rule
     * (/root/reference/distribution_analyzer.py:83-151). */
   def quantileShifts(spark: SparkSession, dir: String): DataFrame =
-    overNumericSplits(spark, dir)(quantileShiftsOf).orderBy("table_name", "column_name", "quantile")
+    overSplitProfiles(spark, dir)(quantileShiftsOf).orderBy("table_name", "column_name", "quantile")
 
   /** Generic O20 quantile shifts for an arbitrary snapshot pair. */
   def quantileShiftsForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    quantileShiftsOf(tagPair(ref, curr, cols), label, cols).orderBy("column_name", "quantile")
+    quantileShiftsOfPair(pairProfile(ref, curr, cols), cols, label)
 
-  private def quantileShiftsOf(tagged: DataFrame, label: String, cols: Seq[String]): DataFrame = {
+  /** [[quantileShiftsForPair]] of a pair's [[pairProfile]]. */
+  private[drift] def quantileShiftsOfPair(profile: DataFrame, cols: Seq[String],
+      label: String = "pair"): DataFrame =
+    quantileShiftsOf(profile, label, cols).orderBy("column_name", "quantile")
+
+  private def quantileShiftsOf(profile: DataFrame, label: String, cols: Seq[String]): DataFrame = {
     val rows = shiftQs.map { case (q, c) => s"'$q', ref_$c, curr_$c" }.mkString(", ")
-    pivotSides(sideStatsFrom(tagged, label, cols))
+    pivotSides(sideStats(profile, label, cols))
       .select(col("table_name"), col("column_name"),
         expr(s"stack(${shiftQs.size}, $rows) as (quantile, ref_value, curr_value)"))
       .selectExpr("table_name", "column_name", "quantile",
@@ -515,27 +567,26 @@ object NumericDrift extends graft.OperatorModule {
     * moments (DuckDB's built-ins use the sample-corrected formulas, which
     * would NOT match). */
   def shapes(spark: SparkSession, dir: String): DataFrame =
-    overNumericSplits(spark, dir)(shapesOf).orderBy("table_name", "column_name")
+    overSplitProfiles(spark, dir)(shapesOf).orderBy("table_name", "column_name")
 
   /** Generic O21 shape drift for an arbitrary snapshot pair. */
   def shapesForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    shapesOf(tagPair(ref, curr, cols), label, cols).orderBy("column_name")
+    shapesOfPair(pairProfile(ref, curr, cols), cols, label)
 
-  private def shapesOf(tagged: DataFrame, label: String, cols: Seq[String]): DataFrame = {
-    val aggs = cols.flatMap { c =>
-      Seq(skewness(col(c)).as(s"${c}__skew"), kurtosis(col(c)).as(s"${c}__kurt"))
-    }
-    val rows = cols.map(c => s"'$label', '$c', ${c}__skew, ${c}__kurt").mkString(", ")
-    tagged.groupBy(col("side")).agg(aggs.head, aggs.tail: _*)
-      .select(col("side"), expr(s"stack(${cols.size}, $rows) as (table_name, column_name, skew, kurt)"))
+  /** [[shapesForPair]] of a pair's [[pairProfile]]. */
+  private[drift] def shapesOfPair(profile: DataFrame, cols: Seq[String],
+      label: String = "pair"): DataFrame =
+    shapesOf(profile, label, cols).orderBy("column_name")
+
+  private def shapesOf(profile: DataFrame, label: String, cols: Seq[String]): DataFrame =
+    sideStats(profile, label, cols, Seq("skew", "kurt"))
       .groupBy("table_name", "column_name").agg(
         max(when(col("side") === "ref", col("skew"))).as("ref_skew"),
         max(when(col("side") === "ref", col("kurt"))).as("ref_kurt"),
         max(when(col("side") === "curr", col("skew"))).as("curr_skew"),
         max(when(col("side") === "curr", col("kurt"))).as("curr_kurt"))
       .selectExpr(shapeFinal: _*)
-  }
 
   def shapesSql: String = {
     val moments = S.numeric.flatMap { sp =>
@@ -573,7 +624,8 @@ object NumericDrift extends graft.OperatorModule {
     * plan stays in Tungsten codegen. */
   def histogram(spark: SparkSession, dir: String): DataFrame =
     histSplits.map { sp =>
-      histogramOf(withSide(table(spark, dir, sp.tableName), sp.ref), sp.tableName, sp.cols)
+      val tagged = withSide(table(spark, dir, sp.tableName), sp.ref)
+      histogramOf(tagged, sideProfile(tagged, sp.cols), sp.tableName, sp.cols)
     }.reduce(_ unionAll _)
       .filter(col("ref_cnt") + col("curr_cnt") > 0)
       .orderBy("table_name", "column_name", "bin")
@@ -593,19 +645,26 @@ object NumericDrift extends graft.OperatorModule {
     * whenever ref/curr ranges differ. */
   def histogramForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    histogramOf(tagPair(ref, curr, cols), label, cols).orderBy("table_name", "column_name", "bin")
+    histogramOfPair(tagPair(ref, curr, cols), pairProfile(ref, curr, cols), cols, label)
 
-  /** Every column's histogram in one stacked pass: one bounds aggregate
-    * (broadcast), one groupBy(column_name, bin), and a join onto the 0..9
-    * spine of each column with a non-null value. A constant column (w = 0)
-    * falls wholly in bin 0 in both engines. */
-  private def histogramOf(tagged: DataFrame, label: String, cols: Seq[String]): DataFrame = {
-    val edges = DistanceDrift.sharedEdges(tagged, cols, 10)
+  /** [[histogramForPair]] of a tagged pair and its [[pairProfile]]. */
+  private[drift] def histogramOfPair(tagged: DataFrame, profile: DataFrame, cols: Seq[String],
+      label: String = "pair"): DataFrame =
+    histogramOf(tagged, profile, label, cols).orderBy("table_name", "column_name", "bin")
+
+  /** Every column's histogram in one stacked pass: the bounds shared by both
+    * sides (from the profile's per-side min/max, broadcast), one
+    * groupBy(column_name, bin), and a join onto the 0..9 spine of each
+    * column with a non-null value. A constant column (w = 0) falls wholly in
+    * bin 0 in both engines. */
+  private def histogramOf(tagged: DataFrame, profile: DataFrame, label: String,
+      cols: Seq[String]): DataFrame = {
+    val edges = DistanceDrift.sharedEdges(profile, cols, 10)
     val counts = DistanceDrift.binnedCells(tagged, cols, edges, 10)
       .groupBy("column_name", "bin").agg(
         sum(when(col("side") === "ref", 1L).otherwise(0L)).as("ref_cnt"),
         sum(when(col("side") === "curr", 1L).otherwise(0L)).as("curr_cnt"))
-    val rows = cols.map(c => s"'$c', ${c}__lo, ${c}__w").mkString(", ")
+    val rows = cols.map(c => s"${sqlStr(c)}, ${field(c, "lo")}, ${field(c, "w")}").mkString(", ")
     val spine = edges.select(expr(s"stack(${cols.size}, $rows) as (column_name, lo, w)"))
       .where(col("lo").isNotNull)
       .select(col("column_name"), explode(sequence(lit(0), lit(9))).as("bin"), col("lo"), col("w"))
@@ -638,30 +697,40 @@ object NumericDrift extends graft.OperatorModule {
     * always emitted with a `significant` flag (the reference silently drops
     * insignificant columns). */
   def zOutliers(spark: SparkSession, dir: String): DataFrame =
-    overNumericSplits(spark, dir)(zOutliersOf).orderBy("table_name", "column_name")
+    overNumericSplits(spark, dir)((tagged, label, cols) =>
+      zOutliersOf(tagged, sideProfile(tagged, cols), label, cols))
+      .orderBy("table_name", "column_name")
 
   /** Generic O36 z-score outlier drift for an arbitrary snapshot pair. */
   def zOutliersForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    zOutliersOf(tagPair(ref, curr, cols), label, cols).orderBy("column_name")
+    zOutliersOfPair(tagPair(ref, curr, cols), pairProfile(ref, curr, cols), cols, label)
 
-  /** All columns' z-outlier counts in two jobs: one agg for every column's
-    * reference mean/std (a 1-row broadcast), one counting pass with a
-    * conditional sum per column — instead of a scan pair per column. */
-  private def zOutliersOf(tagged: DataFrame, label: String, cols: Seq[String]): DataFrame = {
+  /** [[zOutliersForPair]] of a tagged pair and its [[pairProfile]]. */
+  private[drift] def zOutliersOfPair(tagged: DataFrame, profile: DataFrame, cols: Seq[String],
+      label: String = "pair"): DataFrame =
+    zOutliersOf(tagged, profile, label, cols).orderBy("column_name")
+
+  /** All columns' z-outlier counts in one counting pass with a conditional
+    * sum per column, against every column's reference mean/std taken from
+    * the profile (a 1-row broadcast; its values are NULL when the reference
+    * side has no rows) — instead of a scan pair per column. */
+  private def zOutliersOf(tagged: DataFrame, profile: DataFrame, label: String,
+      cols: Seq[String]): DataFrame = {
     val statAggs = cols.flatMap { c =>
-      Seq(avg(col(c)).as(s"${c}__mean"), stddev(col(c)).as(s"${c}__std"))
+      Seq(max(expr(field(c, "mean"))).as(s"${c}__mean"), max(expr(field(c, "std"))).as(s"${c}__std"))
     }
-    val refStats = tagged.filter(col("side") === "ref").agg(statAggs.head, statAggs.tail: _*)
+    val refStats = profile.filter(col("side") === "ref").agg(statAggs.head, statAggs.tail: _*)
     val cntAggs = count(lit(1)).as("n") +: cols.map { c =>
       // NULLIF-style std guard: constant column (std = 0) must yield zero
       // outliers in BOTH engines — Spark ANSI would throw DIVIDE_BY_ZERO,
       // DuckDB would return inf and count everything
-      val safeStd = when(col(s"${c}__std") === 0.0, lit(null)).otherwise(col(s"${c}__std"))
-      sum(when(abs((col(c).cast("double") - col(s"${c}__mean")) / safeStd) > 3.0, 1L)
+      val (mean, std) = (expr(field(c, "mean")), expr(field(c, "std")))
+      val safeStd = when(std === 0.0, lit(null)).otherwise(std)
+      sum(when(abs((col(c).cast("double") - mean) / safeStd) > 3.0, 1L)
         .otherwise(0L)).as(s"${c}__out")
     }
-    val rows = cols.map(c => s"'$label', '$c', n, ${c}__out").mkString(", ")
+    val rows = cols.map(c => s"${sqlStr(label)}, ${sqlStr(c)}, n, ${field(c, "out")}").mkString(", ")
     tagged.crossJoin(broadcast(refStats))
       .groupBy("side").agg(cntAggs.head, cntAggs.tail: _*)
       .select(col("side"), expr(s"stack(${cols.size}, $rows) as (table_name, column_name, n, n_out)"))

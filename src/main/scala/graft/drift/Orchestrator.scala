@@ -259,14 +259,19 @@ case class DriftReport(
     executionTimeSec: Double)
 
 /** O40 orchestrator: run every analyzer family over a snapshot pair per the
-  * config flags and assemble the nested report. Each family — the numeric,
-  * distribution, correlation and categorical ones and the group-drift
-  * verdict — aggregates all of its columns and dimensions in a fixed number
-  * of stacked passes (a constants pass first for z-outliers and
-  * histograms), so its job count does not grow with the column count
+  * config flags and assemble the nested report. The pair is profiled once:
+  * the numeric stat rows ([[NumericDrift.pairProfile]]) and the
+  * categorical census ([[CategoricalDrift.pairCensus]]), each collected
+  * into a local frame. Every family that only combines per-side results —
+  * the two verdicts, quantile shifts, shapes, full JS, rare values, rare
+  * categories and the O29 column screen — projects that profile;
+  * z-outliers and histograms make one row pass against its constants; the
+  * group-drift verdict and the correlation families read the rows. Each
+  * aggregates all of its columns and dimensions in a fixed number of
+  * stacked passes, so its job count does not grow with the column count
   * (GoldenDriftSpec pins this per family; SURVEY.md §4.2 anti-patterns 1
-  * and 2). The pair functions it calls are the ones the gate queries apply
-  * to each table split. */
+  * and 2). The functions it applies to the profile are the ones the gate
+  * queries apply to each table split's profile. */
 class DriftDetector(spark: SparkSession) {
 
   /** Config-file entry point, the reference's
@@ -307,16 +312,22 @@ class DriftDetector(spark: SparkSession) {
   /** Every analyzer family over the pair. The caches it creates are released
     * on return; the report's frames are local copies that hold no blocks.
     *
-    * Once both sides of the pair are cached and filled, the numeric and
-    * categorical verdict passes and the eleven analyzer families run
-    * concurrently on a thread pool made for this call, as wide as the
-    * context's `defaultParallelism` (at most one thread per task). The report
-    * equals the one a sequential run gives: frames, verdicts, and `errors` in
-    * family order, whatever order the families finish in. Every job the call
-    * submits carries a `drift:<family>` job description (`drift:sampling`,
-    * `drift:type_inference`, `drift:numeric`, `drift:shapes`, …). A family
-    * that fails is reported in `errors`; a verdict pass that throws cancels
-    * the jobs of the other tasks and waits for them to end, and then its own
+    * Once both sides of the pair are cached and filled, the profile phase,
+    * the numeric and categorical verdict passes and the eleven analyzer
+    * families run concurrently on a thread pool made for this call, as wide
+    * as the context's `defaultParallelism` and never wider than 13.
+    * The pool takes the group-drift verdict, the two profile tasks and the
+    * group correlations first, then the tasks that read the profile; a task
+    * waits only on tasks submitted before it. The local profile copies are
+    * bounded by the pair's column count (numeric) and by its distinct
+    * values (categorical). The report equals the one a sequential run
+    * gives: frames, verdicts, and `errors` in family order, whatever order
+    * the families finish in. Every job the call submits carries a
+    * `drift:<family>` job description (`drift:sampling`,
+    * `drift:type_inference`, `drift:profile`, `drift:numeric`,
+    * `drift:shapes`, …). A family that fails is reported in `errors`; a
+    * verdict pass that throws — or whose profile throws — cancels the jobs
+    * of the other tasks and waits for them to end, and then its own
     * exception propagates. */
   def detectDrift(refIn: DataFrame, currIn: DataFrame,
       configIn: DriftConfig = DriftConfig()): DriftReport =
@@ -367,14 +378,73 @@ class DriftDetector(spark: SparkSession) {
     val numericCols = common.filter(c => types(c) == "numerical")
     val catCols = common.filter(c => types(c) == "categorical")
 
-    // 3.–5. the verdict passes and the families only read the filled pair,
-    // so they run concurrently on a pool made for this call
+    // 3.–5. the profile phase, the verdict passes and the families only read
+    // the filled pair, so they run concurrently on a pool made for this call
     val width = math.min(FanOut, sc.defaultParallelism)
     val (numeric, categorical, results) = CallPool.using(sc, width) { pool =>
-      // 3. numeric drift (O12 metrics + verdicts)
+      val empty = spark.emptyDataFrame
+      // a collected copy that outlives the scope and holds no cache blocks, in
+      // one partition, so the families that read it plan no exchange of it
+      def local(df: DataFrame): DataFrame =
+        spark.createDataFrame(df.collectAsList(), df.schema).coalesce(1)
+      // a task waits only on tasks submitted before it, so a pool of any
+      // width drains in submission order
+      def await[T](f: Future[T]): T = Await.result(f, Duration.Inf)
+      // each family isolated per the reference's graceful-error policy (never
+      // fail the whole run; SURVEY.md §4.1): collecting the tiny family result
+      // forces it on the pool thread, where a runtime failure is caught (plans
+      // are lazy)
+      def safe(family: String, enabled: Boolean)(body: => DataFrame): Future[FamilyResult] =
+        if (!enabled) Future.successful(FamilyResult(empty, Seq.empty, None))
+        else pool.submit(s"drift:$family") {
+          try {
+            val df = body
+            val rows = df.collectAsList()
+            FamilyResult(spark.createDataFrame(rows, df.schema), rows.asScala.toSeq, None)
+          } catch {
+            case scala.util.control.NonFatal(e) =>
+              FamilyResult(empty, Seq.empty, Some(s"$family: ${e.getMessage}"))
+          }
+        }
+      def profile(enabled: Boolean)(body: => DataFrame): Future[DataFrame] =
+        if (!enabled) Future.successful(empty) else pool.submit("drift:profile")(local(body))
+
+      // group analysis (O32/O33): configured dims, else first ≤3 categorical
+      // columns as the reference defaults (data_drift_detector.py:168-175)
+      val groupDims =
+        (if (config.groupColumns.nonEmpty) config.groupColumns.filter(catCols.contains)
+         else catCols.take(3))
+      val correlationsOn = config.analyzeCorrelations && numericCols.size >= 2
+      // feature-importance drift (O27) when a numeric target is configured
+      val target = config.targetColumn.filter(t => numericCols.contains(t) && numericCols.size >= 2)
+
+      // first the group-drift verdict, which reads the rows longest, and the
+      // pair profile every later task reads: the numeric stat rows and the
+      // categorical census, each collected into a local frame once
+      val groupsF = safe("group_drift", config.analyzeGroups && groupDims.nonEmpty)(
+        GroupDrift.verdictForPair(ref, curr, groupDims, numericCols, catCols))
+      val numProfileF = profile(numericCols.nonEmpty)(
+        NumericDrift.pairProfile(ref, curr, numericCols))
+      val censusF = profile(catCols.nonEmpty)(CategoricalDrift.pairCensus(ref, curr, catCols))
+      def numProfile = await(numProfileF)
+      def cen = await(censusF)
+      // O29 screen: drop columns with non-null ratio < 0.7 in either frame;
+      // projected once, by whichever correlation family reads it first
+      lazy val corrCols = CorrelationDrift.validColumnsOf(numProfile, numericCols)
+      // O26: per-category correlations over the first ≤3 group dimensions,
+      // matching the reference's group_columns[:3] loop
+      // (correlation_analyzer.py:163-171) — one pass for all of them
+      val groupCorrF = safe("group_correlations",
+        config.analyzeGroups && groupDims.nonEmpty && correlationsOn)(
+        if (corrCols.size >= 2)
+          CorrelationDrift.groupCorrelationsForDims(ref, curr, groupDims.take(3), corrCols)
+        else empty)
+
+      // 3. numeric drift (O12 metrics + verdicts); a profile that fails
+      // fails this pass with the profile's own exception
       val numericF = pool.submit("drift:numeric") {
         if (numericCols.isEmpty) Seq.empty
-        else NumericDrift.driftForPair(ref, curr, numericCols).collect().toSeq.map { r =>
+        else NumericDrift.driftOfPair(numProfile, numericCols).collect().toSeq.map { r =>
           NumericColumnDrift(
             r.getAs[String]("column_name"),
             r.getAs[Double]("ref_mean"), r.getAs[Double]("curr_mean"),
@@ -390,7 +460,7 @@ class DriftDetector(spark: SparkSession) {
       // 4. categorical drift (O19)
       val categoricalF = pool.submit("drift:categorical") {
         if (catCols.isEmpty) Seq.empty
-        else CategoricalDrift.categoricalDriftForPair(ref, curr, catCols,
+        else CategoricalDrift.categoricalDriftOfPair(cen,
           exactPValue = config.exactChiPValue).collect().toSeq.map { r =>
           CategoricalColumnDrift(
             r.getAs[String]("column_name"),
@@ -404,79 +474,40 @@ class DriftDetector(spark: SparkSession) {
       }
 
       // 5. distribution module (O20/O21), correlations (O25/O26), rare events
-      // (O35/O36) — each family isolated per the reference's graceful-error
-      // policy (never fail the whole run; SURVEY.md §4.1)
-      val empty = spark.emptyDataFrame
-      // collecting the tiny family result forces it on the pool thread, where a
-      // runtime failure is caught (plans are lazy), into a copy that outlives
-      // the scope
-      def safe(family: String, enabled: Boolean)(body: => DataFrame): Future[FamilyResult] =
-        if (!enabled) Future.successful(FamilyResult(empty, Seq.empty, None))
-        else pool.submit(s"drift:$family") {
-          try {
-            val df = body
-            val rows = df.collectAsList()
-            FamilyResult(spark.createDataFrame(rows, df.schema), rows.asScala.toSeq, None)
-          } catch {
-            case scala.util.control.NonFatal(e) =>
-              FamilyResult(empty, Seq.empty, Some(s"$family: ${e.getMessage}"))
-          }
-        }
-      // O29 screen: drop columns with non-null ratio < 0.7 in either frame;
-      // run once, by whichever correlation family reads it first
-      lazy val corrCols = CorrelationDrift.validColumns(ref, curr, numericCols)
-      val correlationsOn = config.analyzeCorrelations && numericCols.size >= 2
-      // group analysis (O32/O33): configured dims, else first ≤3 categorical
-      // columns as the reference defaults (data_drift_detector.py:168-175)
-      val groupDims =
-        (if (config.groupColumns.nonEmpty) config.groupColumns.filter(catCols.contains)
-         else catCols.take(3))
-      // feature-importance drift (O27) when a numeric target is configured
-      val target = config.targetColumn.filter(t => numericCols.contains(t) && numericCols.size >= 2)
-
-      val families = Seq(
-        safe("quantile_shifts", config.analyzeDistributions && numericCols.nonEmpty)(
-          NumericDrift.quantileShiftsForPair(ref, curr, numericCols)),
-        safe("shapes", config.analyzeDistributions && numericCols.nonEmpty)(
-          NumericDrift.shapesForPair(ref, curr, numericCols)),
-        // categorical half of the distribution module
-        // (data_drift_detector.py:117-143 → distribution_analyzer.py:10-81):
-        // full-support JS per categorical column, rare-value census, and the
-        // opt-in histogram summaries
-        safe("js_full", config.analyzeDistributions && catCols.nonEmpty)(
-          CategoricalDrift.jsFullForPair(ref, curr, catCols,
-            threshold = config.jsDistanceThreshold)),
-        safe("rare_value_changes",
-          config.analyzeDistributions && config.detectRareEvents && catCols.nonEmpty)(
-          CategoricalDrift.rareValueChangesForPair(ref, curr, catCols,
-            thr = config.rareValueThreshold)),
-        safe("histograms",
-          config.analyzeDistributions && config.genDistributionSummaries && numericCols.nonEmpty)(
-          NumericDrift.histogramForPair(ref, curr, numericCols)),
-        safe("z_outliers", config.detectRareEvents && numericCols.nonEmpty)(
-          NumericDrift.zOutliersForPair(ref, curr, numericCols)),
-        safe("correlations", correlationsOn)(
-          if (corrCols.size >= 2) CorrelationDrift.forPair(ref, curr, corrCols, config) else empty),
-        safe("rare_categories", config.detectRareEvents && catCols.nonEmpty)(
-          CategoricalDrift.rareCategoriesForPair(ref, curr, catCols,
-            maxFreq = config.rareValueThreshold)),
-        safe("group_drift", config.analyzeGroups && groupDims.nonEmpty)(
-          GroupDrift.verdictForPair(ref, curr, groupDims, numericCols, catCols)),
-        // O26: per-category correlations over the first ≤3 group dimensions,
-        // matching the reference's group_columns[:3] loop
-        // (correlation_analyzer.py:163-171) — one pass for all of them
-        safe("group_correlations", config.analyzeGroups && groupDims.nonEmpty && correlationsOn)(
-          if (corrCols.size >= 2)
-            CorrelationDrift.groupCorrelationsForDims(ref, curr, groupDims.take(3), corrCols)
-          else empty),
-        safe("feature_importance", target.isDefined)(
-          CorrelationDrift.featureImportanceForPair(ref, curr, target.get,
-            numericCols.filterNot(target.contains))))
+      // (O35/O36); z-outliers and histograms count the rows against the
+      // profile's constants
+      lazy val numTagged = tagPair(ref, curr, numericCols)
+      val quantilesF = safe("quantile_shifts", config.analyzeDistributions && numericCols.nonEmpty)(
+        NumericDrift.quantileShiftsOfPair(numProfile, numericCols))
+      val shapesF = safe("shapes", config.analyzeDistributions && numericCols.nonEmpty)(
+        NumericDrift.shapesOfPair(numProfile, numericCols))
+      // categorical half of the distribution module
+      // (data_drift_detector.py:117-143 → distribution_analyzer.py:10-81):
+      // full-support JS per categorical column, rare-value census, and the
+      // opt-in histogram summaries
+      val jsFullF = safe("js_full", config.analyzeDistributions && catCols.nonEmpty)(
+        CategoricalDrift.jsFullOfPair(cen, threshold = config.jsDistanceThreshold))
+      val rareValuesF = safe("rare_value_changes",
+        config.analyzeDistributions && config.detectRareEvents && catCols.nonEmpty)(
+        CategoricalDrift.rareValueChangesOfPair(cen, thr = config.rareValueThreshold))
+      val histogramsF = safe("histograms",
+        config.analyzeDistributions && config.genDistributionSummaries && numericCols.nonEmpty)(
+        NumericDrift.histogramOfPair(numTagged, numProfile, numericCols))
+      val zOutF = safe("z_outliers", config.detectRareEvents && numericCols.nonEmpty)(
+        NumericDrift.zOutliersOfPair(numTagged, numProfile, numericCols))
+      val corrF = safe("correlations", correlationsOn)(
+        if (corrCols.size >= 2) CorrelationDrift.forPair(ref, curr, corrCols, config) else empty)
+      val rareF = safe("rare_categories", config.detectRareEvents && catCols.nonEmpty)(
+        CategoricalDrift.rareCategoriesOfPair(cen, maxFreq = config.rareValueThreshold))
+      val featureImportanceF = safe("feature_importance", target.isDefined)(
+        CorrelationDrift.featureImportanceForPair(ref, curr, target.get,
+          numericCols.filterNot(target.contains)))
 
       // a verdict pass that throws ends the call here: CallPool.using cancels
       // and drains the other tasks before the exception reaches the scope
-      def await[T](f: Future[T]): T = Await.result(f, Duration.Inf)
-      (await(numericF), await(categoricalF), families.map(await))
+      (await(numericF), await(categoricalF),
+        Seq(quantilesF, shapesF, jsFullF, rareValuesF, histogramsF, zOutF, corrF, rareF, groupsF,
+          groupCorrF, featureImportanceF).map(await))
     }
     val Seq(quantiles, shapes, jsFull, rareValues, histograms, zOut, corr, rare, groups,
       groupCorr, featureImportance) = results

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, FloatType}
 
 /** Shared helpers for the drift engine.
   *
@@ -77,10 +78,24 @@ package object drift {
 
   /** The same `side` tag over two snapshots: their requested columns,
     * tagged and unioned, so a family function reads a snapshot pair exactly
-    * as it reads a [[withSide]] table split. */
-  private[drift] def tagPair(ref: DataFrame, curr: DataFrame, cols: Seq[String]): DataFrame =
-    ref.select(cols.map(col): _*).withColumn("side", lit("ref"))
-      .unionByName(curr.select(cols.map(col): _*).withColumn("side", lit("curr")))
+    * as it reads a [[withSide]] table split. NaN and ±Infinity in a float or
+    * double column become NULL, so every statistic, score and bin edge of a
+    * pair is computed over its finite values and a non-finite value counts
+    * as missing. */
+  private[drift] def tagPair(ref: DataFrame, curr: DataFrame, cols: Seq[String]): DataFrame = {
+    def tagged(df: DataFrame, side: String): DataFrame = {
+      val picked = df.select(cols.map(col): _*)
+      picked.select(picked.schema.fields.toSeq.map { f =>
+        val c = col(sqlIdent(f.name))
+        f.dataType match {
+          case FloatType | DoubleType =>
+            when(isnan(c) || abs(c) === Double.PositiveInfinity, lit(null)).otherwise(c).as(f.name)
+          case _ => c
+        }
+      } :+ lit(side).as("side"): _*)
+    }
+    tagged(ref, "ref").unionByName(tagged(curr, "curr"))
+  }
 
   /** A numeric family's gate query: `of(tagged, label, cols)` applied to
     * each numeric table split, with the table name as label, unioned. */

@@ -41,6 +41,19 @@ class DriftMathSpec extends SparkSpec {
     assert(rows.map(_.getAs[String]("column_name")).toSeq == Seq("x"))
   }
 
+  test("an empty snapshot profiles to one n_total = 0 row per column, which drift drops") {
+    val ref = Seq(1.0, 2.0, 4.0).toDF("x").withColumn("y", col("x") * 2)
+    val empty = ref.limit(0)
+    val cols = Seq("x", "y")
+    assert(NumericDrift.profileOf(empty, cols, "t").collect().map(_.toString).toSeq ==
+      cols.map(c => s"[t,$c,0,0${",null" * 11}]"))
+    // a side without rows has no drift row, as driftForPair over that pair gives
+    val profile = NumericDrift.profileOf(ref, cols, "t")
+    assert(NumericDrift.driftFromProfiles(profile, NumericDrift.profileOf(empty, cols, "t")).collect().isEmpty)
+    assert(NumericDrift.driftFromProfiles(NumericDrift.profileOf(empty, cols, "t"), profile).collect().isEmpty)
+    assert(NumericDrift.driftForPair(ref, empty, cols).collect().isEmpty)
+  }
+
   test("relDiff zero-denominator rule (numerical_analyzer.py:214-219)") {
     assert(eval1(relDiff(lit(0.0), lit(0.0))) == 0.0)
     assert(eval1(relDiff(lit(0.0), lit(5.0))) == 1.0)

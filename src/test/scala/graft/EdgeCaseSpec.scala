@@ -111,6 +111,33 @@ class EdgeCaseSpec extends SparkSpec {
       s"leaked RDDs: ${sc.getPersistentRDDs.keySet.toSet -- before}")
   }
 
+  test("NaN and ±Infinity count as missing: no report field is NaN, no mean/std/range cause") {
+    // the same 30,000 rows on both sides, except that 0.1% of the current
+    // side's x are NaN, +Infinity or −Infinity (none of them an extreme)
+    val id = col("id")
+    val x = (id * 37) % 10007 + 0.5
+    def side(xs: org.apache.spark.sql.Column) = spark.range(30000)
+      .select(xs.as("x"), (x * 2 + id % 7).as("y"), (id % 4).cast("string").as("c"))
+    val ref = side(x)
+    val curr = side(when(id % 3000 === 0, Double.NaN).when(id % 3000 === 1, Double.PositiveInfinity)
+      .when(id % 3000 === 2, Double.NegativeInfinity).otherwise(x))
+    val rep = new DriftDetector(spark).detectDrift(ref, curr, DriftConfig("deep_dive", sampleSize = 0,
+      targetColumn = Some("y"), customColumnTypes = Map("x" -> "numerical", "y" -> "numerical")))
+    assert(rep.errors.isEmpty, rep.errors.mkString("; "))
+    val nx = rep.numeric.find(_.column == "x").get
+    Seq(nx.refMean, nx.currMean, nx.meanRelDiff, nx.medianRelDiff, nx.stdRelDiff, nx.iqrRelDiff,
+      nx.rangeRelDiff, nx.nullDiff, nx.driftScore).foreach(v => assert(!v.isNaN, nx))
+    assert(math.abs(nx.nullDiff - 0.001) < 1e-9, nx)
+    assert(Set("mean", "std_dev", "range").intersect(nx.driftCauses.toSet).isEmpty, nx)
+    val frames = Seq(rep.quantileShifts, rep.shapes, rep.jsFull, rep.rareValueChanges, rep.histograms,
+      rep.zOutliers, rep.correlationChanges, rep.rareCategories, rep.groupDrift,
+      rep.groupCorrelations, rep.featureImportance)
+    Seq(rep.quantileShifts, rep.shapes, rep.histograms, rep.zOutliers, rep.correlationChanges,
+      rep.groupDrift, rep.featureImportance).foreach(f => assert(f.count() > 0, f.columns.mkString(",")))
+    for (f <- frames; r <- f.collect(); v <- r.toSeq)
+      assert(!(v.isInstanceOf[Double] && v.asInstanceOf[Double].isNaN), s"NaN in $r")
+  }
+
   test("z-outliers on a constant column count zero outliers (no ANSI divide-by-zero)") {
     val ref = Seq.fill(50)(7.0).toDF("x")
     val curr = Seq.tabulate(50)(i => 7.0 + (if (i == 0) 100.0 else 0.0)).toDF("x")

@@ -115,6 +115,40 @@ class GateFamilySpec extends SparkSpec {
     }
   }
 
+  test("valid_columns equals the validColumns screen on every split") {
+    val gate = CorrelationDrift.validColumnsQuery(spark, dir)
+    assert(gate.count() > 0)
+    splits.numeric.foreach { sp =>
+      val (ref, curr) = halves(sp.tableName, sp.ref)
+      val kept = CorrelationDrift.validColumns(ref, curr, sp.cols).toSet
+      assertSameRows(gate.select("table_name", "column_name", "valid"), sp.tableName,
+        spark.createDataFrame(sp.cols.sorted.map(c => (sp.tableName, c, kept(c))))
+          .toDF("table_name", "column_name", "valid"))
+    }
+  }
+
+  test("the O29 screen of a collected pair profile equals validColumns at ratios 0.69, 0.70, 0.71") {
+    // 100 rows a side; r<k> is non-null in k reference rows, c<k> in k current rows
+    val ks = Seq(69, 70, 71)
+    def side(nullsOn: String) = spark.range(100).select(ks.flatMap(k => Seq("r", "c").map { s =>
+      (if (s == nullsOn) when(col("id") < k, col("id") * 1.5) else col("id") * 1.5).as(s"$s$k")
+    }): _*)
+    val (ref, curr) = (side("r"), side("c"))
+    val cols = ref.columns.toSeq
+    // the definition the screen implements: count(c) / count(*) ≥ 0.7 on both sides
+    def ratios(df: DataFrame) = {
+      val r = df.select(cols.map(c => count(col(c)) / count(lit(1))): _*).collect()(0)
+      cols.indices.map(r.getDouble)
+    }
+    val direct = cols.zip(ratios(ref).zip(ratios(curr)))
+      .collect { case (c, (a, b)) if a >= 0.7 && b >= 0.7 => c }
+    assert(direct == Seq("r70", "c70", "r71", "c71"))
+    val profile = NumericDrift.pairProfile(ref, curr, cols)
+    val collected = spark.createDataFrame(profile.collectAsList(), profile.schema)
+    assert(CorrelationDrift.validColumnsOf(collected, cols) == direct)
+    assert(CorrelationDrift.validColumns(ref, curr, cols) == direct)
+  }
+
   test("ks_test, wasserstein and psi equal their pair functions on every split") {
     assertSplitsMatch(DistanceDrift.ksTest(spark, dir))(DistanceDrift.ksForPair)
     assertSplitsMatch(DistanceDrift.wasserstein(spark, dir))(DistanceDrift.wassersteinForPair)

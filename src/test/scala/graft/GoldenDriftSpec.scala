@@ -229,8 +229,8 @@ class GoldenDriftSpec extends SparkSpec {
         DriftConfig(sampleSize = 0, customColumnTypes = types)))
       assert(r.errors.isEmpty, r.errors.mkString("; "))
       assert(r.categorical.size == cat.length && r.groupDrift.count() > 0)
-      Seq("categorical", "js_full", "rare_value_changes", "rare_categories", "group_drift",
-          "group_correlations")
+      Seq("profile", "categorical", "js_full", "rare_value_changes", "rare_categories",
+          "group_drift", "group_correlations")
         .map(f => f -> log.jobs.values.count(_ == s"drift:$f")).toMap
     }
     val two = families(narrow(v1), narrow(v3))
@@ -255,7 +255,8 @@ class GoldenDriftSpec extends SparkSpec {
         sampleSize = 0, customColumnTypes = types, analyzeGroups = false)))
       assert(r.errors.isEmpty, r.errors.mkString("; "))
       assert(r.numeric.size == ref.columns.length - 1 && r.histograms.count() == 10L * r.numeric.size)
-      Seq("numeric", "quantile_shifts", "shapes", "histograms", "z_outliers", "correlations")
+      Seq("profile", "numeric", "quantile_shifts", "shapes", "histograms", "z_outliers",
+          "correlations")
         .map(f => f -> log.jobs.values.count(_ == s"drift:$f")).toMap
     }
     val three = families(v1.select(base :+ extra.head: _*), v3.select(base :+ extra.head: _*))
@@ -272,7 +273,7 @@ class GoldenDriftSpec extends SparkSpec {
     val undescribed = log.jobs.filterNot(_._2.startsWith("drift:"))
     assert(undescribed.isEmpty, s"jobs without a drift: description: $undescribed")
     val families = log.jobs.values.map(_.stripPrefix("drift:")).toSet
-    assert(Set("sampling", "type_inference", "numeric", "categorical", "quantile_shifts",
+    assert(Set("sampling", "type_inference", "profile", "numeric", "categorical", "quantile_shifts",
       "correlations", "group_drift", "feature_importance").subsetOf(families), families)
     assert(log.running.isEmpty)
   }

@@ -528,6 +528,20 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("numeric gates plan only the profile statistics they read") {
+    // every numeric family stacks only its own fields of the shared profile
+    // aggregate, so column pruning drops the others from its plan
+    import graft.drift._
+    def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution.optimizedPlan.toString
+    Seq("dist_shapes" -> NumericDrift.shapes(spark, sf), "z_outliers" -> NumericDrift.zOutliers(spark, sf),
+      "histogram" -> NumericDrift.histogram(spark, sf),
+      "valid_columns" -> CorrelationDrift.validColumnsQuery(spark, sf)).foreach { case (name, df) =>
+      assert(!plan(df).contains("percentile"), s"$name plans a percentile:\n${plan(df)}")
+    }
+    val verdict = plan(NumericDrift.drift(spark, sf))
+    assert(verdict.contains("percentile") && !verdict.contains("skewness"), verdict)
+  }
+
   test("categorical census never windows a whole column in one task") {
     // a window keyed by column_name alone would send every distinct value of
     // a high-cardinality column (l_partkey, o_custkey) through one sort; the
