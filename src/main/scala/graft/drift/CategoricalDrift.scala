@@ -37,51 +37,49 @@ object CategoricalDrift extends graft.OperatorModule {
   //
   // Every categorical query here, gate or pair, is a projection of ONE frame
   // per call — the census — plus a fixed handful of groupBy/window passes
-  // keyed by column. A call therefore runs the same exchanges for 2 columns
-  // as for 200, and each statistic (χ², top-20 JS, null proportion, ...) has
-  // one implementation, a private `…Of(cen, label, …)`. The gate queries
-  // apply it to the census of `withSide(table, split.ref)`, the pair
-  // functions to the census of `tagPair(ref, curr, cols)`, and
-  // `DriftDetector.detectDrift` computes its pair's census once, collects
-  // it, and applies every categorical family to that local frame. The
-  // census has one row per distinct (column, value) of the pair, so the
-  // local copy is bounded by the distinct values of the (sampled) pair: the
-  // inference rule keeps numeric columns with many values out, but a string
-  // column is always categorical, and its distinct values are this bound.
-  // No consumer filters the census on `value`: the filter would push below
-  // the census aggregate, and the branches that read the unfiltered census
-  // would plan a second scan instead of reusing its exchange.
+  // keyed by column, so a call runs the same exchanges for 2 columns as for
+  // 200, and each statistic has one implementation, a private `…Of(cen, …)`,
+  // which the gate queries apply to the census of each table split, the
+  // pair functions to that of `tagPair(ref, curr, cols)`, and
+  // `DriftDetector.detectDrift` to its pair's census, collected once.
+  //
+  // Shape: one row per distinct (column_name, value) of the pair, the null
+  // group kept, with `ref_cnt`/`curr_cnt` and, on every row, the column's
+  // per-side rows (`ref_n`/`curr_n`) and non-null rows (`ref_nn`/`curr_nn`);
+  // no reader re-aggregates the totals. It is bounded by the distinct values
+  // of the (sampled) pair, the only bound of a string column. No consumer
+  // filters the census on `value`: the filter would push below the census
+  // aggregate and plan a second scan instead of reusing its exchange.
 
-  /** Per-(column_name, value) counts of a side-tagged frame, null group kept:
-    * `ref_cnt`/`curr_cnt` on one row. One stack, one groupBy. */
+  /** The census of a side-tagged frame: one stack and one
+    * groupBy(column_name, value) count the values, and a groupBy(column_name)
+    * over those counts, broadcast back, gives the totals — no window keyed by
+    * column alone, so the values of a high-cardinality column stay spread
+    * over tasks. A left join, so a reader that reads no total plans none. */
   private[drift] def census(tagged: DataFrame, cols: Seq[String]): DataFrame = {
     val rows = cols.map(c => s"${sqlStr(c)}, CAST(${sqlIdent(c)} AS STRING)").mkString(", ")
-    tagged.select(col("side"), expr(s"stack(${cols.size}, $rows) AS (column_name, value)"))
+    val counts = tagged
+      .select(col("side"), expr(s"stack(${cols.size}, $rows) AS (column_name, value)"))
       .groupBy("column_name", "value").agg(
         count(when(col("side") === "ref", 1)).as("ref_cnt"),
         count(when(col("side") === "curr", 1)).as("curr_cnt"))
+      // never false: both join sides then plan the same counts, one exchange
+      .where(col("column_name").isNotNull)
+    def nonNull(cnt: String) = sum(when(col("value").isNotNull, col(cnt)).otherwise(0L))
+    val totals = counts.groupBy("column_name").agg(sum("ref_cnt").as("ref_n"),
+      sum("curr_cnt").as("curr_n"), nonNull("ref_cnt").as("ref_nn"), nonNull("curr_cnt").as("curr_nn"))
+    counts.join(broadcast(totals), Seq("column_name"), "left")
   }
 
   /** The [[census]] of a snapshot pair, through `tagPair`. */
-  private[drift] def pairCensus(ref: DataFrame, curr: DataFrame, cols: Seq[String]): DataFrame =
+  private[graft] def pairCensus(ref: DataFrame, curr: DataFrame, cols: Seq[String]): DataFrame =
     census(tagPair(ref, curr, cols), cols)
-
-  /** The census with each column's per-side total rows (`ref_n`) and
-    * non-null rows (`ref_nn`) on every row, from a groupBy(column_name)
-    * broadcast back — no window keyed by column alone, so the values of a
-    * high-cardinality column stay spread over tasks. */
-  private[drift] def withTotals(cen: DataFrame): DataFrame = {
-    def nonNull(cnt: String) = sum(when(col("value").isNotNull, col(cnt)).otherwise(0L))
-    cen.join(broadcast(cen.groupBy("column_name").agg(sum("ref_cnt").as("ref_n"),
-      sum("curr_cnt").as("curr_n"), nonNull("ref_cnt").as("ref_nn"), nonNull("curr_cnt").as("curr_nn"))),
-      "column_name")
-  }
 
   /** The census of each categorical split of the gate tables. */
   private[drift] def splitCensus(spark: SparkSession, dir: String, sp: S.CatSplit): DataFrame =
     census(withSide(table(spark, dir, sp.tableName), sp.ref), sp.cols)
 
-  /** [[withTotals]] plus each side's top-20 probabilities over its non-null
+  /** The census plus each side's top-20 probabilities over its non-null
     * values: `p`/`q` are NULL outside that side's top 20 (by count desc,
     * value asc). Each side's top 20 is ranked per (column, side), so the
     * rank is limited before its exchange and no task sorts a whole column,
@@ -98,7 +96,7 @@ object CategoricalDrift extends graft.OperatorModule {
       .filter(col("rk") <= 20)
       .groupBy("column_name", "value").agg(
         max(col("side") === "ref").as("ref_top"), max(col("side") === "curr").as("curr_top"))
-    withTotals(cen).join(broadcast(top), Seq("column_name", "value"), "left")
+    cen.join(broadcast(top), Seq("column_name", "value"), "left")
       .selectExpr("*", "CASE WHEN ref_top THEN ref_cnt * 1e0 / ref_nn END AS p",
         "CASE WHEN curr_top THEN curr_cnt * 1e0 / curr_nn END AS q")
   }
@@ -137,7 +135,7 @@ object CategoricalDrift extends graft.OperatorModule {
 
   /** Per-value counts and frequencies over all rows, absent side → NULL. */
   private def freqPivotOf(cen: DataFrame): DataFrame =
-    withTotals(cen).selectExpr("column_name", "value",
+    cen.selectExpr("column_name", "value",
       "CASE WHEN ref_cnt > 0 THEN ref_cnt END AS ref_cnt0",
       "CASE WHEN curr_cnt > 0 THEN curr_cnt END AS curr_cnt0",
       "CASE WHEN ref_cnt > 0 THEN ref_cnt * 1e0 / ref_n END AS ref_freq0",
@@ -153,7 +151,7 @@ object CategoricalDrift extends graft.OperatorModule {
   /** Per-side value counts + relative frequency over non-null rows. */
   def valueCounts(spark: SparkSession, dir: String): DataFrame = {
     val per = S.categorical.map { sp =>
-      withTotals(splitCensus(spark, dir, sp))
+      splitCensus(spark, dir, sp)
         .select(col("column_name"), col("value"), expr("stack(2, " +
           "'ref', CASE WHEN value IS NOT NULL THEN ref_cnt END, ref_nn, " +
           "'curr', CASE WHEN value IS NOT NULL THEN curr_cnt END, curr_nn) AS (side, cnt, total)"))
@@ -192,8 +190,8 @@ object CategoricalDrift extends graft.OperatorModule {
   def topkEntropy(spark: SparkSession, dir: String, approx: Boolean = false): DataFrame = {
     val per = profileTables.map { case (t, cols) =>
       val rows = cols.map(c => s"'$c', CAST($c AS STRING)").mkString(", ")
-      // UNCACHED (r17): the base profile and the entropy branch share the
-      // count exchange (ReusedExchange) — see NumericDrift.driftScoreFrame
+      // uncached: the base profile and the entropy branch share the count
+      // exchange (ReusedExchange) — see NumericDrift.driftScoreFrame
       val cnts = table(spark, dir, t)
         .select(expr(s"stack(${cols.size}, $rows) as (column_name, value)"))
         .groupBy("column_name", "value").agg(count(lit(1)).as("cnt"))
@@ -350,7 +348,7 @@ object CategoricalDrift extends graft.OperatorModule {
   /** O22 per column of a census: the full-support distributions, in one
     * groupBy(column_name). */
   private def jsFullOf(cen: DataFrame, label: String, threshold: Double): DataFrame =
-    withTotals(cen).selectExpr("column_name",
+    cen.selectExpr("column_name",
         "CASE WHEN ref_cnt > 0 THEN ref_cnt * 1e0 / ref_n END AS p",
         "CASE WHEN curr_cnt > 0 THEN curr_cnt * 1e0 / curr_n END AS q")
       .groupBy("column_name")
@@ -457,17 +455,14 @@ object CategoricalDrift extends graft.OperatorModule {
     "table_name", "column_name", pr6Sql("chi_square") + " AS chi_square", "dof",
     pr6Sql(chiBandSql) + " AS p_value")
 
-  // χ² exactness contract (the cramers_v lesson, CORRECTNESS_r06/r07): the
-  // cell term is built ONLY from IEEE correctly-rounded ops on exact integer
-  // counts (CAST-to-double, *, -, /; no POW — Math.pow/std::pow are 1-ulp
-  // loose and engine-specific), the per-column sum is an exact micro-unit
-  // integer SUM (microSumDoubleSql — commutative, so partial-agg order and
-  // any engine's fold internals are irrelevant; χ² ≤ N keeps the scaled sum
-  // far under 2⁵³), and the final rounding is the floor-based pr6Sql — so
-  // the whole statistic is bit-identical across Spark and any DuckDB
-  // version. Round 7's value-sorted canonical fold is retired: it assumed
-  // DuckDB's list_sum is a sequential left fold, an undocumented internal
-  // that changed across versions.
+  // χ² exactness contract: the cell term is built ONLY from IEEE
+  // correctly-rounded ops on exact integer counts (CAST-to-double, *, -, /;
+  // no POW — Math.pow/std::pow are 1-ulp loose and engine-specific), the
+  // per-column sum is an exact micro-unit integer SUM (microSumDoubleSql —
+  // commutative, so partial-agg order and any engine's fold internals are
+  // irrelevant; χ² ≤ N keeps the scaled sum far under 2⁵³), and the final
+  // rounding is the floor-based pr6Sql — so the whole statistic is
+  // bit-identical across Spark and any DuckDB version.
   private val chiExpRef =
     "((CAST(ref_sum AS DOUBLE) * CAST(ref_cnt + curr_cnt AS DOUBLE)) / CAST(ref_sum + curr_sum AS DOUBLE))"
   private val chiExpCurr =
@@ -673,7 +668,7 @@ object CategoricalDrift extends graft.OperatorModule {
     rareCategoriesOfPair(pairCensus(ref, curr, cols), label, minCount, maxFreq)
 
   /** [[rareCategoriesForPair]] of a pair's [[pairCensus]]. */
-  private[drift] def rareCategoriesOfPair(cen: DataFrame, label: String = "pair",
+  private[graft] def rareCategoriesOfPair(cen: DataFrame, label: String = "pair",
       minCount: Int = 10, maxFreq: Double = 0.01): DataFrame =
     rareCategoriesOf(cen, label, minCount, maxFreq)
       .orderBy(when(col("severity") === "high", 0).otherwise(1),
@@ -738,7 +733,7 @@ object CategoricalDrift extends graft.OperatorModule {
         rareValueChangesOf(splitCensus(spark, dir, sp), sp.tableName, thr)
       }.reduce(_ union _).orderBy("table_name", "column_name", "change_type", "value")
 
-  /** O23 per column of a census: a projection, no further exchange. */
+  /** O23 per column of a census: a projection and a filter of its rows. */
   private def rareValueChangesOf(cen: DataFrame, label: String, thr: Double): DataFrame =
     freqPivotOf(cen)
       .selectExpr("column_name", "value",
@@ -774,7 +769,7 @@ object CategoricalDrift extends graft.OperatorModule {
     rareValueChangesOfPair(pairCensus(ref, curr, cols), label, thr)
 
   /** [[rareValueChangesForPair]] of a pair's [[pairCensus]]. */
-  private[drift] def rareValueChangesOfPair(cen: DataFrame, label: String = "pair",
+  private[graft] def rareValueChangesOfPair(cen: DataFrame, label: String = "pair",
       thr: Double = 0.01): DataFrame =
     rareValueChangesOf(cen, label, thr).orderBy("table_name", "column_name", "change_type", "value")
 
@@ -801,7 +796,7 @@ object CategoricalDrift extends graft.OperatorModule {
       .orderBy(when(col("severity") === "high", 0).otherwise(1),
         abs(col("rel_change")).desc, col("table_name"), col("column_name"), col("category"))
 
-  /** O35 per column of a census: a projection, no further exchange. */
+  /** O35 per column of a census: a projection and filters of its rows. */
   private def rareCategoriesOf(cen: DataFrame, label: String, minCount: Int,
       maxFreq: Double): DataFrame =
     freqPivotOf(cen)

@@ -47,8 +47,8 @@ object CorrelationDrift extends graft.OperatorModule {
         s"'$a' AS col1, '$b' AS col2, CORR($a, $b) AS corr FROM lineitem GROUP BY 1, 2, 3"
     }.mkString(" UNION ALL ")
 
-  /** Conditional-aggregation pivot (no self-join — one scan, see
-    * NumericDrift.pivotSides). */
+  /** Conditional-aggregation pivot of the per-side correlations: one scan,
+    * where a ref/curr self-join would plan the upstream aggregate twice. */
   private def pivotPairs(long: DataFrame): DataFrame =
     long.groupBy("col1", "col2").agg(
       coalesce(max(when(col("side") === "ref", col("corr"))), lit(0.0)).as("ref_corr"),
@@ -289,23 +289,24 @@ object CorrelationDrift extends graft.OperatorModule {
   def validColumns(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       minRatio: Double = 0.7): Seq[String] =
     if (cols.isEmpty) Seq.empty
-    else validColumnsOf(NumericDrift.pairProfile(ref, curr, cols), cols, minRatio)
+    else validColumnsOf(NumericDrift.pairProfile(ref, curr, cols, Seq("n_nonnull")), cols, minRatio)
 
-  /** [[validColumns]] of a pair's numeric profile, in `cols` order. */
-  private[graft] def validColumnsOf(profile: DataFrame, cols: Seq[String],
+  /** [[validColumns]] of a pair's numeric column rows
+    * (NumericDrift.pairProfile), in `cols` order. */
+  private[graft] def validColumnsOf(rows: DataFrame, cols: Seq[String],
       minRatio: Double = 0.7): Seq[String] = {
-    val valid = nonNullRatiosOf(profile, "pair", cols)
+    val valid = nonNullRatiosOf(rows)
       .filter(col("ref_ratio") >= minRatio && col("curr_ratio") >= minRatio)
       .select("column_name").collect().map(_.getString(0)).toSet
     cols.filter(valid)
   }
 
-  /** Each column's non-null ratio per side, from the profile's counts. */
-  private def nonNullRatiosOf(profile: DataFrame, label: String, cols: Seq[String]): DataFrame =
-    NumericDrift.sideStats(profile, label, cols, Seq("n_total", "n_nonnull"))
-      .groupBy("table_name", "column_name").agg(
-        max(when(col("side") === "ref", col("n_nonnull") * 1e0 / col("n_total"))).as("ref_ratio"),
-        max(when(col("side") === "curr", col("n_nonnull") * 1e0 / col("n_total"))).as("curr_ratio"))
+  /** Each column's non-null ratio per side, from its row's counts; NULL on a
+    * side without rows. */
+  private def nonNullRatiosOf(rows: DataFrame): DataFrame =
+    rows.select(col("table_name"), col("column_name"),
+      (col("ref_n_nonnull") * 1e0 / col("ref_n_total")).as("ref_ratio"),
+      (col("curr_n_nonnull") * 1e0 / col("curr_n_total")).as("curr_ratio"))
 
   // --------------------------------- connected components (O28, driver-side)
 
@@ -376,7 +377,7 @@ object CorrelationDrift extends graft.OperatorModule {
     * non-null ratios and the ≥0.7-in-both verdict. */
   def validColumnsQuery(spark: SparkSession, dir: String): DataFrame =
     overNumericSplits(spark, dir) { (tagged, label, cols) =>
-      nonNullRatiosOf(NumericDrift.sideProfile(tagged, cols), label, cols)
+      nonNullRatiosOf(NumericDrift.rowsOf(tagged, label, cols, Seq("n_nonnull")))
     }.selectExpr("table_name", "column_name",
         "ROUND(ref_ratio, 6) AS ref_nonnull_ratio",
         "ROUND(curr_ratio, 6) AS curr_nonnull_ratio",

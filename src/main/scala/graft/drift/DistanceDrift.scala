@@ -59,30 +59,24 @@ object DistanceDrift extends graft.OperatorModule {
       .filter(col("x").isNotNull)
   }
 
-  /** Bin edges of every column as ONE wide row, from the per-side min/max of
-    * a numeric profile (NumericDrift.sideProfile): `<c>__lo` is the
-    * column's minimum and `<c>__w` the cell width (max − min) / bins, both
-    * over the two sides together. */
-  private[drift] def sharedEdges(profile: DataFrame, cols: Seq[String], bins: Int): DataFrame = {
-    val aggs = cols.flatMap { c =>
-      val (lo, hi) = (min(col(sqlIdent(s"${c}__min"))), max(col(sqlIdent(s"${c}__max"))))
-      Seq(lo.as(s"${c}__lo"), ((hi - lo) / bins).as(s"${c}__w"))
-    }
-    profile.agg(aggs.head, aggs.tail: _*)
-  }
-
   /** (side, column_name, lo, w, bin) for every non-null value of every
-    * column, in one stack: `bin` ∈ [0, bins) is the value's cell on the
-    * [[sharedEdges]] row (broadcast). The edges are SHARED between sides, so
-    * bin k means the same value range on ref and curr — the property PSI
-    * requires and the reference's per-side-range histograms lack
-    * (SURVEY.md §8; distribution_analyzer.py:440-449). A constant column
-    * (w = 0) falls wholly in bin 0. */
-  private[drift] def binnedCells(tagged: DataFrame, cols: Seq[String], edges: DataFrame,
+    * column, in one stack over the tagged rows and one broadcast row of the
+    * edges shared by both sides: [[NumericDrift.edgeRows]] of the numeric
+    * column rows `rows` (`ref_vmin`, `curr_vmin`, `ref_vmax`, `curr_vmax`
+    * per column, [[NumericDrift.columnRows]]), so `lo` is the column's
+    * minimum over both sides and `w` the cell width (max − min) / bins, and
+    * `bin` ∈ [0, bins) is the value's cell. Bin k means the same value range
+    * on ref and curr — the property PSI requires and the reference's
+    * per-side-range histograms lack (SURVEY.md §8;
+    * distribution_analyzer.py:440-449). A constant column (w = 0) falls
+    * wholly in bin 0. */
+  private[drift] def binnedCells(tagged: DataFrame, rows: DataFrame, cols: Seq[String],
       bins: Int): DataFrame = {
-    val rows = cols.map(c => s"'$c', CAST($c AS DOUBLE), ${c}__lo, ${c}__w").mkString(", ")
+    val edges = NumericDrift.widened(NumericDrift.edgeRows(rows, bins), cols, Seq("lo", "w"))
+    val stacked = cols.map(c => s"'$c', CAST($c AS DOUBLE), " +
+      s"${NumericDrift.field(c, "lo")}, ${NumericDrift.field(c, "w")}").mkString(", ")
     tagged.crossJoin(broadcast(edges))
-      .select(col("side"), expr(s"stack(${cols.size}, $rows) as (column_name, x, lo, w)"))
+      .select(col("side"), expr(s"stack(${cols.size}, $stacked) as (column_name, x, lo, w)"))
       .filter(col("x").isNotNull)
       .select(col("side"), col("column_name"), col("lo"), col("w"),
         when(col("w") === 0.0, lit(0))
@@ -93,7 +87,7 @@ object DistanceDrift extends graft.OperatorModule {
   /** The [[numericLong]] frame with x snapped to the left edge of its
     * [[binnedCells]] cell; a constant column maps wholly to its lone edge. */
   private def binnedLong(tagged: DataFrame, cols: Seq[String], bins: Int): DataFrame =
-    binnedCells(tagged, cols, sharedEdges(NumericDrift.sideProfile(tagged, cols), cols, bins), bins)
+    binnedCells(tagged, NumericDrift.rowsOf(tagged, "", cols, NumericDrift.edgeStats), cols, bins)
       .select(col("side"), col("column_name"),
         when(col("w") === 0.0, col("lo")).otherwise(col("lo") + col("bin") * col("w")).as("x"))
 
@@ -283,11 +277,9 @@ object DistanceDrift extends graft.OperatorModule {
         .selectExpr(cramersIntFinal: _*)
     }.reduce(_ unionAll _).orderBy("table_name", "column_name")
 
-  /** Float-surface variant (χ², V, both pr6-rounded) — the pre-round-9
-    * gate shape, now spec-only: CORRECTNESS_r06–r08 kept this query
-    * hash-red under the driver's DuckDB through three float
-    * implementations while bit-identical on the local replica, so the
-    * GATE row ([[cramersV]]) now emits only exact integers (chi2_micro +
+  /** Float-surface variant (χ², V, both pr6-rounded), spec-only: the float
+    * finalization is not bit-stable across DuckDB versions, so the GATE row
+    * ([[cramersV]]) emits only exact integers (chi2_micro +
     * integer-threshold effect) and the float finalization is probed
     * separately on literal inputs ([[EngineProbe]]). DistanceDriftSpec
     * pins this surface against a JVM twin. */
@@ -367,8 +359,7 @@ object DistanceDrift extends graft.OperatorModule {
     // is commutative integer arithmetic, so partial-agg order is irrelevant
     // on any engine. Headroom: χ² ≤ N, so the micro-sum stays < 2⁵³ through
     // ~sf1000.
-    CategoricalDrift.withTotals(cen)
-      .selectExpr("value", "column_name", "ref_cnt AS rc", "curr_cnt AS cc",
+    cen.selectExpr("value", "column_name", "ref_cnt AS rc", "curr_cnt AS cc",
         "ref_nn AS rs", "curr_nn AS cs")
       .withColumn("term", expr(s"CASE WHEN value IS NOT NULL THEN $chiTermSql END"))
       .groupBy("column_name").agg(
@@ -436,8 +427,7 @@ object DistanceDrift extends graft.OperatorModule {
   /** The trio over the non-null values of a census; a column without a
     * non-null value has no row. */
   private def catDistancesOf(cen: DataFrame, label: String): DataFrame =
-    CategoricalDrift.withTotals(cen)
-      .selectExpr("column_name", "value",
+    cen.selectExpr("column_name", "value",
         "CASE WHEN value IS NOT NULL THEN ref_cnt * 1e0 / ref_nn END AS p",
         "CASE WHEN value IS NOT NULL THEN curr_cnt * 1e0 / curr_nn END AS q")
       .groupBy("column_name").agg(

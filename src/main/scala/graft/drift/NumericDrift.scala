@@ -9,25 +9,26 @@ import graft.drift.{splits => S}
   * /root/reference/numerical_analyzer.py, distribution_analyzer.py,
   * rare_event_analyzer.py).
   *
-  * Scale design: every family that only combines per-side results reads
-  * one frame, the numeric profile of a side-tagged frame ([[sideProfile]]):
-  * one row per side with every column's counts, moments, min/max and exact
-  * percentiles, from one `groupBy("side")` over a single scan (the
-  * reference runs ~5 Spark jobs per column per frame,
-  * numerical_analyzer.py:124-143). Each family is one private
-  * `…Of(profile, label, cols)` that stacks only the statistics it reads, so
-  * column pruning drops the rest of the aggregate from its plan. The pair
-  * functions apply it to the profile of `tagPair(ref, curr, cols)`; the
-  * gate queries apply it to the profile of `withSide(table, split.ref)` for
-  * each table split and union the results; `DriftDetector.detectDrift`
-  * computes the pair's profile once and applies every family to it. The
-  * two families that count rows against constants, z-outliers and
-  * histograms, make one row pass and take the reference moments or the
-  * shared bounds from the profile. So a family's job count does not grow
-  * with the column count, and at 100 TB a family costs one scan (two where
-  * it needs constants first) and a shuffle of partial aggregates. The
-  * ref/curr comparison is a conditional-aggregation pivot of the per-side
-  * rows.
+  * Scale design: every family reads one shape, the column rows of a
+  * side-tagged frame ([[columnRows]] of its [[sideProfile]]): one row per
+  * column with `column_name` and both sides' statistics as
+  * `ref_<stat>`/`curr_<stat>` (counts, moments, min/max and exact
+  * percentiles). The profile is one `groupBy("side")` aggregate over a
+  * single scan (the reference runs ~5 Spark jobs per column per frame,
+  * numerical_analyzer.py:124-143); [[columnRows]] holds the one pivot of
+  * its sides, so no reader pivots them. Each
+  * family is one private `…Of(rows)` over those rows; the gate
+  * queries apply it to the rows of `withSide(table, split.ref)` for each
+  * table split and union the results, stacking only the statistics the
+  * family reads so column pruning drops the rest of the aggregate; the pair
+  * functions apply it to [[pairProfile]]; `DriftDetector.detectDrift`
+  * collects the pair's rows once and applies every family to them. The two
+  * families that count rows against constants, z-outliers and histograms,
+  * make one row pass against the rows [[widened]] into one broadcast row.
+  * So a family's job count does not grow with the column count, and at
+  * 100 TB a family costs one scan (two where it needs constants first) and
+  * a shuffle of partial aggregates. The `<c>__<stat>` field names of the
+  * profile and of [[widened]] rows are private to this object.
   *
   * The final drift arithmetic is expressed as SQL strings shared verbatim
   * with the DuckDB oracle (`selectExpr` on the Spark side), so the two
@@ -77,70 +78,129 @@ object NumericDrift extends graft.OperatorModule {
 
   // ------------------------------------------------------ numeric profile
 
-  /** The profile's exact percentiles: (level, stacked column name). */
+  /** The profile's exact percentiles: (level, statistic name). */
   private val shiftQs = Seq("0.01" -> "p01", "0.05" -> "p05", "0.25" -> "p25",
     "0.5" -> "p50", "0.75" -> "p75", "0.95" -> "p95", "0.99" -> "p99")
 
-  /** One profile field of column `c` (`<c>__<stat>`) as SQL text. */
-  private def field(c: String, stat: String): String = sqlIdent(s"${c}__$stat")
-
-  /** Every column's profile aggregates. Exact `percentile` so DuckDB can
-    * reproduce values; sketch mode (graft.plans.SketchModeRewrite) swaps in
-    * `percentile_approx` — the reference's own choice
-    * (numerical_analyzer.py:306-307, rel. err 0.01) — at [[SketchAccuracy]].
-    * The DOUBLE cast leaves the exact value unchanged and lets the sketch
-    * reach integral columns. `skewness`/`kurtosis` are Spark's population
-    * (biased) moments. */
-  private def profileAggs(cols: Seq[String]): Seq[Column] = cols.flatMap { c =>
-    val x = col(c)
-    Seq(
-      count(lit(1)).as(s"${c}__total"),
-      count(x).as(s"${c}__nonnull"),
-      avg(x).as(s"${c}__mean"),
-      stddev(x).as(s"${c}__std"),
-      min(x).cast("double").as(s"${c}__min"),
-      max(x).cast("double").as(s"${c}__max"),
-      expr(s"percentile(CAST(${sqlIdent(c)} AS DOUBLE), array(${shiftQs.map(_._1).mkString(", ")}))")
-        .cast("array<double>").as(s"${c}__pct"),
-      skewness(x).as(s"${c}__skew"),
-      kurtosis(x).as(s"${c}__kurt"))
-  }
-
-  /** The numeric profile of a side-tagged frame: one row per side present,
-    * `side` plus every column's `<c>__<stat>` fields, in one scan. */
-  private[drift] def sideProfile(tagged: DataFrame, cols: Seq[String]): DataFrame = {
-    val aggs = profileAggs(cols)
-    tagged.groupBy(col("side")).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** [[sideProfile]] of a snapshot pair, through `tagPair`. */
-  private[graft] def pairProfile(ref: DataFrame, curr: DataFrame, cols: Seq[String]): DataFrame =
-    sideProfile(tagPair(ref, curr, cols), cols)
-
-  /** The long per-side statistics every O11/O12 consumer reads. */
+  /** The statistics the O11/O12 consumers read. */
   private val sideStatCols = Seq("n_total", "n_nonnull", "mean", "std", "vmin", "vmax") ++
     shiftQs.map(_._2)
 
-  /** A stacked statistic's SQL text over column `c`'s profile fields. */
-  private def statSql(c: String, stat: String): String = stat match {
-    case "n_total" => field(c, "total")
-    case "n_nonnull" => field(c, "nonnull")
-    case "vmin" => field(c, "min")
-    case "vmax" => field(c, "max")
-    case p if shiftQs.exists(_._2 == p) => s"${field(c, "pct")}[${shiftQs.indexWhere(_._2 == p)}]"
-    case other => field(c, other)
+  /** The statistics of shapes, of bin edges and of the z-outlier pass. */
+  private val shapeStats = Seq("skew", "kurt")
+  private[drift] val edgeStats = Seq("vmin", "vmax")
+  private val zStats = Seq("mean", "std")
+
+  /** Every statistic of the profile. */
+  private val profileStats = sideStatCols ++ shapeStats
+
+  /** The name `<c>__<name>` of a field of a profile or a [[widened]] row;
+    * these names are private to this object. */
+  private def fieldName(c: String, name: String): String = s"${c}__$name"
+
+  /** [[fieldName]] as SQL text: how the constant passes of this object and
+    * of DistanceDrift read a [[widened]] row. */
+  private[drift] def field(c: String, name: String): String = sqlIdent(fieldName(c, name))
+
+  /** Column `c`'s profile aggregates, named `<c>__<stat>`; every one but the
+    * counts a DOUBLE. Exact `percentile` so DuckDB can reproduce values;
+    * sketch mode (graft.plans.SketchModeRewrite) swaps in
+    * `percentile_approx` — the reference's own choice
+    * (numerical_analyzer.py:306-307) — at [[SketchAccuracy]].
+    * `skewness`/`kurtosis` are population moments. */
+  private def profileAggs(c: String): Seq[Column] = {
+    val x = col(sqlIdent(c))
+    Seq(
+      count(lit(1)).as(fieldName(c, "n_total")),
+      count(x).as(fieldName(c, "n_nonnull")),
+      avg(x).cast("double").as(fieldName(c, "mean")),
+      stddev(x).as(fieldName(c, "std")),
+      min(x).cast("double").as(fieldName(c, "vmin")),
+      max(x).cast("double").as(fieldName(c, "vmax")),
+      expr(s"percentile(CAST(${sqlIdent(c)} AS DOUBLE), array(${shiftQs.map(_._1).mkString(", ")}))")
+        .cast("array<double>").as(fieldName(c, "pct")),
+      skewness(x).as(fieldName(c, "skew")),
+      kurtosis(x).as(fieldName(c, "kurt")))
   }
 
-  /** `stats` of a profile, one row per (side, column): the profile's `side`
-    * (when it has one), then (table_name, column_name, stats…). Only the
-    * fields of `stats` are referenced, so column pruning drops every other
-    * aggregate of the profile from the plan. */
-  private[drift] def sideStats(profile: DataFrame, label: String, cols: Seq[String],
-      stats: Seq[String] = sideStatCols): DataFrame = {
-    val rows = cols.map(c => (Seq(sqlStr(label), sqlStr(c)) ++ stats.map(statSql(c, _))).mkString(", "))
+  /** The numeric profile of a side-tagged frame: one row per side present,
+    * `side` and every column's `<c>__<stat>` fields, from one
+    * `groupBy("side")` over one scan. */
+  private[drift] def sideProfile(tagged: DataFrame, cols: Seq[String]): DataFrame = {
+    val aggs = cols.flatMap(profileAggs)
+    tagged.groupBy(col("side")).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** `stats` of a profile, one row per column and side: the profile's `side`
+    * (when it has one), `table_name` (`label`), `column_name` and `stats`. */
+  private def stacked(profile: DataFrame, label: String, cols: Seq[String],
+      stats: Seq[String]): DataFrame = {
+    val rows = cols.map(c => (Seq(sqlStr(label), sqlStr(c)) ++ stats.map(s =>
+      shiftQs.indexWhere(_._2 == s) match {
+        case -1 => field(c, s)
+        case i => s"${field(c, "pct")}[$i]"
+      })).mkString(", "))
     profile.select(profile.columns.filter(_ == "side").map(col) :+
-      expr(s"stack(${cols.size}, ${rows.mkString(", ")}) as " +
+      expr(s"stack(${cols.size}, ${rows.mkString(", ")}) AS " +
         s"(table_name, column_name, ${stats.mkString(", ")})"): _*)
+  }
+
+  /** The one shaping step of a profile: one row per column of `cols`, with
+    * `table_name` (`label`), `column_name` and `ref_<stat>`/`curr_<stat>`
+    * for `n_total` and each of `stats` — the stacked per-side rows pivoted
+    * by conditional aggregation, not a ref/curr self-join, which would plan
+    * the profile twice. Only those fields are referenced, so column pruning
+    * drops every other aggregate. A column one side lacks keeps its row,
+    * NULL on that side; a profile of no rows has no row. */
+  private[drift] def columnRows(profile: DataFrame, label: String, cols: Seq[String],
+      stats: Seq[String]): DataFrame = {
+    val all = ("n_total" +: stats).distinct
+    val aggs = all.flatMap(s => Seq("ref", "curr").map(side =>
+      max(when(col("side") === side, col(s))).as(s"${side}_$s")))
+    stacked(profile, label, cols, all).groupBy("table_name", "column_name").agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** [[columnRows]] of a side-tagged frame's [[sideProfile]]. */
+  private[drift] def rowsOf(tagged: DataFrame, label: String, cols: Seq[String],
+      stats: Seq[String]): DataFrame =
+    columnRows(sideProfile(tagged, cols), label, cols, stats)
+
+  /** The column rows of a snapshot pair, through `tagPair`; with every
+    * statistic, the frame `DriftDetector.detectDrift` collects once. */
+  private[graft] def pairProfile(ref: DataFrame, curr: DataFrame, cols: Seq[String],
+      stats: Seq[String] = profileStats, label: String = "pair"): DataFrame =
+    rowsOf(tagPair(ref, curr, cols), label, cols, stats)
+
+  /** The rows of the columns both sides have. */
+  private def pairedRows(rows: DataFrame): DataFrame =
+    rows.where(col("ref_n_total").isNotNull && col("curr_n_total").isNotNull)
+
+  /** The statistics `stats` of every column row as ONE wide row with fields
+    * `<c>__<stat>` ([[field]]): the constants a row pass broadcasts. */
+  private[drift] def widened(rows: DataFrame, cols: Seq[String], stats: Seq[String]): DataFrame = {
+    val aggs = for (c <- cols; s <- stats)
+      yield max(when(col("column_name") === c, col(s))).as(fieldName(c, s))
+    rows.agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** A row pass over a tagged frame against one broadcast row of
+    * `constants`: per side and column, the rows (`n_total`) and the sum of
+    * each indicator `counts(c)` names, as [[columnRows]]. */
+  private def countedRows(tagged: DataFrame, constants: DataFrame, label: String, cols: Seq[String])(
+      counts: String => Seq[(String, Column)]): DataFrame = {
+    val aggs = for (c <- cols; (n, one) <- ("n_total" -> lit(1L)) +: counts(c))
+      yield sum(one).as(fieldName(c, n))
+    val perSide = tagged.crossJoin(broadcast(constants)).groupBy(col("side")).agg(aggs.head, aggs.tail: _*)
+    columnRows(perSide, label, cols, counts(cols.head).map(_._1))
+  }
+
+  /** Each column's bin edges shared by both sides, one row per column:
+    * `lo` is the minimum over both sides and `w` the cell width
+    * (max − min) / bins. NULL for a column without a non-null value. */
+  private[drift] def edgeRows(rows: DataFrame, bins: Int): DataFrame = {
+    val lo = least(col("ref_vmin"), col("curr_vmin"))
+    rows.select(col("column_name"), lo.as("lo"),
+      ((greatest(col("ref_vmax"), col("curr_vmax")) - lo) / bins).as("w"))
   }
 
   // ------------------------------------------- profile-once, diff-many
@@ -150,13 +210,13 @@ object NumericDrift extends graft.OperatorModule {
     * ONCE on arrival (under sketch mode every stat is a fixed-size
     * mergeable sketch) and every later drift comparison runs
     * profile-vs-profile on KB-sized frames, never rescanning raw data.
-    * Schema = exactly the per-column stat row the drift DAG consumes
+    * One row per column: (table_name, column_name, the O11/O12 statistics)
     * ([[driftFromProfiles]] is spec-pinned equal to [[driftForPair]],
     * including through a parquet round-trip). One global aggregate, so an
     * empty snapshot still has one `n_total = 0` row per column. */
   def profileOf(df: DataFrame, cols: Seq[String], label: String = "snapshot"): DataFrame = {
-    val aggs = profileAggs(cols)
-    sideStats(df.select(cols.map(col): _*).agg(aggs.head, aggs.tail: _*), label, cols)
+    val aggs = cols.flatMap(profileAggs)
+    stacked(df.select(cols.map(col): _*).agg(aggs.head, aggs.tail: _*), label, cols, sideStatCols)
   }
 
   def writeProfile(profile: DataFrame, path: String): Unit =
@@ -166,19 +226,21 @@ object NumericDrift extends graft.OperatorModule {
     spark.read.parquet(path)
 
   /** O12 drift metrics from two precomputed [[profileOf]] frames. The
-    * profiles must carry the same `label` (table_name keys the pivot —
-    * a column present in only one profile is dropped, the same
-    * schema-drift rule [[pivotSides]] applies to live pairs). A column
+    * profiles must carry the same `label` (table_name and column_name key
+    * the join — a column present in only one profile is dropped, the same
+    * schema-drift rule [[pairedRows]] applies to live pairs). A column
     * without rows on one side (an empty snapshot's `n_total = 0` row) is
     * dropped too, as [[driftForPair]] drops it when a side has no rows. */
-  def driftFromProfiles(refProfile: DataFrame, currProfile: DataFrame): DataFrame =
-    driftOfStats(refProfile.withColumn("side", lit("ref"))
-        .unionByName(currProfile.withColumn("side", lit("curr")))
-        .filter(col("n_total") > 0))
+  def driftFromProfiles(refProfile: DataFrame, currProfile: DataFrame): DataFrame = {
+    def side(profile: DataFrame, s: String) = profile.filter(col("n_total") > 0).select(
+      col("table_name") +: col("column_name") +: sideStatCols.map(c => col(c).as(s"${s}_$c")): _*)
+    driftStages(side(refProfile, "ref")
+        .join(side(currProfile, "curr"), Seq("table_name", "column_name")))
       .orderBy("table_name", "column_name")
+  }
 
-  /** SQL mirror of [[sideStats]] over every numeric split (a UNION ALL
-    * CTE body named `sides`). */
+  /** SQL mirror of the column statistics over every numeric split, one row
+    * per (side, column) (a UNION ALL CTE body named `sides`). */
   private def sideStatsLongSql: String =
     S.numeric.flatMap { sp =>
       sp.cols.map { c =>
@@ -193,21 +255,7 @@ object NumericDrift extends graft.OperatorModule {
       }
     }.mkString(" UNION ALL ")
 
-  /** Pivot the long side stats into one row per column with ref_/curr_
-    * prefixes, via conditional aggregation, NOT a ref/curr self-join: a
-    * self-join would duplicate the whole upstream aggregation pipeline and
-    * scan every table twice (verified with .explain — 2x ReadSchema per
-    * table before this form). */
-  private def pivotSides(longDf: DataFrame): DataFrame = {
-    val aggs = sideStatCols.flatMap { c => Seq(
-      max(when(col("side") === "ref", col(c))).as(s"ref_$c"),
-      max(when(col("side") === "curr", col(c))).as(s"curr_$c")) }
-    longDf.groupBy("table_name", "column_name").agg(aggs.head, aggs.tail: _*)
-      // drop columns missing on either side (schema drift between snapshots)
-      .filter(col("ref_n_total").isNotNull && col("curr_n_total").isNotNull)
-  }
-
-  /** SQL mirror of [[pivotSides]] given CTE `sides`. */
+  /** SQL mirror of [[pairedRows]] over [[columnRows]] given CTE `sides`. */
   private def pivotSidesSql: String = {
     val aggs = sideStatCols.flatMap { c => Seq(
       s"MAX(CASE WHEN side = 'ref' THEN $c END) AS ref_$c",
@@ -274,35 +322,33 @@ object NumericDrift extends graft.OperatorModule {
         s"${severitySql(s"$score")} AS drift_severity")
   }
 
-  /** O11/O12 drift metrics of per-side stat rows: the pivot, then the three
-    * shared-text stages. */
-  private def driftOfStats(long: DataFrame): DataFrame =
-    diffsOf(long).selectExpr(driftStage3: _*)
+  /** The first two stages over paired rows: per-column values and
+    * differences. */
+  private def diffsOf(paired: DataFrame): DataFrame =
+    paired.selectExpr(driftStage1: _*).selectExpr(driftStage2: _*)
 
-  /** The pivot and the first two stages: per-column values and differences. */
-  private def diffsOf(long: DataFrame): DataFrame =
-    pivotSides(long).selectExpr(driftStage1: _*).selectExpr(driftStage2: _*)
+  /** O11/O12 drift metrics of paired rows: the three shared-text stages. */
+  private def driftStages(paired: DataFrame): DataFrame =
+    diffsOf(paired).selectExpr(driftStage3: _*)
 
-  private def driftOf(profile: DataFrame, label: String, cols: Seq[String]): DataFrame =
-    driftOfStats(sideStats(profile, label, cols))
+  private def driftOf(rows: DataFrame): DataFrame = driftStages(pairedRows(rows))
 
-  /** `of` applied to the numeric profile of each numeric table split. */
-  private def overSplitProfiles(spark: SparkSession, dir: String)(
-      of: (DataFrame, String, Seq[String]) => DataFrame): DataFrame =
-    overNumericSplits(spark, dir)((tagged, label, cols) => of(sideProfile(tagged, cols), label, cols))
+  /** `of` applied to the column rows, with statistics `stats`, of each
+    * numeric table split. */
+  private def overSplitRows(spark: SparkSession, dir: String, stats: Seq[String])(
+      of: DataFrame => DataFrame): DataFrame =
+    overNumericSplits(spark, dir)((tagged, label, cols) => of(rowsOf(tagged, label, cols, stats)))
 
   def drift(spark: SparkSession, dir: String): DataFrame =
-    overSplitProfiles(spark, dir)(driftOf).orderBy("table_name", "column_name")
+    overSplitRows(spark, dir, sideStatCols)(driftOf).orderBy("table_name", "column_name")
 
   /** Generic O11/O12 drift metrics for an arbitrary snapshot pair. */
   def driftForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    driftOfPair(pairProfile(ref, curr, cols), cols, label)
+    driftOfPair(pairProfile(ref, curr, cols, sideStatCols, label))
 
-  /** [[driftForPair]] of a pair's [[pairProfile]]. */
-  private[drift] def driftOfPair(profile: DataFrame, cols: Seq[String],
-      label: String = "pair"): DataFrame =
-    driftOf(profile, label, cols).orderBy("column_name")
+  /** [[driftForPair]] of a pair's [[pairProfile]] rows. */
+  private[graft] def driftOfPair(rows: DataFrame): DataFrame = driftOf(rows).orderBy("column_name")
 
   def driftSql: String =
     s"WITH sides AS ($sideStatsLongSql), piv AS ($pivotSidesSql), " +
@@ -341,7 +387,7 @@ object NumericDrift extends graft.OperatorModule {
     val rows = auditMetrics.map { case (n, r, c, d, t) =>
       s"'$n', CAST($r AS DOUBLE), CAST($c AS DOUBLE), CAST($d AS DOUBLE), CAST($t AS DOUBLE)"
     }.mkString(", ")
-    diffsOf(overSplitProfiles(spark, dir)(sideStats(_, _, _)))
+    diffsOf(overSplitRows(spark, dir, sideStatCols)(pairedRows))
       .select(col("table_name"), col("column_name"),
         expr(s"stack(${auditMetrics.size}, $rows) as " +
           "(metric_checked, reference_value, current_value, diff_value, threshold_value)"))
@@ -365,27 +411,16 @@ object NumericDrift extends graft.OperatorModule {
   // ------------------------------------------------ O13/O14 flat drift score
 
   /** Outlier/extreme counts against reference IQR bounds (O14) for every
-    * column of a tagged frame: one wide 1-row frame of all columns'
-    * reference quartiles, taken from the per-side stat rows and broadcast
-    * onto one counting pass (no collect, and no rescan per column). */
-  private def outlierCounts(tagged: DataFrame, long: DataFrame, cols: Seq[String]): DataFrame = {
-    val quartiles = cols.flatMap(c => Seq(
-      max(when(col("column_name") === c, col("p25"))).as(s"${c}__q1"),
-      max(when(col("column_name") === c, col("p75"))).as(s"${c}__q3")))
-    val boundsWide = long.filter(col("side") === "ref").agg(quartiles.head, quartiles.tail: _*)
-    val aggs = cols.flatMap { c =>
-      def outPred(mult: Double) =
-        s"$c IS NOT NULL AND ($c < ${c}__q1 - (${c}__q3 - ${c}__q1) * $mult OR " +
-          s"$c > ${c}__q3 + (${c}__q3 - ${c}__q1) * $mult)"
-      Seq(
-        expr(s"SUM(CASE WHEN ${outPred(1.5)} THEN 1 ELSE 0 END)").cast("long").as(s"${c}__out"),
-        expr(s"SUM(CASE WHEN ${outPred(3.0)} THEN 1 ELSE 0 END)").cast("long").as(s"${c}__ext"))
+    * column of a tagged frame, as column rows (`ref_n_out`, `ref_n_ext`,
+    * `curr_n_out`, `curr_n_ext`) from one counting pass. */
+  private def outlierCounts(tagged: DataFrame, rows: DataFrame, label: String,
+      cols: Seq[String]): DataFrame =
+    countedRows(tagged, widened(rows, cols, Seq("ref_p25", "ref_p75")), label, cols) { c =>
+      val (q1, q3) = (field(c, "ref_p25"), field(c, "ref_p75"))
+      def outside(mult: Double) = expr(s"CASE WHEN $c IS NOT NULL AND ($c < $q1 - ($q3 - $q1) * $mult " +
+        s"OR $c > $q3 + ($q3 - $q1) * $mult) THEN 1 ELSE 0 END").cast("long")
+      Seq("n_out" -> outside(1.5), "n_ext" -> outside(3.0))
     }
-    val rows = cols.map(c => s"'$c', ${c}__out, ${c}__ext").mkString(", ")
-    tagged.crossJoin(broadcast(boundsWide))
-      .groupBy("side").agg(aggs.head, aggs.tail: _*)
-      .select(col("side"), expr(s"stack(${cols.size}, $rows) as (column_name, n_out, n_ext)"))
-  }
 
   private def outlierCountsSql: String =
     S.numeric.flatMap { sp =>
@@ -461,20 +496,17 @@ object NumericDrift extends graft.OperatorModule {
   private[drift] def driftScoreFrame(spark: SparkSession, dir: String): DataFrame =
     overNumericSplits(spark, dir)(scoreOf)
 
-  /** O13/O14 score of every column of a tagged frame. The per-side stats
-    * feed both the pivot and the outlier bounds, and stay uncached: the
+  /** O13/O14 score of every column of a tagged frame. The column rows feed
+    * both the scored rows and the outlier bounds, and stay uncached: the
     * shared subtree dedupes at its exchange (ReusedExchange), so only the
-    * 2-group final aggregate runs per consumer, where a cache registered
+    * one-row final aggregate runs per consumer, where a cache registered
     * cold would be filled by each of the plan's concurrent broadcast
     * consumers at once. */
   private def scoreOf(tagged: DataFrame, label: String, cols: Seq[String]): DataFrame = {
-    val long = sideStats(sideProfile(tagged, cols), label, cols)
-    val outs = outlierCounts(tagged, long, cols)
-    def outSide(s: String) = outs.filter(col("side") === s).drop("side")
-      .withColumnRenamed("n_out", s"${s}_n_out").withColumnRenamed("n_ext", s"${s}_n_ext")
-    scoreStages(pivotSides(long)
-      .join(outSide("ref"), Seq("column_name"))
-      .join(outSide("curr"), Seq("column_name")))
+    val rows = rowsOf(tagged, label, cols, sideStatCols)
+    val outs = outlierCounts(tagged, rows, label, cols).select("column_name", "ref_n_out",
+      "ref_n_ext", "curr_n_out", "curr_n_ext")
+    scoreStages(pairedRows(rows).join(outs, Seq("column_name")))
   }
 
   private def scoreStages(joined: DataFrame): DataFrame =
@@ -484,11 +516,8 @@ object NumericDrift extends graft.OperatorModule {
     * outlier components. */
   def scoreForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    scoreStages(pivotSides(sideStats(pairProfile(ref, curr, cols), label, cols))
-      .withColumn("ref_n_out", lit(null).cast("long"))
-      .withColumn("ref_n_ext", lit(null).cast("long"))
-      .withColumn("curr_n_out", lit(null).cast("long"))
-      .withColumn("curr_n_ext", lit(null).cast("long")))
+    scoreStages(pairedRows(pairProfile(ref, curr, cols, sideStatCols, label)).select(col("*") +:
+        Seq("ref_n_out", "ref_n_ext", "curr_n_out", "curr_n_ext").map(lit(null).cast("long").as(_)): _*))
       .orderBy("column_name")
 
   def driftScoreSql: String =
@@ -508,23 +537,23 @@ object NumericDrift extends graft.OperatorModule {
   /** Per-quantile shifts with the distribution-analyzer zero rule
     * (/root/reference/distribution_analyzer.py:83-151). */
   def quantileShifts(spark: SparkSession, dir: String): DataFrame =
-    overSplitProfiles(spark, dir)(quantileShiftsOf).orderBy("table_name", "column_name", "quantile")
+    overSplitRows(spark, dir, shiftQs.map(_._2))(quantileShiftsOf)
+      .orderBy("table_name", "column_name", "quantile")
 
   /** Generic O20 quantile shifts for an arbitrary snapshot pair. */
   def quantileShiftsForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    quantileShiftsOfPair(pairProfile(ref, curr, cols), cols, label)
+    quantileShiftsOfPair(pairProfile(ref, curr, cols, shiftQs.map(_._2), label))
 
-  /** [[quantileShiftsForPair]] of a pair's [[pairProfile]]. */
-  private[drift] def quantileShiftsOfPair(profile: DataFrame, cols: Seq[String],
-      label: String = "pair"): DataFrame =
-    quantileShiftsOf(profile, label, cols).orderBy("column_name", "quantile")
+  /** [[quantileShiftsForPair]] of a pair's [[pairProfile]] rows. */
+  private[graft] def quantileShiftsOfPair(rows: DataFrame): DataFrame =
+    quantileShiftsOf(rows).orderBy("column_name", "quantile")
 
-  private def quantileShiftsOf(profile: DataFrame, label: String, cols: Seq[String]): DataFrame = {
-    val rows = shiftQs.map { case (q, c) => s"'$q', ref_$c, curr_$c" }.mkString(", ")
-    pivotSides(sideStats(profile, label, cols))
+  private def quantileShiftsOf(rows: DataFrame): DataFrame = {
+    val stacked = shiftQs.map { case (q, c) => s"'$q', ref_$c, curr_$c" }.mkString(", ")
+    pairedRows(rows)
       .select(col("table_name"), col("column_name"),
-        expr(s"stack(${shiftQs.size}, $rows) as (quantile, ref_value, curr_value)"))
+        expr(s"stack(${shiftQs.size}, $stacked) as (quantile, ref_value, curr_value)"))
       .selectExpr("table_name", "column_name", "quantile",
         "ROUND(ref_value, 6) AS ref_value", "ROUND(curr_value, 6) AS curr_value",
         "ROUND(ABS(curr_value - ref_value), 6) AS abs_diff",
@@ -567,26 +596,20 @@ object NumericDrift extends graft.OperatorModule {
     * moments (DuckDB's built-ins use the sample-corrected formulas, which
     * would NOT match). */
   def shapes(spark: SparkSession, dir: String): DataFrame =
-    overSplitProfiles(spark, dir)(shapesOf).orderBy("table_name", "column_name")
+    overSplitRows(spark, dir, shapeStats)(shapesOf).orderBy("table_name", "column_name")
 
   /** Generic O21 shape drift for an arbitrary snapshot pair. */
   def shapesForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    shapesOfPair(pairProfile(ref, curr, cols), cols, label)
+    shapesOfPair(pairProfile(ref, curr, cols, shapeStats, label))
 
-  /** [[shapesForPair]] of a pair's [[pairProfile]]. */
-  private[drift] def shapesOfPair(profile: DataFrame, cols: Seq[String],
-      label: String = "pair"): DataFrame =
-    shapesOf(profile, label, cols).orderBy("column_name")
+  /** [[shapesForPair]] of a pair's [[pairProfile]] rows. */
+  private[graft] def shapesOfPair(rows: DataFrame): DataFrame =
+    shapesOf(rows).orderBy("column_name")
 
-  private def shapesOf(profile: DataFrame, label: String, cols: Seq[String]): DataFrame =
-    sideStats(profile, label, cols, Seq("skew", "kurt"))
-      .groupBy("table_name", "column_name").agg(
-        max(when(col("side") === "ref", col("skew"))).as("ref_skew"),
-        max(when(col("side") === "ref", col("kurt"))).as("ref_kurt"),
-        max(when(col("side") === "curr", col("skew"))).as("curr_skew"),
-        max(when(col("side") === "curr", col("kurt"))).as("curr_kurt"))
-      .selectExpr(shapeFinal: _*)
+  /** Every column row, a column one side lacks included (its fields on that
+    * side are NULL). */
+  private def shapesOf(rows: DataFrame): DataFrame = rows.selectExpr(shapeFinal: _*)
 
   def shapesSql: String = {
     val moments = S.numeric.flatMap { sp =>
@@ -625,7 +648,7 @@ object NumericDrift extends graft.OperatorModule {
   def histogram(spark: SparkSession, dir: String): DataFrame =
     histSplits.map { sp =>
       val tagged = withSide(table(spark, dir, sp.tableName), sp.ref)
-      histogramOf(tagged, sideProfile(tagged, sp.cols), sp.tableName, sp.cols)
+      histogramOf(tagged, rowsOf(tagged, sp.tableName, sp.cols, edgeStats), sp.tableName, sp.cols)
     }.reduce(_ unionAll _)
       .filter(col("ref_cnt") + col("curr_cnt") > 0)
       .orderBy("table_name", "column_name", "bin")
@@ -645,28 +668,26 @@ object NumericDrift extends graft.OperatorModule {
     * whenever ref/curr ranges differ. */
   def histogramForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    histogramOfPair(tagPair(ref, curr, cols), pairProfile(ref, curr, cols), cols, label)
+    histogramOfPair(tagPair(ref, curr, cols), pairProfile(ref, curr, cols, edgeStats, label),
+      cols, label)
 
-  /** [[histogramForPair]] of a tagged pair and its [[pairProfile]]. */
-  private[drift] def histogramOfPair(tagged: DataFrame, profile: DataFrame, cols: Seq[String],
+  /** [[histogramForPair]] of a tagged pair and its [[pairProfile]] rows. */
+  private[drift] def histogramOfPair(tagged: DataFrame, rows: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    histogramOf(tagged, profile, label, cols).orderBy("table_name", "column_name", "bin")
+    histogramOf(tagged, rows, label, cols).orderBy("table_name", "column_name", "bin")
 
-  /** Every column's histogram in one stacked pass: the bounds shared by both
-    * sides (from the profile's per-side min/max, broadcast), one
-    * groupBy(column_name, bin), and a join onto the 0..9 spine of each
-    * column with a non-null value. A constant column (w = 0) falls wholly in
-    * bin 0 in both engines. */
-  private def histogramOf(tagged: DataFrame, profile: DataFrame, label: String,
+  /** Every column's histogram in one stacked pass: the bin edges shared by
+    * both sides ([[edgeRows]] of the column rows, broadcast as one wide
+    * row), one groupBy(column_name, bin), and a join onto the 0..9 spine of
+    * each column with a non-null value. A constant column (w = 0) falls
+    * wholly in bin 0 in both engines. */
+  private def histogramOf(tagged: DataFrame, rows: DataFrame, label: String,
       cols: Seq[String]): DataFrame = {
-    val edges = DistanceDrift.sharedEdges(profile, cols, 10)
-    val counts = DistanceDrift.binnedCells(tagged, cols, edges, 10)
+    val counts = DistanceDrift.binnedCells(tagged, rows, cols, 10)
       .groupBy("column_name", "bin").agg(
         sum(when(col("side") === "ref", 1L).otherwise(0L)).as("ref_cnt"),
         sum(when(col("side") === "curr", 1L).otherwise(0L)).as("curr_cnt"))
-    val rows = cols.map(c => s"${sqlStr(c)}, ${field(c, "lo")}, ${field(c, "w")}").mkString(", ")
-    val spine = edges.select(expr(s"stack(${cols.size}, $rows) as (column_name, lo, w)"))
-      .where(col("lo").isNotNull)
+    val spine = edgeRows(rows, 10).where(col("lo").isNotNull)
       .select(col("column_name"), explode(sequence(lit(0), lit(9))).as("bin"), col("lo"), col("w"))
     spine.join(counts, Seq("column_name", "bin"), "left")
       .select(lit(label).as("table_name"), col("column_name"), col("bin"),
@@ -698,50 +719,35 @@ object NumericDrift extends graft.OperatorModule {
     * insignificant columns). */
   def zOutliers(spark: SparkSession, dir: String): DataFrame =
     overNumericSplits(spark, dir)((tagged, label, cols) =>
-      zOutliersOf(tagged, sideProfile(tagged, cols), label, cols))
+      zOutliersOf(tagged, rowsOf(tagged, label, cols, zStats), label, cols))
       .orderBy("table_name", "column_name")
 
   /** Generic O36 z-score outlier drift for an arbitrary snapshot pair. */
   def zOutliersForPair(ref: DataFrame, curr: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    zOutliersOfPair(tagPair(ref, curr, cols), pairProfile(ref, curr, cols), cols, label)
+    zOutliersOfPair(tagPair(ref, curr, cols), pairProfile(ref, curr, cols, zStats, label),
+      cols, label)
 
-  /** [[zOutliersForPair]] of a tagged pair and its [[pairProfile]]. */
-  private[drift] def zOutliersOfPair(tagged: DataFrame, profile: DataFrame, cols: Seq[String],
+  /** [[zOutliersForPair]] of a tagged pair and its [[pairProfile]] rows. */
+  private[drift] def zOutliersOfPair(tagged: DataFrame, rows: DataFrame, cols: Seq[String],
       label: String = "pair"): DataFrame =
-    zOutliersOf(tagged, profile, label, cols).orderBy("column_name")
+    zOutliersOf(tagged, rows, label, cols).orderBy("column_name")
 
-  /** All columns' z-outlier counts in one counting pass with a conditional
-    * sum per column, against every column's reference mean/std taken from
-    * the profile (a 1-row broadcast; its values are NULL when the reference
-    * side has no rows) — instead of a scan pair per column. */
-  private def zOutliersOf(tagged: DataFrame, profile: DataFrame, label: String,
-      cols: Seq[String]): DataFrame = {
-    val statAggs = cols.flatMap { c =>
-      Seq(max(expr(field(c, "mean"))).as(s"${c}__mean"), max(expr(field(c, "std"))).as(s"${c}__std"))
-    }
-    val refStats = profile.filter(col("side") === "ref").agg(statAggs.head, statAggs.tail: _*)
-    val cntAggs = count(lit(1)).as("n") +: cols.map { c =>
+  /** All columns' z-outlier counts in one counting pass, against every
+    * column's reference mean/std (NULL when the reference side has no rows)
+    * — instead of a scan pair per column. */
+  private def zOutliersOf(tagged: DataFrame, rows: DataFrame, label: String,
+      cols: Seq[String]): DataFrame =
+    countedRows(tagged, widened(rows, cols, Seq("ref_mean", "ref_std")), label, cols) { c =>
       // NULLIF-style std guard: constant column (std = 0) must yield zero
       // outliers in BOTH engines — Spark ANSI would throw DIVIDE_BY_ZERO,
       // DuckDB would return inf and count everything
-      val (mean, std) = (expr(field(c, "mean")), expr(field(c, "std")))
+      val (mean, std) = (expr(field(c, "ref_mean")), expr(field(c, "ref_std")))
       val safeStd = when(std === 0.0, lit(null)).otherwise(std)
-      sum(when(abs((col(c).cast("double") - mean) / safeStd) > 3.0, 1L)
-        .otherwise(0L)).as(s"${c}__out")
-    }
-    val rows = cols.map(c => s"${sqlStr(label)}, ${sqlStr(c)}, n, ${field(c, "out")}").mkString(", ")
-    tagged.crossJoin(broadcast(refStats))
-      .groupBy("side").agg(cntAggs.head, cntAggs.tail: _*)
-      .select(col("side"), expr(s"stack(${cols.size}, $rows) as (table_name, column_name, n, n_out)"))
-      .select(col("table_name"), col("column_name"), col("side"), col("n"), col("n_out"))
-      .groupBy("table_name", "column_name").agg(
-        max(when(col("side") === "ref", col("n"))).as("ref_n"),
-        max(when(col("side") === "ref", col("n_out"))).as("ref_out"),
-        max(when(col("side") === "curr", col("n"))).as("curr_n"),
-        max(when(col("side") === "curr", col("n_out"))).as("curr_out"))
+      Seq("out" -> when(abs((col(c).cast("double") - mean) / safeStd) > 3.0, 1L).otherwise(0L))
+    }.select(col("table_name"), col("column_name"), col("ref_n_total").as("ref_n"),
+        col("ref_out"), col("curr_n_total").as("curr_n"), col("curr_out"))
       .selectExpr(zFinal: _*)
-  }
 
   private val zFinal: Seq[String] = {
     val refRatio = "ref_out * 1e0 / ref_n"

@@ -1,6 +1,7 @@
 package graft.drift
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
 
 import scala.concurrent.{Await, Future}
@@ -259,19 +260,20 @@ case class DriftReport(
     executionTimeSec: Double)
 
 /** O40 orchestrator: run every analyzer family over a snapshot pair per the
-  * config flags and assemble the nested report. The pair is profiled once:
-  * the numeric stat rows ([[NumericDrift.pairProfile]]) and the
-  * categorical census ([[CategoricalDrift.pairCensus]]), each collected
-  * into a local frame. Every family that only combines per-side results —
-  * the two verdicts, quantile shifts, shapes, full JS, rare values, rare
-  * categories and the O29 column screen — projects that profile;
-  * z-outliers and histograms make one row pass against its constants; the
-  * group-drift verdict and the correlation families read the rows. Each
-  * aggregates all of its columns and dimensions in a fixed number of
-  * stacked passes, so its job count does not grow with the column count
-  * (GoldenDriftSpec pins this per family; SURVEY.md §4.2 anti-patterns 1
-  * and 2). The functions it applies to the profile are the ones the gate
-  * queries apply to each table split's profile. */
+  * config flags and assemble the nested report. The pair is profiled once,
+  * into two local frames: the numeric column rows
+  * ([[NumericDrift.pairProfile]], one row per column with both sides'
+  * statistics) and the categorical census ([[CategoricalDrift.pairCensus]],
+  * one row per (column, value) with both sides' counts and the column's
+  * totals). The numeric verdict, quantile shifts, shapes, the O29 column
+  * screen, rare values and rare categories only project, filter, stack or
+  * sort them; the categorical verdict and full JS aggregate the census per
+  * column; z-outliers and histograms make one row pass against constants
+  * from the numeric rows; the group-drift verdict and the correlation
+  * families read the rows. Each family's job count does not grow with the
+  * column count (GoldenDriftSpec pins this; SURVEY.md §4.2 anti-patterns 1
+  * and 2), and the functions it applies to the profile are the ones the
+  * gate queries apply to each table split's profile. */
 class DriftDetector(spark: SparkSession) {
 
   /** Config-file entry point, the reference's
@@ -362,9 +364,12 @@ class DriftDetector(spark: SparkSession) {
     // 1. schema diff (driver-side)
     val schemaChanges = SchemaOps.diff(ref.schema, curr.schema)
 
-    // 2. semantic types on common columns (+ config overrides)
-    val common = ref.columns.toSeq.intersect(curr.columns.toSeq)
-      .filter(c => config.includeColumns.isEmpty || config.includeColumns.contains(c))
+    // 2. semantic types on common columns (+ config overrides); a column whose
+    // current type has no cast to its reference type (tagPair) is in schemaChanges only
+    val common = ref.columns.toSeq.intersect(curr.columns.toSeq).filter { c =>
+      val (r, t) = (ref.schema(c).dataType, curr.schema(c).dataType)
+      SchemaOps.isCompatible(r, t) || Cast.canTryCast(t, r)
+    }.filter(c => config.includeColumns.isEmpty || config.includeColumns.contains(c))
       .filterNot(config.excludeColumns.contains)
     // infer only the columns the config does NOT pin: an override wins
     // unconditionally, so inferring a pinned column is a wasted aggregate
@@ -383,10 +388,6 @@ class DriftDetector(spark: SparkSession) {
     val width = math.min(FanOut, sc.defaultParallelism)
     val (numeric, categorical, results) = CallPool.using(sc, width) { pool =>
       val empty = spark.emptyDataFrame
-      // a collected copy that outlives the scope and holds no cache blocks, in
-      // one partition, so the families that read it plan no exchange of it
-      def local(df: DataFrame): DataFrame =
-        spark.createDataFrame(df.collectAsList(), df.schema).coalesce(1)
       // a task waits only on tasks submitted before it, so a pool of any
       // width drains in submission order
       def await[T](f: Future[T]): T = Await.result(f, Duration.Inf)
@@ -407,7 +408,7 @@ class DriftDetector(spark: SparkSession) {
           }
         }
       def profile(enabled: Boolean)(body: => DataFrame): Future[DataFrame] =
-        if (!enabled) Future.successful(empty) else pool.submit("drift:profile")(local(body))
+        if (!enabled) Future.successful(empty) else pool.submit("drift:profile")(localCopy(body))
 
       // group analysis (O32/O33): configured dims, else first ≤3 categorical
       // columns as the reference defaults (data_drift_detector.py:168-175)
@@ -419,18 +420,18 @@ class DriftDetector(spark: SparkSession) {
       val target = config.targetColumn.filter(t => numericCols.contains(t) && numericCols.size >= 2)
 
       // first the group-drift verdict, which reads the rows longest, and the
-      // pair profile every later task reads: the numeric stat rows and the
+      // pair profile every later task reads: the numeric column rows and the
       // categorical census, each collected into a local frame once
       val groupsF = safe("group_drift", config.analyzeGroups && groupDims.nonEmpty)(
         GroupDrift.verdictForPair(ref, curr, groupDims, numericCols, catCols))
-      val numProfileF = profile(numericCols.nonEmpty)(
+      val numRowsF = profile(numericCols.nonEmpty)(
         NumericDrift.pairProfile(ref, curr, numericCols))
       val censusF = profile(catCols.nonEmpty)(CategoricalDrift.pairCensus(ref, curr, catCols))
-      def numProfile = await(numProfileF)
+      def numRows = await(numRowsF)
       def cen = await(censusF)
       // O29 screen: drop columns with non-null ratio < 0.7 in either frame;
       // projected once, by whichever correlation family reads it first
-      lazy val corrCols = CorrelationDrift.validColumnsOf(numProfile, numericCols)
+      lazy val corrCols = CorrelationDrift.validColumnsOf(numRows, numericCols)
       // O26: per-category correlations over the first ≤3 group dimensions,
       // matching the reference's group_columns[:3] loop
       // (correlation_analyzer.py:163-171) — one pass for all of them
@@ -444,7 +445,7 @@ class DriftDetector(spark: SparkSession) {
       // fails this pass with the profile's own exception
       val numericF = pool.submit("drift:numeric") {
         if (numericCols.isEmpty) Seq.empty
-        else NumericDrift.driftOfPair(numProfile, numericCols).collect().toSeq.map { r =>
+        else NumericDrift.driftOfPair(numRows).collect().toSeq.map { r =>
           NumericColumnDrift(
             r.getAs[String]("column_name"),
             r.getAs[Double]("ref_mean"), r.getAs[Double]("curr_mean"),
@@ -478,9 +479,9 @@ class DriftDetector(spark: SparkSession) {
       // profile's constants
       lazy val numTagged = tagPair(ref, curr, numericCols)
       val quantilesF = safe("quantile_shifts", config.analyzeDistributions && numericCols.nonEmpty)(
-        NumericDrift.quantileShiftsOfPair(numProfile, numericCols))
+        NumericDrift.quantileShiftsOfPair(numRows))
       val shapesF = safe("shapes", config.analyzeDistributions && numericCols.nonEmpty)(
-        NumericDrift.shapesOfPair(numProfile, numericCols))
+        NumericDrift.shapesOfPair(numRows))
       // categorical half of the distribution module
       // (data_drift_detector.py:117-143 → distribution_analyzer.py:10-81):
       // full-support JS per categorical column, rare-value census, and the
@@ -492,9 +493,9 @@ class DriftDetector(spark: SparkSession) {
         CategoricalDrift.rareValueChangesOfPair(cen, thr = config.rareValueThreshold))
       val histogramsF = safe("histograms",
         config.analyzeDistributions && config.genDistributionSummaries && numericCols.nonEmpty)(
-        NumericDrift.histogramOfPair(numTagged, numProfile, numericCols))
+        NumericDrift.histogramOfPair(numTagged, numRows, numericCols))
       val zOutF = safe("z_outliers", config.detectRareEvents && numericCols.nonEmpty)(
-        NumericDrift.zOutliersOfPair(numTagged, numProfile, numericCols))
+        NumericDrift.zOutliersOfPair(numTagged, numRows, numericCols))
       val corrF = safe("correlations", correlationsOn)(
         if (corrCols.size >= 2) CorrelationDrift.forPair(ref, curr, corrCols, config) else empty)
       val rareF = safe("rare_categories", config.detectRareEvents && catCols.nonEmpty)(

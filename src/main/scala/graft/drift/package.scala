@@ -27,10 +27,9 @@ package object drift {
     * ([[graft.plans.SketchModeRewrite]]) — ONE knob for every sketched
     * percentile. Rank error ≤ 1/accuracy = 1e-4, 100× tighter than the
     * reference's own rel_error=0.01 choice (numerical_analyzer.py:306-307).
-    * Round-9 profiling (collect-forced, since `count()` silently PRUNES
-    * unused aggregates and fakes any percentile benchmark) showed the
-    * sketch cost is insert-bound and accuracy-independent on the gate
-    * tables (1.23 s vs 1.25 s per lineitem stats pass at 1e3 vs 1e4), so
+    * The sketch cost is insert-bound and accuracy-independent on the gate
+    * tables (1.23 s vs 1.25 s per lineitem stats pass at 1e3 vs 1e4,
+    * measured collect-forced, since `count()` prunes unused aggregates), so
     * the accuracy stays at the tight setting; DriftMathSpec pins
     * approx-vs-exact drift-score tracking ≤0.02 at it. */
   val SketchAccuracy = 10000
@@ -81,13 +80,20 @@ package object drift {
     * as it reads a [[withSide]] table split. NaN and ±Infinity in a float or
     * double column become NULL, so every statistic, score and bin edge of a
     * pair is computed over its finite values and a non-finite value counts
-    * as missing. */
+    * as missing. A current column retyped other than by a compatible
+    * widening is `try_cast` to its reference type, so a value that does not
+    * parse counts as missing too. */
   private[drift] def tagPair(ref: DataFrame, curr: DataFrame, cols: Seq[String]): DataFrame = {
+    val refTypes = ref.select(cols.map(col): _*).schema.fields.map(f => f.name -> f.dataType).toMap
     def tagged(df: DataFrame, side: String): DataFrame = {
       val picked = df.select(cols.map(col): _*)
       picked.select(picked.schema.fields.toSeq.map { f =>
-        val c = col(sqlIdent(f.name))
-        f.dataType match {
+        val (c, t) = refTypes(f.name) match {
+          case r if !SchemaOps.isCompatible(r, f.dataType) =>
+            (col(sqlIdent(f.name)).try_cast(r).as(f.name), r)
+          case _ => (col(sqlIdent(f.name)), f.dataType)
+        }
+        t match {
           case FloatType | DoubleType =>
             when(isnan(c) || abs(c) === Double.PositiveInfinity, lit(null)).otherwise(c).as(f.name)
           case _ => c
@@ -97,6 +103,13 @@ package object drift {
     tagged(ref, "ref").unionByName(tagged(curr, "curr"))
   }
 
+  /** A collected copy of a small frame that holds no cache blocks: one
+    * partition, so a reader plans no exchange, and opaque to the optimizer,
+    * so every reader is one job, empty result or not. */
+  private[graft] def localCopy(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      df.sparkSession.sparkContext.parallelize(df.collect().toSeq, 1), df.schema).coalesce(1)
+
   /** A numeric family's gate query: `of(tagged, label, cols)` applied to
     * each numeric table split, with the table name as label, unioned. */
   private[drift] def overNumericSplits(spark: SparkSession, dir: String)(
@@ -105,11 +118,10 @@ package object drift {
       of(withSide(table(spark, dir, sp.tableName), sp.ref), sp.tableName, sp.cols)
     }.reduce(_ unionAll _)
 
-  /** Test-only escape: when true, [[r6]] is the identity, exposing PRE-round
+  /** Test-only escape: when true, [[r6]] is the identity, exposing unrounded
     * doubles so DriftMathSpec can assert they sit far from the 6-dp rounding
-    * boundary — the zone where an engine-order partial-sum reassociation or
-    * a loose libm ulp flips the rounded output (the cramers_v failure class,
-    * CORRECTNESS_r06). Never set in main code. */
+    * boundary, where an engine-order partial-sum reassociation or a loose
+    * libm ulp flips the rounded output. Never set in main code. */
   private[graft] var r6TestBypass = false
 
   /** Round floating outputs so Spark and the DuckDB oracle hash identically
@@ -120,24 +132,18 @@ package object drift {
     * correctly-rounded ops (*, +, -, /, floor), so BOTH engines evaluating
     * the same text on bit-identical input doubles produce bit-identical
     * outputs — unlike ROUND(x, 6), whose tie behavior differs between Spark
-    * (BigDecimal HALF_UP on the exact binary expansion) and DuckDB (which
-    * changed its multiply-then-rint strategy across releases; CORRECTNESS_r06
-    * went hash-red on `rolling_stats`/`cramers_v` under a driver DuckDB
-    * where the judge's 1.0.0 was green). Half-away-from-zero at ties, which
-    * exact tie convention is irrelevant — cross-engine agreement is the
-    * contract. Finite |x| ≥ 9e9 (where the double grid is coarser than
-    * 1e-6), NaN and ±Inf pass through unchanged on both engines. */
+    * (BigDecimal HALF_UP on the exact binary expansion) and DuckDB (whose
+    * multiply-then-rint strategy changes across releases). Half-away-from-
+    * zero at ties; cross-engine agreement is the contract. Finite |x| ≥ 9e9
+    * (where the double grid is coarser than 1e-6), NaN and ±Inf pass through
+    * unchanged on both engines. */
   def pr6Sql(e: String): String =
-    // The guard branch passes NaN, ±Infinity AND finite |x| ≥ 9e9 through
-    // UNCHANGED on both engines (ABS(x) < 9e9 is false for all of them;
-    // NULL falls through every branch to NULL). Two reasons: Spark's
-    // FLOOR(double) returns BIGINT, so it would map NaN → 0, ±Inf →
-    // ±2⁶³/1e6 and saturate large finite values at Long.MaxValue while
-    // DuckDB's floor keeps doubles — exactly the cross-engine divergence
-    // this helper exists to eliminate; and past 2^53/1e6 ≈ 9.007e9 the
-    // double grid is coarser than 1e-6, so 6-dp rounding is an identity
-    // apart from tie adjustments no engine agrees on anyway. Identity is
-    // the only value BOTH engines compute bit-identically there.
+    // The guard passes NaN, ±Infinity and finite |x| ≥ 9e9 through
+    // unchanged (ABS(x) < 9e9 is false for all of them; NULL stays NULL):
+    // Spark's FLOOR(double) returns BIGINT, so it would map NaN → 0, ±Inf →
+    // ±2⁶³/1e6 and saturate large values while DuckDB's floor keeps
+    // doubles; and past 2^53/1e6 ≈ 9.007e9 6-dp rounding is an identity
+    // apart from ties, so identity is the one value both engines agree on.
     s"(CASE WHEN NOT (ABS($e) < 9000000000e0) THEN ($e) " +
       s"WHEN ($e) >= 0 THEN FLOOR(($e) * 1000000e0 + 0.5e0) / 1000000e0 " +
       s"ELSE 0e0 - FLOOR((0e0 - ($e)) * 1000000e0 + 0.5e0) / 1000000e0 END)"
@@ -156,12 +162,10 @@ package object drift {
   private def p10(scale: Int): String = "1" + ("0" * scale) + "e0"
 
   /** Micro-unit quantization of one shared-text double term: half-up at
-    * `scale` decimal places into an exact DECIMAL(38,0) integer. This is
-    * the round-8 replacement for the retired canonical-fold helpers
-    * (CORRECTNESS_r06/r07: `list_sum(list(term ORDER BY k))` being a
-    * sequential left fold is an undocumented DuckDB internal that changed
-    * across versions — `cramers_v` stayed hash-red under the driver's
-    * DuckDB while local 1.0.0 was green). Why this form is version-proof:
+    * `scale` decimal places into an exact DECIMAL(38,0) integer, so a sum of
+    * terms never depends on an engine's fold order (whether DuckDB's
+    * `list_sum` folds left to right is an undocumented internal that
+    * changes across versions). Why this form is version-proof:
     *   - FLOOR(x·10^s + 0.5) uses only IEEE correctly-rounded ops on a
     *     bit-identical input double → identical on any engine (Spark's
     *     FLOOR(double) returns BIGINT, DuckDB's returns an integer-valued
@@ -183,7 +187,7 @@ package object drift {
     s"CAST(FLOOR(($term) * ${p10(scale)} + 0.5e0) AS DECIMAL(38,0))"
 
   /** Exact integer-unit sum of [[microTermSql]] terms (NULL-safe: empty
-    * or all-NULL groups sum to 0, matching the retired folds' COALESCE). */
+    * or all-NULL groups sum to 0). */
   def microSumSql(term: String, scale: Int = 6): String =
     s"COALESCE(SUM(${microTermSql(term, scale)}), CAST(0 AS DECIMAL(38,0)))"
 

@@ -743,4 +743,20 @@ class EdgeCaseSpec extends SparkSpec {
     assert(names(CategoricalDrift.jsFullForPair(ref, curr, cols), "column_name") == cols.sorted)
     assert(names(GroupDrift.verdictForPair(ref, curr, cols, Seq("x-y"), cols), "dimension") == cols.sorted)
   }
+
+  test("a current column retyped to strings that do not all parse still yields a report") {
+    // the sf0.01 lineitem split, with l_tax a string in the current side and
+    // "n/a" for values above 0.04
+    val cols = Seq("l_partkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_discount",
+      "l_tax", "l_returnflag", "l_linestatus")
+    val li = table(spark, "/root/testdata/sf0.01", "lineitem")
+    val ref = li.filter(splits.lineitemRef).select(cols.map(col): _*)
+    val curr = li.filter(!coalesce(splits.lineitemRef, lit(false))).select(cols.map(col): _*)
+      .withColumn("l_tax", when(col("l_tax") > 0.04, lit("n/a")).otherwise(col("l_tax").cast("string")))
+    val r = new DriftDetector(spark).detectDrift(ref, curr)
+    assert(r.errors.isEmpty, r.errors.mkString("; "))
+    assert(r.schemaChanges.exists(c => c.changeType == "type_changed" && c.path == "l_tax"),
+      r.schemaChanges)
+    assert(r.numeric.nonEmpty && r.categorical.nonEmpty)
+  }
 }

@@ -265,6 +265,64 @@ class GoldenDriftSpec extends SparkSpec {
     assert(three.values.forall(_ > 0), three)
   }
 
+  /** A report as canonical text: each field in declaration order, every
+    * frame's schema and its rows sorted, doubles at 6 dp. The wall time
+    * (`executionTimeSec`) is left out. */
+  private def render(r: DriftReport): String = {
+    def text(v: Any): String = v match {
+      case null => "null"
+      case d: Double => val s = f"$d%.6f"; if (s == "-0.000000") "0.000000" else s
+      case f: Float => text(f.toDouble)
+      case s: scala.collection.Seq[_] => s.map(text).mkString("[", ",", "]")
+      case row: org.apache.spark.sql.Row => row.toSeq.map(text).mkString("{", ",", "}")
+      case p: Product => p.productIterator.map(text).mkString(s"${p.productPrefix}(", ",", ")")
+      case other => other.toString
+    }
+    def frame(name: String, df: org.apache.spark.sql.DataFrame): Seq[String] =
+      s"$name ${df.schema.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(",")}" +:
+        df.collect().map(text).sorted.toSeq.map("  " + _)
+    val frames = Seq("quantileShifts" -> r.quantileShifts, "shapes" -> r.shapes,
+      "jsFull" -> r.jsFull, "rareValueChanges" -> r.rareValueChanges, "histograms" -> r.histograms,
+      "zOutliers" -> r.zOutliers, "correlationChanges" -> r.correlationChanges,
+      "rareCategories" -> r.rareCategories, "groupDrift" -> r.groupDrift,
+      "groupCorrelations" -> r.groupCorrelations, "featureImportance" -> r.featureImportance)
+    (Seq(
+      "schemaChanges " + r.schemaChanges.map(text).sorted.mkString(", "),
+      "columnTypes " + r.columnTypes.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(", ")) ++
+      r.numeric.map("numeric " + text(_)) ++ r.categorical.map("categorical " + text(_)) ++
+      frames.flatMap { case (n, df) => frame(n, df) } ++
+      Seq("errors " + text(r.errors), s"driftDetected ${r.driftDetected}",
+        s"assessment ${r.assessment}", "recommendations " + text(r.recommendations))
+    ).mkString("\n")
+  }
+
+  test("reports equal the golden snapshot in src/test/resources/golden_reports.txt") {
+    val pairs = Seq("v1/v1" -> (v1, v1), "v1/v2" -> (v1, v2), "v1/v3" -> (v1, v3))
+    val cases =
+      (for (p <- Seq("summary", "standard", "deep_dive"); (name, (ref, curr)) <- pairs)
+        yield (s"$name $p", ref, curr, DriftConfig(p, sampleSize = 0))) ++ Seq(
+        ("v1/v2 sampled 2500", v1, v2, DriftConfig(sampleSize = 2500)),
+        ("v1/v3 two dimensions", v1, v3, DriftConfig(sampleSize = 0,
+          groupColumns = Seq("category_imbalanced", "category_balanced"))),
+        ("v1/v1 target numeric_normal", v1, v1, DriftConfig(sampleSize = 0,
+          targetColumn = Some("numeric_normal"))))
+    val actual = cases.map { case (name, ref, curr, cfg) =>
+      s"=== $name\n${render(detector.detectDrift(ref, curr, cfg))}"
+    }.mkString("", "\n", "\n")
+    val golden = Option(getClass.getResourceAsStream("/golden_reports.txt"))
+      .map(s => try new String(s.readAllBytes(), "UTF-8") finally s.close())
+    if (!golden.contains(actual)) {
+      // the rendering of this run, to diff against (or to replace) the snapshot
+      val out = java.nio.file.Paths.get("target", "golden_reports.actual.txt")
+      java.nio.file.Files.createDirectories(out.getParent)
+      java.nio.file.Files.writeString(out, actual)
+      val firstDiff = golden.map(g => g.linesIterator.zipAll(actual.linesIterator, "<none>", "<none>")
+        .find { case (a, b) => a != b }.toString).getOrElse("no golden file")
+      fail(s"reports differ from the golden snapshot (this run's rendering is in $out); " +
+        s"first differing line (golden, actual): $firstDiff")
+    }
+  }
+
   test("every job of one detectDrift carries a drift:<family> description") {
     val cfg = DriftConfig(profile = "deep_dive", sampleSize = 2500,
       targetColumn = Some("numeric_normal"))

@@ -587,6 +587,34 @@ class PlanAuditSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  test("profile readers only project, filter, stack or sort detectDrift's local profile frames") {
+    // the numeric column rows carry both sides of every column and the census
+    // its per-column totals, so no reader pivots sides or joins totals back
+    import graft.drift._
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, Window}
+    val (v1, v3) = (SyntheticDrift.version(spark, 1), SyntheticDrift.version(spark, 3))
+    val num = Seq("numeric_normal", "numeric_uniform", "null_col")
+    val cat = Seq("category_balanced", "category_imbalanced")
+    // the copies detectDrift collects
+    val rows = localCopy(NumericDrift.pairProfile(v1, v3, num))
+    val cen = localCopy(CategoricalDrift.pairCensus(v1, v3, cat))
+    Seq[(String, () => Any)](
+      "numeric verdict" -> (() => NumericDrift.driftOfPair(rows).collect()),
+      "shapes" -> (() => NumericDrift.shapesOfPair(rows).collect()),
+      "quantile shifts" -> (() => NumericDrift.quantileShiftsOfPair(rows).collect()),
+      "O29 screen" -> (() => CorrelationDrift.validColumnsOf(rows, num)),
+      "rare value changes" -> (() => CategoricalDrift.rareValueChangesOfPair(cen).collect()),
+      "rare categories" -> (() => CategoricalDrift.rareCategoriesOfPair(cen).collect())
+    ).foreach { case (name, run) =>
+      val plans = plansRunBy(run())
+      assert(plans.nonEmpty, s"$name ran no query")
+      val combining = plans.flatMap(_.collect {
+        case n @ (_: Aggregate | _: Join | _: Window) => n.nodeName
+      })
+      assert(combining.isEmpty, s"$name plans $combining:\n${plans.mkString("\n")}")
+    }
+  }
+
   test("every sketched bench key runs sketches, no exact percentile or distinct count") {
     import org.apache.spark.sql.catalyst.expressions.aggregate._
     import org.apache.spark.sql.catalyst.plans.logical.{Expand, LogicalPlan}

@@ -1,12 +1,13 @@
 package graft
 
 import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, propBoolean}
 import org.apache.spark.sql.types._
 import graft.drift.{AdaptiveThresholds, CorrelationDrift, SchemaOps}
 
-/** Property-based invariants (SURVEY.md §5.2) over the pure driver-side
-  * machinery — ScalaCheck, no Spark session needed. */
+/** Property-based invariants (SURVEY.md §5.2), mostly over the pure
+  * driver-side machinery; the schema-evolution property runs drift reports
+  * on the shared test session. */
 object PropertySpec extends Properties("graft.drift") {
 
   private val genType: Gen[DataType] = Gen.oneOf(
@@ -213,6 +214,43 @@ object PropertySpec extends Properties("graft.drift") {
       graft.drift.pr6Scalar(-x) == -graft.drift.pr6Scalar(x) ||
         graft.drift.pr6Scalar(x) == 0.0 // ±0 normalize to equal-compare
     }
+
+  // ---- schema evolution: a retyped column never aborts a drift report
+
+  /** The reference snapshot: one column per base type, 30 rows. */
+  private def evolvingBase(spark: org.apache.spark.sql.SparkSession) = spark.range(30).selectExpr(
+    "id", "CAST(id AS INT) AS i", "id * 3 AS l", "id * 1.5 AS d", "CAST(id % 7 AS STRING) AS s",
+    "CONCAT('v', CAST(id % 4 AS STRING)) AS t", "DATE_ADD(DATE'2024-01-01', CAST(id AS INT)) AS dt")
+
+  /** A retype of a column: (target type, SQL text over the column `x`). */
+  private val genRetype: Gen[(DataType, String => String)] = Gen.oneOf(
+    (StringType, (x: String) => s"CAST($x AS STRING)"),
+    (StringType, (x: String) => s"CASE WHEN id % 3 = 0 THEN 'n/a' ELSE CAST($x AS STRING) END"),
+    (LongType, (x: String) => s"TRY_CAST($x AS BIGINT)"),
+    (IntegerType, (x: String) => s"TRY_CAST($x AS INT)"),
+    (DoubleType, (x: String) => s"TRY_CAST($x AS DOUBLE)"),
+    (DateType, (x: String) => s"TRY_CAST($x AS DATE)"))
+
+  property("detectDrift never throws on a current snapshot with retyped columns") = {
+    val spark = TestSpark.spark
+    val ref = evolvingBase(spark).drop("id")
+    val cols = ref.columns.toSeq
+    forAll(Gen.listOfN(cols.size, genRetype), Gen.oneOf("summary", "standard")) { (retypes, profile) =>
+      val base = evolvingBase(spark)
+      val curr = base.selectExpr(cols.zip(retypes).map { case (c, (t, sql)) =>
+        // a retype Spark cannot express keeps the column as it is
+        if (org.apache.spark.sql.catalyst.expressions.Cast.canTryCast(base.schema(c).dataType, t))
+          s"${sql(c)} AS $c"
+        else c
+      }: _*)
+      val r = new graft.drift.DriftDetector(spark).detectDrift(ref, curr,
+        graft.drift.DriftConfig(profile, sampleSize = 0))
+      val retyped = cols.filter(c => ref.schema(c).dataType != curr.schema(c).dataType).toSet
+      val typeChanged = r.schemaChanges.filter(_.changeType == "type_changed").map(_.path).toSet
+      (typeChanged == retyped) :| s"type_changed $typeChanged, retyped $retyped" &&
+        r.errors.isEmpty :| s"errors ${r.errors}"
+    }
+  }
 
   property("driver contract: every oracle key has a query and names align") = {
     val q = SparkEntry.queries.keySet
