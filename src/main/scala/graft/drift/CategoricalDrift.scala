@@ -1,8 +1,9 @@
 package graft.drift
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.drift.{splits => S}
 
 /** Categorical distribution + drift operators (reference O15–O19, O22, O23,
@@ -41,7 +42,7 @@ object CategoricalDrift extends graft.OperatorModule {
   // 200, and each statistic has one implementation, a private `…Of(cen, …)`,
   // which the gate queries apply to the census of each table split, the
   // pair functions to that of `tagPair(ref, curr, cols)`, and
-  // `DriftDetector.detectDrift` to its pair's census, collected once.
+  // `DriftDetector.detectDrift` to its pair's [[localPairCensus]].
   //
   // Shape: one row per distinct (column_name, value) of the pair, the null
   // group kept, with `ref_cnt`/`curr_cnt` and, on every row, the column's
@@ -51,29 +52,54 @@ object CategoricalDrift extends graft.OperatorModule {
   // filters the census on `value`: the filter would push below the census
   // aggregate and plan a second scan instead of reusing its exchange.
 
-  /** The census of a side-tagged frame: one stack and one
-    * groupBy(column_name, value) count the values, and a groupBy(column_name)
-    * over those counts, broadcast back, gives the totals — no window keyed by
-    * column alone, so the values of a high-cardinality column stay spread
-    * over tasks. A left join, so a reader that reads no total plans none. */
-  private[drift] def census(tagged: DataFrame, cols: Seq[String]): DataFrame = {
+  /** Per-(column_name, value) counts of a side-tagged frame, null group kept:
+    * `ref_cnt`/`curr_cnt` on one row. One stack, one groupBy. */
+  private def censusCounts(tagged: DataFrame, cols: Seq[String]): DataFrame = {
     val rows = cols.map(c => s"${sqlStr(c)}, CAST(${sqlIdent(c)} AS STRING)").mkString(", ")
-    val counts = tagged
-      .select(col("side"), expr(s"stack(${cols.size}, $rows) AS (column_name, value)"))
+    tagged.select(col("side"), expr(s"stack(${cols.size}, $rows) AS (column_name, value)"))
       .groupBy("column_name", "value").agg(
         count(when(col("side") === "ref", 1)).as("ref_cnt"),
         count(when(col("side") === "curr", 1)).as("curr_cnt"))
-      // never false: both join sides then plan the same counts, one exchange
-      .where(col("column_name").isNotNull)
-    def nonNull(cnt: String) = sum(when(col("value").isNotNull, col(cnt)).otherwise(0L))
-    val totals = counts.groupBy("column_name").agg(sum("ref_cnt").as("ref_n"),
-      sum("curr_cnt").as("curr_n"), nonNull("ref_cnt").as("ref_nn"), nonNull("curr_cnt").as("curr_nn"))
-    counts.join(broadcast(totals), Seq("column_name"), "left")
+  }
+
+  /** The census totals: (field, the count it sums, over non-null values only). */
+  private val totals = Seq(("ref_n", "ref_cnt", false), ("curr_n", "curr_cnt", false),
+    ("ref_nn", "ref_cnt", true), ("curr_nn", "curr_cnt", true))
+
+  /** The census of a side-tagged frame: the [[censusCounts]], and a
+    * groupBy(column_name) over them, broadcast back, gives the [[totals]] —
+    * no window keyed by column alone, so the values of a high-cardinality
+    * column stay spread over tasks. A left join, so a reader that reads no
+    * total plans none. */
+  private[drift] def census(tagged: DataFrame, cols: Seq[String]): DataFrame = {
+    // never false; the join infers it on the totals side, so stating it on
+    // both sides keeps their counts one plan, which a scan of a file source
+    // then runs once (the reused exchange PlanAuditSpec's scan pins see)
+    val counts = censusCounts(tagged, cols).where(col("column_name").isNotNull)
+    val sums = totals.map { case (n, cnt, nonNull) =>
+      sum(if (nonNull) when(col("value").isNotNull, col(cnt)).otherwise(0L) else col(cnt)).as(n)
+    }
+    counts.join(broadcast(counts.groupBy("column_name").agg(sums.head, sums.tail: _*)),
+      Seq("column_name"), "left")
   }
 
   /** The [[census]] of a snapshot pair, through `tagPair`. */
-  private[graft] def pairCensus(ref: DataFrame, curr: DataFrame, cols: Seq[String]): DataFrame =
+  private[drift] def pairCensus(ref: DataFrame, curr: DataFrame, cols: Seq[String]): DataFrame =
     census(tagPair(ref, curr, cols), cols)
+
+  /** The [[census]] of a snapshot pair as a [[localFrame]], the copy
+    * `DriftDetector.detectDrift` collects once: the [[totals]] are summed
+    * over the collected counts, since over a cached pair Spark does not
+    * reuse the counts' exchange for the totals side of [[census]]'s join. */
+  private[graft] def localPairCensus(ref: DataFrame, curr: DataFrame, cols: Seq[String]): DataFrame = {
+    val counts = censusCounts(tagPair(ref, curr, cols), cols)
+    val rows = counts.collect().toSeq
+    val sums = rows.groupBy(_.getAs[String]("column_name")).map { case (c, rs) =>
+      c -> Row.fromSeq(totals.map { case (_, cnt, nonNull) =>
+        rs.filter(r => !nonNull || r.getAs[String]("value") != null).map(_.getAs[Long](cnt)).sum }) }
+    localFrame(counts.sparkSession, rows.map(r => Row.merge(r, sums(r.getAs[String]("column_name")))),
+      totals.foldLeft(counts.schema)((st, t) => st.add(t._1, LongType)))
+  }
 
   /** The census of each categorical split of the gate tables. */
   private[drift] def splitCensus(spark: SparkSession, dir: String, sp: S.CatSplit): DataFrame =

@@ -150,14 +150,17 @@ object NumericDrift extends graft.OperatorModule {
     * for `n_total` and each of `stats` — the stacked per-side rows pivoted
     * by conditional aggregation, not a ref/curr self-join, which would plan
     * the profile twice. Only those fields are referenced, so column pruning
-    * drops every other aggregate. A column one side lacks keeps its row,
-    * NULL on that side; a profile of no rows has no row. */
+    * drops every other aggregate. A profile has at most one row per side, so
+    * the pivot runs in one partition and plans no exchange of its own. A
+    * column one side lacks keeps its row, NULL on that side; a profile of no
+    * rows has no row. */
   private[drift] def columnRows(profile: DataFrame, label: String, cols: Seq[String],
       stats: Seq[String]): DataFrame = {
     val all = ("n_total" +: stats).distinct
     val aggs = all.flatMap(s => Seq("ref", "curr").map(side =>
       max(when(col("side") === side, col(s))).as(s"${side}_$s")))
-    stacked(profile, label, cols, all).groupBy("table_name", "column_name").agg(aggs.head, aggs.tail: _*)
+    stacked(profile.coalesce(1), label, cols, all)
+      .groupBy("table_name", "column_name").agg(aggs.head, aggs.tail: _*)
   }
 
   /** [[columnRows]] of a side-tagged frame's [[sideProfile]]. */

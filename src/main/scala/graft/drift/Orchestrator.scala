@@ -263,7 +263,7 @@ case class DriftReport(
   * config flags and assemble the nested report. The pair is profiled once,
   * into two local frames: the numeric column rows
   * ([[NumericDrift.pairProfile]], one row per column with both sides'
-  * statistics) and the categorical census ([[CategoricalDrift.pairCensus]],
+  * statistics) and the categorical census ([[CategoricalDrift.localPairCensus]],
   * one row per (column, value) with both sides' counts and the column's
   * totals). The numeric verdict, quantile shifts, shapes, the O29 column
   * screen, rare values and rare categories only project, filter, stack or
@@ -368,7 +368,7 @@ class DriftDetector(spark: SparkSession) {
     // current type has no cast to its reference type (tagPair) is in schemaChanges only
     val common = ref.columns.toSeq.intersect(curr.columns.toSeq).filter { c =>
       val (r, t) = (ref.schema(c).dataType, curr.schema(c).dataType)
-      SchemaOps.isCompatible(r, t) || Cast.canTryCast(t, r)
+      widens(r, t) || Cast.canTryCast(t, r)
     }.filter(c => config.includeColumns.isEmpty || config.includeColumns.contains(c))
       .filterNot(config.excludeColumns.contains)
     // infer only the columns the config does NOT pin: an override wins
@@ -408,7 +408,7 @@ class DriftDetector(spark: SparkSession) {
           }
         }
       def profile(enabled: Boolean)(body: => DataFrame): Future[DataFrame] =
-        if (!enabled) Future.successful(empty) else pool.submit("drift:profile")(localCopy(body))
+        if (!enabled) Future.successful(empty) else pool.submit("drift:profile")(body)
 
       // group analysis (O32/O33): configured dims, else first ≤3 categorical
       // columns as the reference defaults (data_drift_detector.py:168-175)
@@ -425,8 +425,8 @@ class DriftDetector(spark: SparkSession) {
       val groupsF = safe("group_drift", config.analyzeGroups && groupDims.nonEmpty)(
         GroupDrift.verdictForPair(ref, curr, groupDims, numericCols, catCols))
       val numRowsF = profile(numericCols.nonEmpty)(
-        NumericDrift.pairProfile(ref, curr, numericCols))
-      val censusF = profile(catCols.nonEmpty)(CategoricalDrift.pairCensus(ref, curr, catCols))
+        localCopy(NumericDrift.pairProfile(ref, curr, numericCols)))
+      val censusF = profile(catCols.nonEmpty)(CategoricalDrift.localPairCensus(ref, curr, catCols))
       def numRows = await(numRowsF)
       def cen = await(censusF)
       // O29 screen: drop columns with non-null ratio < 0.7 in either frame;

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.TypeCoercion
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, FloatType}
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, StructType}
 
 /** Shared helpers for the drift engine.
   *
@@ -80,17 +81,17 @@ package object drift {
     * as it reads a [[withSide]] table split. NaN and ±Infinity in a float or
     * double column become NULL, so every statistic, score and bin edge of a
     * pair is computed over its finite values and a non-finite value counts
-    * as missing. A current column retyped other than by a compatible
-    * widening is `try_cast` to its reference type, so a value that does not
-    * parse counts as missing too. */
+    * as missing. A current column whose type does not [[widens widen]] with its
+    * reference type is `try_cast` to the reference type, so a value that
+    * does not parse counts as missing too; a pair that widens is left to the
+    * union, which keeps every value exactly. */
   private[drift] def tagPair(ref: DataFrame, curr: DataFrame, cols: Seq[String]): DataFrame = {
     val refTypes = ref.select(cols.map(col): _*).schema.fields.map(f => f.name -> f.dataType).toMap
     def tagged(df: DataFrame, side: String): DataFrame = {
       val picked = df.select(cols.map(col): _*)
       picked.select(picked.schema.fields.toSeq.map { f =>
         val (c, t) = refTypes(f.name) match {
-          case r if !SchemaOps.isCompatible(r, f.dataType) =>
-            (col(sqlIdent(f.name)).try_cast(r).as(f.name), r)
+          case r if !widens(r, f.dataType) => (col(sqlIdent(f.name)).try_cast(r).as(f.name), r)
           case _ => (col(sqlIdent(f.name)), f.dataType)
         }
         t match {
@@ -103,12 +104,22 @@ package object drift {
     tagged(ref, "ref").unionByName(tagged(curr, "curr"))
   }
 
-  /** A collected copy of a small frame that holds no cache blocks: one
-    * partition, so a reader plans no exchange, and opaque to the optimizer,
-    * so every reader is one job, empty result or not. */
+  /** Whether two column types have a common type that parses nothing (a
+    * wider number, decimals included, or a timestamp for a date); the ANSI
+    * union of any other pair casts a string and aborts on a bad value. */
+  private[drift] def widens(ref: DataType, curr: DataType): Boolean =
+    TypeCoercion.findWiderTypeWithoutStringPromotion(Seq(ref, curr)).isDefined
+
+  /** Collected rows as a frame that holds no cache blocks, in one RDD
+    * partition: opaque to the optimizer, so every reader is one job, empty
+    * result or not; `coalesce(1)` tells the planner it is one partition, so
+    * a reader's aggregate plans no exchange. */
+  private[graft] def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema).coalesce(1)
+
+  /** A [[localFrame]] of a small frame's collected rows. */
   private[graft] def localCopy(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(
-      df.sparkSession.sparkContext.parallelize(df.collect().toSeq, 1), df.schema).coalesce(1)
+    localFrame(df.sparkSession, df.collect().toSeq, df.schema)
 
   /** A numeric family's gate query: `of(tagged, label, cols)` applied to
     * each numeric table split, with the table name as label, unioned. */

@@ -759,4 +759,19 @@ class EdgeCaseSpec extends SparkSpec {
       r.schemaChanges)
     assert(r.numeric.nonEmpty && r.categorical.nonEmpty)
   }
+
+  test("a decimal column widened in the current side keeps every current value") {
+    // decimal(5,2) holds at most 999.99; every current value is above it, so
+    // a cast to the reference type would turn each into a missing value
+    val ref = spark.range(200).selectExpr("CAST(id % 50 + 0.25 AS DECIMAL(5,2)) AS amt")
+    val curr = spark.range(200).selectExpr("CAST(id * 10 + 1000.75 AS DECIMAL(10,2)) AS amt")
+    val r = new DriftDetector(spark).detectDrift(ref, curr,
+      DriftConfig(sampleSize = 0, customColumnTypes = Map("amt" -> "numerical")))
+    assert(r.errors.isEmpty, r.errors.mkString("; "))
+    val amt = r.numeric.find(_.column == "amt").get
+    assert(amt.currMean == 1995.75 && amt.nullDiff == 0.0, amt)
+    val row = NumericDrift.pairProfile(ref, curr, Seq("amt")).collect().head
+    assert(row.getAs[Double]("curr_vmax") == 2990.75)
+    assert(row.getAs[Long]("curr_n_nonnull") == 200L)
+  }
 }

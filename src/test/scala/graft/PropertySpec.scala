@@ -220,7 +220,8 @@ object PropertySpec extends Properties("graft.drift") {
   /** The reference snapshot: one column per base type, 30 rows. */
   private def evolvingBase(spark: org.apache.spark.sql.SparkSession) = spark.range(30).selectExpr(
     "id", "CAST(id AS INT) AS i", "id * 3 AS l", "id * 1.5 AS d", "CAST(id % 7 AS STRING) AS s",
-    "CONCAT('v', CAST(id % 4 AS STRING)) AS t", "DATE_ADD(DATE'2024-01-01', CAST(id AS INT)) AS dt")
+    "CONCAT('v', CAST(id % 4 AS STRING)) AS t", "DATE_ADD(DATE'2024-01-01', CAST(id AS INT)) AS dt",
+    "CAST(id * 1.25 AS DECIMAL(6,2)) AS dc")
 
   /** A retype of a column: (target type, SQL text over the column `x`). */
   private val genRetype: Gen[(DataType, String => String)] = Gen.oneOf(
@@ -229,6 +230,8 @@ object PropertySpec extends Properties("graft.drift") {
     (LongType, (x: String) => s"TRY_CAST($x AS BIGINT)"),
     (IntegerType, (x: String) => s"TRY_CAST($x AS INT)"),
     (DoubleType, (x: String) => s"TRY_CAST($x AS DOUBLE)"),
+    (DecimalType(12, 2), (x: String) => s"TRY_CAST(TRY_CAST($x AS DECIMAL(12,2)) * 1000 AS DECIMAL(12,2))"),
+    (DecimalType(4, 1), (x: String) => s"TRY_CAST($x AS DECIMAL(4,1))"),
     (DateType, (x: String) => s"TRY_CAST($x AS DATE)"))
 
   property("detectDrift never throws on a current snapshot with retyped columns") = {
